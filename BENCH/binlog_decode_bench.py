@@ -3,14 +3,19 @@
 The reference's docs/test.md yardstick: a 357,491,554-byte binlog file
 parses in ~13.5 s single-node ≈ 26 MB/s ≈ 145k change-rows/s (SQL-text
 output). This bench times OUR decode of real-format binlog v4 bytes —
-`binaryFile` scan → mapInPandas BinlogEventParser → typed envelope
+`binaryFile` scan → mapInArrow BinlogEventParser → typed envelope
 (decode_events) → count — across N rotated files in parallel (files
 are the rotation-bounded unit of parallelism, so a backlog decodes on
 as many cores as it has files).
 
+Before Spark starts, the same files are parsed once in this process
+with `parse_binlog_bytes` (no Spark, no Arrow): `parse_cpu_s_per_mb` is
+that pass's CPU seconds per MB of binlog, the decoder's own cost.
+
 Usage: python BENCH/binlog_decode_bench.py [--files 8] [--rows 150000]
        [--cores 16]
-Prints one JSON line {bytes, rows, secs, mb_per_sec, rows_per_sec}.
+Prints one JSON line {bytes, rows, secs, mb_per_sec, rows_per_sec,
+parse_cpu_s_per_mb, parse_rows_per_cpu_s}.
 """
 
 from __future__ import annotations
@@ -57,6 +62,25 @@ def build_files(out_dir: str, n_files: int, rows_per_file: int) -> int:
     return total
 
 
+def parse_cpu(files: list[str], names: dict) -> tuple[float, int]:
+    """Single-process parse of every file -> (CPU seconds, rows)."""
+    from bingo2sql_spark.sources.binlog_binary import parse_binlog_bytes
+
+    cpu = 0.0
+    rows = 0
+    for path in files:
+        with open(path, "rb") as f:
+            data = f.read()
+        t0 = time.process_time()
+        rows += sum(
+            1 for _ in parse_binlog_bytes(
+                data, log_file=os.path.basename(path), names_for=names
+            )
+        )
+        cpu += time.process_time() - t0
+    return cpu, rows
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--files", type=int, default=8)
@@ -72,11 +96,14 @@ def main() -> None:
     d = tempfile.mkdtemp(prefix="binlog_bench_", dir=base)
     try:
         nbytes = build_files(d, args.files, args.rows)
+        names = {"test.repo_files": ["repo", "path", "commit", "content"]}
+        p_cpu, p_rows = parse_cpu(
+            [os.path.join(d, f) for f in sorted(os.listdir(d))], names
+        )
         spark = get_spark(
             "binlog-decode-bench", master=f"local[{args.cores}]",
             shuffle_partitions=args.cores,
         )
-        names = {"test.repo_files": ["repo", "path", "commit", "content"]}
         # warmup (JIT + Arrow path) on one file
         decode_events(
             binlog_raw_events(spark, os.path.join(d, "mysql-bin.000001"), names)
@@ -92,6 +119,8 @@ def main() -> None:
             "mb_per_sec": round(nbytes / 1e6 / secs, 1),
             "rows_per_sec": round(n / secs, 1),
             "cores": args.cores,
+            "parse_cpu_s_per_mb": round(p_cpu / (nbytes / 1e6), 4),
+            "parse_rows_per_cpu_s": round(p_rows / p_cpu, 1),
         }))
     finally:
         shutil.rmtree(d, ignore_errors=True)

@@ -523,7 +523,7 @@ def _q_binlog_binary_decode(spark, sf_dir):
     files (deterministic fixture synthesis — the sandbox has no mysqld,
     mirroring how the reference's CI produces binlogs by running DML,
     SURVEY.md §5), then decoded back by the distributed binaryFile →
-    mapInPandas parser (sources/binlog_binary.py) and compared against
+    mapInArrow parser (sources/binlog_binary.py) and compared against
     the parquet the bytes came from. The driver-side collect is the
     fixture ENCODER only (bounded ≤20k rows); the decode under test is
     fully distributed."""

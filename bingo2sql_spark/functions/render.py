@@ -3,9 +3,11 @@ mode) as vectorized transforms.
 
 Two implementations with identical semantics on the pinned payload:
 
-- `render_sql` — pure Column expressions (JVM, whole-stage codegen).
-  This is the hot path: escaping via regexp_replace, statement assembly
-  via concat_ws; minimal-update SET lists via null-skipping concat_ws
+- `render_sql` — pure JVM expressions (whole-stage codegen), handed to
+  Spark as SQL expression text (functions.sqltext) so that building a
+  plan costs a few gateway calls, not one per Column node. This is the
+  hot path: escaping via regexp_replace, statement assembly via
+  concat_ws; minimal-update SET lists via null-skipping concat_ws
   (compareValue analog, core/parser.go:2184-2209).
 - `render_sql_arrow` — mapInPandas (Arrow batches, pandas str ops); the
   extension point for payloads with exotic codecs (the reference's
@@ -24,19 +26,34 @@ import os
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from bingo2sql_spark import schema as S
+from bingo2sql_spark.functions.sqltext import field, ident, str_lit
 
 KEY_COLS = list(S.MERGE_KEYS)
 
 
-def sql_escape(c: Column) -> Column:
-    r"""Backslash escaping, full escapeBytesBackslash character set
-    (core/parser.go:1894-1935): \\ ' " NUL(0x00) Ctrl-Z(0x1a) LF CR.
-    Content containing NUL or Ctrl-Z would otherwise corrupt/truncate
-    the replayed SQL text.
+_DDL_USE_TAIL = "`;\n"
+_TRAILING_SEMI = r";\s*$"
+
+#: characters sql_escape rewrites: \ ' " NUL Ctrl-Z LF CR
+_SPECIALS = "[" + "\\\\" + "'\"\n\r\x00\x1a" + "]"
+_ESCAPES = (
+    ("([\\\\'\"])", r"\\$1"),
+    (r"\n", r"\\n"),
+    (r"\r", r"\\r"),
+    ("\x00", r"\\0"),
+    ("\x1a", r"\\Z"),
+)
+
+
+def sql_escape(e: str) -> str:
+    r"""SQL text: backslash escaping of the string expression `e`, full
+    escapeBytesBackslash character set (core/parser.go:1894-1935):
+    \\ ' " NUL(0x00) Ctrl-Z(0x1a) LF CR. Content containing NUL or
+    Ctrl-Z would otherwise corrupt/truncate the replayed SQL text.
 
     The three keep-the-char escapes (\\ ' ") fuse into ONE capture-group
     pass — identical output to the sequential replaces (the inserted
@@ -46,13 +63,10 @@ def sql_escape(c: Column) -> Column:
     scan instead of five; values WITH specials pay the gate + escapes,
     ~20% over the ungated chain). NULL passes through NULL either way
     (sql_literal handles it)."""
-    escaped = F.regexp_replace(c, "([\\\\'\"])", r"\\$1")
-    escaped = F.regexp_replace(escaped, r"\n", r"\\n")
-    escaped = F.regexp_replace(escaped, r"\r", r"\\r")
-    escaped = F.regexp_replace(escaped, "\x00", r"\\0")
-    escaped = F.regexp_replace(escaped, "\x1a", r"\\Z")
-    specials = "[" + "\\\\" + "'\"\n\r\x00\x1a" + "]"
-    return F.when(c.rlike(specials), escaped).otherwise(c)
+    escaped = e
+    for pattern, repl in _ESCAPES:
+        escaped = f"regexp_replace({escaped}, {str_lit(pattern)}, {str_lit(repl)})"
+    return f"CASE WHEN {e} RLIKE {str_lit(_SPECIALS)} THEN {escaped} ELSE {e} END"
 
 
 def _esc_pandas(s: pd.Series) -> pd.Series:
@@ -68,23 +82,41 @@ def _esc_pandas(s: pd.Series) -> pd.Series:
     )
 
 
-def sql_literal(c: Column) -> Column:
-    """NULL -> NULL, else '<escaped>' (InterpolateParams
-    core/parser.go:1763-1766,1838-1841)."""
-    return F.when(c.isNull(), F.lit("NULL")).otherwise(F.concat(F.lit("'"), sql_escape(c), F.lit("'")))
+def sql_literal(e: str) -> str:
+    """SQL text: NULL -> NULL, else '<escaped>' (InterpolateParams
+    core/parser.go:1763-1766,1838-1841). Wrap in `F.expr` for a
+    Column."""
+    quote = str_lit("'")
+    return f"CASE WHEN {e} IS NULL THEN 'NULL' ELSE concat({quote}, {sql_escape(e)}, {quote}) END"
 
 
-def _qualified(db: Column, table: Column) -> Column:
+def _qualified(db: str, table: str) -> str:
     """`db`.`table` backtick quoting (getTableName core/parser.go:2488-2496)."""
-    return F.concat(F.lit("`"), db, F.lit("`.`"), table, F.lit("`"))
+    return f"concat('`', {db}, '`.`', {table}, '`')"
 
 
-def _where_eq(img: str, col: str) -> Column:
+def _col_list(cols: list[str]) -> str:
+    """The `(`c1`,`c2`,...)` column list of an INSERT, as a literal."""
+    return str_lit("(" + ",".join(f"`{c}`" for c in cols) + ")")
+
+
+def _concat_ws(sep: str, parts) -> str:
+    """concat_ws(sep, parts...) — NULL parts are skipped, no parts is ''."""
+    return f"concat_ws({str_lit(sep)}" + "".join(", " + p for p in parts) + ")"
+
+
+def _values(cols: list[str]) -> str:
+    """Comma-joined literals of the after image's `cols`."""
+    return _concat_ws(",", [sql_literal(field("after", c)) for c in cols])
+
+
+def _where_eq(img: str, col: str) -> str:
     """PK predicate with IS NULL handling (generateDeleteSQL
     core/parser.go:1277-1305)."""
-    c = F.col(f"{img}.{col}")
-    return F.when(c.isNull(), F.lit(f"`{col}` IS NULL")).otherwise(
-        F.concat(F.lit(f"`{col}`="), sql_literal(c))
+    c = field(img, col)
+    return (
+        f"CASE WHEN {c} IS NULL THEN {str_lit(f'`{col}` IS NULL')} "
+        f"ELSE concat({str_lit(f'`{col}`=')}, {sql_literal(c)}) END"
     )
 
 
@@ -109,51 +141,52 @@ def render_sql(
       column, op='ddl' rows emit `USE \`db\`;\n<ddl>;` (the reference's
       Query-event passthrough, core/parser.go:2314-2339) instead of
       being silently dropped from the SQL file. DDL is never inverted —
-      flashback paths filter it out before rendering."""
-    cols = payload_cols or [c for c in S.payload_columns() ]
+      flashback paths filter it out before rendering.
+
+    The statement template is one SQL expression string (see
+    functions.sqltext), so building the plan costs a few gateway calls
+    whatever the column count."""
+    cols = payload_cols or S.payload_columns()
     keys = key_cols or KEY_COLS  # a schema-file registry may override (ddl.py)
     ins_cols = [c for c in cols if not (no_primary_key and c in keys)]
 
-    tbl = _qualified(F.col("db"), F.col("table"))
-    col_list = F.lit("(" + ",".join(f"`{c}`" for c in ins_cols) + ")")
-    values = F.concat_ws(",", *[sql_literal(F.col(f"after.{c}")) for c in ins_cols])
-    insert_sql = F.concat(
-        F.lit("INSERT INTO "), tbl, col_list, F.lit(" VALUES("), values, F.lit(");")
+    tbl = _qualified("`db`", "`table`")
+    insert_sql = (
+        f"concat('INSERT INTO ', {tbl}, {_col_list(ins_cols)}, ' VALUES(', "
+        f"{_values(ins_cols)}, ');')"
     )
+    where = _concat_ws(" AND ", [_where_eq("before", k) for k in keys])
+    delete_sql = f"concat('DELETE FROM ', {tbl}, ' WHERE ', {where}, ';')"
 
-    where = F.concat_ws(" AND ", *[_where_eq("before", k) for k in keys])
-    delete_sql = F.concat(F.lit("DELETE FROM "), tbl, F.lit(" WHERE "), where, F.lit(";"))
-
-    def set_frag(c: str) -> Column:
-        frag = F.concat(F.lit(f"`{c}`="), sql_literal(F.col(f"after.{c}")))
+    def set_frag(c: str) -> str:
+        a = field("after", c)
+        frag = f"concat({str_lit(f'`{c}`=')}, {sql_literal(a)})"
         if not minimal_update:
             return frag
-        changed = ~F.col(f"before.{c}").eqNullSafe(F.col(f"after.{c}"))
-        return F.when(changed, frag)  # NULL when unchanged -> concat_ws skips
+        # NULL when unchanged -> concat_ws skips it
+        return f"CASE WHEN NOT ({field('before', c)} <=> {a}) THEN {frag} END"
 
-    set_list = F.concat_ws(",", *[set_frag(c) for c in cols])
-    update_sql = F.concat(
-        F.lit("UPDATE "), tbl, F.lit(" SET "), set_list, F.lit(" WHERE "), where, F.lit(";")
+    set_list = _concat_ws(",", [set_frag(c) for c in cols])
+    update_sql = (
+        f"concat('UPDATE ', {tbl}, ' SET ', {set_list}, ' WHERE ', {where}, ';')"
     )
 
-    sql = (
-        F.when(F.col("op") == S.OP_INSERT, insert_sql)
-        .when(F.col("op") == S.OP_DELETE, delete_sql)
-        .when(F.col("op") == S.OP_UPDATE, update_sql)
-    )
-    keep = F.col("op").isin(list(S.DML_OPS))
+    whens = [
+        f"WHEN `op` = {str_lit(S.OP_INSERT)} THEN {insert_sql}",
+        f"WHEN `op` = {str_lit(S.OP_DELETE)} THEN {delete_sql}",
+        f"WHEN `op` = {str_lit(S.OP_UPDATE)} THEN {update_sql}",
+    ]
+    keep = "`op` IN (" + ", ".join(str_lit(op) for op in S.DML_OPS) + ")"
     if "statement" in events.columns:
-        ddl_sql = F.concat(
-            F.lit("USE `"),
-            F.col("db"),
-            F.lit("`;\n"),
-            F.regexp_replace(F.col("statement"), r";\s*$", ""),
-            F.lit(";"),
+        ddl_sql = (
+            f"concat('USE `', `db`, {str_lit(_DDL_USE_TAIL)}, "
+            f"regexp_replace(`statement`, {str_lit(_TRAILING_SEMI)}, ''), ';')"
         )
-        sql = sql.when(F.col("op") == S.OP_DDL, ddl_sql)
-        keep = keep | ((F.col("op") == S.OP_DDL) & F.col("statement").isNotNull())
-    return events.filter(keep).select(
-        "seq", "gtid_uuid", "gno", "ts", "thread_id", sql.alias("sql"), *(extra_cols or [])
+        whens.append(f"WHEN `op` = {str_lit(S.OP_DDL)} THEN {ddl_sql}")
+        keep = f"{keep} OR (`op` = {str_lit(S.OP_DDL)} AND `statement` IS NOT NULL)"
+    sql = "CASE " + " ".join(whens) + " END"
+    return events.filter(keep).selectExpr(
+        "seq", "gtid_uuid", "gno", "ts", "thread_id", f"{sql} AS sql", *(extra_cols or [])
     )
 
 
@@ -171,44 +204,37 @@ def _block_lag_carry(blocks: DataFrame, col: str = "_c") -> DataFrame:
     window over the block rows: within-super lag (hash-partitioned,
     bounded by SUPER_BLOCKS rows) + a metadata-scale super-level lag.
     Returns (_blk, _prev)."""
-    blocks = blocks.withColumn("_sblk", (F.col("_blk") / F.lit(SUPER_BLOCKS)).cast("long"))
-    w = Window.partitionBy("_sblk").orderBy("_blk")
+    blocks = blocks.withColumn("_sblk", F.expr(f"CAST(_blk / {SUPER_BLOCKS} AS BIGINT)"))
+    w = "OVER (PARTITION BY _sblk ORDER BY _blk)"
     sup = (
         blocks.groupBy("_sblk")
-        .agg(F.max_by(F.col(col), F.col("_blk")).alias("_sc"))
-        .select("_sblk", F.lag("_sc").over(Window.orderBy("_sblk")).alias("_sprev"))
+        .agg(F.expr(f"max_by({ident(col)}, _blk) AS _sc"))
+        .selectExpr("_sblk", "lag(_sc) OVER (ORDER BY _sblk) AS _sprev")
     )
-    out = (
-        blocks.withColumn("_srn", F.row_number().over(w))
-        .withColumn("_lagc", F.lag(col).over(w))
-        .join(F.broadcast(sup), "_sblk", "left")
-    )
-    prev = F.when(F.col("_srn") == 1, F.col("_sprev")).otherwise(F.col("_lagc"))
-    return out.select("_blk", prev.alias("_prev"))
+    out = blocks.selectExpr(
+        "*", f"row_number() {w} AS _srn", f"lag({ident(col)}) {w} AS _lagc"
+    ).join(F.broadcast(sup), "_sblk", "left")
+    return out.selectExpr("_blk", "CASE WHEN _srn = 1 THEN _sprev ELSE _lagc END AS _prev")
 
 
 def _block_running_last(blocks: DataFrame, col: str) -> DataFrame:
     """last(col, ignorenulls) over per-block rows STRICTLY BEFORE each
     block (ordered by _blk) — two-level like _block_lag_carry.
     Returns (_blk, _prev)."""
-    blocks = blocks.withColumn("_sblk", (F.col("_blk") / F.lit(SUPER_BLOCKS)).cast("long"))
-    w = Window.partitionBy("_sblk").orderBy("_blk")
-    local = F.last(col, ignorenulls=True).over(
-        w.rowsBetween(Window.unboundedPreceding, -1)
-    )
-    nn = F.when(F.col(col).isNotNull(), F.struct(F.col("_blk"), F.col(col).alias("v")))
+    blocks = blocks.withColumn("_sblk", F.expr(f"CAST(_blk / {SUPER_BLOCKS} AS BIGINT)"))
+    before = "ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING"
+    c = ident(col)
     sup = (
         blocks.groupBy("_sblk")
-        .agg(F.max(nn)["v"].alias("_sl"))
-        .select(
-            "_sblk",
-            F.last("_sl", ignorenulls=True)
-            .over(Window.orderBy("_sblk").rowsBetween(Window.unboundedPreceding, -1))
-            .alias("_scarry"),
+        .agg(F.expr(f"max(CASE WHEN {c} IS NOT NULL THEN struct(_blk, {c} AS v) END).v AS _sl"))
+        .selectExpr(
+            "_sblk", f"last(_sl, true) OVER (ORDER BY _sblk {before}) AS _scarry"
         )
     )
-    out = blocks.withColumn("_local", local).join(F.broadcast(sup), "_sblk", "left")
-    return out.select("_blk", F.coalesce("_local", "_scarry").alias("_prev"))
+    out = blocks.selectExpr(
+        "*", f"last({c}, true) OVER (PARTITION BY _sblk ORDER BY _blk {before}) AS _local"
+    ).join(F.broadcast(sup), "_sblk", "left")
+    return out.selectExpr("_blk", "coalesce(_local, _scarry) AS _prev")
 
 
 def decorate(
@@ -236,52 +262,53 @@ def decorate(
     window over the block rows either: good past 10^12 events, the r2
     ceiling) and broadcast back. Identical output to the global window,
     including across block-spanning seq gaps."""
-    out = rendered
+    extra = []
     if show_thread:
-        out = out.withColumn(
-            "thread_comment",
-            F.concat(F.lit(" # thread_id="), F.col("thread_id").cast("string")),
+        extra.append(
+            ("thread_comment", "concat(' # thread_id=', CAST(thread_id AS STRING))")
         )
-    gtid = F.concat(F.col("gtid_uuid"), F.lit(":"), F.col("gno").cast("string"))
-    sec = F.date_trunc("second", F.col("ts"))
-    time_fmt = F.concat(F.lit("; # "), F.date_format(sec, "yyyy-MM-dd HH:mm:ss"))
+    sec = "date_trunc('second', ts)"
+    time_fmt = f"concat('; # ', date_format({sec}, 'yyyy-MM-dd HH:mm:ss'))"
     if show_time and time_mode == "row":
-        out = out.withColumn("time_comment", time_fmt)
+        extra.append(("time_comment", time_fmt))
         show_time = False  # no lag needed for the every-row mode
+    with_extra = ["*", *[f"{e} AS {name}" for name, e in extra]]
     if not (show_gtid or show_time):
-        return out
+        return rendered.selectExpr(*with_extra) if extra else rendered
 
-    out = (
-        out.withColumn("_g", gtid)
-        .withColumn("_s", sec)
-        .withColumn("_blk", F.floor(F.col("seq") / F.lit(block_size)))
+    keep = [ident(c) for c in rendered.columns] + [name for name, _ in extra]
+    out = rendered.selectExpr(
+        *with_extra,
+        "concat(gtid_uuid, ':', CAST(gno AS STRING)) AS _g",
+        f"{sec} AS _s",
+        f"floor(seq / {block_size}) AS _blk",
     )
-    w = Window.partitionBy("_blk").orderBy("seq")
+    w = "OVER (PARTITION BY _blk ORDER BY seq)"
     # carry: last (gtid, sec) of each non-empty block, then shift to the
     # NEXT non-empty block (one row per block; two-level lag)
     carry = _block_lag_carry(
-        out.groupBy("_blk").agg(
-            F.max_by(F.struct(F.col("_g"), F.col("_s")), F.col("seq")).alias("_c")
-        )
+        out.groupBy("_blk").agg(F.expr("max_by(struct(_g, _s), seq) AS _c"))
     )
-    out = (
-        out.withColumn("_rn", F.row_number().over(w))
-        .withColumn("_lag_g", F.lag("_g").over(w))
-        .withColumn("_lag_s", F.lag("_s").over(w))
-        .join(F.broadcast(carry), "_blk", "left")
-    )
-    first = F.col("_rn") == 1
-    prev_g = F.when(first, F.col("_prev._g")).otherwise(F.col("_lag_g"))
-    prev_s = F.when(first, F.col("_prev._s")).otherwise(F.col("_lag_s"))
+    out = out.selectExpr(
+        "*",
+        f"row_number() {w} AS _rn",
+        f"lag(_g) {w} AS _lag_g",
+        f"lag(_s) {w} AS _lag_s",
+    ).join(F.broadcast(carry), "_blk", "left")
+    prev_g = "CASE WHEN _rn = 1 THEN _prev._g ELSE _lag_g END"
+    prev_s = "CASE WHEN _rn = 1 THEN _prev._s ELSE _lag_s END"
+    comments = []
     if show_gtid:
-        new_gtid = prev_g.isNull() | (prev_g != F.col("_g"))
-        out = out.withColumn(
-            "gtid_comment", F.when(new_gtid, F.concat(F.lit("# GTID "), F.col("_g")))
+        comments.append(
+            f"CASE WHEN ({prev_g}) IS NULL OR ({prev_g}) != _g "
+            "THEN concat('# GTID ', _g) END AS gtid_comment"
         )
     if show_time:
-        new_sec = prev_s.isNull() | (prev_s != F.col("_s"))
-        out = out.withColumn("time_comment", F.when(new_sec, time_fmt))
-    return out.drop("_g", "_s", "_blk", "_rn", "_lag_g", "_lag_s", "_prev")
+        comments.append(
+            f"CASE WHEN ({prev_s}) IS NULL OR ({prev_s}) != _s "
+            f"THEN {time_fmt} END AS time_comment"
+        )
+    return out.selectExpr(*keep, *comments)
 
 
 def _render_with_registry(ev: DataFrame, registry: dict, render_one) -> DataFrame:
@@ -301,10 +328,10 @@ def _render_with_registry(ev: DataFrame, registry: dict, render_one) -> DataFram
 
     payload_fields = [f.name for f in ev.schema["after"].dataType.fields]
     parts: list[DataFrame] = []
-    seen = F.lit(False)
+    claimed: list[str] = []
     # db-QUALIFIED entries claim their events first (ddl.lookup /
     # cacheNewTable precedence): an unqualified `t` declared before
-    # `db1.t` must not swallow db1's events via the earlier ~seen guard
+    # `db1.t` must not swallow db1's events via the earlier claim guard
     ordered = sorted(registry.items(), key=lambda kv: (not kv[1].db, kv[0]))
     for key, meta in ordered:
         unknown = [c for c in meta.valid_columns if c not in payload_fields]
@@ -313,11 +340,12 @@ def _render_with_registry(ev: DataFrame, registry: dict, render_one) -> DataFram
                 f"schema file table {key!r} declares columns {unknown} that the "
                 f"event stream's payload struct lacks (has {payload_fields})"
             )
-        cond = F.lower(F.col("table")) == meta.table.lower()
+        match = f"lower(`table`) = {str_lit(meta.table.lower())}"
         if meta.db:
-            cond = cond & (F.lower(F.col("db")) == meta.db.lower())
-        cond = cond & ~seen  # qualified/earlier entries take precedence
-        seen = seen | cond
+            match += f" AND lower(`db`) = {str_lit(meta.db.lower())}"
+        # qualified/earlier entries take precedence
+        cond = f"({match})" + "".join(f" AND NOT ({m})" for m in claimed)
+        claimed.append(match)
         parts.append(
             render_one(
                 ev.filter(cond),
@@ -398,18 +426,13 @@ def write_sql_file(
     else:
         rendered = _render(ev)
     rendered = decorate(rendered, show_gtid, show_time, time_mode, show_thread)
-    line = F.concat_ws(
-        "\n",
-        *( [F.col("gtid_comment")] if show_gtid else [] ),
-        F.concat(
-            F.col("sql"),
-            F.coalesce(F.regexp_replace(F.col("time_comment"), "^; # ", " # "), F.lit(""))
-            if show_time
-            else F.lit(""),
-            F.coalesce(F.col("thread_comment"), F.lit("")) if show_thread else F.lit(""),
-        ),
-    )
-    out = rendered.select("seq", line.alias("value")).orderBy("seq").select("value")
+    tail = ["sql"]
+    if show_time:
+        tail.append("coalesce(regexp_replace(time_comment, '^; # ', ' # '), '')")
+    if show_thread:
+        tail.append("coalesce(thread_comment, '')")
+    line = _concat_ws("\n", [*(["gtid_comment"] if show_gtid else []), f"concat({', '.join(tail)})"])
+    out = rendered.selectExpr("seq", f"{line} AS value").orderBy(F.expr("seq")).selectExpr("value")
     w = out.write.mode("overwrite")
     if compression:
         w = w.option("compression", compression)
@@ -465,37 +488,35 @@ def with_insert_runs(events: DataFrame, block_size: int = 1 << 16) -> DataFrame:
     pure seq arithmetic — `floor((seq - _run)/batch_rows)` — and never
     needs a per-run window, so a bulk-load run of 10^10 inserts (ONE
     `_run` value) costs nothing beyond the bounded per-block windows."""
-    ev = events.withColumn("_blk", F.floor(F.col("seq") / F.lit(block_size)))
-    w = Window.partitionBy("_blk").orderBy("seq")
-    prev_struct = F.struct(F.col("op"), F.col("db"), F.col("table"))
+    ev = events.withColumn("_blk", F.expr(f"floor(seq / {block_size})"))
+    w = "OVER (PARTITION BY _blk ORDER BY seq)"
+    prev_struct = "struct(op, db, `table`)"
     carry = _block_lag_carry(
-        ev.groupBy("_blk").agg(F.max_by(prev_struct, F.col("seq")).alias("_c"))
+        ev.groupBy("_blk").agg(F.expr(f"max_by({prev_struct}, seq) AS _c"))
     ).withColumnRenamed("_prev", "_pc")
-    ev = (
-        ev.withColumn("_rn", F.row_number().over(w))
-        .withColumn("_lagp", F.lag(prev_struct).over(w))
-        .join(F.broadcast(carry), "_blk", "left")
-    )
-    prev = F.when(F.col("_rn") == 1, F.col("_pc")).otherwise(F.col("_lagp"))
+    ev = ev.selectExpr(
+        "*", f"row_number() {w} AS _rn", f"lag({prev_struct}) {w} AS _lagp"
+    ).join(F.broadcast(carry), "_blk", "left")
+    prev = "(CASE WHEN _rn = 1 THEN _pc ELSE _lagp END)"
+    ins = str_lit(S.OP_INSERT)
     extends = (
-        (F.col("op") == S.OP_INSERT)
-        & (prev["op"] == S.OP_INSERT)
-        & (prev["db"] == F.col("db"))
-        & (prev["table"] == F.col("table"))
+        f"op = {ins} AND {prev}.op = {ins} AND {prev}.db = db "
+        f"AND {prev}.`table` = `table`"
     )
-    ev = ev.withColumn("_brk", F.when(F.coalesce(extends, F.lit(False)), 0).otherwise(1))
+    ev = ev.withColumn("_brk", F.expr(f"CASE WHEN coalesce({extends}, false) THEN 0 ELSE 1 END"))
     # run-start seq: last non-null break seq within the block, patched on
     # blocks whose prefix has no break yet from a metadata-scale carry of
     # each preceding block's LAST run-start (one row per block).
-    start_seq = F.when(F.col("_brk") == 1, F.col("seq"))
-    local_start = F.last(start_seq, ignorenulls=True).over(
-        w.rowsBetween(Window.unboundedPreceding, 0)
+    start_seq = "CASE WHEN _brk = 1 THEN seq END"
+    local_start = (
+        f"last({start_seq}, true) OVER (PARTITION BY _blk ORDER BY seq "
+        "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"
     )
     carry_start = _block_running_last(
-        ev.groupBy("_blk").agg(F.max(start_seq).alias("_bs")), "_bs"
+        ev.groupBy("_blk").agg(F.expr(f"max({start_seq}) AS _bs")), "_bs"
     ).withColumnRenamed("_prev", "_cs")
     ev = ev.join(F.broadcast(carry_start), "_blk", "left").withColumn(
-        "_run", F.coalesce(local_start, F.col("_cs"))
+        "_run", F.expr(f"coalesce({local_start}, _cs)")
     )
     return ev.drop("_blk", "_rn", "_lagp", "_pc", "_brk", "_cs")
 
@@ -524,10 +545,9 @@ def _batched_insert_stmts(
     ins_cols = [
         c for c in payload_cols if not (no_primary_key and c in (key_cols or KEY_COLS))
     ]
-    values = F.concat_ws(",", *[sql_literal(F.col(f"after.{c}")) for c in ins_cols])
-    ins = runs.filter(F.col("op") == S.OP_INSERT).select(
-        "seq", "gtid_uuid", "gno", "ts", "thread_id", "db", "table", "_run",
-        F.concat(F.lit("("), values, F.lit(")")).alias("_tuple"),
+    ins = runs.filter(f"op = {str_lit(S.OP_INSERT)}").selectExpr(
+        "seq", "gtid_uuid", "gno", "ts", "thread_id", "db", "`table`", "_run",
+        f"concat('(', {_values(ins_cols)}, ')') AS _tuple",
     )
     return _assemble_batches(ins, ins_cols, batch_rows)
 
@@ -535,39 +555,31 @@ def _batched_insert_stmts(
 def _assemble_batches(ins: DataFrame, ins_cols: list[str], batch_rows: int) -> DataFrame:
     """Shared multi-row statement assembly over (header cols, _run,
     _tuple) rows — used by both the JVM and Arrow tuple builders."""
-    ins = ins.withColumn(
-        "_chunk", F.floor((F.col("seq") - F.col("_run")) / F.lit(batch_rows))
+    ins = ins.withColumn("_chunk", F.expr(f"floor((seq - _run) / {batch_rows})"))
+    sql = (
+        f"concat('INSERT INTO ', {_qualified('_a.db', '_a.`table`')}, "
+        f"{_col_list(ins_cols)}, ' VALUES', _vals, ';')"
     )
-    col_list = F.lit("(" + ",".join(f"`{c}`" for c in ins_cols) + ")")
-    anchor = F.min_by(
-        F.struct("gtid_uuid", "gno", "ts", "thread_id", "db", "table"), F.col("seq")
-    ).alias("_a")
-    g = ins.groupBy("_run", "_chunk").agg(
-        F.min("seq").alias("seq"),
-        anchor,
-        F.array_join(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("seq", "_tuple"))),
-                lambda x: x["_tuple"],
+    return (
+        ins.groupBy("_run", "_chunk")
+        .agg(
+            F.expr("min(seq) AS seq"),
+            F.expr(
+                "min_by(struct(gtid_uuid, gno, ts, thread_id, db, `table`), seq) AS _a"
             ),
-            ",",
-        ).alias("_vals"),
-    )
-    sql = F.concat(
-        F.lit("INSERT INTO "),
-        _qualified(F.col("_a.db"), F.col("_a.table")),
-        col_list,
-        F.lit(" VALUES"),
-        F.col("_vals"),
-        F.lit(";"),
-    )
-    return g.select(
-        "seq",
-        F.col("_a.gtid_uuid").alias("gtid_uuid"),
-        F.col("_a.gno").alias("gno"),
-        F.col("_a.ts").alias("ts"),
-        F.col("_a.thread_id").alias("thread_id"),
-        sql.alias("sql"),
+            F.expr(
+                "array_join(transform(array_sort(collect_list(struct(seq, _tuple))), "
+                "x -> x._tuple), ',') AS _vals"
+            ),
+        )
+        .selectExpr(
+            "seq",
+            "_a.gtid_uuid AS gtid_uuid",
+            "_a.gno AS gno",
+            "_a.ts AS ts",
+            "_a.thread_id AS thread_id",
+            f"{sql} AS sql",
+        )
     )
 
 
@@ -589,7 +601,7 @@ def render_sql_inline(
     cols = payload_cols or S.payload_columns()
     runs = with_insert_runs(events, block_size)
     others = render_sql(
-        runs.filter(F.col("op") != S.OP_INSERT),
+        runs.filter(f"op != {str_lit(S.OP_INSERT)}"),
         cols,
         minimal_update=minimal_update,
         no_primary_key=no_primary_key,

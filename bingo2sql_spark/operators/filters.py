@@ -22,6 +22,13 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from bingo2sql_spark.functions.sqltext import ident, str_lit
+
+
+def _all(parts: list[str]) -> Column:
+    """AND of SQL predicate texts as one Column (true when empty)."""
+    return F.expr(" AND ".join(f"({p})" for p in parts) or "true")
+
 
 def time_range(
     start: str | None = None, stop: str | None = None, ts_col: str = "ts"
@@ -30,12 +37,12 @@ def time_range(
 
     The reference treats stop-time as a scan terminator; in batch it is a
     plain predicate (SURVEY.md §2.2 F1)."""
-    c = F.lit(True)
+    parts = []
     if start is not None:
-        c = c & (F.col(ts_col) >= F.to_timestamp(F.lit(start)))
+        parts.append(f"{ident(ts_col)} >= to_timestamp({str_lit(start)})")
     if stop is not None:
-        c = c & (F.col(ts_col) <= F.to_timestamp(F.lit(stop)))
-    return c
+        parts.append(f"{ident(ts_col)} <= to_timestamp({str_lit(stop)})")
+    return _all(parts)
 
 
 def pos_range(
@@ -46,18 +53,18 @@ def pos_range(
 ) -> Column:
     """F2 — binlog (file, pos) tuple-range gate (checkFinish
     core/parser.go:523-574). Tuple comparison via struct ordering."""
-    def bound(file: str, pos: int) -> Column:
-        return F.struct(
-            F.lit(file).alias("log_file"), F.lit(pos).cast("long").alias("log_pos")
-        )
+    def bound(file: str, pos: int) -> str:
+        return f"struct({str_lit(file)} AS log_file, CAST({int(pos)} AS BIGINT) AS log_pos)"
 
-    cur = F.struct(F.col("log_file"), F.col("log_pos").cast("long").alias("log_pos"))
-    c = F.lit(True)
+    cur = "struct(log_file, CAST(log_pos AS BIGINT) AS log_pos)"
+    parts = []
     if start_file is not None:
-        c = c & (cur >= bound(start_file, start_pos))
+        parts.append(f"{cur} >= {bound(start_file, start_pos)}")
     if stop_file is not None:
-        c = c & (cur <= bound(stop_file, stop_pos if stop_pos is not None else (1 << 62)))
-    return c
+        parts.append(
+            f"{cur} <= {bound(stop_file, stop_pos if stop_pos is not None else (1 << 62))}"
+        )
+    return _all(parts)
 
 
 @dataclass(frozen=True)
@@ -93,32 +100,17 @@ def parse_gtid_sets(spec: str) -> list[GtidRange]:
 
 def gtid_set(ranges: Sequence[GtidRange] | str) -> Column:
     """F3 — GTID-set include filter (isGtidEventInGtidSet
-    core/parser.go:589-634) as an OR-of-intervals predicate.
-
-    With a handful of ranges a literal predicate beats a join; for very
-    large GTID sets use `gtid_set_join` (broadcast interval semi-join)."""
+    core/parser.go:589-634) as an OR-of-intervals predicate."""
     if isinstance(ranges, str):
         ranges = parse_gtid_sets(ranges)
-    c = F.lit(False)
-    for r in ranges:
-        c = c | (
-            (F.col("gtid_uuid") == r.uuid) & F.col("gno").between(r.start, r.stop)
+    return F.expr(
+        " OR ".join(
+            f"(gtid_uuid = {str_lit(r.uuid)} AND gno >= {int(r.start)} "
+            f"AND gno <= {int(r.stop)})"
+            for r in ranges
         )
-    return c
-
-
-def gtid_set_join(events: DataFrame, ranges: Sequence[GtidRange]) -> DataFrame:
-    """F3 at scale: broadcast interval semi-join for big GTID sets."""
-    spark = events.sparkSession
-    rdf = spark.createDataFrame(
-        [(r.uuid, r.start, r.stop) for r in ranges], "uuid string, lo long, hi long"
+        or "false"
     )
-    cond = (
-        (events["gtid_uuid"] == rdf["uuid"])
-        & (events["gno"] >= rdf["lo"])
-        & (events["gno"] <= rdf["hi"])
-    )
-    return events.join(F.broadcast(rdf), cond, "left_semi")
 
 
 def schema_table(
@@ -127,31 +119,34 @@ def schema_table(
     """F4 — db/table include filter, case-insensitive, `db.table`
     qualification supported (schemaFilter core/parser.go:1141-1161;
     init core/parser.go:1024-1045). Empty/None = pass-all."""
-    c = F.lit(True)
+
+    def in_list(col: str, values: Sequence[str]) -> str:
+        return f"lower({col}) IN (" + ", ".join(str_lit(v.lower()) for v in values) + ")"
+
+    parts = []
     if dbs:
-        c = c & F.lower(F.col("db")).isin([d.lower() for d in dbs])
+        parts.append(in_list("db", dbs))
     if tables:
-        plain = [t.lower() for t in tables if "." not in t]
+        plain = [t for t in tables if "." not in t]
         qual = [t.lower().split(".", 1) for t in tables if "." in t]
-        tc = F.lit(False)
-        if plain:
-            tc = tc | F.lower(F.col("table")).isin(plain)
-        for d, t in qual:
-            tc = tc | ((F.lower(F.col("db")) == d) & (F.lower(F.col("table")) == t))
-        c = c & tc
-    return c
+        tc = [in_list("`table`", plain)] if plain else []
+        tc += [
+            f"lower(db) = {str_lit(d)} AND lower(`table`) = {str_lit(t)}" for d, t in qual
+        ]
+        parts.append(" OR ".join(f"({c})" for c in tc))
+    return _all(parts)
 
 
 def dml_types(types: Sequence[str]) -> Column:
     """F5 — `--sql-type=insert,update,delete` (core/parser.go:1014-1022)."""
-    return F.col("op").isin([t.lower() for t in types])
+    return F.expr("op IN (" + ", ".join(str_lit(t.lower()) for t in types) + ")")
 
 
 def thread_id(tid: int) -> Column:
     """F6 — connection/thread filter (core/parser.go:2344-2346). The
     decode stage materializes thread_id on every row, so no cross-row
     state is needed (unlike the reference's QueryEvent capture)."""
-    return F.col("thread_id") == F.lit(tid)
+    return F.expr(f"thread_id = {int(tid)}")
 
 
 def max_rows(events: DataFrame, n: int, order: Sequence[str] = ("seq",)) -> DataFrame:
@@ -168,7 +163,7 @@ def ddl_passthrough(events: DataFrame, include_ddl: bool, flashback: bool) -> Da
     flashback mode (core/parser.go:2314-2339)."""
     if include_ddl and not flashback:
         return events
-    return events.filter(F.col("op") != "ddl")
+    return events.filter("op != 'ddl'")
 
 
 def apply_filters(

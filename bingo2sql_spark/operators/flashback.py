@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from bingo2sql_spark import schema as S
+from bingo2sql_spark.functions.sqltext import str_lit
 
 
 def invert(events: DataFrame, rebase_offset: int | None = None) -> DataFrame:
@@ -36,17 +37,16 @@ def invert(events: DataFrame, rebase_offset: int | None = None) -> DataFrame:
     reverse-ordered among themselves and (b) supersede every event the
     target has already absorbed under LWW-by-seq merge."""
     inv_op = (
-        F.when(F.col("op") == S.OP_INSERT, F.lit(S.OP_DELETE))
-        .when(F.col("op") == S.OP_DELETE, F.lit(S.OP_INSERT))
-        .otherwise(F.lit(S.OP_UPDATE))
+        f"CASE WHEN op = {str_lit(S.OP_INSERT)} THEN {str_lit(S.OP_DELETE)} "
+        f"WHEN op = {str_lit(S.OP_DELETE)} THEN {str_lit(S.OP_INSERT)} "
+        f"ELSE {str_lit(S.OP_UPDATE)} END"
     )
-    new_seq = (F.lit(rebase_offset) - F.col("seq")) if rebase_offset is not None else -F.col("seq")
-    return (
-        events.filter(F.col("op") != S.OP_DDL)
-        .withColumn("_b", F.col("before"))
-        .withColumn("before", F.col("after"))
-        .withColumn("after", F.col("_b"))
-        .drop("_b")
-        .withColumn("op", inv_op)
-        .withColumn("seq", new_seq)
-    )
+    new_seq = f"{rebase_offset} - seq" if rebase_offset is not None else "-seq"
+    # withColumns evaluates every expression against the input row, so
+    # the two images swap in one projection
+    return events.filter(f"op != {str_lit(S.OP_DDL)}").withColumns({
+        "before": F.expr("`after`"),
+        "after": F.expr("`before`"),
+        "op": F.expr(inv_op),
+        "seq": F.expr(new_seq),
+    })

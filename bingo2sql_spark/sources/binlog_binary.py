@@ -11,7 +11,8 @@ documented binlog v4 event format directly —
 
 - 4-byte magic, 19-byte common event header;
 - FORMAT_DESCRIPTION_EVENT (incl. CRC32 checksum-algorithm detection,
-  MySQL >= 5.6.1 — checksummed events drop their 4-byte tail);
+  MySQL >= 5.6.1 — every later event's 4-byte CRC32 tail is verified,
+  then dropped);
 - GTID_LOG_EVENT (sid uuid + gno), QUERY_EVENT (thread id, schema,
   statement — BEGIN/COMMIT filtered, DDL surfaced as op='ddl'),
   XID_EVENT, TABLE_MAP_EVENT (column types + per-type metadata),
@@ -26,10 +27,17 @@ documented binlog v4 event format directly —
 Spark-first shape: binlog FILES are the natural parallel unit (the
 server rotates them at max_binlog_size), so `binlog_raw_events` reads
 a directory with `spark.read.format("binaryFile")` and decodes each
-file inside one Arrow-batched `mapInPandas` task — a 1000-file backlog
-decodes on 1000 cores with zero shuffles. The output is the engine's
-RAW_EVENT envelope (+ `statement`), so everything downstream —
-`decode_events`, filters, replay/flashback, rendering — is unchanged.
+file inside one `mapInArrow` task that yields the file's envelope rows
+as one Arrow record batch — a 1000-file backlog decodes on 1000 cores
+with zero shuffles. The output is the engine's RAW_EVENT envelope
+(+ `statement`), so everything downstream — `decode_events`, filters,
+replay/flashback, rendering — is unchanged.
+
+Row images decode through a decoder built once per (TABLE_MAP,
+present-column bitmap): the present columns, their JSON keys and a
+token reader per column type are resolved up front, so a row pays one
+reader call per non-NULL value, no per-value type dispatch, and no
+intermediate dict — the image's JSON text is written directly.
 
 Column NAMES are not stored in rows events (only in the schema), so a
 registry maps (db, table) -> ordered column names — same contract as
@@ -116,10 +124,11 @@ _HEADER_LEN = 19
 
 
 class BinlogFormatError(ValueError):
-    """Raised on malformed binlog bytes (bad magic, truncated event,
-    unknown required structure). on_error='skip' in the reader degrades
-    per FILE instead (loud counter), matching the reference's
-    blacklist-and-continue (checkCanParse core/parser.go:1242-1253)."""
+    """Raised on malformed binlog bytes: bad magic, a truncated event, a
+    CRC32 mismatch in a checksummed file, a row decode that overruns its
+    event, or an unknown required structure. The Spark reader has no
+    skip mode: the error fails the task that decodes the file, like the
+    reference's hard failure on unparseable events."""
 
 
 def _u(data: bytes, off: int, n: int) -> int:
@@ -153,7 +162,7 @@ def _lenenc(data: bytes, off: int) -> tuple[int, int]:
 
 
 class _TableMap:
-    __slots__ = ("db", "table", "types", "meta", "col_count")
+    __slots__ = ("db", "table", "types", "meta", "col_count", "decoders")
 
     def __init__(self, db: str, table: str, types: list[int], meta: list[int]):
         self.db = db
@@ -161,6 +170,8 @@ class _TableMap:
         self.types = types
         self.meta = meta
         self.col_count = len(types)
+        #: (present bitmap, event width) -> _ImageDecoder
+        self.decoders: dict = {}
 
 
 def _parse_table_map(body: bytes) -> tuple[int, _TableMap]:
@@ -279,46 +290,82 @@ def _decode_frac(data: bytes, off: int, fsp: int) -> tuple[str, int]:
     return f".{micros:06d}"[: 1 + fsp], off + n
 
 
-def _decode_value(data: bytes, off: int, ctype: int, meta: int):
-    """One column value at `off` -> (python value, next offset)."""
+_I8 = struct.Struct("<b").unpack_from
+_I16 = struct.Struct("<h").unpack_from
+_I32 = struct.Struct("<i").unpack_from
+_I64 = struct.Struct("<q").unpack_from
+_F32 = struct.Struct("<f").unpack_from
+_F64 = struct.Struct("<d").unpack_from
+_U16 = struct.Struct("<H").unpack_from
+
+#: JSON text of one value, exactly as json.dumps writes it inside a dict
+_json_scalar = json.JSONEncoder().encode
+_json_str = json.encoder.encode_basestring_ascii
+
+
+def _text_token(len_bytes: int):
+    """Length-prefixed UTF-8 text (1- or 2-byte little-endian length)."""
+    if len_bytes == 1:
+        def read(data, off):
+            n = data[off]
+            off += 1
+            return _json_str(data[off : off + n].decode("utf-8", "replace")), off + n
+    else:
+        def read(data, off):
+            n = _U16(data, off)[0]
+            off += 2
+            return _json_str(data[off : off + n].decode("utf-8", "replace")), off + n
+    return read
+
+
+def _int_token(unpack, width: int):
+    def read(data, off):
+        return str(unpack(data, off)[0]), off + width
+
+    return read
+
+
+def _encoded(read, encode):
+    """A value reader `read(data, off) -> (value, off)` as a token reader."""
+    def read_token(data, off):
+        v, off = read(data, off)
+        return encode(v), off
+
+    return read_token
+
+
+def _token_reader(ctype: int, meta: int):
+    """The type dispatch for one column, resolved once: returns
+    `read(data, off) -> (JSON text of the value, next offset)`, the text
+    `json.dumps` writes for the decoded value inside the image dict."""
     if ctype == T_TINY:
-        return _s(data, off, 1), off + 1
+        return _int_token(_I8, 1)
     if ctype == T_SHORT:
-        return _s(data, off, 2), off + 2
+        return _int_token(_I16, 2)
     if ctype == T_INT24:
-        return _s(data, off, 3), off + 3
+        return lambda data, off: (str(_s(data, off, 3)), off + 3)
     if ctype == T_LONG:
-        return _s(data, off, 4), off + 4
+        return _int_token(_I32, 4)
     if ctype == T_LONGLONG:
-        return _s(data, off, 8), off + 8
+        return _int_token(_I64, 8)
     if ctype == T_FLOAT:
-        return struct.unpack_from("<f", data, off)[0], off + 4
+        return _encoded(lambda data, off: (_F32(data, off)[0], off + 4), _json_scalar)
     if ctype == T_DOUBLE:
-        return struct.unpack_from("<d", data, off)[0], off + 8
+        return _encoded(lambda data, off: (_F64(data, off)[0], off + 8), _json_scalar)
     if ctype == T_YEAR:
-        v = data[off]
-        return (1900 + v if v else 0), off + 1
+        return lambda data, off: (str(1900 + data[off] if data[off] else 0), off + 1)
     if ctype in (T_VARCHAR, T_VAR_STRING):
-        if meta < 256:
-            n, off = data[off], off + 1
-        else:
-            n, off = _u(data, off, 2), off + 2
-        return data[off : off + n].decode("utf-8", "replace"), off + n
+        return _text_token(1 if meta < 256 else 2)
     if ctype == T_STRING:
         real, maxlen = _string_meta(meta)
-        if real == T_ENUM:
+        if real in (T_ENUM, T_SET):
             # metadata byte1 IS the storage byte count (1 or 2) for
             # ENUM — an ENUM with > 255 values has byte1 == 2 (ADVICE
             # r8: deriving it from a value-count comparison misread a
-            # 2-byte index as 1 byte and misaligned the whole row)
-            return _u(data, off, maxlen), off + maxlen
-        if real == T_SET:
-            return _u(data, off, maxlen), off + maxlen
-        if maxlen < 256:
-            n, off = data[off], off + 1
-        else:
-            n, off = _u(data, off, 2), off + 2
-        return data[off : off + n].decode("utf-8", "replace"), off + n
+            # 2-byte index as 1 byte and misaligned the whole row); SET
+            # stores its bitmask in maxlen bytes the same way
+            return lambda data, off: (str(_u(data, off, maxlen)), off + maxlen)
+        return _text_token(1 if maxlen < 256 else 2)
     if ctype in (T_BLOB, T_GEOMETRY):
         # TEXT-ONLY assumption at this boundary (documented per ADVICE
         # r8): the JSON envelope stores blob bytes as UTF-8 text, so a
@@ -328,96 +375,153 @@ def _decode_value(data: bytes, off: int, ctype: int, meta: int):
         # payloads need a bytes-preserving envelope (e.g. a base64
         # column codec at the caller, sources/codecs.py) rather than
         # this text image.
-        n, off = _u(data, off, meta), off + meta
-        return data[off : off + n].decode("utf-8", "replace"), off + n
+        def read_blob(data, off):
+            n, off = _u(data, off, meta), off + meta
+            return _json_str(data[off : off + n].decode("utf-8", "replace")), off + n
+
+        return read_blob
     if ctype == T_JSON:
         from bingo2sql_spark.sources.codecs import decode_jsonb
 
-        n, off = _u(data, off, meta), off + meta
-        return decode_jsonb(bytes(data[off : off + n])), off + n
+        def read_json(data, off):
+            n, off = _u(data, off, meta), off + meta
+            return decode_jsonb(bytes(data[off : off + n])), off + n
+
+        return _encoded(read_json, _json_scalar)
     if ctype == T_BIT:
-        n = (meta + 7) // 8
-        return _be(data, off, n), off + n
+        nbytes = (meta + 7) // 8
+        return lambda data, off: (str(_be(data, off, nbytes)), off + nbytes)
     if ctype == T_DATE:
-        v = _u(data, off, 3)
-        y, m, d = v >> 9, (v >> 5) & 0x0F, v & 0x1F
-        return f"{y:04d}-{m:02d}-{d:02d}", off + 3
+        def read_date(data, off):
+            v = _u(data, off, 3)
+            y, m, d = v >> 9, (v >> 5) & 0x0F, v & 0x1F
+            return f"{y:04d}-{m:02d}-{d:02d}", off + 3
+
+        return _encoded(read_date, _json_str)
     if ctype == T_DATETIME2:
-        intpart = _be(data, off, 5) - 0x8000000000
-        off += 5
-        ym = (intpart >> 22) & 0x1FFFF
-        y, mo = divmod(ym, 13)
-        d = (intpart >> 17) & 0x1F
-        h = (intpart >> 12) & 0x1F
-        mi = (intpart >> 6) & 0x3F
-        s = intpart & 0x3F
-        frac, off = _decode_frac(data, off, meta)
-        return f"{y:04d}-{mo:02d}-{d:02d} {h:02d}:{mi:02d}:{s:02d}{frac}", off
+        def read_datetime2(data, off):
+            intpart = _be(data, off, 5) - 0x8000000000
+            off += 5
+            ym = (intpart >> 22) & 0x1FFFF
+            y, mo = divmod(ym, 13)
+            d = (intpart >> 17) & 0x1F
+            h = (intpart >> 12) & 0x1F
+            mi = (intpart >> 6) & 0x3F
+            s = intpart & 0x3F
+            frac, off = _decode_frac(data, off, meta)
+            return f"{y:04d}-{mo:02d}-{d:02d} {h:02d}:{mi:02d}:{s:02d}{frac}", off
+
+        return _encoded(read_datetime2, _json_str)
     if ctype == T_TIMESTAMP2:
-        secs = _be(data, off, 4)
-        off += 4
-        frac, off = _decode_frac(data, off, meta)
-        ts = _dt.datetime.fromtimestamp(secs, tz=_dt.timezone.utc)
-        return ts.strftime("%Y-%m-%d %H:%M:%S") + frac, off
+        def read_timestamp2(data, off):
+            secs = _be(data, off, 4)
+            off += 4
+            frac, off = _decode_frac(data, off, meta)
+            ts = _dt.datetime.fromtimestamp(secs, tz=_dt.timezone.utc)
+            return ts.strftime("%Y-%m-%d %H:%M:%S") + frac, off
+
+        return _encoded(read_timestamp2, _json_str)
     if ctype == T_TIME2:
-        v = _be(data, off, 3) - 0x800000
-        off += 3
-        sign = "-" if v < 0 else ""
-        v = abs(v)
-        h = (v >> 12) & 0x3FF
-        mi = (v >> 6) & 0x3F
-        s = v & 0x3F
-        frac, off = _decode_frac(data, off, meta)
-        return f"{sign}{h:02d}:{mi:02d}:{s:02d}{frac}", off
+        def read_time2(data, off):
+            v = _be(data, off, 3) - 0x800000
+            off += 3
+            sign = "-" if v < 0 else ""
+            v = abs(v)
+            h = (v >> 12) & 0x3FF
+            mi = (v >> 6) & 0x3F
+            s = v & 0x3F
+            frac, off = _decode_frac(data, off, meta)
+            return f"{sign}{h:02d}:{mi:02d}:{s:02d}{frac}", off
+
+        return _encoded(read_time2, _json_str)
     if ctype == T_NEWDECIMAL:
-        return _decode_newdecimal(data, off, meta >> 8, meta & 0xFF)
+        precision, scale = meta >> 8, meta & 0xFF
+        return _encoded(
+            lambda data, off: _decode_newdecimal(data, off, precision, scale), _json_str
+        )
     # pre-5.6.4 legacy temporals (servers upgraded in place still write
     # them; mysql-bin from 5.1/5.5 masters is full of them)
     if ctype == T_TIMESTAMP:
-        secs = _u(data, off, 4)
-        ts = _dt.datetime.fromtimestamp(secs, tz=_dt.timezone.utc)
-        return ts.strftime("%Y-%m-%d %H:%M:%S"), off + 4
+        def read_timestamp(data, off):
+            secs = _u(data, off, 4)
+            ts = _dt.datetime.fromtimestamp(secs, tz=_dt.timezone.utc)
+            return ts.strftime("%Y-%m-%d %H:%M:%S"), off + 4
+
+        return _encoded(read_timestamp, _json_str)
     if ctype == T_DATETIME:
-        v = _u(data, off, 8)  # decimal-packed YYYYMMDDHHMMSS
-        d, t = divmod(v, 1_000_000)
-        y, md = divmod(d, 10_000)
-        mo, dd = divmod(md, 100)
-        h, ms = divmod(t, 10_000)
-        mi, s = divmod(ms, 100)
-        return f"{y:04d}-{mo:02d}-{dd:02d} {h:02d}:{mi:02d}:{s:02d}", off + 8
+        def read_datetime(data, off):
+            v = _u(data, off, 8)  # decimal-packed YYYYMMDDHHMMSS
+            d, t = divmod(v, 1_000_000)
+            y, md = divmod(d, 10_000)
+            mo, dd = divmod(md, 100)
+            h, ms = divmod(t, 10_000)
+            mi, s = divmod(ms, 100)
+            return f"{y:04d}-{mo:02d}-{dd:02d} {h:02d}:{mi:02d}:{s:02d}", off + 8
+
+        return _encoded(read_datetime, _json_str)
     if ctype == T_TIME:
-        v = _s(data, off, 3)  # decimal-packed (H*10000 + M*100 + S), signed
-        sign = "-" if v < 0 else ""
-        v = abs(v)
-        h, ms = divmod(v, 10_000)
-        mi, s = divmod(ms, 100)
-        return f"{sign}{h:02d}:{mi:02d}:{s:02d}", off + 3
-    raise BinlogFormatError(f"unsupported column type {ctype}")
+        def read_time(data, off):
+            v = _s(data, off, 3)  # decimal-packed (H*10000 + M*100 + S), signed
+            sign = "-" if v < 0 else ""
+            v = abs(v)
+            h, ms = divmod(v, 10_000)
+            mi, s = divmod(ms, 100)
+            return f"{sign}{h:02d}:{mi:02d}:{s:02d}", off + 3
+
+        return _encoded(read_time, _json_str)
+
+    def unsupported(data, off):
+        # raised on the first non-NULL value, not when the map arrives
+        raise BinlogFormatError(f"unsupported column type {ctype}")
+
+    return unsupported
 
 
-def _bit_set(bitmap: bytes, i: int) -> bool:
-    return bool(bitmap[i // 8] & (1 << (i % 8)))
+def _bits(bitmap: bytes, n: int) -> list[int]:
+    """Indexes of the set bits among the first n of a little-endian bitmap."""
+    return [i for i in range(min(n, len(bitmap) * 8)) if bitmap[i >> 3] >> (i & 7) & 1]
 
 
-def _decode_image(
-    body: bytes, off: int, tm: _TableMap, present: bytes, n_present: int,
-    names: list[str],
-) -> tuple[dict, int]:
-    """One row image: null bitmap over present columns, then values."""
-    null_bm = body[off : off + (n_present + 7) // 8]
-    off += (n_present + 7) // 8
-    row: dict = {}
-    j = 0  # index within present columns
-    for i in range(tm.col_count):
-        if not _bit_set(present, i):
-            continue
-        name = names[i] if i < len(names) else f"@{i + 1}"
-        if _bit_set(null_bm, j):
-            row[name] = None
+class _ImageDecoder:
+    """Row-image decoder for one (TABLE_MAP, present-column bitmap):
+    the present columns, their JSON keys and a token reader per column
+    type are worked out once, so a row pays only its null bitmap and one
+    reader call per non-NULL value. An image decodes straight to the
+    JSON text `json.dumps` gives the {name: value} dict of the image."""
+
+    __slots__ = ("keys", "readers", "null_len")
+
+    def __init__(self, tm: _TableMap, present: bytes, width: int, names: list[str]):
+        cols = _bits(present, tm.col_count)
+        self.keys = [
+            ("{" if j == 0 else ", ")
+            + _json_str(names[i] if i < len(names) else f"@{i + 1}")
+            + ": "
+            for j, i in enumerate(cols)
+        ]
+        self.readers = [_token_reader(tm.types[i], tm.meta[i]) for i in cols]
+        # the null bitmap spans every present column of the event width
+        self.null_len = (len(_bits(present, width)) + 7) // 8
+
+    def decode(self, body: bytes, off: int) -> tuple[str, int]:
+        """One row image at `off` (null bitmap, then the non-NULL
+        values) -> (JSON object text, next offset)."""
+        end = off + self.null_len
+        nulls = int.from_bytes(body[off:end], "little")
+        off = end
+        parts = []
+        if nulls:
+            for j, (key, read) in enumerate(zip(self.keys, self.readers)):
+                if nulls >> j & 1:
+                    parts.append(key + "null")
+                else:
+                    tok, off = read(body, off)
+                    parts.append(key + tok)
         else:
-            row[name], off = _decode_value(body, off, tm.types[i], tm.meta[i])
-        j += 1
-    return row, off
+            for key, read in zip(self.keys, self.readers):
+                tok, off = read(body, off)
+                parts.append(key + tok)
+        return ("".join(parts) + "}" if parts else "{}"), off
 
 
 # ---------------------------------------------------------------------------
@@ -455,6 +559,9 @@ class BinlogEventParser:
         self.schema_ver = schema_ver
         self.checksummed = False
         self.table_maps: dict[int, _TableMap] = {}
+        # TABLE_MAP body (past the table id) -> parsed map, so the row
+        # decoders built for one map serve every later identical map
+        self._map_cache: dict[bytes, _TableMap] = {}
         self.gtid_uuid: str | None = None
         self.gno: int | None = None
         self.thread_id: int | None = None
@@ -490,6 +597,13 @@ class BinlogEventParser:
         etype = whole[4]
         body = whole[_HEADER_LEN:]
         if self.checksummed and etype != FORMAT_DESCRIPTION_EVENT:
+            if len(whole) < _HEADER_LEN + 4 or zlib.crc32(
+                memoryview(whole)[:-4]
+            ) != _u(whole, len(whole) - 4, 4):
+                raise BinlogFormatError(
+                    f"CRC32 mismatch in event at offset {start_off} "
+                    f"(type {etype}, file {self.log_file!r})"
+                )
             body = body[:-4]
         ev_ts = _dt.datetime.fromtimestamp(ts, tz=_dt.timezone.utc)
         # bit-budget guard (ADVICE r8): an event offset past 2^32-1
@@ -589,8 +703,11 @@ class BinlogEventParser:
                 "statement": sql,
             }]
         if etype == TABLE_MAP_EVENT:
-            table_id, tm = _parse_table_map(body)
-            self.table_maps[table_id] = tm
+            key = bytes(body[6:])
+            tm = self._map_cache.get(key)
+            if tm is None:
+                tm = self._map_cache[key] = _parse_table_map(body)[1]
+            self.table_maps[_u(body, 0, 6)] = tm
             return []
         if etype in _ROWS_WRITE | _ROWS_UPDATE | _ROWS_DELETE:
             return self._rows_event(etype, body, start_off, ev_ts)
@@ -598,6 +715,22 @@ class BinlogEventParser:
         # metadata with no envelope row (the gtid pair persists until
         # the next GTID event, matching server behavior)
         return []
+
+    def _names(self, tm: _TableMap) -> list[str]:
+        """Registry column names of the mapped table; [] means positional
+        @1..@N names (mysqlbinlog's convention for unknown tables)."""
+        return (
+            self.names_for.get(f"{tm.db}.{tm.table}".lower())
+            or self.names_for.get(tm.table.lower())  # unqualified registry key
+            or []
+        )
+
+    def _decoder(self, tm: _TableMap, present: bytes, width: int) -> _ImageDecoder:
+        dec = tm.decoders.get((present, width))
+        if dec is None:
+            dec = _ImageDecoder(tm, present, width, self._names(tm))
+            tm.decoders[(present, width)] = dec
+        return dec
 
     def _rows_event(self, etype, body, start_off, ev_ts) -> list[dict]:
         table_id = _u(body, 0, 6)
@@ -613,82 +746,83 @@ class BinlogEventParser:
             )
         width, off = _lenenc(body, off)
         bm_len = (width + 7) // 8
-        present1 = body[off : off + bm_len]
+        present1 = bytes(body[off : off + bm_len])
         off += bm_len
-        present2 = present1
+        first = self._decoder(tm, present1, width)
+        second = None
+        changed = None
         if etype in _ROWS_UPDATE:
-            present2 = body[off : off + bm_len]
+            present2 = bytes(body[off : off + bm_len])
             off += bm_len
-        n1 = sum(_bit_set(present1, i) for i in range(width))
-        n2 = sum(_bit_set(present2, i) for i in range(width))
-        names = (
-            self.names_for.get(f"{tm.db}.{tm.table}".lower())
-            or self.names_for.get(tm.table.lower())  # unqualified registry key
-            or [f"@{i + 1}" for i in range(tm.col_count)]
-        )
+            second = self._decoder(tm, present2, width)
+            cols = _bits(present2, width)
+            if len(cols) < width:
+                # binlog_row_image=MINIMAL: the after image carries
+                # only the changed columns — surface the mask the
+                # MINIMAL merge path consumes
+                names = self._names(tm)
+                changed = [names[i] if i < len(names) else f"@{i + 1}" for i in cols]
         op = (
             "insert" if etype in _ROWS_WRITE
             else "delete" if etype in _ROWS_DELETE
             else "update"
         )
+        head = {
+            "log_file": self.log_file,
+            "log_pos": start_off,
+            "gtid_uuid": self.gtid_uuid,
+            "gno": self.gno,
+            "ts": ev_ts,
+            "thread_id": self.thread_id,
+            "db": tm.db,
+            "table": tm.table,
+            "op": op,
+        }
+        seq0 = self._seq_base | (start_off << 12)
         out: list[dict] = []
-        row_idx = 0
-        while off < len(body):
-            if op == "insert":
-                after, off = _decode_image(body, off, tm, present1, n1, names)
-                before = None
-            elif op == "delete":
-                before, off = _decode_image(body, off, tm, present1, n1, names)
-                after = None
-            else:
-                before, off = _decode_image(body, off, tm, present1, n1, names)
-                after, off = _decode_image(body, off, tm, present2, n2, names)
-            changed = None
-            if op == "update" and n2 < width:
-                # binlog_row_image=MINIMAL: the after image carries
-                # only the changed columns — surface the mask the
-                # MINIMAL merge path consumes
-                changed = [
-                    names[i] if i < len(names) else f"@{i + 1}"
-                    for i in range(width)
-                    if _bit_set(present2, i)
-                ]
-            if row_idx >= (1 << 12):
-                # the encoder caps rows-events at 4095 rows, but a
-                # server with a raised binlog_row_event_max_size can
-                # exceed it — refuse instead of bleeding into the
-                # offset field of the packed seq (ADVICE r8)
-                raise BinlogFormatError(
-                    f"rows event at offset {start_off} carries >= 4096 rows "
-                    f"— exceeds the 12-bit row-index seq budget"
-                )
-            out.append({
-                # one seq per ROW: rows of a multi-row event order by
-                # their index after the event's start offset
-                "seq": self._seq_base | (start_off << 12) | row_idx,
-                "log_file": self.log_file,
-                "log_pos": start_off,
-                "gtid_uuid": self.gtid_uuid,
-                "gno": self.gno,
-                "ts": ev_ts,
-                "thread_id": self.thread_id,
-                "db": tm.db,
-                "table": tm.table,
-                "op": op,
-                "before_json": json.dumps(before) if before is not None else None,
-                "after_json": json.dumps(after) if after is not None else None,
-                "changed_cols": changed,
-                "schema_ver": self.schema_ver,
-                "statement": None,
-            })
-            row_idx += 1
-        if off != len(body):
+        end = len(body)
+        try:
+            while off < end:
+                before = after = None
+                if op == "insert":
+                    after, off = first.decode(body, off)
+                else:
+                    before, off = first.decode(body, off)
+                    if second is not None:
+                        after, off = second.decode(body, off)
+                row_idx = len(out)
+                if row_idx >= (1 << 12):
+                    # the encoder caps rows-events at 4095 rows, but a
+                    # server with a raised binlog_row_event_max_size can
+                    # exceed it — refuse instead of bleeding into the
+                    # offset field of the packed seq (ADVICE r8)
+                    raise BinlogFormatError(
+                        f"rows event at offset {start_off} carries >= 4096 rows "
+                        f"— exceeds the 12-bit row-index seq budget"
+                    )
+                out.append({
+                    # one seq per ROW: rows of a multi-row event order by
+                    # their index after the event's start offset
+                    "seq": seq0 | row_idx,
+                    **head,
+                    "before_json": before,
+                    "after_json": after,
+                    "changed_cols": None if changed is None else list(changed),
+                    "schema_ver": self.schema_ver,
+                    "statement": None,
+                })
+        except (IndexError, struct.error) as e:
+            raise BinlogFormatError(
+                f"rows event at {start_off}: row decode overran the event "
+                f"body ({e})"
+            ) from None
+        if off != end:
             # a row decode that overshoots the body means truncated or
             # corrupt values — surface it instead of emitting garbage
             # rows (the reference hard-fails on unparseable events too)
             raise BinlogFormatError(
                 f"rows event at {start_off}: row decode overran the event "
-                f"body ({off} > {len(body)})"
+                f"body ({off} > {end})"
             )
         return out
 
@@ -731,36 +865,41 @@ def decode_binlog_df(
     schema_ver: int = 2,
 ):
     """(path, content) rows -> RAW_EVENT envelope (+ statement) via one
-    Arrow-batched mapInPandas pass. Works on both a batch `binaryFile`
-    scan and a `readStream.format("binaryFile")` micro-batch (the
-    streaming tail over a rotating binlog directory — S1's shape)."""
-    import pandas as pd
+    `mapInArrow` pass: each file's envelope rows leave the parser as one
+    Arrow record batch, built column-wise against the output schema.
+    Works on both a batch `binaryFile` scan and a
+    `readStream.format("binaryFile")` micro-batch (the streaming tail
+    over a rotating binlog directory — S1's shape)."""
     from pyspark.sql import types as T
+    from pyspark.sql.pandas.types import to_arrow_schema
 
     from bingo2sql_spark import schema as S
 
     out_schema = T.StructType(
         S.RAW_EVENT.fields + [T.StructField("statement", T.StringType(), True)]
     )
+    arrow_schema = to_arrow_schema(out_schema)
     names_for = {k.lower(): v for k, v in (table_schemas or {}).items()}
 
     def gen(batches):
-        for pdf in batches:
-            rows = []
-            for _, r in pdf.iterrows():
-                fname = str(r["path"]).rsplit("/", 1)[-1]
-                rows.extend(
+        import pyarrow as pa
+
+        for batch in batches:
+            paths = batch.column("path").to_pylist()
+            contents = batch.column("content").to_pylist()
+            for path, content in zip(paths, contents):
+                rows = list(
                     parse_binlog_bytes(
-                        bytes(r["content"]),
-                        log_file=fname,
+                        content,
+                        log_file=path.rsplit("/", 1)[-1],
                         names_for=names_for,
                         schema_ver=schema_ver,
                     )
                 )
-            if rows:
-                yield pd.DataFrame(rows)
+                if rows:
+                    yield pa.RecordBatch.from_pylist(rows, schema=arrow_schema)
 
-    return binary_df.select("path", "content").mapInPandas(gen, schema=out_schema)
+    return binary_df.select("path", "content").mapInArrow(gen, schema=out_schema)
 
 
 def payload_schema_from(

@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from bingo2sql_spark import schema as S
+from bingo2sql_spark.functions.sqltext import ident, str_lit
 
 _HEADER = [
     "seq", "log_file", "log_pos", "gtid_uuid", "gno", "ts",
@@ -81,15 +82,17 @@ def decode_events(
         want = set(before_fields)
         before_schema = T.StructType([f for f in payload.fields if f.name in want])
 
-    def img(json_col: str, schema) -> F.Column:
-        if on_corrupt == "fail":
-            return F.from_json(json_col, schema, {"mode": "FAILFAST"})
-        return F.from_json(json_col, schema)
+    mode = ", map('mode', 'FAILFAST')" if on_corrupt == "fail" else ""
 
-    return raw.select(
-        *_HEADER,
-        img("before_json", before_schema).alias("before"),
-        img("after_json", payload).alias("after"),
+    def img(json_col: str, schema) -> str:
+        return f"from_json({json_col}, {str_lit(schema.json())}{mode})"
+
+    # one selectExpr: the projection costs a few gateway calls, not a
+    # Column tree per field
+    return raw.selectExpr(
+        *[ident(c) for c in _HEADER],
+        img("before_json", before_schema) + " AS `before`",
+        img("after_json", payload) + " AS `after`",
         "changed_cols",
         "schema_ver",
         # op='ddl' Query events ride along when the wire carries them

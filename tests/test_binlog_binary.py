@@ -201,7 +201,7 @@ def test_newdecimal_digits():
 
 
 def test_spark_reader_and_replay_parity(spark, tmp_path):
-    """binaryFile -> mapInPandas decode -> decode_events -> replay
+    """binaryFile -> mapInArrow decode -> decode_events -> replay
     lands the same final state as replaying the equivalent typed
     events directly — the binlog file is just another landing format
     in front of the same engine."""
@@ -438,3 +438,98 @@ def test_seq_bit_budget_guards():
         p.set_log_file("bin.9999999")  # ordinal >= 2^19
     with pytest.raises(B.BinlogFormatError, match="32-bit"):
         p.feed(b"\x00" * 19, start_off=1 << 32)
+
+
+def test_crc32_mismatch_raises():
+    """ROADMAP #5a: a checksummed file's per-event CRC32 is verified —
+    one flipped bit inside a VARCHAR value of a rows event raises
+    instead of decoding to a silently wrong value ("iello")."""
+    w = B.BinlogWriter(checksum=True)
+    types, meta = [B.T_LONG, B.T_VARCHAR], [0, 40]
+    w.table_map("d", "t", types, meta, ts=1)
+    w.rows("d", "t", "insert", types, meta, [[1, "hello world"]], ts=1)
+    data = bytearray(w.bytes())
+    names = {"d.t": ["k", "v"]}
+    (ok,) = B.parse_binlog_bytes(bytes(data), log_file="b.1", names_for=names)
+    assert json.loads(ok["after_json"]) == {"k": 1, "v": "hello world"}
+    data[bytes(data).index(b"hello world")] ^= 0x01  # 'h' -> 'i'
+    with pytest.raises(B.BinlogFormatError, match="CRC32 mismatch"):
+        list(B.parse_binlog_bytes(bytes(data), log_file="b.1", names_for=names))
+    # an unchecksummed file has no CRC to check: the same flip decodes
+    w = B.BinlogWriter(checksum=False)
+    w.table_map("d", "t", types, meta, ts=1)
+    w.rows("d", "t", "insert", types, meta, [[1, "hello world"]], ts=1)
+    plain = bytearray(w.bytes())
+    plain[bytes(plain).index(b"hello world")] ^= 0x01
+    (ev,) = B.parse_binlog_bytes(bytes(plain), log_file="b.1", names_for=names)
+    assert json.loads(ev["after_json"])["v"] == "iello world"
+
+
+def _type_matrix_file() -> tuple[bytes, dict]:
+    """One checksummed file over the decoder's type matrix plus the
+    envelope edge cases: NULL values, DDL rows, an anonymous GTID (NULL
+    gtid pair), a MINIMAL update (changed_cols), a table missing from
+    the registry (positional @N names) and second-resolution ts."""
+    w = B.BinlogWriter(checksum=True)
+    types = [B.T_TINY, B.T_SHORT, B.T_INT24, B.T_LONG, B.T_LONGLONG,
+             B.T_FLOAT, B.T_DOUBLE, B.T_YEAR, B.T_VARCHAR, B.T_BLOB,
+             B.T_DATE, B.T_DATETIME2, B.T_NEWDECIMAL, B.T_STRING,
+             B.T_STRING, B.T_STRING, B.T_TIMESTAMP, B.T_DATETIME, B.T_TIME,
+             B.T_VARCHAR]
+    meta = [0, 0, 0, 0, 0, 4, 8, 0, 40, 2, 0, 0, (12 << 8) | 4,
+            (B.T_ENUM << 8) | 2, (B.T_SET << 8) | 1, (B.T_STRING << 8) | 20,
+            0, 0, 0, 300]
+    names = [f"c{i}" for i in range(len(types))]
+    row = [-128, -32768, -8388608, -2147483648, -(2**63), 1.5, 2.25, 2024,
+           "héllo 'q' \"dq\" \\ \n", "blobtext", "2024-02-29",
+           "2024-02-29 12:00:01", "-1234.5678", 300, 0b101, "chr",
+           "2009-05-17 12:34:56", "1999-12-31 23:59:59", "-01:02:03",
+           "x" * 280]
+    nulls = [None if i % 2 else v for i, v in enumerate(row)]
+    w.gtid("3e11fa47-71ca-11e1-9e33-c80aa9429562", 9, ts=1700000000)
+    w.query("BEGIN", db="test", thread_id=3, ts=1700000000)
+    w.table_map("test", "wide", types, meta, ts=1700000000)
+    w.rows("test", "wide", "insert", types, meta, [row, nulls], ts=1700000000)
+    w.rows("test", "wide", "update", types, meta, [(row, nulls)], ts=1700000001,
+           present_after=[i < 3 for i in range(len(types))])
+    w.xid(1, ts=1700000001)
+    # anonymous GTID: same layout as a GTID event, no sid/gno carried on
+    w._append(1700000002, B.ANONYMOUS_GTID_EVENT, bytes(25))
+    w.query("ALTER TABLE wide ADD COLUMN c20 int", db="test", thread_id=4,
+            ts=1700000002)
+    w.table_map("test", "unregistered", [B.T_LONG, B.T_VARCHAR], [0, 40],
+                ts=1700000003)
+    w.rows("test", "unregistered", "delete", [B.T_LONG, B.T_VARCHAR], [0, 40],
+           [[5, "gone"]], ts=1700000003)
+    w.xid(2, ts=1700000003)
+    return w.bytes(), {"test.wide": names}
+
+
+def test_spark_reader_equals_pure_parse(spark, tmp_path):
+    """The mapInArrow reader returns, field for field, exactly the
+    envelopes parse_binlog_bytes yields for the same file."""
+    from bingo2sql_spark.sources.binlog_binary import binlog_raw_events
+
+    data, names = _type_matrix_file()
+    path = tmp_path / "mysql-bin.000004"
+    path.write_bytes(data)
+    want = list(B.parse_binlog_bytes(data, log_file=path.name, names_for=names))
+    assert [e["op"] for e in want] == ["insert", "insert", "update", "ddl", "delete"]
+    assert want[2]["changed_cols"] == ["c0", "c1", "c2"]
+    assert want[3]["gtid_uuid"] is None and want[3]["gno"] is None
+    assert json.loads(want[4]["before_json"]) == {"@1": 5, "@2": "gone"}
+    assert json.loads(want[0]["after_json"])["c8"] == "héllo 'q' \"dq\" \\ \n"
+
+    got = sorted(
+        binlog_raw_events(spark, str(path), names).collect(), key=lambda r: r["seq"]
+    )
+    assert len(got) == len(want)
+    for g, w in zip(got, want):
+        g = g.asDict()
+        assert set(g) == set(w)
+        for k, v in w.items():
+            if k == "ts":
+                # Spark hands back the instant as a naive local datetime
+                assert g[k].timestamp() == v.timestamp(), (k, g[k], v)
+            else:
+                assert g[k] == v, (k, g[k], v)

@@ -317,7 +317,7 @@ def test_binary_codec_roundtrip_and_escape(spark):
 
     lit = (
         spark.createDataFrame([(out[0],)], "v string")
-        .select(sql_literal(F.col("v")).alias("l"))
+        .select(F.expr(sql_literal("v")).alias("l"))
         .collect()[0]["l"]
     )
     assert lit.startswith("'\\0\\0\\0\\0\x01\x01\\0\x1a".replace("\x1a", "\\Z"))

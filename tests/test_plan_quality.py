@@ -405,3 +405,56 @@ def test_bucket_aligned_landing_feeds_pass_through_exchange(spark, tmp_path):
     assert {r["seq"] for r in dec.select("seq").collect()} == {
         r["seq"] for r in flat.select("seq").collect()
     }
+
+
+def test_flashback_sql_plan_gateway_round_trips(spark, tmp_path, monkeypatch):
+    """Building the flashback SQL artifact's plan must not pay per-column
+    py4j traffic: the render templates, filters and inversion are handed
+    to Spark as SQL expression text, so one generate_sql(flashback=True)
+    call (plan building plus the write) stays at or under 1,200 gateway
+    round trips. The Column-by-Column builders cost about 5,000."""
+    from py4j.java_gateway import GatewayClient
+
+    from bingo2sql_spark.api import generate_sql
+    from bingo2sql_spark.sources.binlog_binary import (
+        T_VARCHAR, BinlogWriter, binlog_raw_events,
+    )
+    from bingo2sql_spark.sources.decode import decode_events
+
+    cols = ["repo", "path", "commit", "lang", "content"]
+    types, meta = [T_VARCHAR] * len(cols), [64, 64, 64, 16, 512]
+    rows = [[f"r{i % 7}", f"src/f{i}.py", f"{i:016x}", "py", f"body {i}"] for i in range(60)]
+    w = BinlogWriter(checksum=True)
+    w.gtid("8a2f1e60-0000-11ee-be56-0242ac120001", 1, ts=1_704_067_200)
+    w.table_map("test", "repo_files", types, meta, ts=1_704_067_200)
+    w.rows("test", "repo_files", "insert", types, meta, rows, ts=1_704_067_200)
+    start = len(w.buf)
+    w.gtid("8a2f1e60-0000-11ee-be56-0242ac120001", 2, ts=1_704_067_201)
+    w.table_map("test", "repo_files", types, meta, ts=1_704_067_201)
+    w.rows("test", "repo_files", "update", types, meta,
+           [(r, r[:4] + ["edited"]) for r in rows[::2]], ts=1_704_067_201)
+    w.rows("test", "repo_files", "delete", types, meta, rows[1::2], ts=1_704_067_201)
+    path = tmp_path / "mysql-bin.000001"
+    path.write_bytes(w.bytes())
+
+    events = decode_events(
+        binlog_raw_events(spark, str(path), {"test.repo_files": cols})
+    )
+    calls = [0]
+    send = GatewayClient.send_command
+
+    def counting(self, *args, **kwargs):
+        calls[0] += 1
+        return send(self, *args, **kwargs)
+
+    monkeypatch.setattr(GatewayClient, "send_command", counting)
+    generate_sql(
+        events, str(tmp_path / "sql"), flashback=True,
+        start_file=path.name, start_position=start,
+        stop_file=path.name, stop_position=len(w.buf),
+    )
+    monkeypatch.undo()
+    text = "".join(p.read_text() for p in sorted((tmp_path / "sql").glob("part-*")))
+    assert text.count("UPDATE `test`.`repo_files`") == 30
+    assert text.count("INSERT INTO `test`.`repo_files`") == 30
+    assert calls[0] <= 1200, calls[0]
