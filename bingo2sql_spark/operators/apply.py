@@ -68,6 +68,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from bingo2sql_spark import schema as S
+from bingo2sql_spark.functions.sqltext import ident, str_lit
 
 MANIFEST_DIR = "_manifests"
 DATA_DIR = "data"
@@ -348,6 +349,26 @@ def bucket_col(n_buckets: int):
     return F.pmod(F.xxhash64(*[F.col(k) for k in S.MERGE_KEYS]), F.lit(n_buckets)).cast("int")
 
 
+def _key_literal(v: Any) -> str:
+    """One read_keys key component as SQL text of the stored merge-key
+    type (string). Non-string values are cast in the JVM (ADVICE r4):
+    xxhash64 over e.g. a long differs from the hash of its string form,
+    so an uncast int would silently miss its bucket and its row."""
+    if v is None:
+        return "CAST(NULL AS STRING)"
+    if isinstance(v, str):
+        return str_lit(v)
+    if isinstance(v, int):
+        # bool included: str(True) is the SQL boolean literal TRUE
+        return f"CAST({v} AS STRING)"
+    if isinstance(v, float):
+        return f"CAST(CAST({str_lit(repr(v))} AS DOUBLE) AS STRING)"
+    raise TypeError(
+        f"read_keys key components must be str, int, float or None, "
+        f"not {type(v).__name__}"
+    )
+
+
 class IcebergLiteTable:
     """See module docstring. `write_mode`:
 
@@ -562,7 +583,15 @@ class IcebergLiteTable:
         return T.StructType(fields)
 
     def _empty_state(self, spark: SparkSession, columns: list[str]) -> DataFrame:
-        return spark.createDataFrame([], self._state_schema(columns))
+        """The empty table state, built in the JVM: the optimizer folds
+        `LIMIT 0` to an empty LocalRelation and PropagateEmptyRelation
+        drops it from a merge union, so a merge against it plans the
+        batch alone and starts no tasks for this side."""
+        cols = ", ".join(
+            f"CAST(NULL AS {f.dataType.simpleString()}) AS {ident(f.name)}"
+            for f in self._state_schema(columns).fields
+        )
+        return spark.sql(f"SELECT {cols} LIMIT 0")
 
     def _read_raw(
         self,
@@ -703,24 +732,18 @@ class IcebergLiteTable:
         Iceberg bucket-transform point-read story).
 
         The owning bucket is hash(composite key) — computed with the
-        same JVM xxhash64 expression the writer used (bucket_col), via a
-        metadata-scale job over the key literals, so driver and executor
-        hashing can never diverge. The exact-key filter is a broadcast
-        LEFT SEMI join (no shuffle of the table side)."""
+        same JVM xxhash64 expression the writer used (bucket_col), so
+        driver and executor hashing can never diverge. The key literals
+        enter the plan as a LocalRelation and the bucket projection over
+        it folds on the driver, so the lookup starts no job of its own.
+        The exact-key filter is a broadcast LEFT SEMI join (no shuffle
+        of the table side)."""
         if not keys:
             return self.read(spark, buckets=[])
-        # cast probe columns to the stored merge-key type (string) before
-        # hashing (ADVICE r4): createDataFrame infers types from the
-        # tuples, and xxhash64 over e.g. a long differs from the hash of
-        # its string form — the bucket computation and the semi-join
-        # would silently return no rows instead of erroring.
-        kdf = spark.createDataFrame(keys, list(S.MERGE_KEYS)).select(
-            *[F.col(k).cast("string").alias(k) for k in S.MERGE_KEYS]
-        )
-        bks = sorted(
-            r["b"]
-            for r in kdf.select(bucket_col(self.n_buckets).alias("b")).distinct().collect()
-        )
+        rows = ", ".join(f"({', '.join(_key_literal(v) for v in k)})" for k in keys)
+        names = ", ".join(ident(k) for k in S.MERGE_KEYS)
+        kdf = spark.sql(f"SELECT * FROM VALUES {rows} AS t({names})")
+        bks = sorted({r[0] for r in kdf.select(bucket_col(self.n_buckets)).collect()})
         df = self.read(spark, buckets=bks, version=version)
         return df.join(F.broadcast(kdf), on=list(S.MERGE_KEYS), how="left_semi")
 
@@ -1064,8 +1087,10 @@ class IcebergLiteTable:
             if mor:
                 # delta append: the batch self-merges (per-key winners
                 # WITHIN the batch — required so a delta holds one row
-                # per key) against an empty current; stored data is
-                # neither read nor rewritten.
+                # per key); stored data is neither read nor rewritten.
+                # `current` is the empty state, an empty LocalRelation
+                # the optimizer drops from the merge union, so the
+                # merge plans the batch alone.
                 current = self._empty_state(spark, all_cols)
             else:
                 current = self._read_raw(spark, buckets=affected)

@@ -112,6 +112,9 @@ def test_no_python_udf_in_relational_path(spark):
     )
     plan = _plan(q)
     assert "EvalPython" not in plan and "MapInPandas" not in plan, plan
+    # a Python-RDD scan (createDataFrame over a Python list) runs Python
+    # worker tasks just the same
+    assert "ExistingRDD" not in plan, plan
 
 
 def test_bucket_pruning_reads_only_affected(spark, tmp_path):
@@ -458,3 +461,67 @@ def test_flashback_sql_plan_gateway_round_trips(spark, tmp_path, monkeypatch):
     assert text.count("UPDATE `test`.`repo_files`") == 30
     assert text.count("INSERT INTO `test`.`repo_files`") == 30
     assert calls[0] <= 1200, calls[0]
+
+
+def test_table_paths_plan_no_python_rdd(spark, tmp_path, monkeypatch):
+    """The table's driver-built relations — the empty state a fresh-table
+    or MOR delta commit merges against, and read_keys' probe keys — enter
+    plans as JVM LocalRelations, never as createDataFrame(list) Python
+    RDDs: a merge against the empty state plans the batch alone (no
+    Union, no ExistingRDD scan), and a point lookup's bucket computation
+    folds on the driver without a job."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from bingo2sql_spark.operators.apply import IcebergLiteTable
+    from bingo2sql_spark.pipeline import replay
+    from bingo2sql_spark.sources.synth import generate_events
+
+    sc = spark.sparkContext
+
+    def jobs(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setJobGroup("", "")
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    written = []
+    parquet = DataFrameWriter.parquet
+
+    def capturing(self, *args, **kwargs):
+        written.append(_plan(self._df))
+        return parquet(self, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", capturing)
+    ev = generate_events(spark, n_keys=120, versions_per_key=3, seed=11)
+    cow = IcebergLiteTable(str(tmp_path / "cow"), n_buckets=8)
+    replay(ev, cow, batch_id="fresh")
+    mor = IcebergLiteTable(
+        str(tmp_path / "mor"), n_buckets=8, write_mode="mor", max_delta_depth=4
+    )
+    replay(ev.filter("seq < 200"), mor, batch_id="m1")
+    m = replay(ev.filter("seq >= 200"), mor, batch_id="m2")
+    monkeypatch.undo()
+    # fresh CoW commit, then two MOR delta commits (the second over a
+    # stored delta), and no compaction rewrite among them
+    assert m["mode"] == "mor" and m["delta_depth"] == 2, m
+    assert len(written) == 3, len(written)
+    for plan in written:
+        assert "ExistingRDD" not in plan, plan
+        assert "Union" not in plan, plan
+
+    for t in (cow, mor):
+        assert "ExistingRDD" not in _plan(t.read(spark))
+    keys = [(r["repo"], r["path"]) for r in mor.read(spark).limit(4).collect()]
+    lookup, n_build = jobs("plan-read-keys-build", lambda: mor.read_keys(spark, keys))
+    assert n_build == 0, n_build
+    assert "ExistingRDD" not in _plan(lookup)
+    rows, n_run = jobs("plan-read-keys-run", lookup.collect)
+    assert {(r["repo"], r["path"]) for r in rows} == set(keys)
+    assert n_run <= 3, n_run
+
+    empty = mor._empty_state(spark, ["repo", "path", "content"])
+    assert _optimized(empty).startswith("LocalRelation <empty>"), _optimized(empty)
+    got, n_empty = jobs("plan-empty-state", empty.collect)
+    assert got == [] and n_empty == 0, n_empty

@@ -513,6 +513,61 @@ def test_read_keys_point_lookup_prunes_buckets(spark, small_events, tmp_path):
     assert t.read_keys(spark, []).count() == 0
 
 
+@pytest.mark.parametrize("write_mode", ["cow", "mor"])
+def test_read_keys_literal_quoting_and_typing(spark, small_events, tmp_path, write_mode):
+    """read_keys builds its probe keys as SQL literals: paths holding a
+    quote, a backslash, a newline and non-ASCII text must round-trip; a
+    duplicated key returns its row once; an int component matches its
+    stored string form; a None component matches nothing. Checked
+    against read() filtered to the same keys, on a CoW table and on a
+    MOR table with stored deltas."""
+    from pyspark.sql import functions as F
+
+    # rewrite every path src/<d>/f<k>.txt by k % 5: a digit string,
+    # or the path with a quote, a backslash, a newline or non-ASCII
+    k = F.regexp_extract(F.col("after.path"), r"f(\d+)\.txt", 1)
+    kb = F.regexp_extract(F.col("before.path"), r"f(\d+)\.txt", 1)
+
+    def odd(path, k):
+        return (
+            F.when(k.cast("int") % 5 == 0, k)
+            .when(k.cast("int") % 5 == 1, F.concat(path, F.lit("'q")))
+            .when(k.cast("int") % 5 == 2, F.concat(path, F.lit("\\b")))
+            .when(k.cast("int") % 5 == 3, F.concat(path, F.lit("\n")))
+            .otherwise(F.concat(path, F.lit("-ünï路径")))
+        )
+
+    ev = small_events.withColumn(
+        "after", F.col("after").withField("path", odd(F.col("after.path"), k))
+    ).withColumn(
+        "before", F.col("before").withField("path", odd(F.col("before.path"), kb))
+    )
+    t = IcebergLiteTable(
+        str(tmp_path / write_mode), n_buckets=8, write_mode=write_mode,
+        max_delta_depth=4,
+    )
+    replay(ev.filter("seq < 800"), t, batch_id="b1")
+    m = replay(ev.filter("seq >= 800"), t, batch_id="b2")
+    if write_mode == "mor":
+        assert m["delta_depth"] >= 1, m
+    live = {(r["repo"], r["path"]): r for r in t.read(spark).collect()}
+    picked = {}
+    for repo, path in sorted(live):
+        cls = (
+            "digits" if path.isdigit() else "'" if "'" in path
+            else "\\" if "\\" in path else "\n" if "\n" in path
+            else "ascii" if path.isascii() else "non-ascii"
+        )
+        picked.setdefault(cls, (repo, path))
+    assert set(picked) == {"digits", "'", "\\", "\n", "non-ascii"}, picked
+    repo_d, path_d = picked["digits"]
+    keys = [picked[c] for c in ("'", "\\", "\n", "non-ascii")]
+    probe = keys + [keys[0], (repo_d, int(path_d)), (None, keys[1][1]), (keys[2][0], None)]
+    got = sorted(tuple(r) for r in t.read_keys(spark, probe).collect())
+    want = sorted(tuple(live[k]) for k in keys + [(repo_d, path_d)])
+    assert got == want
+
+
 def test_flashback_replay_no_extra_scan(spark, small_events, tmp_path):
     """The flashback rebase must not add a pass over the source: the
     batch-max pre-pass (old pipeline agg(max(seq)).collect()) now rides
