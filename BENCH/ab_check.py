@@ -37,8 +37,7 @@ import run_scaling as RS  # noqa: E402  (shared PREP/CHILD templates)
 def _run_one(repo: str, cores: int, raw_dir: str, n_events: int, wire: str) -> float:
     out = subprocess.run(
         ["taskset", "-c", f"0-{cores - 1}", sys.executable, "-c",
-         RS.CHILD.format(repo=repo), str(cores), raw_dir, str(n_events), wire,
-         "auto"],
+         RS.CHILD.format(repo=repo), str(cores), raw_dir, str(n_events), wire],
         capture_output=True, text=True, timeout=1800,
     )
     for line in reversed(out.stdout.strip().splitlines()):

@@ -71,10 +71,6 @@ from bingo2sql_spark.operators.apply import IcebergLiteTable
 from bingo2sql_spark.pipeline import replay
 
 cores, raw_dir, n_events, wire = int(sys.argv[1]), sys.argv[2], int(sys.argv[3]), sys.argv[4]
-strategy = sys.argv[5] if len(sys.argv) > 5 else "full"
-merge_impl = sys.argv[6] if len(sys.argv) > 6 else "hash"
-rows_per_task = int(sys.argv[7]) if len(sys.argv) > 7 else 0
-tasks_per_core = int(sys.argv[8]) if len(sys.argv) > 8 else 4
 tmp = tempfile.mkdtemp(prefix=f"scale{{cores}}_", dir="/dev/shm" if os.path.isdir("/dev/shm") else None)
 spark = get_spark(f"scaling-{{cores}}", master=f"local[{{cores}}]", shuffle_partitions=cores,
                   extra_conf={{"spark.local.dir": tmp + "/spark-local"}})
@@ -83,23 +79,7 @@ KEYS = ["repo", "path"]  # forward replay: narrow before-image decode
 decode = decode_events_typed if wire == "typed" else decode_events
 warm = IcebergLiteTable(tmp + "/warm", n_buckets=8)
 replay(decode(raw.filter("seq % 50 = 0"), before_fields=KEYS), warm, batch_id="w", tables=["repo_files"])
-# "auto" carries the measured single-host crossover floor (~10M
-# candidate rows, BENCH/BASELINE.md round-6): below it the full plan
-# wins on tmpfs, above it the election's byte cut pays locally too
-# pass the r8 merge knobs only where the tree under test knows them —
-# ab_check runs this same template against a PREVIOUS round's checkout
-import inspect
-_params = inspect.signature(IcebergLiteTable.__init__).parameters
-_kw = {{}}
-if "merge_impl" in _params:
-    _kw.update(merge_impl=merge_impl,
-               merge_rows_per_task=rows_per_task or None,
-               merge_tasks_per_core=tasks_per_core)
-elif merge_impl != "hash" or rows_per_task or tasks_per_core != 4:
-    raise SystemExit("tree under test lacks the r8 merge knobs")
-t = IcebergLiteTable(tmp + "/tgt", n_buckets=64, merge_strategy=strategy,
-                     election_min_rows=10_000_000 if strategy == "auto" else 0,
-                     **_kw)
+t = IcebergLiteTable(tmp + "/tgt", n_buckets=64)
 t0 = time.time()
 replay(decode(raw, before_fields=KEYS), t, batch_id="b", tables=["repo_files"])
 secs = time.time() - t0
@@ -114,13 +94,10 @@ shutil.rmtree(tmp, ignore_errors=True)
 """
 
 
-def run_one(cores: int, raw_dir: str, n_events: int, wire: str,
-            strategy: str = "full", merge_impl: str = "hash",
-            rows_per_task: int = 0, tasks_per_core: int = 4) -> float:
+def run_one(cores: int, raw_dir: str, n_events: int, wire: str) -> float:
     out = subprocess.run(
         ["taskset", "-c", f"0-{cores - 1}", sys.executable, "-c",
-         CHILD.format(repo=REPO), str(cores), raw_dir, str(n_events), wire,
-         strategy, merge_impl, str(rows_per_task), str(tasks_per_core)],
+         CHILD.format(repo=REPO), str(cores), raw_dir, str(n_events), wire],
         capture_output=True, text=True, timeout=1200,
     )
     for line in reversed(out.stdout.strip().splitlines()):
@@ -141,28 +118,11 @@ def main() -> None:
     ap.add_argument("--wire", choices=("typed", "json"), default="typed",
                     help="raw landing format: typed structs (headline; decode is "
                          "a projection) or JSON text (connector fallback)")
-    ap.add_argument("--merge-strategy", choices=("full", "election", "auto"),
-                    default="full",
-                    help="MERGE plan: 'full' shuffles every row's payload; "
-                         "'election' reduces (keys, seq) first and shuffles "
-                         "winner payloads only — the cluster deployment mode, "
-                         "and the bandwidth-relief candidate when the in-box "
-                         "working set outgrows the shared LLC")
     ap.add_argument("--landing", choices=("flat", "bucketed"), default="flat",
                     help="event landing layout: flat time-ordered parquet, or "
                          "bucket-aligned (partitioned by the target table's "
                          "bucket function — the partition-keyed-transport "
                          "shape; typed wire only)")
-    ap.add_argument("--merge-impl", choices=("hash", "sort"), default="hash",
-                    help="row-level winner resolution: hash max_by aggregate "
-                         "or sort + row_number (bounded cache footprint)")
-    ap.add_argument("--rows-per-task", type=int, default=0,
-                    help="target candidate rows per merge task (0 = 4x-core "
-                         "default); finer tasks keep hash-agg state "
-                         "cache-resident")
-    ap.add_argument("--tasks-per-core", type=int, default=4,
-                    help="merge-exchange tasks per core (bucket-pure, so "
-                         "more tasks never change the file count)")
     ap.add_argument("--out", default=os.path.join(REPO, "BENCH", "BASELINE.md"))
     args = ap.parse_args()
 
@@ -190,9 +150,7 @@ def main() -> None:
         for _ in range(args.runs):
             for cores in (args.n, args.n * 4):
                 times[cores].append(
-                    run_one(cores, raw_dir, args.events, args.wire,
-                            args.merge_strategy, args.merge_impl,
-                            args.rows_per_task, args.tasks_per_core))
+                    run_one(cores, raw_dir, args.events, args.wire))
         results = {}
         for cores, ts in times.items():
             ts = sorted(ts)

@@ -185,12 +185,6 @@ def headline_replay(spark, n_events: int) -> dict:
         to_raw(env).write.mode("overwrite").parquet(src_json)
 
         # fresh pinned JVM per sample (the parent session sits idle)
-        # the headline runs the AUTO merge plan — the deployment default
-        # this engine recommends: below the measured ~10M-row single-host
-        # crossover it keeps the full shuffle (identical to rounds 1-5's
-        # protocol at sf<=0.1), above it the key-only election's byte cut
-        # pays even on tmpfs (1.6x at 8 cores at 32M; BENCH/BASELINE.md
-        # round-6)
         # window-guarded (VERDICT r6 #1): each fresh-JVM sample only
         # counts when the control job run right after it reads clean;
         # the control runs BETWEEN samples (the parent session is idle
@@ -200,8 +194,8 @@ def headline_replay(spark, n_events: int) -> dict:
         control_secs(spark)  # codegen warmup: the first control run is
         # ~8x the steady state and must not poison the readings
         _window_ok(spark)  # seed the run's best-control reading
-        typed_fn = lambda: RS.run_one(cpus, src_typed, n_events, "typed", "auto")  # noqa: E731
-        json_fn = lambda: RS.run_one(cpus, src_json, n_events, "json", "auto")  # noqa: E731
+        typed_fn = lambda: RS.run_one(cpus, src_typed, n_events, "typed")  # noqa: E731
+        json_fn = lambda: RS.run_one(cpus, src_json, n_events, "json")  # noqa: E731
         typed_r = _guarded_samples(spark, typed_fn, 4, 7)
         json_r = _guarded_samples(spark, json_fn, 2, 4)
 

@@ -125,9 +125,6 @@ def _merge_batch(
     partial: bool,
     n_out: int,
     emit_changed: bool = False,
-    elect: bool = False,
-    win: DataFrame | None = None,
-    impl: str = "hash",
 ) -> DataFrame:
     """The MERGE: per-key LWW by source seq over stored ∪ batch rows
     (collapses multiple events per key within the batch too). Tombstones
@@ -140,77 +137,9 @@ def _merge_batch(
     distribution, so Catalyst inserts NO second exchange; the output
     stays clustered by bucket, which is exactly what the dynamic
     pbucket-partitioned write wants (one contiguous writer per bucket,
-    no tasks x buckets file blow-up).
-
-    elect=True — KEY-ONLY WINNER ELECTION with late content
-    materialization (VERDICT r4 #1): that one exchange normally carries
-    every candidate row's full content, losers included — at 100 TB the
-    shuffle is payload-scale though only winners survive the aggregate.
-    The election first reduces (keys, _ingest_seq) alone — a narrow
-    map-side-combined aggregate whose shuffle carries one (key, max seq)
-    pair per distinct key, with the stored side read column-pruned and a
-    typed-wire batch side decoding only key fields — then semi-joins the
-    full rows against the BROADCAST winning-seq set, so content enters
-    the bucket exchange only for rows that can still win. Seqs are
-    globally unique per source event and each event touches one key, so
-    matching on seq alone is key-safe; a re-delivered duplicate (same
-    seq stored AND in the batch) passes twice and the unchanged final
-    aggregate — still the exact arbiter — collapses it. Invalid for
-    partial=True (per-column winners draw columns from row-level
-    losers), enforced by the caller.
-
-    `win` — an already-materialized winning-seq set (the runtime
-    "auto" fallback persisted + counted it to check the broadcast
-    bound, VERDICT r5 #3): used as-is so the broadcast reads the
-    cached blocks instead of recomputing the election aggregate.
-
-    impl="sort" (VERDICT r7 #1 — the LLC-bound merge): resolve
-    row-level winners with a SORT-based plan — local sort by (bucket,
-    keys, seq desc) then row_number()==1 — instead of the hash
-    aggregate. The hash plan holds one full winner row per distinct key
-    in a per-task map; past ~10M candidate rows those maps outgrow the
-    shared last-level cache and every probe is a DRAM round-trip, which
-    caps N-vs-4N scaling (r7 measured 0.73 at 32M events). The sort
-    plan's working set is the radix-sort run buffer — sequential,
-    cache-friendly, spill-graceful — and the window still needs NO
-    extra exchange (hash(bucket) satisfies its clustered distribution).
-    Row-level merges only; MINIMAL-image merges are per-COLUMN
-    aggregations with no sort-based equivalent and always use hash."""
-    both = current.unionByName(batch_rows)
-    if elect:
-        if partial:
-            raise ValueError("key-only election cannot apply to MINIMAL-image merges")
-        if win is None:
-            win = _election_winners(both)
-        both = both.join(
-            F.broadcast(win), both["_ingest_seq"] == win["_win_seq"], "left_semi"
-        )
-    both = both.repartition(n_out, "bucket")
-    if impl == "sort" and not partial:
-        from pyspark.sql.window import Window
-
-        w = Window.partitionBy("bucket", *S.MERGE_KEYS).orderBy(
-            F.col("_ingest_seq").desc()
-        )
-        return (
-            both.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .select(*all_cols, *INTERNAL_COLS)
-        )
+    no tasks x buckets file blow-up)."""
+    both = current.unionByName(batch_rows).repartition(n_out, "bucket")
     return _per_key_winners(both, all_cols, partial, emit_changed)
-
-
-def _election_winners(both: DataFrame) -> DataFrame:
-    """The key-only election's narrow aggregate: one (max seq) row per
-    distinct candidate key — map-side combined, shuffle carries 8 B/key
-    of payload. Shared by the in-plan election and the runtime "auto"
-    bound check (which persists + counts this before broadcasting)."""
-    return (
-        both.select(*S.MERGE_KEYS, "_ingest_seq")
-        .groupBy(*S.MERGE_KEYS)
-        .agg(F.max("_ingest_seq").alias("_win_seq"))
-        .select("_win_seq")
-    )
 
 
 def _per_key_winners(
@@ -394,22 +323,9 @@ class IcebergLiteTable:
         write_mode: str = "cow",
         max_delta_depth: int | None = None,
         max_read_amplification: float | None = None,
-        merge_strategy: str = "full",
-        election_max_rows: int = 50_000_000,
-        election_min_rows: int = 0,
-        merge_impl: str = "hash",
-        merge_rows_per_task: int | None = None,
-        merge_tasks_per_core: int = 4,
     ):
         if write_mode not in ("cow", "mor"):
             raise ValueError(f"write_mode must be 'cow' or 'mor', got {write_mode!r}")
-        if merge_strategy not in ("auto", "election", "full"):
-            raise ValueError(
-                f"merge_strategy must be 'auto', 'election' or 'full', "
-                f"got {merge_strategy!r}"
-            )
-        if merge_impl not in ("hash", "sort"):
-            raise ValueError(f"merge_impl must be 'hash' or 'sort', got {merge_impl!r}")
         self.path = path
         self.n_buckets = n_buckets
         self.write_mode = write_mode
@@ -427,75 +343,6 @@ class IcebergLiteTable:
         #: deltas on a 10^8-row bucket are harmless at depth 100. Either
         #: trigger fires independently; both keep tombstones.
         self.max_read_amplification = max_read_amplification
-        #: MERGE shuffle strategy (see _merge_batch): "full" shuffles
-        #: every candidate row's content (the classic plan); "election"
-        #: always runs the key-only winner election + broadcast
-        #: semi-join; "auto" elects when the candidate-key count fits
-        #: under `election_max_rows` — past that the winning-seq
-        #: broadcast (8 bytes/key + set overhead) stops being
-        #: driver/executor-safe and the full shuffle is the scalable
-        #: plan. The bound is checked two ways (VERDICT r5 #3): when
-        #: manifest metadata + the pruning pre-pass give a static upper
-        #: bound under the cap, that decides for free; on every other
-        #: path (empty table, MOR delta append, over-the-cap estimate)
-        #: the RUNTIME FALLBACK materializes + counts the narrow
-        #: election aggregate itself and abandons the broadcast past
-        #: the bound — so "auto" is deployable as the default on every
-        #: path, never guessing. The commit metric
-        #: `election_decided_by` records which branch fired.
-        #: MINIMAL-image commits always use "full" (election is
-        #: per-row, their merge is per-column).
-        #:
-        #: Default "full": measured on this box (BENCH/shuffle_bytes.py,
-        #: 3.2M events / 400k keys / 16 pinned cores, fresh JVMs)
-        #: election cuts shuffle-write bytes to 0.33x (initial load) /
-        #: 0.41x (incremental) of the full plan but costs 25-45% wall —
-        #: a single-host tmpfs shuffle moves at RAM speed, so the saved
-        #: bytes buy nothing locally while the extra narrow pass +
-        #: broadcast are pure cost. On a CLUSTER, where those bytes
-        #: cross the network/disks, the 2.4-3x byte cut is the win:
-        #: deploy with merge_strategy="auto" there.
-        #:
-        #: r6 update — the in-box verdict above is SIZE-DEPENDENT: at
-        #: 32M events / 4M keys (BENCH/run_scaling.py --merge-strategy)
-        #: election is 1.27x faster at 2 cores and 1.6x at 8 cores even
-        #: on tmpfs, because once the merge working set outgrows the
-        #: shared LLC the full plan is memory-bandwidth-bound and the
-        #: byte cut pays locally too. The crossover sits around ~10M
-        #: candidate rows here. `election_min_rows` exposes that floor
-        #: to "auto": when stored + batch rows are BELOW it, the commit
-        #: keeps the full plan (`election_decided_by="below_min_rows"`).
-        #: Bounded paths decide from the free static estimate; no-bound
-        #: paths (empty table, MOR delta append) spend one narrow
-        #: column-pruned batch count — taken only because the floor is
-        #: configured, and cheaper than electing a below-crossover
-        #: batch by mistake. Default 0 = no floor (cluster deployments
-        #: win at any size — the bytes cross a network); set ~8-10M for
-        #: single-host deployments.
-        self.merge_strategy = merge_strategy
-        self.election_max_rows = election_max_rows
-        self.election_min_rows = election_min_rows
-        #: winner-resolution plan for ROW-LEVEL merges: "hash" (max_by
-        #: aggregate — map-side combinable, right when versions-per-key
-        #: is high or candidate sets are small) or "sort" (local sort +
-        #: row_number — bounded cache footprint, right when per-task
-        #: winner maps outgrow the LLC; see _merge_batch). MINIMAL
-        #: merges are per-column and always hash.
-        self.merge_impl = merge_impl
-        #: when set, the merge exchange targets ~this many rows per
-        #: output partition (still bucket-pure, still capped by the
-        #: affected-bucket count): finer tasks keep each hash-aggregate
-        #: working set cache-resident at large candidate counts. None =
-        #: the 4x-core default.
-        self.merge_rows_per_task = merge_rows_per_task
-        #: merge-exchange tasks per core (default 4x — see the n_out
-        #: comment in commit). Bucket-pure partitions mean MORE tasks
-        #: never change the output file count (a bucket lands in exactly
-        #: one partition either way), so raising this only trades task
-        #: overhead for smaller per-task aggregate state — the lever for
-        #: keeping hash-merge working sets cache-resident on initial
-        #: loads, where no row estimate exists yet.
-        self.merge_tasks_per_core = merge_tasks_per_core
         os.makedirs(os.path.join(path, MANIFEST_DIR), exist_ok=True)
 
     # -- manifest bookkeeping ------------------------------------------------
@@ -1081,8 +928,6 @@ class IcebergLiteTable:
             b = b.withColumn("_ingest_seq", F.col("_ingest_seq") + F.lit(offset))
         new_version = m["version"] + 1
 
-        elect = False
-        elect_by = None
         if affected:
             if mor:
                 # delta append: the batch self-merges (per-key winners
@@ -1119,27 +964,19 @@ class IcebergLiteTable:
                 # (the partial block below re-selects with both extras)
                 *(["_col_seqs"] if "_col_seqs" in current.columns else []),
             )
-            batch_rows = b.select(
-                *[
-                    F.col(c) if c in b.columns else F.lit(None).cast("string").alias(c)
-                    for c in all_cols
-                ],
-                *INTERNAL_COLS,
-            )
+            batch_cols = [
+                F.col(c) if c in b.columns else F.lit(None).cast("string").alias(c)
+                for c in all_cols
+            ] + [F.col(c) for c in INTERNAL_COLS]
             if partial:
                 null_changed = F.lit(None).cast("array<string>").alias("_changed_cols")
                 null_map = F.lit(None).cast("map<string,bigint>").alias("_col_seqs")
-                batch_rows = b.select(
-                    *[
-                        F.col(c) if c in b.columns else F.lit(None).cast("string").alias(c)
-                        for c in all_cols
-                    ],
-                    *INTERNAL_COLS,
+                batch_cols += [
                     # NULL _changed_cols = full image; NULL _col_seqs =
                     # every column attributed to the row seq
                     F.col("_changed_cols") if "_changed_cols" in b.columns else null_changed,
                     F.col("_col_seqs") if "_col_seqs" in b.columns else null_map,
-                )
+                ]
                 if "_changed_cols" not in current.columns:
                     current = current.withColumn(
                         "_changed_cols", F.lit(None).cast("array<string>")
@@ -1151,96 +988,17 @@ class IcebergLiteTable:
                 current = current.select(
                     *all_cols, *INTERNAL_COLS, "_changed_cols", "_col_seqs"
                 )
+            batch_rows = b.select(*batch_cols)
             # bucket-pure partitions (n_out <= #affected keeps exactly one
             # file per bucket), but 4x the core count of them: with only
             # #cores partitions the per-partition bucket-count variance
             # (~±sqrt(buckets/partition)) makes the slowest task the stage
             # time; smaller tasks let dynamic scheduling balance it.
             par = batch.sparkSession.sparkContext.defaultParallelism
-            n_out = max(1, min(len(affected), self.merge_tasks_per_core * par))
-            if self.merge_rows_per_task:
-                # cache-resident merge tasks (VERDICT r7 #1): size the
-                # bucket exchange so each task's candidate set stays
-                # ~merge_rows_per_task rows — free from manifest counts
-                # + the pre-pass, never a data job. Still bucket-pure
-                # (cap = #affected): finer than one-bucket tasks would
-                # break the one-writer-per-bucket file layout, so VERY
-                # large tables want more n_buckets, not more splits.
-                est = self._stored_rows_estimate(m, affected) + (
-                    batch_counts["rows"] if batch_counts else 0
-                )
-                if est > 0:
-                    want = -(-est // self.merge_rows_per_task)  # ceil
-                    n_out = max(1, min(len(affected), max(4 * par, want)))
-            # key-only election decision (see merge_strategy docstring):
-            # "auto" elects when the candidate-key count fits the
-            # winning-seq broadcast bound. When manifest metadata + the
-            # pruning pre-pass give a KNOWN upper bound under the cap,
-            # that decides for free (distinct keys <= rows, so the
-            # static bound is sufficient). Otherwise — empty table, MOR
-            # delta append, or an over-the-cap estimate whose true key
-            # count may still be small — the RUNTIME FALLBACK
-            # (VERDICT r5 #3) materializes the narrow election
-            # aggregate, counts it (the aggregate is the cheap part of
-            # the election either way), and abandons the broadcast past
-            # the bound instead of guessing. "auto" is thereby safe as
-            # the default on every path.
-            win_df = None
-            if not partial and self.merge_strategy != "full":
-                if self.merge_strategy == "election":
-                    elect = True
-                    elect_by = "forced"
-                else:
-                    total_est = None
-                    stored_est = self._stored_rows_estimate(m, affected)
-                    if batch_counts is not None:
-                        total_est = stored_est + batch_counts["rows"]
-                    elif (
-                        self.election_min_rows > 0
-                        and stored_est < self.election_min_rows
-                    ):
-                        # floor configured but no free batch count (empty
-                        # table / MOR delta append): one narrow
-                        # column-pruned count decides the floor BEFORE
-                        # any election work — cheaper than electing a
-                        # below-crossover batch by mistake. Skipped when
-                        # stored_est alone already meets the floor (the
-                        # floor can't fire — total_est only grows), so
-                        # the runtime fallback below is the single extra
-                        # job on that path instead of two.
-                        total_est = stored_est + batch.count()
-                    if (
-                        total_est is not None
-                        and total_est < self.election_min_rows
-                    ):
-                        # below the measured single-host crossover: the
-                        # election's narrow pass + broadcast cost more
-                        # than the bytes they save (see constructor)
-                        elect_by = "below_min_rows"
-                    elif (
-                        total_est is not None
-                        and total_est <= self.election_max_rows
-                    ):
-                        elect = True
-                        elect_by = "static"
-                    else:
-                        from pyspark import StorageLevel
-
-                        win_df = _election_winners(
-                            current.unionByName(batch_rows)
-                        ).persist(StorageLevel.MEMORY_AND_DISK)
-                        n_winners = win_df.count()
-                        if n_winners <= self.election_max_rows:
-                            elect = True
-                            elect_by = "runtime"
-                        else:
-                            win_df.unpersist()
-                            win_df = None
-                            elect_by = "runtime_abandoned"
+            n_out = max(1, min(len(affected), 4 * par))
             merged = _merge_batch(
                 current, batch_rows, all_cols, partial, n_out,
-                emit_changed=mor and partial, elect=elect, win=win_df,
-                impl=self.merge_impl,
+                emit_changed=mor and partial,
             )
             merged = merged.withColumn("pbucket", F.col("bucket"))
             # per-ATTEMPT unique data dir (VERDICT r5 #6): two writers
@@ -1254,8 +1012,6 @@ class IcebergLiteTable:
             snap_dir = os.path.join(self.path, DATA_DIR, snap_name)
             merged.write.mode("overwrite").partitionBy("pbucket").parquet(snap_dir)
             written = self._bucket_footer_stats(snap_dir)
-            if win_df is not None:
-                win_df.unpersist()  # broadcast consumed during the write
         else:
             written = {}
 
@@ -1329,15 +1085,8 @@ class IcebergLiteTable:
             "buckets_total": self.n_buckets,
             "rows_in_batch": batch_counts["rows"],
             "deletes": batch_counts["deletes"],
-            "merge_plan": "election" if elect else "full",
             "commit_secs": round(time.time() - t0, 3),
         }
-        if elect_by is not None:
-            # how the election decision was reached: forced (strategy),
-            # static (metadata bound under cap), runtime (counted the
-            # narrow aggregate), runtime_abandoned (count over cap ->
-            # fell back to the full shuffle)
-            metrics["election_decided_by"] = elect_by
         if mor:
             metrics["delta_depth"] = max((len(v) for v in deltas.values()), default=0)
             metrics["read_amplification"] = round(read_amp, 4)
@@ -1456,24 +1205,6 @@ class IcebergLiteTable:
             f"lost the manifest CAS {max_retries + 1} times in a row for "
             f"batch {batch_id!r} — writer contention too high"
         ) from last
-
-    @staticmethod
-    def _stored_rows_estimate(m: dict[str, Any], affected: list[int]) -> int:
-        """Upper-bound stored-row count over `affected` buckets, from
-        manifest metadata only (bucket_rows footer stats; lineage rows
-        for pre-bucket_rows manifests) — free, never a data job."""
-        br_map = m.get("bucket_rows", {})
-        lin = m.get("lineage", {})
-        est = 0
-        for bk in affected:
-            bkey = str(bk)
-            if bkey in br_map:
-                est += int(br_map[bkey].get("base", 0)) + int(
-                    br_map[bkey].get("delta", 0)
-                )
-            elif bkey in lin:
-                est += int(lin[bkey].get("rows") or 0)
-        return est
 
     # -- exactly-once batch-id bookkeeping ------------------------------------
     #

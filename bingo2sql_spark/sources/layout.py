@@ -46,11 +46,6 @@ def land_bucket_aligned(raw: DataFrame, path: str, n_buckets: int) -> None:
     lands it. The merge then reads bucket-homogeneous splits, which is
     what makes its wide stages scale:
 
-    - the key-only election's MAP-SIDE COMBINE actually combines — a
-      time-ordered flat landing scatters a key's v versions across ~v
-      splits, so per-split distinct-key maps are nearly input-sized and
-      the "narrow" shuffle carries ~all rows; bucket-homogeneous splits
-      hold every version of their keys, collapsing the shuffle by ~v;
     - the bucket exchange becomes a pass-through pattern (each map task
       feeds ~one reducer) instead of an all-to-all;
     - per-split combine maps are bucket-sized (keys/n_buckets), not

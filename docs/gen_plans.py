@@ -67,19 +67,6 @@ add("render_sql_inline (de-skewed multi-row INSERT batching)", render_sql_inline
     "arithmetic — NO per-run window, so a bulk-load run of 10^10 inserts spreads "
     "across (run, chunk) groups capped at batch_rows.")
 
-# 1c. key-only winner election: narrow election + broadcast semi below
-# the bucket exchange
-merged_el = _merge_batch(rows.limit(0), rows, all_cols, partial=False, n_out=64,
-                         elect=True)
-add("MERGE with key-only winner election (merge_strategy='election'/'auto')", merged_el,
-    "The (keys, seq) election aggregate is map-side combined and its shuffle "
-    "carries one pair per distinct key; the winning-seq set comes back as a "
-    "BROADCAST left-semi join BELOW the bucket repartition, so loser content "
-    "(in-batch duplicates, superseded stored rows) never enters the payload "
-    "exchange. Measured: shuffle-write 0.33-0.41x of the full plan "
-    "(BENCH/BASELINE.md round 5); the final aggregate is unchanged and stays "
-    "the exact arbiter.")
-
 qs = E.queries()
 add("dedup_simhash_pairs (64-bit banded probe tables)", qs["dedup_simhash_pairs"](spark, sf),
     "Production-width SimHash: the persisted per-doc signature table feeds 4 "

@@ -296,76 +296,6 @@ def test_cap_drop_is_logged(spark, caplog):
     assert any("cap active" in r.getMessage() for r in caplog.records)
 
 
-def test_election_merge_plan_shape(spark, small_events, tmp_path):
-    """Key-only election plan (VERDICT r4 #1): the winning-seq set must
-    arrive via a BROADCAST semi-join (never a shuffle of the content
-    side on seq), the election aggregate must have a map-side partial
-    phase (its shuffle carries one (key, max seq) pair per key), and the
-    bucket exchange must sit ABOVE the semi-join — content of loser rows
-    never enters it."""
-    from bingo2sql_spark.operators.apply import IcebergLiteTable
-    from bingo2sql_spark.pipeline import replay
-
-    t = IcebergLiteTable(
-        str(tmp_path / "el"), n_buckets=8, merge_strategy="election"
-    )
-    replay(small_events.filter("seq < 800"), t, batch_id="b1")
-
-    # rebuild the exact merge plan commit() runs for the second batch
-    from bingo2sql_spark.operators import resolve as R
-    from bingo2sql_spark.operators.apply import _merge_batch, bucket_col
-
-    b = (
-        R.to_upsert_rows(R.with_key(small_events.filter("seq >= 800")))
-        .withColumn("bucket", bucket_col(8))
-        .withColumnRenamed("_seq", "_ingest_seq")
-    )
-    cur = t._read_raw(spark)
-    cols = t.latest_manifest()["columns"]
-    for c in cols:
-        if c not in b.columns:
-            b = b.withColumn(c, F.lit(None).cast("string"))
-    from bingo2sql_spark.operators.apply import INTERNAL_COLS
-
-    b = b.select(*cols, *INTERNAL_COLS)
-    cur = cur.select(*cols, *INTERNAL_COLS)
-    plan = _plan(_merge_batch(cur, b, cols, False, 8, elect=True))
-    assert "BroadcastHashJoin" in plan and "LeftSemi" in plan, plan
-    assert "partial_max" in plan or "partial_finalmerge" in plan or (
-        "HashAggregate" in plan and "keys=[repo" in plan
-    ), plan
-    # the bucket repartition must consume the semi-join output: below
-    # the hashpartitioning(bucket...) exchange there is a semi join
-    seg = plan.split("Exchange hashpartitioning(bucket")[-1]
-    assert "LeftSemi" in seg, seg
-
-
-def test_sort_merge_plan_single_exchange(spark):
-    """merge_impl='sort' (r7 #1): the window's clustered distribution is
-    satisfied by the existing hash(bucket) exchange — the sort plan pays
-    ONE exchange + a local sort, never a second shuffle; and no hash
-    aggregate holds per-key winner state (the LLC-bound structure the
-    sort impl exists to avoid)."""
-    from bingo2sql_spark.operators import resolve as R
-    from bingo2sql_spark.operators.apply import _merge_batch, bucket_col
-    from bingo2sql_spark.sources.synth import generate_events
-
-    ev = generate_events(spark, n_keys=200, versions_per_key=4)
-    rows = R.to_upsert_rows(R.with_key(ev)).withColumn(
-        "bucket", bucket_col(16)
-    ).withColumnRenamed("_seq", "_ingest_seq")
-    all_cols = ["repo", "path", "commit", "lang", "content", "branch"]
-    merged = _merge_batch(rows.limit(0), rows, all_cols, partial=False,
-                          n_out=8, impl="sort")
-    plan = _plan(merged)
-    assert plan.count("Exchange hashpartitioning") == 1, plan
-    frag = plan.split("Exchange hashpartitioning", 1)[1][:120]
-    assert "bucket" in frag, frag
-    assert "Window" in plan and "Sort" in plan, plan
-    # row-winner resolution must NOT be a hash aggregate in this impl
-    assert "max_by" not in plan, plan
-
-
 def test_bucket_aligned_landing_feeds_pass_through_exchange(spark, tmp_path):
     """land_bucket_aligned (r7 #1): the landing is physically
     partitioned by the TABLE's bucket function, decode projects the
@@ -469,7 +399,8 @@ def test_table_paths_plan_no_python_rdd(spark, tmp_path, monkeypatch):
     plans as JVM LocalRelations, never as createDataFrame(list) Python
     RDDs: a merge against the empty state plans the batch alone (no
     Union, no ExistingRDD scan), and a point lookup's bucket computation
-    folds on the driver without a job."""
+    folds on the driver without a job. A CoW commit over stored rows
+    plans exactly one bucket exchange under its max_by."""
     from pyspark.sql.readwriter import DataFrameWriter
 
     from bingo2sql_spark.operators.apply import IcebergLiteTable
@@ -502,14 +433,26 @@ def test_table_paths_plan_no_python_rdd(spark, tmp_path, monkeypatch):
     )
     replay(ev.filter("seq < 200"), mor, batch_id="m1")
     m = replay(ev.filter("seq >= 200"), mor, batch_id="m2")
+    replay(ev.filter("seq >= 300"), cow, batch_id="second")
     monkeypatch.undo()
-    # fresh CoW commit, then two MOR delta commits (the second over a
-    # stored delta), and no compaction rewrite among them
+    # fresh CoW commit, two MOR delta commits (the second over a stored
+    # delta), a CoW commit over stored rows, and no compaction rewrite
     assert m["mode"] == "mor" and m["delta_depth"] == 2, m
-    assert len(written) == 3, len(written)
+    assert len(written) == 4, len(written)
     for plan in written:
         assert "ExistingRDD" not in plan, plan
+    for plan in written[:3]:
         assert "Union" not in plan, plan
+    # the CoW second commit is the real stored-vs-batch MERGE: stored
+    # scan and batch union straight into the ONE bucket exchange, and
+    # nothing but the max_by aggregate sits between it and the write
+    merge = written[3]
+    assert merge.count("Exchange ") == 1, merge
+    above, below = merge.split("Exchange hashpartitioning(bucket", 1)
+    assert "max_by" in above, merge
+    assert "+- Union" in below and "FileScan parquet" in below, merge
+    for node in ("LeftSemi", "Window", "BroadcastExchange"):
+        assert node not in merge, merge
 
     for t in (cow, mor):
         assert "ExistingRDD" not in _plan(t.read(spark))

@@ -93,17 +93,27 @@ def test_exactly_once_idempotent_batch(spark, small_events, tmp_path):
     assert table.state_checksum(spark) == chk
 
 
-def test_incremental_batches_converge(spark, small_events, events_pdf, tmp_path):
-    """Split replay (<=k then >k) == full replay; and replaying an
-    overlapping range again (different batch_id) still converges, because
-    LWW keeps the max-seq winner... here older events lose to state only
-    if keys match — we verify against the oracle, the ground truth."""
+@pytest.mark.parametrize("write_mode", ["cow", "mor"])
+def test_incremental_batches_converge(spark, small_events, events_pdf, tmp_path, write_mode):
+    """Split replay (<=k then >k) == full replay; replaying an
+    overlapping range again (different batch_id, so stored and batch
+    rows share seqs) still converges, because LWW keeps the max-seq
+    winner and equal seqs carry equal rows; and a flashback of the
+    whole stream then empties the table. Every state is checked against
+    the sequential oracle, the ground truth."""
+    def expect(events):
+        return oracle.state_checksum(oracle.sequential_apply(events))
+
     cut = int(events_pdf["seq"].max()) // 3
-    table = IcebergLiteTable(str(tmp_path / "t5"), n_buckets=8)
+    table = IcebergLiteTable(str(tmp_path / "t5"), n_buckets=8, write_mode=write_mode)
     replay(small_events.filter(f"seq <= {cut}"), table, batch_id="part1")
+    assert table.state_checksum(spark) == expect(events_pdf[events_pdf["seq"] <= cut])
     replay(small_events.filter(f"seq > {cut}"), table, batch_id="part2")
-    expected = oracle.state_checksum(oracle.sequential_apply(events_pdf))
-    assert table.state_checksum(spark) == expected
+    assert table.state_checksum(spark) == expect(events_pdf)
+    replay(small_events.filter(f"seq > {cut // 2}"), table, batch_id="overlap")
+    assert table.state_checksum(spark) == expect(events_pdf)
+    replay(small_events, table, batch_id="rollback", flashback=True)
+    assert table.state_checksum(spark) == expect(events_pdf.iloc[:0]) == []
 
 
 def test_schema_evolution_branch_column(spark, small_events, tmp_path):
@@ -972,108 +982,6 @@ def test_incremental_minhash_matches_full_recompute(spark, small_events, tmp_pat
     assert a == b and a
 
 
-def test_merge_strategy_election_converges(spark, small_events, events_pdf, tmp_path):
-    """Key-only winner election (VERDICT r4 #1) is plan-shape only:
-    forced-election tables converge to the sequential oracle through
-    incremental commits, overlapping re-replays (duplicate seqs on both
-    sides of the semi-join), flashback, and MOR — byte-identical state
-    to the full-shuffle plan."""
-    from bingo2sql_spark import oracle
-
-    cut = int(events_pdf["seq"].max()) // 3
-    for mode in ("cow", "mor"):
-        for strat in ("election", "auto"):
-            t = IcebergLiteTable(
-                str(tmp_path / f"el_{mode}_{strat}"), n_buckets=8,
-                write_mode=mode, merge_strategy=strat,
-            )
-            m1 = replay(small_events.filter(f"seq <= {cut}"), t, batch_id="p1")
-            m2 = replay(small_events.filter(f"seq > {cut}"), t, batch_id="p2")
-            if strat == "election":
-                assert m1["merge_plan"] == "election" and m2["merge_plan"] == "election"
-            else:
-                # auto now elects on every path (runtime fallback)
-                assert m1["election_decided_by"] in ("static", "runtime")
-            # overlapping re-replay: stored and batch rows share seqs
-            replay(small_events.filter(f"seq > {cut // 2}"), t, batch_id="p3")
-            expected = oracle.state_checksum(oracle.sequential_apply(events_pdf))
-            assert t.state_checksum(spark) == expected, (mode, strat)
-    # flashback through an electing table empties it
-    t2 = IcebergLiteTable(
-        str(tmp_path / "el_fb"), n_buckets=8, merge_strategy="election"
-    )
-    replay(small_events, t2, batch_id="f")
-    replay(small_events, t2, batch_id="rb", flashback=True)
-    assert t2.state_checksum(spark) == []
-
-
-def test_merge_strategy_auto_policy(spark, small_events, tmp_path):
-    """auto elects on EVERY path (VERDICT r5 #3): the empty-table
-    initial load has no static pre-pass bound, so the runtime fallback
-    counts the narrow election aggregate and elects; the pruned second
-    commit elects on the free static bound; a tiny election_max_rows
-    makes the runtime count abandon the broadcast (full plan) — never a
-    guess; MINIMAL-image commits never elect."""
-    t = IcebergLiteTable(str(tmp_path / "auto"), n_buckets=8, merge_strategy="auto")
-    m1 = replay(small_events.filter("seq < 800"), t, batch_id="a1")
-    # empty table: no static bound -> runtime count decides (and elects)
-    assert m1["merge_plan"] == "election"
-    assert m1["election_decided_by"] == "runtime"
-    m2 = replay(small_events.filter("seq >= 800"), t, batch_id="a2")
-    assert m2["merge_plan"] == "election"
-    assert m2["election_decided_by"] == "static"
-
-    t2 = IcebergLiteTable(
-        str(tmp_path / "auto2"), n_buckets=8, merge_strategy="auto",
-        election_max_rows=10,
-    )
-    ma = replay(small_events.filter("seq < 800"), t2, batch_id="a1")
-    assert ma["merge_plan"] == "full"  # runtime count > 10 -> abandoned
-    assert ma["election_decided_by"] == "runtime_abandoned"
-    m = replay(small_events.filter("seq >= 800"), t2, batch_id="a2")
-    assert m["merge_plan"] == "full"  # static bound exceeded, count too
-    assert m["election_decided_by"] == "runtime_abandoned"
-
-    # auto on MOR delta commits: no pre-pass either -> runtime decides
-    t4 = IcebergLiteTable(
-        str(tmp_path / "auto4"), n_buckets=8, merge_strategy="auto",
-        write_mode="mor",
-    )
-    mm = replay(small_events.filter("seq < 800"), t4, batch_id="a1")
-    assert mm["merge_plan"] == "election"
-    assert mm["election_decided_by"] == "runtime"
-
-    from bingo2sql_spark.sources.synth import generate_events
-
-    mev = generate_events(spark, n_keys=50, versions_per_key=4, seed=3,
-                          minimal_image=True)
-    t3 = IcebergLiteTable(str(tmp_path / "auto3"), n_buckets=8,
-                          merge_strategy="election")
-    replay(mev.filter("seq < 100"), t3, batch_id="m1", row_image="MINIMAL")
-    m = replay(mev.filter("seq >= 100"), t3, batch_id="m2", row_image="MINIMAL")
-    assert m["merge_plan"] == "full"  # per-column merge: election invalid
-
-    # election_min_rows (r6): below the measured single-host crossover
-    # "auto" keeps the full plan — on bounded paths via the free static
-    # estimate, on no-bound paths (empty table / MOR) via one narrow
-    # batch count taken only because the floor is configured
-    t5 = IcebergLiteTable(
-        str(tmp_path / "auto5"), n_buckets=8, merge_strategy="auto",
-        election_min_rows=10_000_000,
-    )
-    m1 = replay(small_events.filter("seq < 800"), t5, batch_id="a1")
-    assert m1["merge_plan"] == "full"
-    assert m1["election_decided_by"] == "below_min_rows"
-    m2 = replay(small_events.filter("seq >= 800"), t5, batch_id="a2")
-    assert m2["merge_plan"] == "full"
-    assert m2["election_decided_by"] == "below_min_rows"
-    # state unaffected by the plan choice
-    ref = IcebergLiteTable(str(tmp_path / "auto5_ref"), n_buckets=8)
-    replay(small_events.filter("seq < 800"), ref, batch_id="a1")
-    replay(small_events.filter("seq >= 800"), ref, batch_id="a2")
-    assert t5.state_checksum(spark) == ref.state_checksum(spark)
-
-
 def test_minimal_out_of_order_cross_commit_column_race(spark, tmp_path):
     """The full fix for ADVICE r4: per-column seq ATTRIBUTION survives
     the collapse, so an out-of-order ad-hoc MINIMAL replay whose seq
@@ -1909,43 +1817,6 @@ def test_drop_then_readd_same_batch_loses_old_values(spark, tmp_path):
         replay(events2, tm, batch_id="b2", table_meta=meta, evolve_from_ddl=True)
 
 
-def test_merge_impl_sort_equivalence(spark, tmp_path):
-    """VERDICT r7 #1: the sort-based winner resolution (local sort +
-    row_number over the bucket exchange — bounded cache footprint) is
-    state-identical to the hash max_by plan across initial load,
-    incremental commit, and election, tombstones included."""
-    from bingo2sql_spark.sources.synth import generate_events
-
-    ev1 = generate_events(spark, n_keys=400, versions_per_key=6, seed=3)
-    ev2 = generate_events(spark, n_keys=400, versions_per_key=6, seed=9)
-    tables = {}
-    for name, kw in {
-        "hash": {},
-        "sort": {"merge_impl": "sort"},
-        "sort_elect": {"merge_impl": "sort", "merge_strategy": "election"},
-        "sort_fine": {"merge_impl": "sort", "merge_rows_per_task": 100},
-    }.items():
-        t = IcebergLiteTable(str(tmp_path / name), n_buckets=16, **kw)
-        replay(ev1, t, batch_id="b1", tables=["repo_files"])
-        replay(ev2, t, batch_id="b2", tables=["repo_files"])
-        tables[name] = t.state_checksum(spark)
-    assert tables["sort"] == tables["hash"]
-    assert tables["sort_elect"] == tables["hash"]
-    assert tables["sort_fine"] == tables["hash"]
-    # tombstones survive the sort plan: a fresh older replay cannot
-    # resurrect deleted keys (same invariant the hash plan pins)
-    t = IcebergLiteTable(str(tmp_path / "sort_tomb"), n_buckets=16,
-                         merge_impl="sort")
-    replay(ev1, t, batch_id="b1", tables=["repo_files"])
-    replay(ev1.filter("op = 'insert'"), t, batch_id="b_old",
-           tables=["repo_files"])
-    ref = IcebergLiteTable(str(tmp_path / "hash_tomb"), n_buckets=16)
-    replay(ev1, ref, batch_id="b1", tables=["repo_files"])
-    replay(ev1.filter("op = 'insert'"), ref, batch_id="b_old",
-           tables=["repo_files"])
-    assert t.state_checksum(spark) == ref.state_checksum(spark)
-
-
 def test_bucket_aligned_landing_replay(spark, tmp_path):
     """VERDICT r7 #1: a typed-wire landing written bucket-aligned
     (layout.land_bucket_aligned — partitioned by the target table's own
@@ -1965,8 +1836,7 @@ def test_bucket_aligned_landing_replay(spark, tmp_path):
 
     assert any(d.startswith("pbucket=") for d in os.listdir(bk_dir))
     ta = IcebergLiteTable(str(tmp_path / "ta"), n_buckets=16)
-    tb = IcebergLiteTable(str(tmp_path / "tb"), n_buckets=16,
-                          merge_strategy="election")
+    tb = IcebergLiteTable(str(tmp_path / "tb"), n_buckets=16)
     replay(decode_events_typed(spark.read.parquet(flat_dir)), ta,
            batch_id="b1", tables=["repo_files"])
     replay(decode_events_typed(spark.read.parquet(bk_dir)), tb,

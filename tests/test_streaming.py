@@ -485,58 +485,6 @@ def test_signature_store_expired_history_bootstraps(spark, small_events, tmp_pat
     assert got == full
 
 
-def test_stream_election_crossover_mid_stream(spark, small_events, tmp_path):
-    """VERDICT r6 #7: a streaming ingest whose table grows past
-    election_min_rows flips the merge plan mid-stream — early
-    micro-batches stay below the measured crossover floor (full
-    shuffle, decided_by=below_min_rows), later ones clear it and elect
-    (decided_by=static) — with zero convergence loss: the final state
-    equals a full-plan control replay of the same log."""
-    from bingo2sql_spark import oracle
-
-    land = str(tmp_path / "landing")
-    ckpt = str(tmp_path / "ckpt")
-    _write_ordered(small_events, land, n_files=8)
-
-    table = IcebergLiteTable(
-        str(tmp_path / "target"), n_buckets=8,
-        merge_strategy="auto", election_min_rows=500,
-    )
-    q = start_ingest(spark, land, table, ckpt, max_files_per_trigger=2)
-    q.awaitTermination(180)
-
-    decided = [
-        m["election_decided_by"]
-        for m in read_metrics(table)
-        if not m.get("skipped") and "election_decided_by" in m
-    ]
-    plans = [
-        m["merge_plan"] for m in read_metrics(table) if not m.get("skipped")
-    ]
-    assert len(decided) >= 3
-    # the FIRST batch is below the floor (empty table + ~400 rows < 500)
-    assert decided[0] == "below_min_rows" and plans[0] == "full"
-    # later batches cross the floor and elect — the strategy TRANSITION
-    assert "static" in decided[1:]
-    i = decided.index("static")
-    assert plans[i] == "election"
-    # once past the floor the table never drops back below it
-    assert all(d == "static" for d in decided[i:])
-
-    # convergence: final state equals a full-plan control of the same log
-    control = IcebergLiteTable(
-        str(tmp_path / "control"), n_buckets=8, merge_strategy="full"
-    )
-    from bingo2sql_spark.pipeline import replay
-    replay(small_events, control, batch_id="all")
-    assert table.state_checksum(spark) == control.state_checksum(spark)
-    # and both equal the sequential oracle
-    pdf = small_events.select("seq", "op", "before", "after").toPandas()
-    assert table.state_checksum(spark) == oracle.state_checksum(
-        oracle.sequential_apply(pdf)
-    )
-
-
 def _stream_evo_schema():
     """Envelope + statement whose payload carries both spellings of the
     renamed column plus the ADDed column (producers race DDL mid-tail)."""
