@@ -88,10 +88,11 @@ def _load_events(spark, args, table_schema=None):
         return decode_events(spark.read.parquet(args.input))
     if args.input_format == "binlog":
         # S2 — the reference's primary input: actual binlog v4 file
-        # bytes (core/parseFile.go:16-179). Column names come from the
-        # schema file, like the reference's local mode (-t schema.sql,
-        # core/parser.go:794-815); tables not in it decode positionally
-        # (@1..@N) and are normally excluded via -t/-d gates.
+        # bytes (core/parseFile.go:16-179). Column names and UNSIGNED
+        # flags come from the schema file, like the reference's local
+        # mode (-t schema.sql, core/parser.go:794-815); tables not in it
+        # decode positionally (@1..@N) and are normally excluded via
+        # -t/-d gates.
         from bingo2sql_spark import ddl as DL
         from bingo2sql_spark.sources.binlog_binary import (
             binlog_raw_events, payload_schema_from,
@@ -101,10 +102,7 @@ def _load_events(spark, args, table_schema=None):
         if table_schema:
             with open(table_schema) as f:
                 reg = DL.parse_schema_text(f.read())
-            names = {
-                key: [c.name for c in meta.columns]
-                for key, meta in reg.items()
-            }
+            names = {key: meta.columns for key, meta in reg.items()}
         return decode_events(
             binlog_raw_events(spark, args.input, names),
             payload=payload_schema_from(names),

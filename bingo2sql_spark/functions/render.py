@@ -1,18 +1,14 @@
 """T1-T3/T5/T6/T8/S6 — SQL-text generation (the reference's main output
 mode) as vectorized transforms.
 
-Two implementations with identical semantics on the pinned payload:
-
-- `render_sql` — pure JVM expressions (whole-stage codegen), handed to
-  Spark as SQL expression text (functions.sqltext) so that building a
-  plan costs a few gateway calls, not one per Column node. This is the
-  hot path: escaping via regexp_replace, statement assembly via
-  concat_ws; minimal-update SET lists via null-skipping concat_ws
-  (compareValue analog, core/parser.go:2184-2209).
-- `render_sql_arrow` — mapInPandas (Arrow batches, pandas str ops); the
-  extension point for payloads with exotic codecs (the reference's
-  unsigned/JSON/geometry handling, core/parser.go:1736-1874) and for
-  multi-row VALUES batching (--minimal-insert, core/parser.go:1164-1240).
+One implementation: pure JVM expressions (whole-stage codegen), handed
+to Spark as SQL expression text (functions.sqltext) so that building a
+plan costs a few gateway calls, not one per Column node. Escaping runs
+via regexp_replace, statement assembly via concat_ws, minimal-update
+SET lists via null-skipping concat_ws (compareValue analog,
+core/parser.go:2184-2209). `render_sql` emits one statement per event;
+`render_sql_inline` batches consecutive inserts into multi-row VALUES
+statements (--minimal-insert, core/parser.go:1164-1240).
 
 Flashback note: rollback SQL (T5, generateUpdateRollbackSQL
 core/parser.go:1499-1623) is NOT a separate renderer — after
@@ -23,9 +19,7 @@ renderer emits exactly the reference's rollback statements.
 from __future__ import annotations
 
 import os
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -67,19 +61,6 @@ def sql_escape(e: str) -> str:
     for pattern, repl in _ESCAPES:
         escaped = f"regexp_replace({escaped}, {str_lit(pattern)}, {str_lit(repl)})"
     return f"CASE WHEN {e} RLIKE {str_lit(_SPECIALS)} THEN {escaped} ELSE {e} END"
-
-
-def _esc_pandas(s: pd.Series) -> pd.Series:
-    """Pandas mirror of sql_escape (identical character set/order)."""
-    return (
-        s.str.replace("\\", "\\\\", regex=False)
-        .str.replace("'", "\\'", regex=False)
-        .str.replace('"', '\\"', regex=False)
-        .str.replace("\n", "\\n", regex=False)
-        .str.replace("\r", "\\r", regex=False)
-        .str.replace("\x00", "\\0", regex=False)
-        .str.replace("\x1a", "\\Z", regex=False)
-    )
 
 
 def sql_literal(e: str) -> str:
@@ -548,14 +529,8 @@ def _batched_insert_stmts(
     ins = runs.filter(f"op = {str_lit(S.OP_INSERT)}").selectExpr(
         "seq", "gtid_uuid", "gno", "ts", "thread_id", "db", "`table`", "_run",
         f"concat('(', {_values(ins_cols)}, ')') AS _tuple",
+        f"floor((seq - _run) / {batch_rows}) AS _chunk",
     )
-    return _assemble_batches(ins, ins_cols, batch_rows)
-
-
-def _assemble_batches(ins: DataFrame, ins_cols: list[str], batch_rows: int) -> DataFrame:
-    """Shared multi-row statement assembly over (header cols, _run,
-    _tuple) rows — used by both the JVM and Arrow tuple builders."""
-    ins = ins.withColumn("_chunk", F.expr(f"floor((seq - _run) / {batch_rows})"))
     sql = (
         f"concat('INSERT INTO ', {_qualified('_a.db', '_a.`table`')}, "
         f"{_col_list(ins_cols)}, ' VALUES', _vals, ';')"
@@ -630,139 +605,3 @@ def render_multi_row_inserts(
     needed = ["seq", "gtid_uuid", "gno", "ts", "thread_id", "db", "table", "op", "after"]
     runs = with_insert_runs(events.select(*[c for c in needed if c in events.columns]))
     return _batched_insert_stmts(runs, cols, batch_rows).select("seq", "sql")
-
-
-def render_sql_arrow(
-    events: DataFrame,
-    payload_cols: list[str] | None = None,
-    minimal_update: bool = True,
-    no_primary_key: bool = False,
-) -> DataFrame:
-    """mapInPandas renderer: same statements as render_sql, built with
-    vectorized pandas string ops over Arrow batches (the reference's
-    bytes.Buffer V2 builder, core/parserV2.go:29-107, vectorized).
-    Use this path when per-type codecs need Python (JSON/geometry/
-    unsigned fix-ups); `render_sql_arrow_inline` is the multi-row
-    VALUES variant. Full flag parity with render_sql (differentially
-    tested), so an exotic-codec payload loses nothing by switching."""
-    cols = payload_cols or S.payload_columns()
-    ins_cols = [c for c in cols if not (no_primary_key and c in KEY_COLS)]
-    has_ddl = "statement" in events.columns
-    keep = F.col("op").isin(list(S.DML_OPS))
-    if has_ddl:
-        keep = keep | ((F.col("op") == S.OP_DDL) & F.col("statement").isNotNull())
-    flat = events.filter(keep).select(
-        "seq",
-        "op",
-        "db",
-        "table",
-        *([F.col("statement")] if has_ddl else []),
-        *[F.col(f"before.{c}").alias(f"b_{c}") for c in cols],
-        *[F.col(f"after.{c}").alias(f"a_{c}") for c in cols],
-    )
-
-    def lit(s: pd.Series) -> pd.Series:
-        quoted = "'" + _esc_pandas(s.astype("string")) + "'"
-        return quoted.fillna("NULL")
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            tbl = "`" + pdf["db"] + "`.`" + pdf["table"] + "`"
-            col_list = "(" + ",".join(f"`{c}`" for c in ins_cols) + ")"
-            values = lit(pdf[f"a_{ins_cols[0]}"])
-            for c in ins_cols[1:]:
-                values = values + "," + lit(pdf[f"a_{c}"])
-            insert = "INSERT INTO " + tbl + col_list + " VALUES(" + values + ");"
-
-            where = None
-            for k in KEY_COLS:
-                v = pdf[f"b_{k}"]
-                frag = ("`" + k + "`=" + lit(v)).where(v.notna(), f"`{k}` IS NULL")
-                where = frag if where is None else where + " AND " + frag
-            delete = "DELETE FROM " + tbl + " WHERE " + where + ";"
-
-            set_list = None
-            for c in cols:
-                frag = "`" + c + "`=" + lit(pdf[f"a_{c}"])
-                if minimal_update:
-                    changed = ~(
-                        (pdf[f"b_{c}"] == pdf[f"a_{c}"])
-                        | (pdf[f"b_{c}"].isna() & pdf[f"a_{c}"].isna())
-                    )
-                    frag = frag.where(changed, None)
-                if set_list is None:
-                    set_list = frag
-                else:  # null-aware comma join (values may contain commas)
-                    both = set_list.notna() & frag.notna()
-                    joined = set_list.fillna("") + both.map({True: ",", False: ""}) + frag.fillna("")
-                    set_list = joined.where(set_list.notna() | frag.notna(), None)
-            update = "UPDATE " + tbl + " SET " + set_list + " WHERE " + where + ";"
-
-            sql = insert.where(pdf["op"] == "insert", update.where(pdf["op"] == "update", delete))
-            if has_ddl:
-                stmt = pdf["statement"].astype("string").str.replace(
-                    r";\s*$", "", regex=True
-                )
-                ddl = "USE `" + pdf["db"] + "`;\n" + stmt + ";"
-                sql = sql.where(pdf["op"] != "ddl", ddl)
-            yield pd.DataFrame({"seq": pdf["seq"], "sql": sql})
-
-    return flat.mapInPandas(gen, schema="seq long, sql string")
-
-
-def render_sql_arrow_inline(
-    events: DataFrame,
-    payload_cols: list[str] | None = None,
-    minimal_update: bool = True,
-    no_primary_key: bool = False,
-    batch_rows: int = 100,
-    block_size: int = 1 << 16,
-) -> DataFrame:
-    """Arrow-path twin of render_sql_inline (--minimal-insert,
-    core/parser.go:1164-1240): run ids come from the shared
-    with_insert_runs machinery, VALUES tuples are built with pandas
-    string ops in mapInPandas (the codec-friendly path), and the
-    chunk/groupBy assembly is the same skew-proof _assemble_batches the
-    JVM path uses. Output: (seq, sql) — headers intentionally trimmed to
-    the render_sql_arrow contract."""
-    cols = payload_cols or S.payload_columns()
-    ins_cols = [c for c in cols if not (no_primary_key and c in KEY_COLS)]
-    runs = with_insert_runs(events, block_size)
-    others = render_sql_arrow(
-        runs.filter(F.col("op") != S.OP_INSERT).drop("_run"),
-        cols,
-        minimal_update=minimal_update,
-        no_primary_key=no_primary_key,
-    )
-
-    flat = runs.filter(F.col("op") == S.OP_INSERT).select(
-        "seq", "gtid_uuid", "gno", "ts", "thread_id", "db", "table", "_run",
-        *[F.col(f"after.{c}").alias(f"a_{c}") for c in ins_cols],
-    )
-
-    def lit(s: pd.Series) -> pd.Series:
-        quoted = "'" + _esc_pandas(s.astype("string")) + "'"
-        return quoted.fillna("NULL")
-
-    def tuples(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            vals = lit(pdf[f"a_{ins_cols[0]}"])
-            for c in ins_cols[1:]:
-                vals = vals + "," + lit(pdf[f"a_{c}"])
-            out = pdf[["seq", "gtid_uuid", "gno", "ts", "thread_id", "db", "table", "_run"]].copy()
-            out["_tuple"] = "(" + vals + ")"
-            yield out
-
-    ins = flat.mapInPandas(
-        tuples,
-        schema=(
-            "seq long, gtid_uuid string, gno long, ts timestamp, thread_id long, "
-            "db string, table string, _run long, _tuple string"
-        ),
-    )
-    batched = _assemble_batches(ins, ins_cols, batch_rows).select("seq", "sql")
-    return batched.unionByName(others)

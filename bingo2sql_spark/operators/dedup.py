@@ -1005,93 +1005,6 @@ def simhash_signatures(docs: DataFrame, text_col: str = "text", id_col: str = "d
     return agged.select(F.col(id_col), F.concat(*bits).alias("simhash"))
 
 
-def simhash_pairs(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n_bits: int = 16,
-    max_hamming: int = 1,
-    max_bucket_size: int | None = 5000,
-    log_dropped: bool = False,
-    persist: bool = True,
-) -> DataFrame:
-    """Near-dup candidate pairs by SimHash signature adjacency:
-    (id_a, id_b, hamming) for pairs at Hamming distance 0 (identical
-    signature) or 1 (one flipped bit), the classic simhash dedup radius.
-
-    Scale shape — NEVER all-pairs: each doc emits its signature plus
-    n_bits one-bit-flip PROBE signatures; probes equi-join against the
-    exact signature buckets, so the only wide exchanges are the
-    signature groupBy and the probe join (both hash joins on the
-    signature string). `max_bucket_size` drops degenerate buckets
-    (boilerplate corpora collapse to one signature) exactly like the
-    MinHash-LSH cap — and defaults ON (VERDICT r4 #3) with
-    dropped-bucket counts logged when the plan runs; pass None to
-    disable. Pair direction is id_a < id_b; Hamming-1 pairs are found
-    from either side's flip and deduped.
-
-    For larger Hamming radii at production signature widths (64 bits)
-    use `simhash_pairs_banded` — the probe count here scales linearly
-    with n_bits and only covers radius 1."""
-    if max_hamming not in (0, 1):
-        raise ValueError(
-            "simhash_pairs supports max_hamming of 0 or 1; use "
-            "simhash_pairs_banded for larger radii"
-        )
-    # persist: the exact/probe branches reference the signature table
-    # 3x; see minhash_candidate_pairs for why
-    sig = _maybe_persist(
-        simhash_signatures(docs, text_col=text_col, id_col=id_col, n_bits=n_bits),
-        persist,
-    )
-    if max_bucket_size is not None:
-        counts = _log_dropped(
-            sig.groupBy("simhash").count(),
-            F.col("count") > max_bucket_size,
-            f"simhash_pairs(max_bucket_size={max_bucket_size})",
-            log_dropped,
-        )
-        # count + anti-join, not the window cap — same pair-expansion
-        # vs band-table asymmetry as simhash_pairs_banded (see there)
-        big = counts.filter(F.col("count") > max_bucket_size).select("simhash")
-        sig = sig.join(big, "simhash", "left_anti")
-    exact = sig.select(F.col(id_col).alias("_id"), F.col("simhash").alias("_sig"))
-    # hamming-0: pairs within one exact bucket
-    a, b = exact.alias("a"), exact.alias("b")
-    h0 = (
-        a.join(b, (F.col("a._sig") == F.col("b._sig")) & (F.col("a._id") < F.col("b._id")))
-        .select(
-            F.col("a._id").alias("id_a"), F.col("b._id").alias("id_b"),
-            F.lit(0).alias("hamming"),
-        )
-    )
-    out = h0
-    if max_hamming >= 1:
-        flips = [
-            F.concat(
-                F.substring("_sig", 1, j),
-                F.when(F.substring("_sig", j + 1, 1) == "1", F.lit("0")).otherwise(F.lit("1")),
-                F.substring("_sig", j + 2, n_bits - j - 1),
-            )
-            for j in range(n_bits)
-        ]
-        probes = exact.select(
-            "_id", F.explode(F.array(*flips)).alias("_probe")
-        )
-        h1 = (
-            probes.alias("p")
-            .join(exact.alias("e"), F.col("p._probe") == F.col("e._sig"))
-            .filter(F.col("p._id") < F.col("e._id"))
-            .select(
-                F.col("p._id").alias("id_a"), F.col("e._id").alias("id_b"),
-                F.lit(1).alias("hamming"),
-            )
-            .distinct()  # found from both sides' flips
-        )
-        out = h0.unionByName(h1)
-    return out
-
-
 def simhash_pairs_banded(
     docs: DataFrame,
     text_col: str = "text",
@@ -1105,15 +1018,15 @@ def simhash_pairs_banded(
 ) -> DataFrame:
     """Near-dup pairs by 64-bit SimHash with BANDED probe tables — the
     Manku/Jain/Sarma web-dedup layout (WWW'07) the production world runs
-    at 10^9+ docs, and the scale-correct successor to the one-bit-flip
-    probes in `simhash_pairs` (VERDICT r4 #2).
+    at 10^9+ docs, and the engine's one SimHash pair generator (any
+    width that divides into `bands`, any radius < `bands`).
 
     Candidate generation by pigeonhole: the signature splits into
     `bands` contiguous bands (64/4 = 16 bits each); any pair within
     Hamming distance <= bands-1 must agree EXACTLY on at least one band,
     so docs sharing a (band_index, band_bits) bucket are the complete
     candidate set for max_hamming <= bands-1. Each doc emits exactly
-    `bands` probe rows — constant, vs n_bits flip probes — and 16-bit
+    `bands` probe rows — constant in n_bits — and 16-bit
     bands give 65k buckets PER BAND position (4 independent tables), so
     buckets stay sparse at corpus scale.
 

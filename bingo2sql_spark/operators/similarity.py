@@ -27,9 +27,10 @@ def _int_vec(col: F.Column) -> F.Column:
 
 
 def dot_int(a: F.Column, b: F.Column) -> F.Column:
-    """Interpreted-HOF dot product — kept ONLY as the composable Column
-    variant for small/one-off expressions; hot paths use dot_int_arrow
-    (one numpy op per Arrow batch, ~10-20x faster, identical values)."""
+    """Interpreted-HOF dot product: the reference that
+    test_dot_int_arrow_matches_expr checks dot_int_arrow against. Engine
+    paths score with dot_int_arrow (one numpy op per Arrow batch,
+    ~10-20x faster, identical values) or an exact matmul."""
     return F.aggregate(
         F.zip_with(_int_vec(a), _int_vec(b), lambda x, y: x * y),
         F.lit(0.0),
@@ -85,77 +86,54 @@ def brute_force_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
-    impl: str = "numpy",
     max_driver_queries: int = 100_000,
 ) -> DataFrame:
     """Exact top-k by integer-scaled dot product.
 
-    impl="numpy" (default): the query set is collected to a small int64
-    matrix and shipped in the closure; each Arrow batch of corpus
-    vectors does ONE matrix multiply (V @ Q.T) inside mapInPandas and
-    emits only its LOCAL top-k per query — the corpus is scanned once,
-    nothing but (batches x queries x k) candidate rows move, and the
-    global window finishes the top-k. ~10x faster than per-pair
-    Catalyst higher-order functions (impl="expr"), bit-identical
-    results (int64 arithmetic both ways).
+    The query set is collected to a small int64 matrix and shipped in
+    the closure; each Arrow batch of corpus vectors does ONE matrix
+    multiply (V @ Q.T) inside mapInPandas and emits only its LOCAL top-k
+    per query — the corpus is scanned once, nothing but (batches x
+    queries x k) candidate rows move, and the global window finishes
+    the top-k. Scores are int64 throughout, bit-identical to dot_int.
     """
-    if impl == "expr":
-        q = queries.select(F.col(query_id_col), F.col(vec_col).alias("_qvec"))
-        scored = vectors.alias("v").join(F.broadcast(q)).select(
-            F.col(query_id_col),
-            F.col(id_col).alias("neighbor_id"),
-            dot_int(F.col(vec_col), F.col("_qvec")).alias("dot_scaled"),
+    # the query set ships in the task closure: O(Q * dim) ints on the
+    # driver and per executor. Brute force is the SMALL-Q baseline by
+    # design — a larger query set belongs in lsh_topk (bucketed join,
+    # nothing collected); fail loudly instead of OOMing the driver.
+    # (limit+1 keeps the guard inside the ONE collect job.)
+    qrows = queries.select(query_id_col, vec_col).limit(max_driver_queries + 1).collect()
+    if len(qrows) > max_driver_queries:
+        raise ValueError(
+            f"brute_force_topk would collect > {max_driver_queries} queries; "
+            "use lsh_topk for large query sets or raise max_driver_queries"
         )
-    else:
-        import numpy as np
-        import pandas as pd
+    qids = np.array([r[query_id_col] for r in qrows], dtype="int64")
+    qmat = _round_half_away(np.array([r[vec_col] for r in qrows], dtype="float64") * 1000)
 
-        def round_half_away(x):
-            # match Spark/DuckDB round(): half away from zero (np.rint
-            # is half-to-even and would flip exact .5 boundaries)
-            return np.where(x >= 0, np.floor(x + 0.5), np.ceil(x - 0.5)).astype("int64")
-
-        # the query set ships in the task closure: O(Q * dim) ints on the
-        # driver and per executor. Brute force is the SMALL-Q baseline by
-        # design — a larger query set belongs in lsh_topk (bucketed join,
-        # nothing collected); fail loudly instead of OOMing the driver.
-        # (limit+1 keeps the guard inside the ONE collect job.)
-        qrows = queries.select(query_id_col, vec_col).limit(max_driver_queries + 1).collect()
-        if len(qrows) > max_driver_queries:
-            raise ValueError(
-                f"brute_force_topk would collect > {max_driver_queries} queries; "
-                "use lsh_topk for large query sets or raise max_driver_queries"
+    def score(batches):
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            vmat = _round_half_away(np.array(list(pdf[vec_col]), dtype="float64") * 1000)
+            dots = _exact_matmul(vmat, qmat.T)  # (n_batch, n_queries) exact int64
+            nb = len(pdf)
+            kk = min(k, nb)
+            ids = pdf[id_col].to_numpy()
+            # local top-k per query (ties -> lower neighbor_id)
+            order = np.lexsort((ids[None, :].repeat(len(qids), 0), -dots.T))
+            top = order[:, :kk]
+            yield pd.DataFrame(
+                {
+                    query_id_col: np.repeat(qids, kk),
+                    "neighbor_id": ids[top].ravel(),
+                    "dot_scaled": np.take_along_axis(dots.T, top, 1).ravel(),
+                }
             )
-        qids = np.array([r[query_id_col] for r in qrows], dtype="int64")
-        qmat = round_half_away(
-            np.array([r[vec_col] for r in qrows], dtype="float64") * 1000
-        )
 
-        def score(batches):
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                vmat = round_half_away(
-                    np.array(list(pdf[vec_col]), dtype="float64") * 1000
-                )
-                dots = _exact_matmul(vmat, qmat.T)  # (n_batch, n_queries) exact int64
-                nb = len(pdf)
-                kk = min(k, nb)
-                ids = pdf[id_col].to_numpy()
-                # local top-k per query (ties -> lower neighbor_id)
-                order = np.lexsort((ids[None, :].repeat(len(qids), 0), -dots.T))
-                top = order[:, :kk]
-                yield pd.DataFrame(
-                    {
-                        query_id_col: np.repeat(qids, kk),
-                        "neighbor_id": ids[top].ravel(),
-                        "dot_scaled": np.take_along_axis(dots.T, top, 1).ravel(),
-                    }
-                )
-
-        scored = vectors.select(id_col, vec_col).mapInPandas(
-            score, schema=f"{query_id_col} long, neighbor_id long, dot_scaled long"
-        )
+    scored = vectors.select(id_col, vec_col).mapInPandas(
+        score, schema=f"{query_id_col} long, neighbor_id long, dot_scaled long"
+    )
     w = Window.partitionBy(query_id_col).orderBy(
         F.col("dot_scaled").desc(), F.col("neighbor_id").asc()
     )

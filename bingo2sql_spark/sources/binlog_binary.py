@@ -40,12 +40,14 @@ reader call per non-NULL value, no per-value type dispatch, and no
 intermediate dict — the image's JSON text is written directly.
 
 Column NAMES are not stored in rows events (only in the schema), so a
-registry maps (db, table) -> ordered column names — same contract as
-the reference, which loads the schema per table before parsing
+registry maps (db, table) -> ordered columns — same contract as the
+reference, which loads the schema per table before parsing
 (core/parser.go:1626-1686). Unknown tables fall back to mysqlbinlog's
-positional @1..@N naming. Signedness is also absent from the binlog;
-integers decode SIGNED here and the registry-driven unsigned
-reinterpretation (T7, sources/decode.py) applies downstream.
+positional @1..@N naming. Signedness is also absent from the binlog
+(T7): a registry column is a bare name (signed) or a `schema.ColumnMeta`
+whose `unsigned` flag makes that column's integers decode UNSIGNED —
+the reader choice is part of the per-(TABLE_MAP, bitmap) decoder, so it
+costs nothing per row.
 
 A deterministic ENCODER (`encode_binlog`) lives here too: the sandbox
 has no mysqld to produce fixtures, so tests and benchmarks synthesize
@@ -296,7 +298,18 @@ _I32 = struct.Struct("<i").unpack_from
 _I64 = struct.Struct("<q").unpack_from
 _F32 = struct.Struct("<f").unpack_from
 _F64 = struct.Struct("<d").unpack_from
+_U8 = struct.Struct("<B").unpack_from
 _U16 = struct.Struct("<H").unpack_from
+_U32 = struct.Struct("<I").unpack_from
+_U64 = struct.Struct("<Q").unpack_from
+
+#: integer column type -> (width, signed reader, unsigned reader)
+_INT_READERS = {
+    T_TINY: (1, _I8, _U8),
+    T_SHORT: (2, _I16, _U16),
+    T_LONG: (4, _I32, _U32),
+    T_LONGLONG: (8, _I64, _U64),
+}
 
 #: JSON text of one value, exactly as json.dumps writes it inside a dict
 _json_scalar = json.JSONEncoder().encode
@@ -334,20 +347,18 @@ def _encoded(read, encode):
     return read_token
 
 
-def _token_reader(ctype: int, meta: int):
+def _token_reader(ctype: int, meta: int, unsigned: bool = False):
     """The type dispatch for one column, resolved once: returns
     `read(data, off) -> (JSON text of the value, next offset)`, the text
-    `json.dumps` writes for the decoded value inside the image dict."""
-    if ctype == T_TINY:
-        return _int_token(_I8, 1)
-    if ctype == T_SHORT:
-        return _int_token(_I16, 2)
+    `json.dumps` writes for the decoded value inside the image dict.
+    `unsigned` (the registry's UNSIGNED flag) picks the unsigned
+    integer readers (processValue core/parser.go:1322-1360)."""
+    if ctype in _INT_READERS:
+        width, signed_read, unsigned_read = _INT_READERS[ctype]
+        return _int_token(unsigned_read if unsigned else signed_read, width)
     if ctype == T_INT24:
-        return lambda data, off: (str(_s(data, off, 3)), off + 3)
-    if ctype == T_LONG:
-        return _int_token(_I32, 4)
-    if ctype == T_LONGLONG:
-        return _int_token(_I64, 8)
+        read24 = _u if unsigned else _s
+        return lambda data, off: (str(read24(data, off, 3)), off + 3)
     if ctype == T_FLOAT:
         return _encoded(lambda data, off: (_F32(data, off)[0], off + 4), _json_scalar)
     if ctype == T_DOUBLE:
@@ -372,9 +383,8 @@ def _token_reader(ctype: int, meta: int):
         # non-UTF8 BINARY blob's unmappable bytes become U+FFFD in the
         # stored image. TEXT/JSON-bearing blobs (the reference's
         # replay/flashback payloads) round-trip exactly; true binary
-        # payloads need a bytes-preserving envelope (e.g. a base64
-        # column codec at the caller, sources/codecs.py) rather than
-        # this text image.
+        # payloads need a bytes-preserving envelope (e.g. base64 text
+        # written by the tailer) rather than this text image.
         def read_blob(data, off):
             n, off = _u(data, off, meta), off + meta
             return _json_str(data[off : off + n].decode("utf-8", "replace")), off + n
@@ -491,7 +501,10 @@ class _ImageDecoder:
 
     __slots__ = ("keys", "readers", "null_len")
 
-    def __init__(self, tm: _TableMap, present: bytes, width: int, names: list[str]):
+    def __init__(
+        self, tm: _TableMap, present: bytes, width: int,
+        names: list[str], unsigned: frozenset[int],
+    ):
         cols = _bits(present, tm.col_count)
         self.keys = [
             ("{" if j == 0 else ", ")
@@ -499,7 +512,9 @@ class _ImageDecoder:
             + ": "
             for j, i in enumerate(cols)
         ]
-        self.readers = [_token_reader(tm.types[i], tm.meta[i]) for i in cols]
+        self.readers = [
+            _token_reader(tm.types[i], tm.meta[i], i in unsigned) for i in cols
+        ]
         # the null bitmap spans every present column of the event width
         self.null_len = (len(_bits(present, width)) + 7) // 8
 
@@ -524,6 +539,15 @@ class _ImageDecoder:
         return ("".join(parts) + "}" if parts else "{}"), off
 
 
+def _column_spec(cols) -> tuple[list[str], frozenset[int]]:
+    """One registry entry -> (column names, indexes of UNSIGNED columns).
+    An entry lists the table's columns in order, each a bare name or a
+    `schema.ColumnMeta` (anything with `name` and `unsigned`)."""
+    names = [getattr(c, "name", c) for c in cols]
+    unsigned = frozenset(i for i, c in enumerate(cols) if getattr(c, "unsigned", False))
+    return names, unsigned
+
+
 # ---------------------------------------------------------------------------
 # event stream
 
@@ -546,16 +570,22 @@ class BinlogEventParser:
     files are capped at 1 GiB < 2^32 offsets; 4096 rows per event; 2^19
     files); the ordinal defaults to the numeric suffix of the file name
     (mysql-bin.000007 -> 7). log_pos is the event START offset,
-    mysqlbinlog's "# at N" convention."""
+    mysqlbinlog's "# at N" convention.
+
+    `names_for` is the column registry: "db.table" (or "table") -> the
+    table's columns in order, each a name or a `schema.ColumnMeta`
+    whose `unsigned` flag selects unsigned integer decoding (T7)."""
 
     def __init__(
         self,
         log_file: str = "binlog",
         file_ordinal: int | None = None,
-        names_for: dict[str, list[str]] | None = None,
+        names_for: dict[str, list] | None = None,
         schema_ver: int = 2,
     ):
-        self.names_for = {k.lower(): v for k, v in (names_for or {}).items()}
+        self.columns_for = {
+            k.lower(): _column_spec(v) for k, v in (names_for or {}).items()
+        }
         self.schema_ver = schema_ver
         self.checksummed = False
         self.table_maps: dict[int, _TableMap] = {}
@@ -716,19 +746,20 @@ class BinlogEventParser:
         # the next GTID event, matching server behavior)
         return []
 
-    def _names(self, tm: _TableMap) -> list[str]:
-        """Registry column names of the mapped table; [] means positional
-        @1..@N names (mysqlbinlog's convention for unknown tables)."""
+    def _columns(self, tm: _TableMap) -> tuple[list[str], frozenset[int]]:
+        """Registry (names, unsigned indexes) of the mapped table; no
+        names means positional @1..@N names (mysqlbinlog's convention for
+        unknown tables) and signed integers."""
         return (
-            self.names_for.get(f"{tm.db}.{tm.table}".lower())
-            or self.names_for.get(tm.table.lower())  # unqualified registry key
-            or []
+            self.columns_for.get(f"{tm.db}.{tm.table}".lower())
+            or self.columns_for.get(tm.table.lower())  # unqualified registry key
+            or ([], frozenset())
         )
 
     def _decoder(self, tm: _TableMap, present: bytes, width: int) -> _ImageDecoder:
         dec = tm.decoders.get((present, width))
         if dec is None:
-            dec = _ImageDecoder(tm, present, width, self._names(tm))
+            dec = _ImageDecoder(tm, present, width, *self._columns(tm))
             tm.decoders[(present, width)] = dec
         return dec
 
@@ -760,7 +791,7 @@ class BinlogEventParser:
                 # binlog_row_image=MINIMAL: the after image carries
                 # only the changed columns — surface the mask the
                 # MINIMAL merge path consumes
-                names = self._names(tm)
+                names = self._columns(tm)[0]
                 changed = [names[i] if i < len(names) else f"@{i + 1}" for i in cols]
         op = (
             "insert" if etype in _ROWS_WRITE
@@ -832,7 +863,7 @@ def parse_binlog_bytes(
     *,
     log_file: str = "binlog",
     file_ordinal: int | None = None,
-    names_for: dict[str, list[str]] | None = None,
+    names_for: dict[str, list] | None = None,
     schema_ver: int = 2,
 ) -> Iterator[dict]:
     """Parse one binlog FILE's bytes into raw-event envelope dicts
@@ -861,7 +892,7 @@ def parse_binlog_bytes(
 
 def decode_binlog_df(
     binary_df,
-    table_schemas: dict[str, list[str]] | None = None,
+    table_schemas: dict[str, list] | None = None,
     schema_ver: int = 2,
 ):
     """(path, content) rows -> RAW_EVENT envelope (+ statement) via one
@@ -903,7 +934,7 @@ def decode_binlog_df(
 
 
 def payload_schema_from(
-    table_schemas: dict[str, list[str]] | None,
+    table_schemas: dict[str, list] | None,
 ):
     """Union image struct for decode_events(payload=...): every column
     name any registered table declares, as string fields (the engine's
@@ -917,7 +948,7 @@ def payload_schema_from(
     seen: set[str] = set()
     fields = []
     for cols in table_schemas.values():
-        for c in cols:
+        for c in _column_spec(cols)[0]:
             if c.lower() not in seen:
                 seen.add(c.lower())
                 fields.append(T.StructField(c, T.StringType()))
@@ -927,7 +958,7 @@ def payload_schema_from(
 def binlog_raw_events(
     spark,
     path: str,
-    table_schemas: dict[str, list[str]] | None = None,
+    table_schemas: dict[str, list] | None = None,
     schema_ver: int = 2,
 ):
     """Distributed binlog-file decode: `binaryFile` scan ->

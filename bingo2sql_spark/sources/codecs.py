@@ -1,187 +1,17 @@
-"""Per-type value codecs for the Arrow decode path (S2/T7 extension
-point).
+"""MySQL JSONB binary decode: one binlog JSON column value -> canonical
+JSON text (`decode_jsonb`), called by sources.binlog_binary's JSON
+column reader (golden outputs TestJson/TestJsonV2
+core/parser_test.go:1075-1198).
 
-The reference's go-mysql layer hands it typed Go values which
-InterpolateParams then renders (core/parser.go:1736-1874); the exotic
-cases are DATETIME/TIMESTAMP with fractional seconds and zero-date
-sentinels (core/parser.go:1793-1837, golden expectations
-core/parser_test.go:690-725), exact DECIMAL (decimal.Decimal -> exact
-string, core/parser.go:1781-1782), ENUM/SET/BIT as ints
-(core/parser_test.go:538,662), GEOMETRY as escaped WKB bytes
-(core/parser_test.go:664-688), and unsigned reinterpretation
-(processValue core/parser.go:1322-1360 — see decode.unsigned_fixup).
-
-Here the landing payload is string-typed (SURVEY §1.2), so a codec is a
-VECTORIZED normalizer `pd.Series[str|object] -> pd.Series[str]` applied
-inside `decode_events_arrow` per payload column. All codecs are pure
-pandas/numpy column ops — never per-row Python in a loop — except where
-values are already Python objects (bytes), where a C-level comprehension
-is the fastest available form.
+Format per the public MySQL json_binary.h documentation: a type byte
+then a type-specific payload; small (2-byte) and large (4-byte)
+object/array headers; inlined small scalars; opaque values for DECIMAL
+and temporals. Canonical text: compact separators, object keys sorted
+lexicographically, non-ASCII \\u-escaped, invalid UTF-8 -> U+FFFD — the
+same canonical form the reference's goldens pin.
 """
 
 from __future__ import annotations
-
-import pandas as pd
-
-def _obj(s: pd.Series) -> pd.Series:
-    """Return object dtype with real None (pandas StringDtype yields
-    pd.NA, which Arrow/callers must not see)."""
-    return s.astype("object").where(s.notna(), None)
-
-
-#: zero sentinels the reference emits verbatim instead of NULL
-ZERO_DATE = "0000-00-00"
-ZERO_DATETIME = "0000-00-00 00:00:00"
-
-_TRAIL_ZEROS = r"(\.\d*?)0+$"
-_TRAIL_DOT = r"\.$"
-
-
-def decimal_codec(s: pd.Series) -> pd.Series:
-    """Exact DECIMAL normalization: strip redundant trailing fraction
-    zeros ('-45363.640000' -> '-45363.64', '5.000' -> '5') with pure
-    string ops — the value NEVER visits float, so any precision
-    (DECIMAL(65,30)) survives exactly, matching decimal.Decimal.String()
-    in the reference (core/parser.go:1781-1782)."""
-    out = s.astype("string")
-    has_dot = out.str.contains(".", regex=False)
-    trimmed = out.str.replace(_TRAIL_ZEROS, r"\1", regex=True).str.replace(
-        _TRAIL_DOT, "", regex=True
-    )
-    return _obj(trimmed.where(has_dot, out))
-
-
-def datetime_codec(decimals: int = 0):
-    """DATETIME/TIMESTAMP(decimals) canonicalizer. Mirrors the golden
-    expectations of TestDatetime (core/parser_test.go:690-725):
-
-    - fraction truncated/zero-padded to the column's `decimals`
-      ('17:51:04.123456' @ (3) -> '17:51:04.123'; @ (0) -> '17:51:04')
-    - zero dates pass through as the zero SENTINEL with the same
-      fraction width ('0000-00-00 00:00:00.000' for (3)) — NOT NULL and
-      NOT an error, per MySQL sql_mode='' semantics
-    - no timezone math: binlog datetimes are wall-clock strings."""
-
-    def codec(s: pd.Series) -> pd.Series:
-        out = s.astype("string")
-        # split on the fraction dot instead of fixed offsets so that
-        # time-only / non-standard layouts truncate correctly instead of
-        # producing corrupt output (ADVICE r2: '17:51:04.123456' with a
-        # hardcoded offset-20 fraction read)
-        parts = out.str.partition(".")
-        base, frac = parts[0], parts[2]
-        # right-pad a date-only value to full datetime
-        dateonly = base.str.fullmatch(r"\d{4}-\d{2}-\d{2}").fillna(False)
-        base = base.where(~dateonly, base + " 00:00:00")
-        if decimals <= 0:
-            return _obj(base)
-        frac = frac.str.slice(0, decimals).str.pad(decimals, side="right", fillchar="0")
-        return _obj(base + "." + frac)
-
-    return codec
-
-
-def enum_codec(values: list[str]):
-    """ENUM -> 1-based index int string (the reference emits the int,
-    core/parser_test.go:538: e ENUM('a','b','c') value 'a' -> 1).
-    Values already numeric pass through. A non-numeric value OUTSIDE the
-    declared list raises (vocab drift — a new enum member added upstream
-    — must be loud, not silently NULLed into the rendered SQL)."""
-    mapping = {v: str(i + 1) for i, v in enumerate(values)}
-
-    def codec(s: pd.Series) -> pd.Series:
-        out = s.astype("string")
-        mapped = out.map(mapping)
-        numeric = out.str.fullmatch(r"\d+").fillna(False)
-        bad = out.notna() & mapped.isna() & ~numeric
-        if bad.any():
-            unknown = sorted(set(out[bad]))[:5]
-            raise ValueError(
-                f"enum_codec: value(s) {unknown!r} not in declared ENUM {values!r} "
-                "— schema registry is stale (reference resolves the live DDL, "
-                "core/parser.go:1646-1656)"
-            )
-        return _obj(mapped.where(mapped.notna(), out))
-
-    return codec
-
-
-def set_codec(values: list[str]):
-    """SET -> bitmask int string ('a,c' over ('a','b','c') -> 5,
-    core/parser_test.go:662: se SET value -> 3). An unknown member
-    raises (vocab drift must be loud, not a silently-dropped bit)."""
-    bit = {v: 1 << i for i, v in enumerate(values)}
-
-    def codec(s: pd.Series) -> pd.Series:
-        def one(x):
-            if x is None or (isinstance(x, float) and pd.isna(x)):
-                return None
-            if isinstance(x, str) and x.isdigit():
-                return x
-            total = 0
-            for part in str(x).split(","):
-                part = part.strip()
-                if part:
-                    if part not in bit:
-                        raise ValueError(
-                            f"set_codec: member {part!r} not in declared SET "
-                            f"{values!r} — schema registry is stale"
-                        )
-                    total |= bit[part]
-            return str(total)
-
-        return pd.Series([one(x) for x in s.tolist()], index=s.index, dtype="object")
-
-    return codec
-
-
-def bit_codec(s: pd.Series) -> pd.Series:
-    """BIT(n) -> unsigned int string. Accepts b'…' literals, plain
-    binary digit strings, or raw bytes (big-endian, the wire form)."""
-
-    def one(x):
-        if x is None or (isinstance(x, float) and pd.isna(x)):
-            return None
-        if isinstance(x, (bytes, bytearray)):
-            return str(int.from_bytes(bytes(x), "big"))
-        t = str(x)
-        if t.startswith(("b'", "B'")) and t.endswith("'"):
-            t = t[2:-1]
-            return str(int(t, 2) if t else 0)
-        if set(t) <= {"0", "1"} and t != "" and len(t) > 1:
-            return str(int(t, 2))
-        return t
-
-    return pd.Series([one(x) for x in s.tolist()], index=s.index, dtype="object")
-
-
-def binary_codec(s: pd.Series) -> pd.Series:
-    """BLOB/GEOMETRY (WKB) passthrough: bytes become a latin-1-preserved
-    string so every byte survives into the payload; the renderer's full
-    escape set (\\0, \\Z, \\n, \\r, ', \", \\) then emits exactly the
-    reference's escaped-binary literal (core/parser_test.go:664-688)."""
-
-    def one(x):
-        if x is None or (isinstance(x, float) and pd.isna(x)):
-            return None
-        if isinstance(x, (bytes, bytearray)):
-            return bytes(x).decode("latin-1")
-        return str(x)
-
-    return pd.Series([one(x) for x in s.tolist()], index=s.index, dtype="object")
-
-
-# --------------------------------------------------------------------------
-# MySQL JSONB *binary* decode (the reference's one type-matrix row with no
-# engine-side analog until round 3: its tailer library decodes binlog JSONB
-# itself; golden outputs TestJson/TestJsonV2 core/parser_test.go:1075-1198).
-# Format per the public MySQL json_binary.h documentation: a type byte then
-# a type-specific payload; small (2-byte) and large (4-byte) object/array
-# headers; inlined small scalars; opaque values for DECIMAL and temporals.
-# Canonical text: compact separators, object keys sorted lexicographically,
-# non-ASCII \\u-escaped, invalid UTF-8 -> U+FFFD — the same canonical form
-# the reference's goldens pin.
-# --------------------------------------------------------------------------
 
 _JSONB_SMALL_OBJECT = 0x00
 _JSONB_LARGE_OBJECT = 0x01
@@ -384,8 +214,6 @@ def _jsonb_render(v) -> str:
         return "false"
     if isinstance(v, _RawNum):
         return v.text
-    if isinstance(v, bool):  # pragma: no cover - handled above
-        return "true" if v else "false"
     if isinstance(v, int):
         return str(v)
     if isinstance(v, float):
@@ -395,12 +223,10 @@ def _jsonb_render(v) -> str:
     if isinstance(v, list):
         return "[" + ",".join(_jsonb_render(x) for x in v) + "]"
     if isinstance(v, dict):
-        import json as _j
-
         return (
             "{"
             + ",".join(
-                _j.dumps(k, ensure_ascii=True) + ":" + _jsonb_render(v[k])
+                _json.dumps(k, ensure_ascii=True) + ":" + _jsonb_render(v[k])
                 for k in sorted(v)
             )
             + "}"
@@ -414,37 +240,3 @@ def decode_jsonb(data: bytes | None) -> str | None:
     if data is None or len(data) == 0:
         return None
     return _jsonb_render(_jsonb_value(bytes(data), data[0], 1))
-
-
-def jsonb_codec(s: pd.Series) -> pd.Series:
-    """JSONB binary column codec: raw binlog bytes (or latin-1-preserved
-    strings from binary_codec upstream) -> canonical JSON text. Values
-    are Python bytes objects, so like bit/binary_codec this is a
-    C-level comprehension over the opt-in Arrow codec path, never the
-    relational hot path."""
-
-    def one(x):
-        if x is None or (isinstance(x, float) and pd.isna(x)):
-            return None
-        if isinstance(x, str):
-            x = x.encode("latin-1")
-        return decode_jsonb(x)
-
-    return pd.Series([one(x) for x in s.tolist()], index=s.index, dtype="object")
-
-
-def json_codec(s: pd.Series) -> pd.Series:
-    """JSON column passthrough with validation: the binlog tailer hands
-    JSON v1/v2 binary already textified (the reference relies on
-    go-mysql's JSONB decoder the same way, core/parser_test.go:1075-
-    1198); values that parse are kept verbatim, so round-tripping is
-    byte-exact."""
-    import json as _json
-
-    def one(x):
-        if x is None or (isinstance(x, float) and pd.isna(x)):
-            return None
-        _json.loads(x)  # raise on corrupt payloads rather than emit bad SQL
-        return x
-
-    return pd.Series([one(x) for x in s.tolist()], index=s.index, dtype="object")

@@ -133,7 +133,8 @@ def _expect_ok(payload: bytes) -> None:
 
 class ReplicationClient:
     """Replica-protocol tail: handshake + auth + COM_BINLOG_DUMP,
-    yielding raw-event envelope dicts (BinlogEventParser output)."""
+    yielding raw-event envelope dicts (BinlogEventParser output;
+    `names_for` is its column registry, UNSIGNED flags included)."""
 
     def __init__(
         self,
@@ -142,7 +143,7 @@ class ReplicationClient:
         user: str,
         password: str = "",
         server_id: int = 2000000111,  # the reference's ServerID (parser.go:382)
-        names_for: dict[str, list[str]] | None = None,
+        names_for: dict[str, list] | None = None,
         connect_timeout: float = 10.0,
     ):
         self.host, self.port = host, port

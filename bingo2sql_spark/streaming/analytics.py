@@ -26,7 +26,7 @@ converges to its batch counterpart once the watermark passes).
 
 from __future__ import annotations
 
-from typing import Any, Iterator
+from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame

@@ -88,7 +88,7 @@ def start_ingest(
     evolve_from_ddl: bool = False,
     validate_stored: bool = False,
     source_schema: Any = None,
-    table_schemas: dict[str, list[str]] | None = None,
+    table_schemas: dict[str, list] | None = None,
     **filter_kwargs: Any,
 ) -> StreamingQuery:
     """Launch the ingest query. availableNow=True drains the current
@@ -166,7 +166,8 @@ def start_ingest(
         # S1 over rotating binlog FILES: tail a directory of real
         # binlog v4 bytes (file order = rotation order); each new file
         # decodes in one task. DDL statements ride the envelope, so
-        # evolve_from_ddl composes.
+        # evolve_from_ddl composes. `table_schemas` is the parser's
+        # column registry (names, ColumnMeta for UNSIGNED columns).
         from bingo2sql_spark.sources.binlog_binary import (
             decode_binlog_df, payload_schema_from,
         )

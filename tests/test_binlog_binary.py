@@ -148,6 +148,64 @@ def test_type_matrix_roundtrip():
                    "c11": "2024-02-29 12:00:01"}
 
 
+def test_unsigned_integers_decode_unsigned(spark, tmp_path):
+    """T7: the binlog stores no signedness, so UNSIGNED comes from the
+    registry — a schema file's ColumnMeta reaches the parser and an
+    integer with the sign bit set decodes as its unsigned value at every
+    width (processValue core/parser.go:1322-1360), exactly past 2^53 and
+    up to MaxUint64; a signed column of the same table stays signed. The
+    CLI's `--input-format binlog -t schema.sql` renders the same values."""
+    import os
+
+    from bingo2sql_spark import ddl as DL
+    from bingo2sql_spark.__main__ import main
+
+    ddl = (
+        "CREATE TABLE test.u (t tinyint unsigned, s smallint unsigned, "
+        "m mediumint unsigned, i int unsigned, b bigint unsigned, "
+        "sb bigint, PRIMARY KEY (b));"
+    )
+    cols = DL.parse_schema_text(ddl)["test.u"].columns
+    types = [B.T_TINY, B.T_SHORT, B.T_INT24, B.T_LONG, B.T_LONGLONG, B.T_LONGLONG]
+    meta = [0] * len(types)
+    bits = [8, 16, 24, 32, 64]
+    rows = [  # unsigned values; the writer stores their two's complement
+        [200, 65535, 1 << 23, 1 << 31, (1 << 64) - 1],
+        [255, 1 << 15, 16777215, 4294967295, 1 << 63],
+        [5, 0, 7, (1 << 31) + 1, (1 << 53) + 1],
+        [None, None, None, None, (1 << 63) - 1],
+    ]
+    w = B.BinlogWriter(checksum=True)
+    w.gtid("3e11fa47-71ca-11e1-9e33-c80aa9429562", 1, ts=100)
+    w.table_map("test", "u", types, meta, ts=100)
+    w.rows("test", "u", "insert", types, meta,
+           [[None if v is None else v - ((1 << n) if v >> (n - 1) else 0)
+             for v, n in zip(r, bits)] + [-1] for r in rows], ts=100)
+    evs = list(B.parse_binlog_bytes(w.bytes(), log_file="b.1",
+                                    names_for={"test.u": cols}))
+    names = ["t", "s", "m", "i", "b"]
+    assert [json.loads(e["after_json"]) for e in evs] == [
+        {**dict(zip(names, r)), "sb": -1} for r in rows
+    ]
+
+    bdir = tmp_path / "bl"
+    os.makedirs(bdir)
+    (bdir / "mysql-bin.000001").write_bytes(w.bytes())
+    schema_file = tmp_path / "schema.sql"
+    schema_file.write_text(ddl)
+    out = str(tmp_path / "out")
+    assert main([
+        "--input", str(bdir), "--input-format", "binlog",
+        "--table-schema", str(schema_file), "-o", out, "-t", "u",
+    ]) == 0
+    body = "".join(
+        open(os.path.join(out, f)).read()
+        for f in sorted(os.listdir(out)) if f.startswith("part-")
+    )
+    assert "VALUES('200','65535','8388608','2147483648','18446744073709551615','-1')" in body
+    assert "VALUES(NULL,NULL,NULL,NULL,'9223372036854775807','-1')" in body
+
+
 def test_minimal_image_update_mask():
     """binlog_row_image=MINIMAL: a narrowed after-image bitmap becomes
     the envelope's changed_cols mask (T3/MINIMAL merge input)."""

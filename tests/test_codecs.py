@@ -1,116 +1,98 @@
-"""Golden codec tests mirroring the reference's type expectations:
+"""Golden value-decode tests mirroring the reference's type
+expectations, run through the binlog decoder's per-type readers:
 TestDatetime (core/parser_test.go:690-725), decimal exactness
 (core/parser.go:1781-1782), ENUM/SET/BIT ints (core/parser_test.go:
-538,662), GEOMETRY WKB escaped bytes (core/parser_test.go:664-688)."""
+538,662), GEOMETRY WKB escaped bytes (core/parser_test.go:664-688), and
+the JSONB binary matrix (TestJsonV2 core/parser_test.go:1075-1198)."""
 
 from __future__ import annotations
 
-import pandas as pd
+import json
+import struct
 
+import pytest
+
+from bingo2sql_spark.sources import binlog_binary as B
 from bingo2sql_spark.sources import codecs as C
 
 
-def _s(*vals):
-    return pd.Series(list(vals), dtype="object")
+def _read(ctype, meta, raw):
+    """One binlog column value through its reader -> the decoded value."""
+    tok, off = B._token_reader(ctype, meta)(raw, 0)
+    assert off == len(raw)
+    return json.loads(tok)
+
+
+def _datetime2(v, fsp):
+    return B.BinlogWriter._encode_value(v, B.T_DATETIME2, fsp)
+
+
+def _time2(h, mi, s, micros, fsp):
+    """TIME2 bytes assembled from the documented layout: 3 big-endian
+    bytes of (h<<12 | mi<<6 | s) + 0x800000, then (fsp+1)//2 bytes of
+    the fraction at 10^(2n) resolution."""
+    n = (fsp + 1) // 2
+    frac = (micros // 10 ** (6 - 2 * n)).to_bytes(n, "big") if n else b""
+    return ((h << 12 | mi << 6 | s) + 0x800000).to_bytes(3, "big") + frac
 
 
 def test_datetime_codec_golden():
-    """Exact TestDatetime expectations for precisions 0 / 3 / 6,
-    including zero dates and the '.000456' sub-millisecond case."""
-    raw = _s(
-        "2014-09-08 17:51:04.123456",
-        "0000-00-00 00:00:00.000000",
+    """Exact TestDatetime expectations for DATETIME(0/3/6), including
+    zero dates and the '.000456' sub-millisecond case."""
+    raw = ["2014-09-08 17:51:04.123456", "0000-00-00 00:00:00.000000",
+           "2014-09-08 17:51:04.000456"]
+    assert [_read(B.T_DATETIME2, 0, _datetime2(v, 0)) for v in raw] == [
+        "2014-09-08 17:51:04", "0000-00-00 00:00:00", "2014-09-08 17:51:04",
+    ]
+    assert [_read(B.T_DATETIME2, 3, _datetime2(v, 3)) for v in raw] == [
+        "2014-09-08 17:51:04.123", "0000-00-00 00:00:00.000", "2014-09-08 17:51:04.000",
+    ]
+    assert [_read(B.T_DATETIME2, 6, _datetime2(v, 6)) for v in raw] == [
+        "2014-09-08 17:51:04.123456", "0000-00-00 00:00:00.000000",
         "2014-09-08 17:51:04.000456",
-        None,
-    )
-    assert list(C.datetime_codec(0)(raw)) == [
-        "2014-09-08 17:51:04",
-        "0000-00-00 00:00:00",
-        "2014-09-08 17:51:04",
-        None,
     ]
-    assert list(C.datetime_codec(3)(raw)) == [
-        "2014-09-08 17:51:04.123",
-        "0000-00-00 00:00:00.000",
-        "2014-09-08 17:51:04.000",
-        None,
-    ]
-    assert list(C.datetime_codec(6)(raw)) == [
-        "2014-09-08 17:51:04.123456",
-        "0000-00-00 00:00:00.000000",
-        "2014-09-08 17:51:04.000456",
-        None,
-    ]
-    # short fractions are right-padded; date-only values gain midnight
-    assert list(C.datetime_codec(6)(_s("2012-05-07 14:01:01.5"))) == [
+    # short fractions are right-padded
+    assert _read(B.T_DATETIME2, 6, _datetime2("2012-05-07 14:01:01.5", 6)) == (
         "2012-05-07 14:01:01.500000"
-    ]
-    assert list(C.datetime_codec(0)(_s("2012-05-07"))) == ["2012-05-07 00:00:00"]
+    )
 
 
 def test_decimal_codec_exact():
-    """No float round-trip: DECIMAL(65,30)-scale values survive exactly;
-    trailing fraction zeros are stripped like decimal.Decimal.String()."""
-    raw = _s(
-        "-45363.640000",
-        "5.000",
-        "100",
-        "0.000000000000000000000000000001",
-        "123456789012345678901234567890.500",  # far beyond float53
-        None,
-    )
-    assert list(C.decimal_codec(raw)) == [
-        "-45363.64",
-        "5",
-        "100",
-        "0.000000000000000000000000000001",
-        "123456789012345678901234567890.5",
-        None,
-    ]
+    """No float round-trip: DECIMAL(65,30)-scale values survive exactly,
+    rendered at the column's scale."""
+    meta = (65 << 8) | 30
+    for v in ("-45363.64", "5", "100", "0.000000000000000000000000000001",
+              "123456789012345678901234567890.5"):  # far beyond float53
+        got = _read(B.T_NEWDECIMAL, meta, B.BinlogWriter._encode_value(v, B.T_NEWDECIMAL, meta))
+        whole, _, frac = v.partition(".")
+        assert got == whole + "." + frac.ljust(30, "0"), (v, got)
 
 
 def test_enum_set_bit_codecs():
-    e = C.enum_codec(["a", "b", "c"])
-    assert list(e(_s("a", "c", "2", None))) == ["1", "3", "2", None]
-    s = C.set_codec(["a", "b", "c"])
-    assert list(s(_s("a,b", "a,c", "3", "", None))) == ["3", "5", "3", "0", None]
-    assert list(C.bit_codec(_s("b'101'", "101", b"\x01\x00", "7", None))) == [
-        "5", "5", "256", "7", None,
-    ]
-
-
-def test_enum_set_vocab_drift_raises():
-    """An ENUM value / SET member outside the declared list raises
-    instead of silently rendering NULL / dropping the bit (ADVICE r2:
-    vocab drift must be loud — the reference always resolves the LIVE
-    DDL, core/parser.go:1646-1656, so drift cannot happen there)."""
-    import pytest
-
-    e = C.enum_codec(["a", "b"])
-    with pytest.raises(ValueError, match="not in declared ENUM"):
-        e(_s("a", "zz"))
-    s = C.set_codec(["a", "b"])
-    with pytest.raises(ValueError, match="not in declared SET"):
-        s(_s("a,zz"))
+    """ENUM index and SET bitmask as stored ints; BIT(n) big-endian."""
+    assert _read(B.T_STRING, (B.T_ENUM << 8) | 1, bytes([3])) == 3
+    assert _read(B.T_STRING, (B.T_SET << 8) | 1, bytes([0b101])) == 5
+    assert _read(B.T_BIT, 3, bytes([0b101])) == 5
+    assert _read(B.T_BIT, 16, b"\x01\x00") == 256
+    assert _read(B.T_BIT, 64, b"\xff" * 8) == (1 << 64) - 1
 
 
 def test_datetime_codec_time_only_and_odd_layouts():
-    """Fraction handling splits on the dot, not a fixed offset (ADVICE
-    r2: time-only values produced corrupt output like
-    '17:51:04.123456 00:.000')."""
-    raw = _s("17:51:04.123456", "17:51:04", "2014-09-08")
-    assert list(C.datetime_codec(0)(raw)) == [
-        "17:51:04", "17:51:04", "2014-09-08 00:00:00",
-    ]
-    assert list(C.datetime_codec(3)(raw)) == [
-        "17:51:04.123", "17:51:04.000", "2014-09-08 00:00:00.000",
-    ]
+    """TIME(0/3) and DATE layouts: the fraction is cut at the column's
+    precision, never spilled into the time fields, and a negative TIME
+    keeps its sign."""
+    assert _read(B.T_TIME2, 0, _time2(17, 51, 4, 0, 0)) == "17:51:04"
+    assert _read(B.T_TIME2, 3, _time2(17, 51, 4, 123456, 3)) == "17:51:04.123"
+    assert _read(B.T_TIME2, 6, _time2(17, 51, 4, 123456, 6)) == "17:51:04.123456"
+    neg = ((0x800000 - (1 << 12 | 2 << 6 | 3)).to_bytes(3, "big"))
+    assert _read(B.T_TIME2, 0, neg) == "-01:02:03"
+    assert _read(B.T_DATE, 0, B.BinlogWriter._encode_value("2014-09-08", B.T_DATE, 0)) == (
+        "2014-09-08"
+    )
 
 
 # --- MySQL JSONB binary goldens (TestJson/TestJsonV2 matrix, ---------------
 # --- core/parser_test.go:1075-1198) ----------------------------------------
-
-import struct
 
 
 class _Opaque:
@@ -300,23 +282,18 @@ def test_jsonb_golden_matrix():
     # decimal corners
     assert g(_blob(_Opaque(246, _bin_dec("-45363.64", 2)))) == "-45363.64"
     assert g(_blob(_Opaque(246, _bin_dec("0", 0)))) == "0"
-    # codec wrapper: bytes and latin-1 strings, None passthrough
-    out = C.jsonb_codec(_s(_blob({"a": 2}), _blob({"a": 2}).decode("latin-1"), None))
-    assert list(out) == ['{"a":2}', '{"a":2}', None]
 
 
 def test_binary_codec_roundtrip_and_escape(spark):
-    """WKB-style bytes survive into the payload and render as the
+    """WKB-style bytes carried as a latin-1 string render as the
     reference's escaped binary literal (NUL -> \\0 etc.)."""
-    wkb = b"\x00\x00\x00\x00\x01\x01\x00\x1a\xf0?"
-    out = C.binary_codec(_s(wkb, None))
-    assert out[0] == wkb.decode("latin-1") and out[1] is None
     from pyspark.sql import functions as F
 
     from bingo2sql_spark.functions.render import sql_literal
 
+    wkb = b"\x00\x00\x00\x00\x01\x01\x00\x1a\xf0?".decode("latin-1")
     lit = (
-        spark.createDataFrame([(out[0],)], "v string")
+        spark.createDataFrame([(wkb,)], "v string")
         .select(F.expr(sql_literal("v")).alias("l"))
         .collect()[0]["l"]
     )
@@ -325,30 +302,9 @@ def test_binary_codec_roundtrip_and_escape(spark):
 
 
 def test_json_codec_validates():
-    ok = C.json_codec(_s('{"a": 1}', "[1,2]", None))
-    assert list(ok) == ['{"a": 1}', "[1,2]", None]
-    try:
-        C.json_codec(_s("{not json"))
-        raise AssertionError("expected parse failure")
-    except Exception:
-        pass
-
-
-def test_decode_arrow_with_codecs_end_to_end(spark):
-    """column_codecs normalize both images inside decode_events_arrow;
-    without codecs the decode output is unchanged (differential covered
-    by test_decode_jvm_equals_arrow_equals_original)."""
-    from bingo2sql_spark.sources.decode import decode_events_arrow
-    from bingo2sql_spark.sources.synth import generate_events, to_raw
-
-    from bingo2sql_spark.sources.synth import LANGS
-
-    raw = to_raw(generate_events(spark, n_keys=20, versions_per_key=4))
-    dec = decode_events_arrow(
-        raw, column_codecs={"commit": C.decimal_codec, "lang": C.enum_codec(LANGS)}
-    )
-    rows = dec.filter("after is not null").select("after.lang").limit(50).collect()
-    # every lang became its 1-based ENUM index (drift would have raised)
-    idx = {str(i + 1) for i in range(len(LANGS))}
-    assert all(r["lang"] is None or r["lang"] in idx for r in rows)
-    assert any(r["lang"] in idx for r in rows)
+    """A corrupt JSONB value raises instead of rendering bad SQL: an
+    unknown type byte and a truncated container both fail loudly."""
+    with pytest.raises(ValueError, match="unknown type byte"):
+        C.decode_jsonb(b"\x42\x00")
+    with pytest.raises(IndexError):
+        C.decode_jsonb(_blob({"a": [1, 2]})[:6])

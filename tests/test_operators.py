@@ -1,4 +1,4 @@
-"""Unit tests: decode (JVM vs Arrow differential), render golden shapes
+"""Unit tests: decode round-trip, render golden shapes
 (mirroring reference parser_test.go cases), minimal row image, stats,
 multimodal plumbing, compaction."""
 
@@ -7,17 +7,14 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from bingo2sql_spark.operators import stats as ST
-from bingo2sql_spark.sources.decode import decode_events, decode_events_arrow, unsigned_fixup
+from bingo2sql_spark.sources.decode import decode_events
 from bingo2sql_spark.sources.synth import generate_events, to_raw
 
 
 def test_decode_jvm_equals_arrow_equals_original(spark, small_events):
-    """to_raw -> decode roundtrip preserves the envelope; JVM and Arrow
-    decoders agree (the reference's remote-vs-local differential,
-    core/parser_test.go:434-453)."""
-    raw = to_raw(small_events)
-    via_jvm = decode_events(raw)
-    via_arrow = decode_events_arrow(raw)
+    """to_raw -> decode_events roundtrip preserves the envelope (the
+    reference's remote-vs-local differential, core/parser_test.go:434-453)."""
+    decoded = decode_events(to_raw(small_events))
 
     def digest(df):
         return sorted(
@@ -29,8 +26,7 @@ def test_decode_jvm_equals_arrow_equals_original(spark, small_events):
         )
 
     d0 = digest(small_events.select("seq", "before", "after"))
-    assert digest(via_jvm) == d0
-    assert digest(via_arrow) == d0
+    assert digest(decoded) == d0
 
 
 def test_decode_schema_evolution_null_fill(spark, small_events):
@@ -41,39 +37,6 @@ def test_decode_schema_evolution_null_fill(spark, small_events):
     assert "branch" not in [f.name for f in v1.schema["after"].dataType.fields]
     v2 = decode_events(raw.filter("schema_ver = 1"), schema_ver=2)
     assert v2.filter("after is not null and after.branch is not null").count() == 0
-
-
-def test_unsigned_fixup():
-    import pandas as pd
-
-    s = pd.Series([-1, -128, 5, 0], dtype="int64")
-    assert list(unsigned_fixup(s, 8)) == [255, 128, 5, 0]
-    s2 = pd.Series([-1], dtype="int64")
-    assert list(unsigned_fixup(s2, 32)) == [4294967295]
-    # exactness past float64's 2^53 integer range (the old float round-
-    # trip corrupted these): 2^53+1 must survive a 32-bit fixup untouched
-    s3 = pd.Series([(1 << 53) + 1, -(1 << 31)], dtype="int64")
-    assert list(unsigned_fixup(s3, 32)) == [(1 << 53) + 1, 1 << 31]
-
-
-def test_unsigned_fixup_u64_decimal():
-    """bits=64 (BIGINT UNSIGNED, core/parser.go:1352-1358): result
-    exceeds int64 — exact Decimal over the full uint64 range, incl. the
-    2^63 +/- 1 boundary and MaxUint64 (-1 raw)."""
-    import decimal
-
-    import pandas as pd
-
-    raw = pd.Series([-1, -(1 << 63), (1 << 63) - 1, 0, None], dtype="Int64")
-    got = list(unsigned_fixup(raw, 64))
-    assert got[0] == decimal.Decimal((1 << 64) - 1)  # MaxUint64
-    assert got[1] == decimal.Decimal(1 << 63)  # 2^63 (min negative)
-    assert got[2] == decimal.Decimal((1 << 63) - 1)  # 2^63-1 stays
-    assert got[3] == decimal.Decimal(0)
-    assert got[4] is None
-    assert all(isinstance(v, decimal.Decimal) for v in got[:4])
-    # fits a Spark DecimalType(20,0) column: uint64 range, integral
-    assert all(0 <= int(v) <= (1 << 64) - 1 for v in got[:4])
 
 
 def test_render_golden_shapes(spark, small_events):
@@ -103,51 +66,6 @@ def test_render_golden_shapes(spark, small_events):
     assert dele.startswith("DELETE FROM `test`.`repo_files` WHERE `repo`='")
 
 
-def test_render_arrow_matches_expr(spark, small_events):
-    """Vectorized pandas renderer == column-expression renderer."""
-    from bingo2sql_spark.functions.render import render_sql, render_sql_arrow
-
-    sample = small_events.filter("seq % 7 = 0")
-    for minimal_update in (True, False):
-        for no_primary_key in (True, False):
-            a = {
-                r["seq"]: r["sql"]
-                for r in render_sql(
-                    sample, minimal_update=minimal_update, no_primary_key=no_primary_key
-                ).select("seq", "sql").collect()
-            }
-            b = {
-                r["seq"]: r["sql"]
-                for r in render_sql_arrow(
-                    sample, minimal_update=minimal_update, no_primary_key=no_primary_key
-                ).collect()
-            }
-            assert a == b, (minimal_update, no_primary_key)
-
-
-def test_render_arrow_inline_matches_jvm(spark, small_events):
-    """Arrow multi-row batching == JVM render_sql_inline across the flag
-    grid (r2 gap: the Arrow path lacked no_primary_key and run
-    batching — the designated codec path silently lost two reference
-    flags)."""
-    from bingo2sql_spark.functions.render import render_sql_arrow_inline, render_sql_inline
-
-    for no_primary_key in (True, False):
-        a = {
-            r["seq"]: r["sql"]
-            for r in render_sql_inline(
-                small_events, batch_rows=10, no_primary_key=no_primary_key
-            ).select("seq", "sql").collect()
-        }
-        b = {
-            r["seq"]: r["sql"]
-            for r in render_sql_arrow_inline(
-                small_events, batch_rows=10, no_primary_key=no_primary_key
-            ).collect()
-        }
-        assert a == b, no_primary_key
-
-
 def test_render_escaping(spark):
     """Backslash/quote escaping (escapeBytesBackslash
     core/parser.go:1894-1935)."""
@@ -174,29 +92,6 @@ def test_render_escaping(spark):
     # full escapeBytesBackslash set: NUL -> \0, Ctrl-Z -> \Z, " -> \"
     assert "x\\'y\\\\z\\nq\\0u\\Zv\\\"w" in sql
     assert "\x00" not in sql and "\x1a" not in sql
-
-
-def test_render_arrow_escaping_matches_expr(spark):
-    """The pandas renderer escapes the same character set."""
-    from datetime import datetime
-
-    from bingo2sql_spark import schema as S
-    from bingo2sql_spark.functions.render import render_sql, render_sql_arrow
-
-    env = spark.createDataFrame(
-        [
-            (
-                1, "bin.1", 4, "u", 1, datetime(2024, 1, 1), 1, "test", "repo_files", "insert",
-                None,
-                ("r1", "p1", "c1", "go", "a\x00b\x1ac\"d'e\\f\ng\rh", None),
-                None, 1,
-            )
-        ],
-        S.envelope_schema(),
-    )
-    a = render_sql(env).collect()[0]["sql"]
-    b = render_sql_arrow(env).collect()[0]["sql"]
-    assert a == b
 
 
 def test_minimal_row_image_changed_cols(spark):
@@ -407,11 +302,6 @@ def test_render_ddl_emission(spark):
     assert out[0]["sql"] == "USE `meta`;\nALTER TABLE `meta`.`audit_log` ADD COLUMN x INT;"
     # without a statement column, ddl rows are filtered (old behavior)
     assert render_sql(base.drop("statement")).count() == 0
-    # Arrow renderer parity
-    from bingo2sql_spark.functions.render import render_sql_arrow
-
-    assert render_sql_arrow(base).collect()[0]["sql"] == out[0]["sql"]
-    assert render_sql_arrow(base.drop("statement")).count() == 0
 
 
 def test_render_no_primary_key(spark, small_events):

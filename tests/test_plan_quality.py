@@ -243,7 +243,7 @@ def test_degenerate_bucket_caps_default_on(spark):
     cap shapes exist since r9: minhash/ngram cap with a bucket-count
     WINDOW over the band exchange (the candidate join reuses its
     partitioning — one exchange instead of groupBy + semi-join), while
-    the simhash variants keep the count + semi/anti-join (their pair
+    the simhash generator keeps the count + semi/anti-join (its pair
     expansion is orders of magnitude larger than the band table, and
     AQE's coalescing of the small window exchange would starve it)."""
     from bingo2sql_spark.operators import dedup as DD
@@ -260,15 +260,11 @@ def test_degenerate_bucket_caps_default_on(spark):
         # window-count cap: count over the band partition + <= filter
         assert "windowspecdefinition" in plan and "count(" in plan, plan
         assert "<= " in plan, plan
-    for df in (
-        DD.simhash_pairs(docs),
-        DD.simhash_pairs_banded(docs),
-    ):
-        plan = _optimized(df)
-        # the cap materializes as a semi join (keep-list) or anti join
-        # (drop-list) against the bucket-count aggregate
-        assert "LeftSemi" in plan or "LeftAnti" in plan, plan
-        assert "count(" in plan, plan
+    plan = _optimized(DD.simhash_pairs_banded(docs))
+    # the cap materializes as a semi join (keep-list) or anti join
+    # (drop-list) against the bucket-count aggregate
+    assert "LeftSemi" in plan or "LeftAnti" in plan, plan
+    assert "count(" in plan, plan
 
 
 def test_cap_drop_is_logged(spark, caplog):
@@ -283,16 +279,20 @@ def test_cap_drop_is_logged(spark, caplog):
         [(i, "same same same words") for i in range(20)], ["doc_id", "text"]
     )
     with caplog.at_level(logging.INFO, logger="bingo2sql_spark.dedup"):
-        out = DD.simhash_pairs(boiler, n_bits=16, max_bucket_size=10, log_dropped=True)
+        out = DD.simhash_pairs_banded(
+            boiler, n_bits=16, bands=2, max_hamming=1, max_bucket_size=10,
+            log_dropped=True,
+        )
         assert out.count() == 0
     hits = [r for r in caplog.records if "cap dropped" in r.getMessage()]
-    assert hits and "dropped 1" in hits[0].getMessage(), [
+    # the one boilerplate signature fills one bucket per band
+    assert hits and "dropped 2" in hits[0].getMessage(), [
         r.getMessage() for r in caplog.records
     ]
     assert hits[0].levelno == logging.WARNING
     caplog.clear()
     with caplog.at_level(logging.INFO, logger="bingo2sql_spark.dedup"):
-        DD.simhash_pairs(boiler, n_bits=16, max_bucket_size=10)
+        DD.simhash_pairs_banded(boiler, n_bits=16, bands=2, max_hamming=1, max_bucket_size=10)
     assert any("cap active" in r.getMessage() for r in caplog.records)
 
 

@@ -1,20 +1,17 @@
-"""Hypothesis property tests for the pure (pandas/python-level)
-functions — no SparkSession, so these fuzz thousands of cases cheaply:
-escaping safety, codec exactness, unsigned reinterpretation, sampling
-thresholds."""
+"""Hypothesis property tests: escaping safety (one Spark collect per
+example batch), binlog value-reader exactness (unsigned integers,
+decimals, BIT), sampling thresholds, JSONB round-trips."""
 
 from __future__ import annotations
 
 import decimal
 
-import pandas as pd
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from bingo2sql_spark.functions.render import _esc_pandas
 from bingo2sql_spark.functions.sampling import threshold_hex
+from bingo2sql_spark.sources import binlog_binary as B
 from bingo2sql_spark.sources import codecs as C
-from bingo2sql_spark.sources.decode import unsigned_fixup
 
 TEXT = st.text(
     alphabet=st.characters(min_codepoint=0, max_codepoint=0x2FF), max_size=200
@@ -37,39 +34,47 @@ def _unescape(s: str) -> str:
     return "".join(out)
 
 
-@given(TEXT)
+@given(st.lists(TEXT, max_size=200))
+@settings(max_examples=10, deadline=None)
+def test_escape_roundtrip_and_safety(spark, strings):
+    from pyspark.sql import functions as F
+
+    from bingo2sql_spark.functions.render import sql_escape
+
+    rows = (
+        spark.createDataFrame([(s,) for s in strings], "v string")
+        .select("v", F.expr(sql_escape("v")).alias("esc"))
+        .collect()
+    )
+    assert [r["v"] for r in rows] == strings
+    for s, esc in ((r["v"], r["esc"]) for r in rows):
+        # no raw quote/NUL/Ctrl-Z survives unescaped -> the literal can
+        # never terminate early or corrupt the file
+        assert "\x00" not in esc and "\x1a" not in esc
+        i = 0
+        while i < len(esc):
+            if esc[i] == "\\":
+                i += 2
+                continue
+            assert esc[i] not in ("'", '"'), f"unescaped quote in {esc!r}"
+            i += 1
+        # MySQL's unescape recovers the original bytes exactly
+        assert _unescape(esc) == s
+
+
+_INT_TYPES = {8: B.T_TINY, 16: B.T_SHORT, 24: B.T_INT24, 32: B.T_LONG, 64: B.T_LONGLONG}
+
+
+@given(st.data(), st.sampled_from(sorted(_INT_TYPES)))
 @settings(max_examples=500, deadline=None)
-def test_escape_roundtrip_and_safety(s):
-    esc = _esc_pandas(pd.Series([s], dtype="object")).iloc[0]
-    # no raw quote/NUL/Ctrl-Z/newline survives unescaped -> the literal
-    # can never terminate early or corrupt the file
-    assert "\x00" not in esc and "\x1a" not in esc
-    i = 0
-    while i < len(esc):
-        if esc[i] == "\\":
-            i += 2
-            continue
-        assert esc[i] not in ("'", '"'), f"unescaped quote in {esc!r}"
-        i += 1
-    # MySQL's unescape recovers the original bytes exactly
-    assert _unescape(esc) == s
-
-
-@given(st.integers(min_value=-(1 << 63), max_value=(1 << 63) - 1), st.sampled_from([8, 16, 24, 32]))
-@settings(max_examples=300, deadline=None)
-def test_unsigned_fixup_matches_reference_semantics(v, bits):
-    # reference processValue: negative -> 1<<bits + v, else unchanged
-    got = unsigned_fixup(pd.Series([v], dtype="Int64"), bits).iloc[0]
-    want = (1 << bits) + v if v < 0 else v
-    assert got == want
-
-
-@given(st.integers(min_value=-(1 << 63), max_value=(1 << 63) - 1))
-@settings(max_examples=300, deadline=None)
-def test_unsigned_fixup_u64_exact(v):
-    got = unsigned_fixup(pd.Series([v], dtype="Int64"), 64).iloc[0]
-    want = decimal.Decimal(v % (1 << 64))  # two's-complement reinterpretation
-    assert got == want and 0 <= int(got) < (1 << 64)
+def test_unsigned_reader_matches_reference_semantics(data, bits):
+    # reference processValue: a negative raw value v of an UNSIGNED
+    # column is 1<<bits + v, else unchanged — exact up to MaxUint64
+    v = data.draw(st.integers(min_value=-(1 << (bits - 1)), max_value=(1 << (bits - 1)) - 1))
+    raw = v.to_bytes(bits // 8, "little", signed=True)
+    tok, off = B._token_reader(_INT_TYPES[bits], 0, unsigned=True)(raw, 0)
+    assert off == bits // 8 and int(tok) == ((1 << bits) + v if v < 0 else v)
+    assert B._token_reader(_INT_TYPES[bits], 0)(raw, 0)[0] == str(v)
 
 
 @given(
@@ -80,11 +85,12 @@ def test_unsigned_fixup_u64_exact(v):
 @settings(max_examples=300, deadline=None)
 def test_decimal_codec_value_preserving(d):
     s = format(d, "f")
-    out = C.decimal_codec(pd.Series([s], dtype="object")).iloc[0]
-    # exact value preserved; no trailing fraction zeros; never float
-    assert decimal.Decimal(out) == decimal.Decimal(s)
-    if "." in out:
-        assert not out.endswith("0") and not out.endswith(".")
+    meta = (30 << 8) | 8
+    enc = B.BinlogWriter._encode_value(s, B.T_NEWDECIMAL, meta)
+    out, off = B._decode_newdecimal(enc, 0, 30, 8)
+    # exact value preserved at the column's scale; never float
+    assert off == len(enc) and decimal.Decimal(out) == decimal.Decimal(s)
+    assert len(out.partition(".")[2]) == 8
 
 
 @given(st.floats(min_value=0.0, max_value=1.0, allow_nan=False))
@@ -101,7 +107,7 @@ def test_threshold_hex_monotone(f):
 @settings(max_examples=200, deadline=None)
 def test_bit_codec_bytes(v):
     raw = v.to_bytes(8, "big")
-    assert C.bit_codec(pd.Series([raw], dtype="object")).iloc[0] == str(v)
+    assert B._token_reader(B.T_BIT, 64)(raw, 0) == (str(v), 8)
 
 
 # --- JSONB binary decode round-trip -----------------------------------------

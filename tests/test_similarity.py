@@ -399,7 +399,8 @@ def test_ivf_trained_centroids_recall(spark, embeddings):
 def test_simhash_pairs_semantics(spark):
     """Hand goldens: identical docs pair at hamming 0; a one-bit
     signature neighbor pairs at hamming 1; distant docs do not pair;
-    the bucket cap drops degenerate signature buckets."""
+    the bucket cap drops degenerate band buckets. 16-bit signatures in
+    two bands cover radius 1."""
     docs = spark.createDataFrame(
         [
             (1, "alpha beta gamma delta"),
@@ -409,7 +410,7 @@ def test_simhash_pairs_semantics(spark):
         ],
         ["doc_id", "text"],
     )
-    out = DD.simhash_pairs(docs, n_bits=16)
+    out = DD.simhash_pairs_banded(docs, n_bits=16, bands=2, max_hamming=1)
     rows = {(r["id_a"], r["id_b"]): r["hamming"] for r in out.collect()}
     assert rows.get((1, 2)) == 0
     sigs = {r["doc_id"]: r["simhash"] for r in DD.simhash_signatures(docs, n_bits=16).collect()}
@@ -428,45 +429,21 @@ def test_simhash_pairs_semantics(spark):
     boiler = spark.createDataFrame(
         [(i, "same same same words") for i in range(20)], ["doc_id", "text"]
     )
-    capped = DD.simhash_pairs(boiler, n_bits=16, max_bucket_size=10)
-    assert capped.count() == 0
-    uncapped = DD.simhash_pairs(boiler, n_bits=16)
-    assert uncapped.filter("hamming = 0").count() == 20 * 19 // 2
-
-
-def test_simhash_banded_matches_flip_probe_at_radius_one(spark):
-    """Differential: the banded candidate generator (bands=2, pigeonhole
-    covers hamming<=1) must emit EXACTLY the pair set of the exhaustive
-    one-bit-flip probe path at the same width — both are exact for
-    radius 1, via entirely different probe structures."""
-    import random
-
-    rng = random.Random(7)
-    vocab = [f"w{i}" for i in range(40)]
-    docs = spark.createDataFrame(
-        [(i, " ".join(rng.choices(vocab, k=12))) for i in range(60)]
-        + [(100 + i, " ".join(rng.choices(vocab, k=12))) for i in range(10)],
-        ["doc_id", "text"],
+    capped = DD.simhash_pairs_banded(
+        boiler, n_bits=16, bands=2, max_hamming=1, max_bucket_size=10
     )
-    flip = {
-        (r["id_a"], r["id_b"], r["hamming"])
-        for r in DD.simhash_pairs(docs, n_bits=16, max_hamming=1).collect()
-    }
-    banded = {
-        (r["id_a"], r["id_b"], r["hamming"])
-        for r in DD.simhash_pairs_banded(
-            docs, n_bits=16, bands=2, max_hamming=1
-        ).collect()
-    }
-    assert banded == flip
+    assert capped.count() == 0
+    uncapped = DD.simhash_pairs_banded(boiler, n_bits=16, bands=2, max_hamming=1)
+    assert uncapped.filter("hamming = 0").count() == 20 * 19 // 2
 
 
 def test_simhash_banded_64bit_complete_vs_bruteforce(spark):
     """Completeness + exactness at the production config (64 bits,
-    4x16-bit bands, radius 3): the banded output must equal the brute
-    all-pairs hamming<=3 set computed from the signatures directly —
-    pigeonhole guarantees no candidate is missed, verification
-    guarantees no false pair survives."""
+    4x16-bit bands, radius 3) and at 16 bits in 2 bands, radius 1: the
+    banded output must equal the brute all-pairs hamming<=radius set
+    computed from the signatures directly — pigeonhole guarantees no
+    candidate is missed, verification guarantees no false pair
+    survives."""
     import random
 
     rng = random.Random(11)
@@ -479,26 +456,28 @@ def test_simhash_banded_64bit_complete_vs_bruteforce(spark):
         + [(200 + i, t + " extraword") for i, t in base[:10]]
     )
     docs = spark.createDataFrame(rows, ["doc_id", "text"])
-    sigs = {
-        r["doc_id"]: r["simhash"]
-        for r in DD.simhash_signatures(docs, n_bits=64).collect()
-    }
-    assert all(len(s) == 64 for s in sigs.values())
-    truth = set()
-    ids = sorted(sigs)
-    for i, x in enumerate(ids):
-        for y in ids[i + 1 :]:
-            h = sum(a != b for a, b in zip(sigs[x], sigs[y]))
-            if h <= 3:
-                truth.add((x, y, h))
-    got = {
-        (r["id_a"], r["id_b"], r["hamming"])
-        for r in DD.simhash_pairs_banded(
-            docs, n_bits=64, bands=4, max_hamming=3
-        ).collect()
-    }
-    assert got == truth
-    assert any(h == 0 for _, _, h in truth)  # twins made the test non-vacuous
+    for n_bits, bands, radius in ((64, 4, 3), (16, 2, 1)):
+        sigs = {
+            r["doc_id"]: r["simhash"]
+            for r in DD.simhash_signatures(docs, n_bits=n_bits).collect()
+        }
+        assert all(len(s) == n_bits for s in sigs.values())
+        truth = set()
+        ids = sorted(sigs)
+        for i, x in enumerate(ids):
+            for y in ids[i + 1 :]:
+                h = sum(a != b for a, b in zip(sigs[x], sigs[y]))
+                if h <= radius:
+                    truth.add((x, y, h))
+        got = {
+            (r["id_a"], r["id_b"], r["hamming"])
+            for r in DD.simhash_pairs_banded(
+                docs, n_bits=n_bits, bands=bands, max_hamming=radius
+            ).collect()
+        }
+        assert got == truth, (n_bits, bands, radius)
+        # twins (h=0) and near pairs (h>0) made the test non-vacuous
+        assert {0, 1} <= {h for _, _, h in truth}, (n_bits, truth)
 
 
 def test_simhash_signature_width_extension_is_prefix_stable(spark):
@@ -543,7 +522,7 @@ def test_release_persisted_frees_pair_generator_caches(spark):
         "doc_id long, text string",
     )
     DD.minhash_candidate_pairs(docs, k=4, bands=2).count()
-    DD.simhash_pairs(docs, n_bits=8).count()
+    DD.simhash_pairs_banded(docs, n_bits=8, bands=2, max_hamming=1).count()
     assert len(DD._PERSISTED) >= 2
     released = DD.release_persisted()
     assert released >= 2 and not DD._PERSISTED

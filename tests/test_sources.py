@@ -229,8 +229,7 @@ def test_decode_malformed_image_is_loud(spark):
     """A malformed row image must FAIL the decode (mode=FAILFAST), not
     PERMISSIVE-melt into an all-NULL struct that merges as a NULL-keyed
     upsert (silent corruption; the reference hard-fails on unparseable
-    binlog events). on_corrupt='keep' restores the forensic PERMISSIVE
-    path."""
+    binlog events)."""
     import pytest
     from pyspark.sql import functions as F
 
@@ -244,9 +243,7 @@ def test_decode_malformed_image_is_loud(spark):
     )
     with pytest.raises(Exception, match="(?i)malformed|failfast"):
         decode_events(bad).select("after").collect()
-    kept = decode_events(bad, on_corrupt="keep")
-    assert kept.filter("seq = 5").collect()[0]["after"]["repo"] is None
-    # clean streams decode identically under the default
+    # clean streams decode every image
     n = decode_events(raw).filter("after.repo is not null").count()
     assert n == raw.filter("op <> 'delete'").count()
 
