@@ -39,6 +39,47 @@ def test_decode_schema_evolution_null_fill(spark, small_events):
     assert v2.filter("after is not null and after.branch is not null").count() == 0
 
 
+def _decode_unsigned(ctype: int, raws: list) -> list:
+    """Raw (signed, two's-complement) values of one UNSIGNED column,
+    written to a binlog and decoded back with the registry's flag."""
+    import json
+    from types import SimpleNamespace
+
+    from bingo2sql_spark.sources import binlog_binary as B
+
+    w = B.BinlogWriter(checksum=True)
+    w.table_map("d", "u", [ctype], [0], ts=1)
+    w.rows("d", "u", "insert", [ctype], [0], [[v] for v in raws], ts=1)
+    col = SimpleNamespace(name="v", unsigned=True)
+    evs = B.parse_binlog_bytes(w.bytes(), log_file="b.1", names_for={"d.u": [col]})
+    return [json.loads(e["after_json"])["v"] for e in evs]
+
+
+def test_unsigned_fixup():
+    """UNSIGNED integers (processValue core/parser.go:1322-1360): a raw
+    value with the sign bit set decodes as 1<<bits + v."""
+    from bingo2sql_spark.sources import binlog_binary as B
+
+    assert _decode_unsigned(B.T_TINY, [-1, -128, 5, 0]) == [255, 128, 5, 0]
+    assert _decode_unsigned(B.T_LONG, [-1, -(1 << 31)]) == [4294967295, 1 << 31]
+    # exact past float64's 2^53 integer range
+    assert _decode_unsigned(B.T_LONGLONG, [(1 << 53) + 1]) == [(1 << 53) + 1]
+
+
+def test_unsigned_fixup_u64_decimal():
+    """BIGINT UNSIGNED (core/parser.go:1352-1358): the value exceeds
+    int64 — exact over the full uint64 range, incl. the 2^63 +/- 1
+    boundary and MaxUint64 (-1 raw); NULL stays NULL."""
+    from bingo2sql_spark.sources import binlog_binary as B
+
+    raw = [-1, -(1 << 63), (1 << 63) - 1, 0, None]
+    got = _decode_unsigned(B.T_LONGLONG, raw)
+    assert got == [(1 << 64) - 1, 1 << 63, (1 << 63) - 1, 0, None]
+    assert all(isinstance(v, int) for v in got[:4])
+    # fits a Spark DecimalType(20,0) column: uint64 range, integral
+    assert all(0 <= v <= (1 << 64) - 1 for v in got[:4])
+
+
 def test_render_golden_shapes(spark, small_events):
     """Golden statement shapes mirroring the reference's expectations
     (multi-column INSERT core/parser_test.go:538, minimal UPDATE

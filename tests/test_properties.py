@@ -65,16 +65,32 @@ def test_escape_roundtrip_and_safety(spark, strings):
 _INT_TYPES = {8: B.T_TINY, 16: B.T_SHORT, 24: B.T_INT24, 32: B.T_LONG, 64: B.T_LONGLONG}
 
 
-@given(st.data(), st.sampled_from(sorted(_INT_TYPES)))
-@settings(max_examples=500, deadline=None)
-def test_unsigned_reader_matches_reference_semantics(data, bits):
-    # reference processValue: a negative raw value v of an UNSIGNED
-    # column is 1<<bits + v, else unchanged — exact up to MaxUint64
-    v = data.draw(st.integers(min_value=-(1 << (bits - 1)), max_value=(1 << (bits - 1)) - 1))
+def _unsigned_read(bits: int, v: int) -> int:
+    """The binlog's UNSIGNED reader over the raw two's-complement bytes
+    of `v` at one integer width."""
     raw = v.to_bytes(bits // 8, "little", signed=True)
     tok, off = B._token_reader(_INT_TYPES[bits], 0, unsigned=True)(raw, 0)
-    assert off == bits // 8 and int(tok) == ((1 << bits) + v if v < 0 else v)
+    assert off == bits // 8
+    # the signed reader of the same bytes gives back v itself
     assert B._token_reader(_INT_TYPES[bits], 0)(raw, 0)[0] == str(v)
+    return int(tok)
+
+
+@given(st.data(), st.sampled_from([8, 16, 24, 32]))
+@settings(max_examples=300, deadline=None)
+def test_unsigned_fixup_matches_reference_semantics(data, bits):
+    # reference processValue: a negative raw value v of an UNSIGNED
+    # column is 1<<bits + v, else unchanged
+    v = data.draw(st.integers(min_value=-(1 << (bits - 1)), max_value=(1 << (bits - 1)) - 1))
+    assert _unsigned_read(bits, v) == ((1 << bits) + v if v < 0 else v)
+
+
+@given(st.integers(min_value=-(1 << 63), max_value=(1 << 63) - 1))
+@settings(max_examples=300, deadline=None)
+def test_unsigned_fixup_u64_exact(v):
+    got = _unsigned_read(64, v)
+    # two's-complement reinterpretation, exact over the whole uint64 range
+    assert got == v % (1 << 64) and 0 <= got < (1 << 64)
 
 
 @given(

@@ -437,13 +437,50 @@ def test_simhash_pairs_semantics(spark):
     assert uncapped.filter("hamming = 0").count() == 20 * 19 // 2
 
 
+def test_simhash_banded_matches_flip_probe_at_radius_one(spark):
+    """Differential: the banded candidate generator (bands=2, pigeonhole
+    covers hamming<=1) must emit EXACTLY the pair set of an exhaustive
+    one-bit-flip probe over the same 16-bit signatures — both are exact
+    for radius 1, via entirely different probe structures."""
+    import random
+
+    rng = random.Random(7)
+    vocab = [f"w{i}" for i in range(40)]
+    docs = spark.createDataFrame(
+        [(i, " ".join(rng.choices(vocab, k=12))) for i in range(60)]
+        + [(100 + i, " ".join(rng.choices(vocab, k=12))) for i in range(10)],
+        ["doc_id", "text"],
+    )
+    by_sig: dict[str, list[int]] = {}
+    for r in DD.simhash_signatures(docs, n_bits=16).collect():
+        by_sig.setdefault(r["simhash"], []).append(r["doc_id"])
+    flip = set()
+    for sig, ids in by_sig.items():
+        probes = [(sig, 0)] + [
+            (sig[:i] + ("1" if sig[i] == "0" else "0") + sig[i + 1 :], 1)
+            for i in range(16)
+        ]
+        for probe, h in probes:
+            for x in ids:
+                for y in by_sig.get(probe, ()):
+                    if x < y:
+                        flip.add((x, y, h))
+    banded = {
+        (r["id_a"], r["id_b"], r["hamming"])
+        for r in DD.simhash_pairs_banded(
+            docs, n_bits=16, bands=2, max_hamming=1
+        ).collect()
+    }
+    assert banded == flip
+    assert {h for _, _, h in flip} == {0, 1}  # non-vacuous
+
+
 def test_simhash_banded_64bit_complete_vs_bruteforce(spark):
     """Completeness + exactness at the production config (64 bits,
-    4x16-bit bands, radius 3) and at 16 bits in 2 bands, radius 1: the
-    banded output must equal the brute all-pairs hamming<=radius set
-    computed from the signatures directly — pigeonhole guarantees no
-    candidate is missed, verification guarantees no false pair
-    survives."""
+    4x16-bit bands, radius 3): the banded output must equal the brute
+    all-pairs hamming<=3 set computed from the signatures directly —
+    pigeonhole guarantees no candidate is missed, verification
+    guarantees no false pair survives."""
     import random
 
     rng = random.Random(11)
@@ -456,28 +493,26 @@ def test_simhash_banded_64bit_complete_vs_bruteforce(spark):
         + [(200 + i, t + " extraword") for i, t in base[:10]]
     )
     docs = spark.createDataFrame(rows, ["doc_id", "text"])
-    for n_bits, bands, radius in ((64, 4, 3), (16, 2, 1)):
-        sigs = {
-            r["doc_id"]: r["simhash"]
-            for r in DD.simhash_signatures(docs, n_bits=n_bits).collect()
-        }
-        assert all(len(s) == n_bits for s in sigs.values())
-        truth = set()
-        ids = sorted(sigs)
-        for i, x in enumerate(ids):
-            for y in ids[i + 1 :]:
-                h = sum(a != b for a, b in zip(sigs[x], sigs[y]))
-                if h <= radius:
-                    truth.add((x, y, h))
-        got = {
-            (r["id_a"], r["id_b"], r["hamming"])
-            for r in DD.simhash_pairs_banded(
-                docs, n_bits=n_bits, bands=bands, max_hamming=radius
-            ).collect()
-        }
-        assert got == truth, (n_bits, bands, radius)
-        # twins (h=0) and near pairs (h>0) made the test non-vacuous
-        assert {0, 1} <= {h for _, _, h in truth}, (n_bits, truth)
+    sigs = {
+        r["doc_id"]: r["simhash"]
+        for r in DD.simhash_signatures(docs, n_bits=64).collect()
+    }
+    assert all(len(s) == 64 for s in sigs.values())
+    truth = set()
+    ids = sorted(sigs)
+    for i, x in enumerate(ids):
+        for y in ids[i + 1 :]:
+            h = sum(a != b for a, b in zip(sigs[x], sigs[y]))
+            if h <= 3:
+                truth.add((x, y, h))
+    got = {
+        (r["id_a"], r["id_b"], r["hamming"])
+        for r in DD.simhash_pairs_banded(
+            docs, n_bits=64, bands=4, max_hamming=3
+        ).collect()
+    }
+    assert got == truth
+    assert any(h == 0 for _, _, h in truth)  # twins made the test non-vacuous
 
 
 def test_simhash_signature_width_extension_is_prefix_stable(spark):
