@@ -358,9 +358,10 @@ def main() -> None:
     # mode: delta_vs_prev pushed the line past the budget).
     full = dict(out)
     full["control_readings"] = _CONTROL["readings"]
-    # interleaved HEAD-vs-prev A/B (VERDICT r7 #8): BENCH/ab_check.py
-    # writes ab_latest.json; fold it in as first-class fields so round
-    # verdicts adjudicate regressions from data, not prose
+    # interleaved HEAD-vs-prev A/B (VERDICT r7 #8): fold a recorded
+    # BENCH/ab_latest.json in as first-class fields so round verdicts
+    # adjudicate regressions from data, not prose (the ab_check.py that
+    # wrote it is removed; cdcbench/run.py runs the A/Bs now)
     here0 = os.path.dirname(os.path.abspath(__file__))
     try:
         with open(os.path.join(here0, "BENCH", "ab_latest.json")) as f:

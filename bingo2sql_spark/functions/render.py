@@ -171,51 +171,23 @@ def render_sql(
     )
 
 
-#: super-block fan-in for the two-level block carry: block rows are
-#: N/block_size (~1.5e7 at 10^12 events) — too many for one window task;
-#: super rows are N/(block_size * SUPER_BLOCKS) (~230 at 10^12, still
-#: metadata-scale at 10^21), so ONE extra level removes the documented
-#: r2 ceiling instead of asserting it.
-SUPER_BLOCKS = 1 << 16
-
-
 def _block_lag_carry(blocks: DataFrame, col: str = "_c") -> DataFrame:
-    """lag(col) over per-block rows ordered by _blk — the value of the
-    nearest PRECEDING non-empty block — with no global single-partition
-    window over the block rows: within-super lag (hash-partitioned,
-    bounded by SUPER_BLOCKS rows) + a metadata-scale super-level lag.
-    Returns (_blk, _prev)."""
-    blocks = blocks.withColumn("_sblk", F.expr(f"CAST(_blk / {SUPER_BLOCKS} AS BIGINT)"))
-    w = "OVER (PARTITION BY _sblk ORDER BY _blk)"
-    sup = (
-        blocks.groupBy("_sblk")
-        .agg(F.expr(f"max_by({ident(col)}, _blk) AS _sc"))
-        .selectExpr("_sblk", "lag(_sc) OVER (ORDER BY _sblk) AS _sprev")
-    )
-    out = blocks.selectExpr(
-        "*", f"row_number() {w} AS _srn", f"lag({ident(col)}) {w} AS _lagc"
-    ).join(F.broadcast(sup), "_sblk", "left")
-    return out.selectExpr("_blk", "CASE WHEN _srn = 1 THEN _sprev ELSE _lagc END AS _prev")
+    """lag(col) over the per-block rows ordered by _blk — for each block,
+    the value of the nearest PRECEDING non-empty block. One ordered
+    window over the block rows: they are N/block_size rows (N/65536 by
+    default), and the caller broadcasts the result whole, so the driver
+    holds every block row anyway. Returns (_blk, _prev)."""
+    return blocks.selectExpr("_blk", f"lag({ident(col)}) OVER (ORDER BY _blk) AS _prev")
 
 
 def _block_running_last(blocks: DataFrame, col: str) -> DataFrame:
-    """last(col, ignorenulls) over per-block rows STRICTLY BEFORE each
-    block (ordered by _blk) — two-level like _block_lag_carry.
-    Returns (_blk, _prev)."""
-    blocks = blocks.withColumn("_sblk", F.expr(f"CAST(_blk / {SUPER_BLOCKS} AS BIGINT)"))
+    """last(col, ignorenulls) over the per-block rows STRICTLY BEFORE
+    each block (ordered by _blk) — one ordered window over the block
+    rows, like _block_lag_carry. Returns (_blk, _prev)."""
     before = "ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING"
-    c = ident(col)
-    sup = (
-        blocks.groupBy("_sblk")
-        .agg(F.expr(f"max(CASE WHEN {c} IS NOT NULL THEN struct(_blk, {c} AS v) END).v AS _sl"))
-        .selectExpr(
-            "_sblk", f"last(_sl, true) OVER (ORDER BY _sblk {before}) AS _scarry"
-        )
+    return blocks.selectExpr(
+        "_blk", f"last({ident(col)}, true) OVER (ORDER BY _blk {before}) AS _prev"
     )
-    out = blocks.selectExpr(
-        "*", f"last({c}, true) OVER (PARTITION BY _sblk ORDER BY _blk {before}) AS _local"
-    ).join(F.broadcast(sup), "_sblk", "left")
-    return out.selectExpr("_blk", "coalesce(_local, _scarry) AS _prev")
 
 
 def decorate(
@@ -234,15 +206,22 @@ def decorate(
     ShowThread flag).
 
     Scale shape: a global `Window.orderBy(seq)` funnels the whole
-    dataset into ONE task — a single-task OOM at 100x. Instead the lag
-    runs per seq-block (`partitionBy(floor(seq/block_size))`, a
-    parallel hash-partitioned window), and each block's FIRST row is
-    patched with a carry — the (gtid, sec) of the last row of the
-    nearest preceding non-empty block, computed on the per-block
-    aggregate with the TWO-LEVEL _block_lag_carry (no single-partition
-    window over the block rows either: good past 10^12 events, the r2
-    ceiling) and broadcast back. Identical output to the global window,
-    including across block-spanning seq gaps."""
+    dataset into ONE task — a single-task OOM at 100x. Instead the rows
+    are range-partitioned on their seq-block `_blk = floor(seq /
+    block_size)`, the lag runs per block (`PARTITION BY _blk ORDER BY
+    seq`, parallel across blocks) and each block's FIRST row is patched
+    with a carry — the (gtid, sec) of the last row of the nearest
+    preceding non-empty block, computed by _block_lag_carry over the
+    per-block aggregate (N/block_size rows) and broadcast back.
+    Identical output to the global window, including across
+    block-spanning seq gaps.
+
+    The result keeps `_blk` and stays on that ONE range exchange, sorted
+    by (_blk, seq) within each partition: ordering it by (_blk, seq) —
+    the same order as seq — costs no further exchange or sort. The
+    carry aggregate reads `rendered` a second time, so a caller that
+    executes the result should persist `rendered` first (write_sql_file
+    does) or its source is computed twice."""
     extra = []
     if show_thread:
         extra.append(
@@ -253,24 +232,23 @@ def decorate(
     if show_time and time_mode == "row":
         extra.append(("time_comment", time_fmt))
         show_time = False  # no lag needed for the every-row mode
-    with_extra = ["*", *[f"{e} AS {name}" for name, e in extra]]
-    if not (show_gtid or show_time):
-        return rendered.selectExpr(*with_extra) if extra else rendered
-
-    keep = [ident(c) for c in rendered.columns] + [name for name, _ in extra]
+    keep = [ident(c) for c in rendered.columns] + [name for name, _ in extra] + ["_blk"]
     out = rendered.selectExpr(
-        *with_extra,
-        "concat(gtid_uuid, ':', CAST(gno AS STRING)) AS _g",
-        f"{sec} AS _s",
-        f"floor(seq / {block_size}) AS _blk",
+        "*", *[f"{e} AS {name}" for name, e in extra], f"floor(seq / {block_size}) AS _blk"
+    )
+    if not (show_gtid or show_time):
+        return out.repartitionByRange("_blk")
+
+    out = out.selectExpr(
+        "*", "concat(gtid_uuid, ':', CAST(gno AS STRING)) AS _g", f"{sec} AS _s"
     )
     w = "OVER (PARTITION BY _blk ORDER BY seq)"
     # carry: last (gtid, sec) of each non-empty block, then shift to the
-    # NEXT non-empty block (one row per block; two-level lag)
+    # NEXT non-empty block (one row per block)
     carry = _block_lag_carry(
         out.groupBy("_blk").agg(F.expr("max_by(struct(_g, _s), seq) AS _c"))
     )
-    out = out.selectExpr(
+    out = out.repartitionByRange("_blk").selectExpr(
         "*",
         f"row_number() {w} AS _rn",
         f"lag(_g) {w} AS _lag_g",
@@ -366,11 +344,21 @@ def write_sql_file(
     global sort; tar.gz Archive core/parser.go:2460-2485 replaced by the
     writer's codec option).
 
-    Emits one text part per sorted range (repartitionByRange keeps the
-    global order across files: part-00000 < part-00001 ...); pass the
-    result of operators.flashback.invert for rollback files — ascending
-    seq on inverted events IS reverse binlog order, so no special
-    casing.
+    Emits one text part per range of seq-blocks: decorate's
+    repartitionByRange(_blk) keeps the global order across files
+    (part-00000 < part-00001 ...), and the artifact's (_blk, seq) order
+    is seq order, so that ONE range exchange serves both the decoration
+    window and the sort. Pass the result of operators.flashback.invert
+    for rollback files — ascending seq on inverted events IS reverse
+    binlog order, so no special casing.
+
+    Source scanned once: the rendered rows are persisted for the
+    duration of the write, so decorate's block carry and its window read
+    the same computed rows, and the input events are persisted too when
+    the render itself reads them more than once (the --minimal-insert
+    run carries, a multi-table registry). A binlog file is thus decoded
+    once per artifact. Both caches are released in a `finally`, also
+    when the write raises.
 
     `table_registry` (ddl.parse_schema_file output — the reference's
     local-mode schema resolution) renders each event with ITS table's
@@ -380,9 +368,10 @@ def write_sql_file(
     from bingo2sql_spark.operators import flashback as FB
 
     ev = FB.invert(events) if flashback else events
+    inline = minimal_insert and not flashback
 
     def _render(part: DataFrame, payload_cols=None, key_cols=None) -> DataFrame:
-        if minimal_insert and not flashback:
+        if inline:
             return render_sql_inline(
                 part,
                 payload_cols,
@@ -402,22 +391,39 @@ def write_sql_file(
             key_cols=key_cols,
         )
 
-    if table_registry:
-        rendered = _render_with_registry(ev, table_registry, _render)
-    else:
-        rendered = _render(ev)
-    rendered = decorate(rendered, show_gtid, show_time, time_mode, show_thread)
     tail = ["sql"]
     if show_time:
         tail.append("coalesce(regexp_replace(time_comment, '^; # ', ' # '), '')")
     if show_thread:
         tail.append("coalesce(thread_comment, '')")
     line = _concat_ws("\n", [*(["gtid_comment"] if show_gtid else []), f"concat({', '.join(tail)})"])
-    out = rendered.selectExpr("seq", f"{line} AS value").orderBy(F.expr("seq")).selectExpr("value")
-    w = out.write.mode("overwrite")
-    if compression:
-        w = w.option("compression", compression)
-    w.text(out_dir)
+    cached: list[DataFrame] = []
+    try:
+        # the inline renderer's run carries and a registry's per-table
+        # branches read their input more than once
+        if inline or len(table_registry or ()) > 1:
+            ev = ev.persist()
+            cached.append(ev)
+        if table_registry:
+            rendered = _render_with_registry(ev, table_registry, _render)
+        else:
+            rendered = _render(ev)
+        # decorate's carry and its window both read the rendered rows
+        rendered = rendered.persist()
+        cached.append(rendered)
+        out = (
+            decorate(rendered, show_gtid, show_time, time_mode, show_thread)
+            .selectExpr("_blk", "seq", f"{line} AS value")
+            .orderBy("_blk", "seq")
+            .selectExpr("value")
+        )
+        w = out.write.mode("overwrite")
+        if compression:
+            w = w.option("compression", compression)
+        w.text(out_dir)
+    finally:
+        for df in cached:
+            df.unpersist()
 
 
 def archive_sql_artifact(out_dir: str, remove_original: bool = True) -> tuple[str, int]:

@@ -53,7 +53,8 @@ def get_spark(
         # single-JVM local mode: the shuffle never leaves this host's
         # page cache/tmpfs, so compressing it is pure CPU with nothing
         # saved — measured -7.6% wall on the 3.2M-event replay with it
-        # off (BENCH/codec_ab.py, consistent with the r2 probe matrix).
+        # off (the codec A/B in BENCH/BASELINE.md, consistent with the r2
+        # probe matrix).
         # Cluster masters keep compression: there the bytes cross the
         # network. BINGO_SPARK_CONF/extra_conf still override.
         .config(

@@ -243,7 +243,12 @@ _DIG2BYTES = [0, 1, 1, 2, 2, 3, 3, 4, 4, 4]
 def _decode_newdecimal(data: bytes, off: int, precision: int, scale: int):
     """MySQL packed decimal: groups of 9 digits per 4 big-endian bytes,
     leftover digits per _DIG2BYTES; sign = top bit of the first byte
-    (set = positive), negative values stored ones-complemented."""
+    (set = positive), negative values stored ones-complemented.
+
+    Rendered like the reference's decimal.Decimal.String(): trailing
+    fraction zeros and a bare dot are trimmed (a DECIMAL(12,6)
+    -45363.640000 renders "-45363.64", 0.00 renders "0"), and zero
+    carries no sign."""
     intg = precision - scale
     intg0, intg_rem = divmod(intg, 9)
     frac0, frac_rem = divmod(scale, 9)
@@ -274,8 +279,9 @@ def _decode_newdecimal(data: bytes, off: int, precision: int, scale: int):
         frac_digits += str(_be(raw, pos, n)).zfill(frac_rem)
         pos += n
     int_digits = int_digits.lstrip("0") or "0"
-    out = int_digits + ("." + frac_digits if scale else "")
-    if not positive and out.strip("0.") != "":
+    frac_digits = frac_digits.rstrip("0")
+    out = int_digits + ("." + frac_digits if frac_digits else "")
+    if not positive and out != "0":
         out = "-" + out
     return out, off + nbytes
 

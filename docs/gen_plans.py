@@ -63,7 +63,8 @@ from bingo2sql_spark.functions.render import render_sql_inline
 env = decode_events(raw)  # rendering needs the FULL before image (minimal SET diff)
 add("render_sql_inline (de-skewed multi-row INSERT batching)", render_sql_inline(env.filter("op <> 'ddl'")),
     "Run ids come from per-block windows (hashpartitioning(_blk), bounded by "
-    "block_size) patched by metadata-scale two-level carries; the chunk id is seq "
+    "block_size) patched by one-level carries over the per-block rows (N/block_size); "
+    "the chunk id is seq "
     "arithmetic — NO per-run window, so a bulk-load run of 10^10 inserts spreads "
     "across (run, chunk) groups capped at batch_rows.")
 
@@ -82,8 +83,9 @@ add("dedup_minhash_lsh_pairs (banded LSH)", qs["dedup_minhash_lsh_pairs"](spark,
     "shingles; the band-digest equi-join is the only pair-producing shuffle (AQE "
     "skew-join handles hot bands; max_bucket_size can drop degenerate ones).")
 add("cdc_output_decoration (blocked lag, no global window)", qs["cdc_output_decoration"](spark, sf),
-    "The data-path window is hashpartitioning(_blk); the single-partition window "
-    "only runs on the per-block carry aggregate (N/65536 rows).")
+    "The data-path window sits on rangepartitioning(_blk), the one exchange the SQL "
+    "artifact's (_blk, seq) order reuses; the single-partition window only runs on "
+    "the per-block carry aggregate (N/65536 rows), which is broadcast whole.")
 add("join_revenue_by_nation (fact join + broadcast dims)", qs["join_revenue_by_nation"](spark, sf),
     "nation/region resolve as BroadcastHashJoin; only the fact-fact join shuffles.")
 add("curate_corpus (composed curation)", qs["curate_corpus"](spark, sf),

@@ -241,21 +241,25 @@ def test_unknown_table_positional_names_and_errors():
 
 def test_newdecimal_digits():
     """Packed-decimal edge shapes: negative, zero, scale-only,
-    9-digit group boundaries."""
+    9-digit group boundaries — rendered exactly, like the reference's
+    decimal.Decimal.String() (trailing fraction zeros trimmed)."""
     cases = [
-        ((20 << 8) | 10, "1234567890.0987654321"),
-        ((20 << 8) | 10, "-1234567890.0987654321"),
-        ((5 << 8) | 0, "99999"),
-        ((5 << 8) | 5, "0.00001"),
-        ((9 << 8) | 0, "123456789"),
-        ((18 << 8) | 9, "999999999.999999999"),
-        ((10 << 8) | 2, "0.00"),
+        ((20 << 8) | 10, "1234567890.0987654321", "1234567890.0987654321"),
+        ((20 << 8) | 10, "-1234567890.0987654321", "-1234567890.0987654321"),
+        ((5 << 8) | 0, "99999", "99999"),
+        ((5 << 8) | 5, "0.00001", "0.00001"),
+        ((9 << 8) | 0, "123456789", "123456789"),
+        ((18 << 8) | 9, "999999999.999999999", "999999999.999999999"),
+        ((10 << 8) | 2, "0.00", "0"),
+        ((10 << 8) | 2, "-0.50", "-0.5"),
+        ((12 << 8) | 4, "-1234.5000", "-1234.5"),
     ]
-    for meta, s in cases:
+    for meta, s, want in cases:
         enc = B.BinlogWriter._encode_value(s, B.T_NEWDECIMAL, meta)
         got, off = B._decode_newdecimal(enc, 0, meta >> 8, meta & 0xFF)
         assert off == len(enc)
         assert float(got) == float(s), (s, got)
+        assert got == want, (s, got)
 
 
 def test_spark_reader_and_replay_parity(spark, tmp_path):

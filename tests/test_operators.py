@@ -590,12 +590,12 @@ def test_render_inline_no_global_window(spark, small_events):
 
 
 def test_block_carry_two_level_past_2pow16_blocks(spark):
-    """The block-carry machinery must stay correct when the number of
-    seq-blocks exceeds SUPER_BLOCKS (=2^16) — the r2 documented ceiling,
-    now removed by the two-level carry. block_size=1 turns every row
-    into its own block (70k blocks > 2^16); a huge block_size puts
-    everything in ONE block, where the within-block window alone is
-    trivially the global semantics — the two must agree exactly."""
+    """The block-carry machinery must stay correct past 2^16 seq-blocks
+    (the r2 documented ceiling): the one-level carry windows over every
+    block row. block_size=1 turns every row into its own block (70k
+    blocks > 2^16); a huge block_size puts everything in ONE block,
+    where the within-block window alone is trivially the global
+    semantics — the two must agree exactly."""
     from datetime import datetime
 
     from bingo2sql_spark.functions.render import decorate, with_insert_runs

@@ -223,13 +223,17 @@ def test_typed_decode_prunes_nested_before_image(spark, small_events, tmp_path):
 
 def test_decorate_window_is_partitioned(spark, small_events):
     """S6 decoration must not funnel the data path through a single
-    partition: the lag window hash-partitions on the seq block; only the
-    metadata-scale carry aggregate (one row per block) may see a
-    SinglePartition exchange."""
+    partition: the lag window sits directly on the range exchange of the
+    seq block (the one exchange the artifact's (_blk, seq) order reuses);
+    only the metadata-scale carry aggregate (one row per block) may see
+    a SinglePartition exchange."""
     from bingo2sql_spark.functions.render import decorate, render_sql
 
-    plan = decorate(render_sql(small_events))._jdf.queryExecution().executedPlan().toString()
-    assert "hashpartitioning(_blk" in plan
+    plan = _plan(decorate(render_sql(small_events)))
+    lines = plan.splitlines()
+    (at,) = [i for i, ln in enumerate(lines) if "Window [row_number()" in ln]
+    assert "Sort [_blk" in lines[at + 1], plan
+    assert "Exchange rangepartitioning(_blk" in lines[at + 2], plan
     # any single-partition exchange must sit above the per-block
     # aggregate (max_by carry), never above the full-width stream
     for frag in plan.split("Exchange SinglePartition")[1:]:
@@ -340,19 +344,11 @@ def test_bucket_aligned_landing_feeds_pass_through_exchange(spark, tmp_path):
     }
 
 
-def test_flashback_sql_plan_gateway_round_trips(spark, tmp_path, monkeypatch):
-    """Building the flashback SQL artifact's plan must not pay per-column
-    py4j traffic: the render templates, filters and inversion are handed
-    to Spark as SQL expression text, so one generate_sql(flashback=True)
-    call (plan building plus the write) stays at or under 1,200 gateway
-    round trips. The Column-by-Column builders cost about 5,000."""
-    from py4j.java_gateway import GatewayClient
-
-    from bingo2sql_spark.api import generate_sql
-    from bingo2sql_spark.sources.binlog_binary import (
-        T_VARCHAR, BinlogWriter, binlog_raw_events,
-    )
-    from bingo2sql_spark.sources.decode import decode_events
+def _flashback_binlog(tmp_path):
+    """A checksummed binlog file: 60 inserts, then updates of every
+    second row and deletes of the others. Returns (path, the position
+    where the updates start)."""
+    from bingo2sql_spark.sources.binlog_binary import T_VARCHAR, BinlogWriter
 
     cols = ["repo", "path", "commit", "lang", "content"]
     types, meta = [T_VARCHAR] * len(cols), [64, 64, 64, 16, 512]
@@ -369,10 +365,29 @@ def test_flashback_sql_plan_gateway_round_trips(spark, tmp_path, monkeypatch):
     w.rows("test", "repo_files", "delete", types, meta, rows[1::2], ts=1_704_067_201)
     path = tmp_path / "mysql-bin.000001"
     path.write_bytes(w.bytes())
+    return path, start
 
-    events = decode_events(
-        binlog_raw_events(spark, str(path), {"test.repo_files": cols})
-    )
+
+def _binlog_events(spark, path):
+    from bingo2sql_spark.sources.binlog_binary import binlog_raw_events
+    from bingo2sql_spark.sources.decode import decode_events
+
+    cols = ["repo", "path", "commit", "lang", "content"]
+    return decode_events(binlog_raw_events(spark, str(path), {"test.repo_files": cols}))
+
+
+def test_flashback_sql_plan_gateway_round_trips(spark, tmp_path, monkeypatch):
+    """Building the flashback SQL artifact's plan must not pay per-column
+    py4j traffic: the render templates, filters and inversion are handed
+    to Spark as SQL expression text, so one generate_sql(flashback=True)
+    call (plan building plus the write) stays at or under 1,200 gateway
+    round trips. The Column-by-Column builders cost about 5,000."""
+    from py4j.java_gateway import GatewayClient
+
+    from bingo2sql_spark.api import generate_sql
+
+    path, start = _flashback_binlog(tmp_path)
+    events = _binlog_events(spark, path)
     calls = [0]
     send = GatewayClient.send_command
 
@@ -384,13 +399,104 @@ def test_flashback_sql_plan_gateway_round_trips(spark, tmp_path, monkeypatch):
     generate_sql(
         events, str(tmp_path / "sql"), flashback=True,
         start_file=path.name, start_position=start,
-        stop_file=path.name, stop_position=len(w.buf),
+        stop_file=path.name, stop_position=path.stat().st_size,
     )
     monkeypatch.undo()
     text = "".join(p.read_text() for p in sorted((tmp_path / "sql").glob("part-*")))
     assert text.count("UPDATE `test`.`repo_files`") == 30
     assert text.count("INSERT INTO `test`.`repo_files`") == 30
     assert calls[0] <= 1200, calls[0]
+
+
+def _next_execution(spark) -> int:
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    return max((execs.apply(i).executionId() for i in range(execs.size())), default=-1) + 1
+
+
+def _python_passes(spark, since: int) -> int:
+    """Python-worker passes run by the SQL executions numbered `since` or
+    later: the distinct non-zero "data sent to Python workers" metrics,
+    read through the status store. A persisted plan shows under every
+    scan of its cache with the same accumulator, so it counts once."""
+    import json
+
+    jvm = spark._jvm
+    store = spark._jsparkSession.sharedState().statusStore()
+    mapper = jvm.com.fasterxml.jackson.databind.ObjectMapper()
+    scala_mod = getattr(jvm.com.fasterxml.jackson.module.scala, "DefaultScalaModule$")
+    mapper.registerModule(getattr(scala_mod, "MODULE$"))
+    passes = 0
+    execs = store.executionsList()
+    for i in range(execs.size()):
+        e = execs.apply(i)
+        if e.executionId() < since:
+            continue
+        metrics = e.metrics()
+        ids = {
+            metrics.apply(k).accumulatorId()
+            for k in range(metrics.size())
+            if metrics.apply(k).name() == "data sent to Python workers"
+        }
+        values = json.loads(mapper.writeValueAsString(store.executionMetrics(e.executionId())))
+        for a in ids:
+            # "12.3 KiB", or a "total (min, med, max ...)" header line
+            # followed by "12.3 KiB (...)" when several tasks ran
+            v = values.get(str(a))
+            passes += bool(v) and float(v.splitlines()[-1].split()[0].replace(",", "")) > 0
+    return passes
+
+
+def test_generate_sql_decodes_each_binlog_file_once(spark, tmp_path):
+    """One generate_sql call decodes each binlog file ONCE — the
+    flashback artifact, the forward default, the --minimal-insert stream
+    and a multi-table schema file alike: the rendered rows (and the
+    input of a render that reads it more than once) are persisted, so
+    the decoration carry, its window, the insert-run carries and the
+    per-table branches read one decoded copy. The caches are released
+    after every call, also when the write raises."""
+    from bingo2sql_spark.api import generate_sql
+
+    sc = spark.sparkContext
+
+    def persistent() -> set:
+        return set(sc._jsc.getPersistentRDDs().keySet())
+
+    held = persistent()
+    path, start = _flashback_binlog(tmp_path)
+    events = _binlog_events(spark, path)
+    # a schema file of two tables renders one branch per table
+    schema = tmp_path / "schema.sql"
+    schema.write_text(
+        "CREATE TABLE test.repo_files (repo varchar(64), path varchar(64), "
+        "`commit` varchar(64), lang varchar(16), content text, PRIMARY KEY (repo, path));"
+        "CREATE TABLE test.mirror (repo varchar(64), path varchar(64), PRIMARY KEY (path));"
+    )
+    calls = {
+        "flashback": dict(
+            flashback=True, start_file=path.name, start_position=start,
+            stop_file=path.name, stop_position=path.stat().st_size,
+        ),
+        "forward": {},
+        "minimal_insert": dict(minimal_insert=True),
+        "two_table_schema": dict(table_schema=str(schema)),
+    }
+    for name, kwargs in calls.items():
+        since = _next_execution(spark)
+        generate_sql(events, str(tmp_path / name), **kwargs)
+        assert _python_passes(spark, since) == 1, name
+        assert persistent() == held, name
+        assert list((tmp_path / name).glob("part-*")), name
+
+    # a CRC mismatch in the last rows event fails the decode task after
+    # the cache is registered; the write raises and the cache is released
+    data = bytearray(path.read_bytes())
+    data[data.rindex(b"body 59")] ^= 0x01
+    bad = tmp_path / "bad" / path.name
+    bad.parent.mkdir()
+    bad.write_bytes(bytes(data))
+    with pytest.raises(Exception, match="CRC32 mismatch"):
+        generate_sql(_binlog_events(spark, bad), str(tmp_path / "raised"))
+    assert persistent() == held
 
 
 def test_table_paths_plan_no_python_rdd(spark, tmp_path, monkeypatch):
