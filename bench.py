@@ -358,19 +358,9 @@ def main() -> None:
     # mode: delta_vs_prev pushed the line past the budget).
     full = dict(out)
     full["control_readings"] = _CONTROL["readings"]
-    # interleaved HEAD-vs-prev A/B (VERDICT r7 #8): fold a recorded
-    # BENCH/ab_latest.json in as first-class fields so round verdicts
-    # adjudicate regressions from data, not prose (the ab_check.py that
-    # wrote it is removed; cdcbench/run.py runs the A/Bs now)
-    here0 = os.path.dirname(os.path.abspath(__file__))
-    try:
-        with open(os.path.join(here0, "BENCH", "ab_latest.json")) as f:
-            ab = json.load(f)
-        full["ab"] = ab
-        out["ab_min_head"] = ab.get("ab_min_head")
-        out["ab_min_prev"] = ab.get("ab_min_prev")
-    except Exception:
-        pass
+    # interleaved HEAD-vs-prev A/Bs are cdcbench/run.py's job; this run
+    # measures no A/B, so the fields stay in the line as null
+    out["ab_min_head"] = out["ab_min_prev"] = None
     prev = _prev_round_queries()
     if prev:
         full["delta_vs_prev"] = {

@@ -21,26 +21,3 @@ Reference parity citations in docstrings point into /root/reference
 
 __version__ = "0.2.0"
 
-
-def __getattr__(name):  # lazy top-level API (avoids import cycles)
-    if name == "generate_sql":
-        from bingo2sql_spark.api import generate_sql
-
-        return generate_sql
-    if name == "replay":
-        from bingo2sql_spark.pipeline import replay
-
-        return replay
-    if name == "IcebergLiteTable":
-        from bingo2sql_spark.operators.apply import IcebergLiteTable
-
-        return IcebergLiteTable
-    if name == "get_spark":
-        from bingo2sql_spark.session import get_spark
-
-        return get_spark
-    if name == "ParseService":
-        from bingo2sql_spark.service import ParseService
-
-        return ParseService
-    raise AttributeError(name)

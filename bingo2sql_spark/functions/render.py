@@ -171,25 +171,6 @@ def render_sql(
     )
 
 
-def _block_lag_carry(blocks: DataFrame, col: str = "_c") -> DataFrame:
-    """lag(col) over the per-block rows ordered by _blk — for each block,
-    the value of the nearest PRECEDING non-empty block. One ordered
-    window over the block rows: they are N/block_size rows (N/65536 by
-    default), and the caller broadcasts the result whole, so the driver
-    holds every block row anyway. Returns (_blk, _prev)."""
-    return blocks.selectExpr("_blk", f"lag({ident(col)}) OVER (ORDER BY _blk) AS _prev")
-
-
-def _block_running_last(blocks: DataFrame, col: str) -> DataFrame:
-    """last(col, ignorenulls) over the per-block rows STRICTLY BEFORE
-    each block (ordered by _blk) — one ordered window over the block
-    rows, like _block_lag_carry. Returns (_blk, _prev)."""
-    before = "ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING"
-    return blocks.selectExpr(
-        "_blk", f"last({ident(col)}, true) OVER (ORDER BY _blk {before}) AS _prev"
-    )
-
-
 def decorate(
     rendered: DataFrame,
     show_gtid: bool = True,
@@ -211,7 +192,7 @@ def decorate(
     block_size)`, the lag runs per block (`PARTITION BY _blk ORDER BY
     seq`, parallel across blocks) and each block's FIRST row is patched
     with a carry — the (gtid, sec) of the last row of the nearest
-    preceding non-empty block, computed by _block_lag_carry over the
+    preceding non-empty block, computed by one ordered window over the
     per-block aggregate (N/block_size rows) and broadcast back.
     Identical output to the global window, including across
     block-spanning seq gaps.
@@ -243,10 +224,13 @@ def decorate(
         "*", "concat(gtid_uuid, ':', CAST(gno AS STRING)) AS _g", f"{sec} AS _s"
     )
     w = "OVER (PARTITION BY _blk ORDER BY seq)"
-    # carry: last (gtid, sec) of each non-empty block, then shift to the
-    # NEXT non-empty block (one row per block)
-    carry = _block_lag_carry(
-        out.groupBy("_blk").agg(F.expr("max_by(struct(_g, _s), seq) AS _c"))
+    # carry: last (gtid, sec) of each non-empty block, shifted to the
+    # NEXT non-empty block by one ordered window over the block rows
+    # (N/block_size of them, broadcast whole)
+    carry = (
+        out.groupBy("_blk")
+        .agg(F.expr("max_by(struct(_g, _s), seq) AS _c"))
+        .selectExpr("_blk", "lag(_c) OVER (ORDER BY _blk) AS _prev")
     )
     out = out.repartitionByRange("_blk").selectExpr(
         "*",
@@ -356,9 +340,9 @@ def write_sql_file(
     duration of the write, so decorate's block carry and its window read
     the same computed rows, and the input events are persisted too when
     the render itself reads them more than once (the --minimal-insert
-    run carries, a multi-table registry). A binlog file is thus decoded
-    once per artifact. Both caches are released in a `finally`, also
-    when the write raises.
+    run carry and statements, a multi-table registry). A binlog file is
+    thus decoded once per artifact. Both caches are released in a
+    `finally`, also when the write raises.
 
     `table_registry` (ddl.parse_schema_file output — the reference's
     local-mode schema resolution) renders each event with ITS table's
@@ -399,8 +383,8 @@ def write_sql_file(
     line = _concat_ws("\n", [*(["gtid_comment"] if show_gtid else []), f"concat({', '.join(tail)})"])
     cached: list[DataFrame] = []
     try:
-        # the inline renderer's run carries and a registry's per-table
-        # branches read their input more than once
+        # the inline renderer's run carry and statement branches, and a
+        # registry's per-table branches, read their input more than once
         if inline or len(table_registry or ()) > 1:
             ev = ev.persist()
             cached.append(ev)
@@ -455,6 +439,19 @@ def archive_sql_artifact(out_dir: str, remove_original: bool = True) -> tuple[st
     return url, size
 
 
+def _run_start(prev: str, cur: str = "") -> str:
+    """SQL text: the seq of the event `cur` (a struct prefix such as
+    `_first.`, or '' for the row itself) when it starts an insert run —
+    it is anything but an INSERT into the same (db, table) as the event
+    `prev` (NULL: no preceding event) — else NULL."""
+    ins = str_lit(S.OP_INSERT)
+    extends = (
+        f"{cur}op = {ins} AND {prev}.op = {ins} AND {prev}.db = {cur}db "
+        f"AND {prev}.`table` = {cur}`table`"
+    )
+    return f"CASE WHEN coalesce({extends}, false) THEN NULL ELSE {cur}seq END"
+
+
 def with_insert_runs(events: DataFrame, block_size: int = 1 << 16) -> DataFrame:
     """Adds `_run`: an id shared by each maximal run of CONSECUTIVE
     (in seq order) same-(db,table) INSERT events — the unit the
@@ -464,48 +461,45 @@ def with_insert_runs(events: DataFrame, block_size: int = 1 << 16) -> DataFrame:
     the batched output in seq order can never reorder an insert past a
     statement it originally preceded.
 
-    Scalable prefix computation (no global window): the break flag
-    needs the PREVIOUS event, computed per seq-block with a
-    hash-partitioned window, and block boundaries are patched from
-    metadata-scale per-block aggregates broadcast back. Non-insert rows
-    get singleton run ids and are simply never batched.
+    Scalable prefix computation (no global window): each row's previous
+    event is a `lag` per seq-block (hash-partitioned on `_blk`), and the
+    block boundaries are patched from ONE carry over the per-block
+    aggregate of those windowed rows (N/block_size rows, broadcast
+    once): `lag` of each block's last event is the previous event of
+    the next block's first row, and a running max of the blocks' run
+    starts is the run still open where each block begins. Non-insert
+    rows get singleton run ids and are simply never batched.
 
     The run id IS the run's starting seq (the nearest preceding break
     row's seq), not a break count: downstream batch chunking is then
     pure seq arithmetic — `floor((seq - _run)/batch_rows)` — and never
     needs a per-run window, so a bulk-load run of 10^10 inserts (ONE
     `_run` value) costs nothing beyond the bounded per-block windows."""
-    ev = events.withColumn("_blk", F.expr(f"floor(seq / {block_size})"))
-    w = "OVER (PARTITION BY _blk ORDER BY seq)"
-    prev_struct = "struct(op, db, `table`)"
-    carry = _block_lag_carry(
-        ev.groupBy("_blk").agg(F.expr(f"max_by({prev_struct}, seq) AS _c"))
-    ).withColumnRenamed("_prev", "_pc")
-    ev = ev.selectExpr(
-        "*", f"row_number() {w} AS _rn", f"lag({prev_struct}) {w} AS _lagp"
-    ).join(F.broadcast(carry), "_blk", "left")
-    prev = "(CASE WHEN _rn = 1 THEN _pc ELSE _lagp END)"
-    ins = str_lit(S.OP_INSERT)
-    extends = (
-        f"op = {ins} AND {prev}.op = {ins} AND {prev}.db = db "
-        f"AND {prev}.`table` = `table`"
+    w = "PARTITION BY _blk ORDER BY seq"
+    ev = events.selectExpr("*", f"floor(seq / {block_size}) AS _blk").selectExpr(
+        "*", f"lag(struct(op, db, `table`)) OVER ({w}) AS _lagp"
     )
-    ev = ev.withColumn("_brk", F.expr(f"CASE WHEN coalesce({extends}, false) THEN 0 ELSE 1 END"))
-    # run-start seq: last non-null break seq within the block, patched on
-    # blocks whose prefix has no break yet from a metadata-scale carry of
-    # each preceding block's LAST run-start (one row per block).
-    start_seq = "CASE WHEN _brk = 1 THEN seq END"
-    local_start = (
-        f"last({start_seq}, true) OVER (PARTITION BY _blk ORDER BY seq "
-        "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"
+    # one row per block: last and first event, largest in-block run start
+    blocks = ev.groupBy("_blk").agg(
+        F.expr("max_by(struct(op, db, `table`), seq) AS _last"),
+        F.expr("min_by(struct(seq, op, db, `table`), seq) AS _first"),
+        F.expr(f"max(CASE WHEN _lagp IS NOT NULL THEN {_run_start('_lagp')} END) AS _bs"),
     )
-    carry_start = _block_running_last(
-        ev.groupBy("_blk").agg(F.expr(f"max({start_seq}) AS _bs")), "_bs"
-    ).withColumnRenamed("_prev", "_cs")
-    ev = ev.join(F.broadcast(carry_start), "_blk", "left").withColumn(
-        "_run", F.expr(f"coalesce({local_start}, _cs)")
+    carry = blocks.selectExpr(
+        "_blk", "_first", "_bs", "lag(_last) OVER (ORDER BY _blk) AS _pc"
+    ).selectExpr(
+        "_blk",
+        "_pc",
+        f"max(greatest(_bs, {_run_start('_pc', '_first.')})) OVER (ORDER BY _blk "
+        "ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS _cs",
     )
-    return ev.drop("_blk", "_rn", "_lagp", "_pc", "_brk", "_cs")
+    start = _run_start("coalesce(_lagp, _pc)")
+    run = f"last({start}, true) OVER ({w} ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"
+    return (
+        ev.join(F.broadcast(carry), "_blk", "left")
+        .selectExpr("*", f"coalesce({run}, _cs) AS _run")
+        .drop("_blk", "_lagp", "_pc", "_cs")
+    )
 
 
 def _batched_insert_stmts(
@@ -578,11 +572,13 @@ def render_sql_inline(
     updates/deletes/DDL, correctly interleaved by seq — a batch anchors
     at its first row's seq and never crosses a non-insert event or a
     table change (with_insert_runs), so replaying the file in order is
-    equivalent to the per-row stream."""
+    equivalent to the per-row stream. Only the inserts need run ids: the
+    other statements render straight from `events`, so the run windows
+    are computed once."""
     cols = payload_cols or S.payload_columns()
     runs = with_insert_runs(events, block_size)
     others = render_sql(
-        runs.filter(f"op != {str_lit(S.OP_INSERT)}"),
+        events.filter(f"op != {str_lit(S.OP_INSERT)}"),
         cols,
         minimal_update=minimal_update,
         no_primary_key=no_primary_key,

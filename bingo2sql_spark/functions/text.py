@@ -106,18 +106,6 @@ def fingerprint(text: Column | str) -> Column:
     return F.md5(F.array_join(toks, " "))
 
 
-def shingles(text: Column | str, n: int = 3) -> Column:
-    """Word n-gram shingles, md5-hashed (array<string>)."""
-    t = tokens(text)
-    idx = F.sequence(F.lit(0), F.greatest(F.size(t) - n, F.lit(0)))
-    return F.transform(
-        idx,
-        lambda i: F.md5(
-            F.concat_ws(" ", *[F.element_at(t, (i + j + 1).cast("int")) for j in range(n)])
-        ),
-    )
-
-
 #: PII patterns — kept to syntax shared by Java regex and RE2 (character
 #: classes, bounded repeats, \b, plain groups; no lookarounds) so the
 #: DuckDB oracle replays them verbatim.

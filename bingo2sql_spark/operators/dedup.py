@@ -110,11 +110,10 @@ def _exploded_shingles(
     docs: DataFrame, text_col: str, id_col: str, shingle_n: int
 ) -> DataFrame:
     """(id, shingle-md5) rows via posexplode + window leads — fully
-    whole-stage-codegen (the array/higher-order-function formulation in
-    functions.text.shingles is interpreted per element and ~10x slower
-    on large corpora; values are identical). Keeps one row per doc for
-    docs shorter than shingle_n (partial shingle), matching the array
-    semantics."""
+    whole-stage-codegen (an array/higher-order-function formulation is
+    interpreted per element and ~10x slower on large corpora). Keeps
+    one row per doc for docs shorter than shingle_n (one partial
+    shingle)."""
     words = docs.select(
         F.col(id_col),
         F.posexplode(F.split(F.trim(F.col(text_col)), r"\s+")).alias("_pos", "_w"),

@@ -297,35 +297,6 @@ def feature_hash_embedding(
     )
 
 
-def srp_bucket(vec_col: F.Column, n_planes: int = 8, dim: int = 64) -> F.Column:
-    """Sign-random-projection bucket code ('0'/'1' per hyperplane).
-
-    Hyperplane j's weight on dimension i is ±1 from the parity of a hex
-    char of md5(j||':'||i) — fully deterministic, no stored model, and
-    reproducible in any engine with md5+ascii."""
-    import hashlib
-
-    bits = []
-    iv = _int_vec(vec_col)
-    for j in range(n_planes):
-        # driver-side constant weights (tiny: n_planes * dim literals)
-        weights = [
-            1 if int(hashlib.md5(f"{j}:{i}".encode()).hexdigest()[0], 16) % 2 else -1
-            for i in range(dim)
-        ]
-        s = F.aggregate(
-            F.zip_with(
-                iv,
-                F.array(*[F.lit(w) for w in weights]),
-                lambda x, w: x * w,
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        bits.append(F.when(s > 0, F.lit("1")).otherwise(F.lit("0")))
-    return F.concat(*bits)
-
-
 def _srp_weights(n_planes: int, dim: int, plane_offset: int = 0):
     import hashlib
 
@@ -349,9 +320,12 @@ def with_srp_bucket_arrow(
     plane_offset: int = 0,
     emit_int_vec: bool = False,
 ) -> DataFrame:
-    """srp_bucket computed with one numpy matmul per Arrow batch
-    (identical bits to the Column-expression variant; ~10x faster on
-    large corpora — interpreted HOFs evaluate per element).
+    """Sign-random-projection bucket code ('0'/'1' per hyperplane),
+    computed with one numpy matmul per Arrow batch (~10x faster on large
+    corpora than a Column-expression form, whose interpreted HOFs
+    evaluate per element). Hyperplane j's weight on dimension i is ±1
+    from the parity of a hex char of md5(j||':'||i) (_srp_weights) —
+    deterministic, no stored model.
     `plane_offset` selects a disjoint hyperplane family (multi-table
     LSH: table t uses planes [t*n_planes, (t+1)*n_planes)).
 
@@ -420,7 +394,7 @@ def lsh_topk(
       several tables is deduped before scoring. Recall 1-(1-p)^L.
 
     Scoring is dot_int_arrow — one einsum per Arrow batch. Bucket codes
-    come from the Arrow/numpy path (bit-identical to srp_bucket). With
+    come from with_srp_bucket_arrow. With
     the defaults (probe_bits=0, n_tables=1) the result is the plain
     single-bucket LSH and no dedup shuffle is added."""
 

@@ -232,17 +232,3 @@ class TableMeta:
             schema_ver=int(d["schema_ver"]),
             columns=[ColumnMeta(**c) for c in d["columns"]],
         )
-
-
-def repo_files_meta(schema_ver: int = LATEST_SCHEMA_VER) -> TableMeta:
-    """The pinned target table's metadata."""
-    cols = [
-        ColumnMeta("repo", is_key=True),
-        ColumnMeta("path", is_key=True),
-        ColumnMeta("commit"),
-        ColumnMeta("lang"),
-        ColumnMeta("content"),
-    ]
-    if schema_ver >= 2:
-        cols.append(ColumnMeta("branch"))
-    return TableMeta(db="test", table="repo_files", schema_ver=schema_ver, columns=cols)

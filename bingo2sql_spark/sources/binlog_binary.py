@@ -240,22 +240,24 @@ def _string_meta(meta: int) -> tuple[int, int]:
 _DIG2BYTES = [0, 1, 1, 2, 2, 3, 3, 4, 4, 4]
 
 
-def _decode_newdecimal(data: bytes, off: int, precision: int, scale: int):
-    """MySQL packed decimal: groups of 9 digits per 4 big-endian bytes,
-    leftover digits per _DIG2BYTES; sign = top bit of the first byte
-    (set = positive), negative values stored ones-complemented.
-
-    Rendered like the reference's decimal.Decimal.String(): trailing
-    fraction zeros and a bare dot are trimmed (a DECIMAL(12,6)
-    -45363.640000 renders "-45363.64", 0.00 renders "0"), and zero
-    carries no sign."""
+def _decimal_digits(
+    data: bytes, off: int, precision: int, scale: int
+) -> tuple[bool, str, str, int]:
+    """The one reader of MySQL's packed decimal (decimal2bin, used by
+    NEWDECIMAL columns and JSONB opaque decimals): groups of 9 digits
+    per 4 big-endian bytes, leftover digits per _DIG2BYTES; sign = top
+    bit of the first byte (set = positive), negative values stored
+    ones-complemented. Returns (positive, integer digits with no
+    leading zeros — "0" when none —, fraction digits padded to
+    `scale`, next offset). Fewer bytes than (precision, scale) needs
+    raise BinlogFormatError; each caller formats the digits."""
     intg = precision - scale
     intg0, intg_rem = divmod(intg, 9)
     frac0, frac_rem = divmod(scale, 9)
     nbytes = intg0 * 4 + _DIG2BYTES[intg_rem] + frac0 * 4 + _DIG2BYTES[frac_rem]
     raw = bytearray(data[off : off + nbytes])
     if len(raw) < nbytes:
-        raise BinlogFormatError("truncated NEWDECIMAL")
+        raise BinlogFormatError("truncated DECIMAL")
     positive = bool(raw[0] & 0x80)
     raw[0] ^= 0x80
     if not positive:
@@ -275,15 +277,21 @@ def _decode_newdecimal(data: bytes, off: int, precision: int, scale: int):
         frac_digits += str(_be(raw, pos, 4)).zfill(9)
         pos += 4
     if frac_rem:
-        n = _DIG2BYTES[frac_rem]
-        frac_digits += str(_be(raw, pos, n)).zfill(frac_rem)
-        pos += n
-    int_digits = int_digits.lstrip("0") or "0"
+        frac_digits += str(_be(raw, pos, _DIG2BYTES[frac_rem])).zfill(frac_rem)
+    return positive, int_digits.lstrip("0") or "0", frac_digits, off + nbytes
+
+
+def _decode_newdecimal(data: bytes, off: int, precision: int, scale: int):
+    """NEWDECIMAL column value, rendered like the reference's
+    decimal.Decimal.String(): trailing fraction zeros and a bare dot
+    are trimmed (a DECIMAL(12,6) -45363.640000 renders "-45363.64",
+    0.00 renders "0"), and zero carries no sign."""
+    positive, int_digits, frac_digits, end = _decimal_digits(data, off, precision, scale)
     frac_digits = frac_digits.rstrip("0")
     out = int_digits + ("." + frac_digits if frac_digits else "")
     if not positive and out != "0":
         out = "-" + out
-    return out, off + nbytes
+    return out, end
 
 
 def _frac_bytes(fsp: int) -> int:

@@ -13,6 +13,8 @@ same canonical form the reference's goldens pin.
 
 from __future__ import annotations
 
+from bingo2sql_spark.sources.binlog_binary import BinlogFormatError, _decimal_digits
+
 _JSONB_SMALL_OBJECT = 0x00
 _JSONB_LARGE_OBJECT = 0x01
 _JSONB_SMALL_ARRAY = 0x02
@@ -35,9 +37,6 @@ _MYSQL_TYPE_TIME = 11
 _MYSQL_TYPE_DATETIME = 12
 _MYSQL_TYPE_TIMESTAMP = 7
 
-_DIG2BYTES = [0, 1, 1, 2, 2, 3, 3, 4, 4, 4]
-
-
 def _jsonb_varlen(data: bytes, pos: int) -> tuple[int, int]:
     """Variable-length quantity (little-endian base-128)."""
     length, shift = 0, 0
@@ -51,40 +50,13 @@ def _jsonb_varlen(data: bytes, pos: int) -> tuple[int, int]:
 
 
 def _bin_decimal(data: bytes) -> str:
-    """MySQL binary DECIMAL (decimal2bin layout): 9-digit base-10^9
-    groups packed into 1-4 big-endian bytes; sign = high bit of the
-    first byte (1 = non-negative); negative values store all bytes
-    inverted."""
-    precision, scale = data[0], data[1]
-    buf = bytearray(data[2:])
-    positive = bool(buf[0] & 0x80)
-    buf[0] ^= 0x80
-    if not positive:
-        for i in range(len(buf)):
-            buf[i] ^= 0xFF
-    intg = precision - scale
-    intg0, intg0x = divmod(intg, 9)
-    frac0, frac0x = divmod(scale, 9)
-    pos = 0
-
-    def take(nbytes: int) -> int:
-        nonlocal pos
-        v = int.from_bytes(buf[pos : pos + nbytes], "big")
-        pos += nbytes
-        return v
-
-    int_part = ""
-    if intg0x:
-        int_part += str(take(_DIG2BYTES[intg0x]))
-    for _ in range(intg0):
-        int_part += str(take(4)).rjust(9, "0") if int_part else str(take(4))
-    int_part = int_part.lstrip("0") or "0"
-    frac_part = ""
-    for _ in range(frac0):
-        frac_part += str(take(4)).rjust(9, "0")
-    if frac0x:
-        frac_part += str(take(_DIG2BYTES[frac0x])).rjust(frac0x, "0")
-    out = int_part + ("." + frac_part if frac_part else "")
+    """JSONB opaque DECIMAL: precision and scale bytes, then the
+    decimal2bin digits (binlog_binary._decimal_digits, which raises on a
+    truncated payload). The fraction stays padded to the scale."""
+    if len(data) < 2:
+        raise BinlogFormatError("truncated JSONB DECIMAL header")
+    positive, int_digits, frac_digits, _ = _decimal_digits(data, 2, data[0], data[1])
+    out = int_digits + ("." + frac_digits if frac_digits else "")
     return ("-" if not positive else "") + out
 
 

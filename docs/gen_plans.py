@@ -29,13 +29,19 @@ from bingo2sql_spark.operators import resolve as R
 d = tempfile.mkdtemp(dir="/dev/shm")
 to_raw(generate_events(spark, n_keys=2000, versions_per_key=4)).write.mode("overwrite").parquet(d + "/raw")
 raw = spark.read.parquet(d + "/raw")
-from bingo2sql_spark.operators.apply import _merge_batch, bucket_col
+from pyspark.sql.readwriter import DataFrameWriter
+from bingo2sql_spark.operators.apply import IcebergLiteTable
 batch = R.to_upsert_rows(R.with_key(decode_events(raw.filter("op <> 'ddl'"), before_fields=["repo", "path"])))
-rows = batch.withColumn("bucket", bucket_col(64)).withColumnRenamed("_seq", "_ingest_seq")
-all_cols = ["repo", "path", "commit", "lang", "content", "branch"]
-merged = _merge_batch(rows.limit(0), rows, all_cols, partial=False, n_out=64)
-add("CDC replay: decode -> upsert projection -> single-exchange MERGE", merged,
-    "The before image parses ONLY the merge keys (narrow from_json). The union is "
+# the plan a fresh-table commit hands to its parquet write
+captured, parquet = [], DataFrameWriter.parquet
+DataFrameWriter.parquet = lambda self, *a, **k: (captured.append(self._df), parquet(self, *a, **k))[1]
+IcebergLiteTable(d + "/table", n_buckets=64).commit(batch, "plans")
+DataFrameWriter.parquet = parquet
+add("CDC replay: decode -> upsert projection -> single-exchange MERGE", captured[0],
+    "The before image parses ONLY the merge keys (narrow from_json). On a fresh "
+    "table the stored side of the merge union is an empty LocalRelation the "
+    "optimizer drops, and the batch's row counts ride the job as an Observation "
+    "(CollectMetrics). The union is "
     "repartitioned by bucket (the ONLY full-data exchange) and the LWW aggregate "
     "groups by (bucket, keys) — bucket is a function of the keys, so hash(bucket) "
     "partitioning satisfies the aggregate's clustered distribution and Catalyst "
@@ -63,8 +69,10 @@ from bingo2sql_spark.functions.render import render_sql_inline
 env = decode_events(raw)  # rendering needs the FULL before image (minimal SET diff)
 add("render_sql_inline (de-skewed multi-row INSERT batching)", render_sql_inline(env.filter("op <> 'ddl'")),
     "Run ids come from per-block windows (hashpartitioning(_blk), bounded by "
-    "block_size) patched by one-level carries over the per-block rows (N/block_size); "
-    "the chunk id is seq "
+    "block_size) patched by ONE carry over the per-block rows (N/block_size), "
+    "broadcast once (the carry's aggregate runs on a narrow (seq, op, db, table) "
+    "block window that is already partitioned by _blk, so it adds no exchange), "
+    "and non-insert rows render straight from the events. The chunk id is seq "
     "arithmetic — NO per-run window, so a bulk-load run of 10^10 inserts spreads "
     "across (run, chunk) groups capped at batch_rows.")
 

@@ -289,6 +289,18 @@ def test_jsonb_golden_matrix():
     assert g(_blob(_Opaque(246, _bin_dec("0", 0)))) == "0"
 
 
+def test_jsonb_truncated_opaque_decimal_raises():
+    """A JSONB opaque DECIMAL whose payload is cut short raises, like the
+    NEWDECIMAL column reader, instead of decoding the bytes that are
+    left (DECIMAL(12,6) -45363.64 with 2 bytes cut used to come out as
+    -45363.000009)."""
+    dec = _bin_dec("-45363.64", 6)
+    assert C.decode_jsonb(_blob(_Opaque(246, dec))) == "-45363.640000"
+    for cut in (dec[:-2], dec[:-1], dec[:2], dec[:1]):
+        with pytest.raises(B.BinlogFormatError):
+            C.decode_jsonb(_blob(_Opaque(246, cut)))
+
+
 def test_binary_codec_roundtrip_and_escape(spark):
     """WKB-style bytes carried as a latin-1 string render as the
     reference's escaped binary literal (NUL -> \\0 etc.)."""

@@ -36,3 +36,54 @@ def test_no_unused_imports():
     assert files
     unused = [hit for p in files for hit in unused_imports(p)]
     assert not unused, "unused imports:\n" + "\n".join(unused)
+
+
+REPO = PACKAGE.parent
+
+
+def _names(node: ast.AST) -> set[str]:
+    """Every identifier `node` mentions: names, attributes, imported names."""
+    out = set()
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name):
+            out.add(n.id)
+        elif isinstance(n, ast.Attribute):
+            out.add(n.attr)
+        elif isinstance(n, ast.alias):
+            out.add(n.name.rsplit(".", 1)[-1])
+    return out
+
+
+def unreferenced_defs() -> list[str]:
+    """Top-level functions and classes of the engine package that no
+    `.py` file in the repository (engine, tests, cdcbench, bench.py,
+    __spark_entry__.py, ...) mentions outside the definition's own
+    body. Dunder names are skipped."""
+    files = [
+        p for p in REPO.rglob("*.py")
+        if not any(part.startswith(".") for part in p.relative_to(REPO).parts)
+    ]
+    # per top-level statement: how many statements mention each name
+    mentions: dict[str, int] = {}
+    defs = []
+    for p in files:
+        tree = ast.parse(p.read_text())
+        for stmt in tree.body:
+            names = _names(stmt)
+            for name in names:
+                mentions[name] = mentions.get(name, 0) + 1
+            if PACKAGE in p.parents and isinstance(
+                stmt, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+            ):
+                defs.append((p, stmt, stmt.name in names))
+    return [
+        f"{p.relative_to(REPO)}:{d.lineno} {d.name}"
+        for p, d, self_ref in defs
+        if not (d.name.startswith("__") and d.name.endswith("__"))
+        and mentions.get(d.name, 0) - self_ref == 0
+    ]
+
+
+def test_no_unreferenced_definitions():
+    dead = unreferenced_defs()
+    assert not dead, "definitions nothing references:\n" + "\n".join(dead)

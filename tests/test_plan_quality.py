@@ -21,6 +21,34 @@ def _optimized(df) -> str:
     return df._jdf.queryExecution().optimizedPlan().toString()
 
 
+def _jobs(spark, group: str, fn):
+    """(fn(), the number of Spark jobs it ran), counted through a job
+    group set around the call."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup("", "")
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _write_plans(monkeypatch) -> list[str]:
+    """The executed plan of every DataFrameWriter.parquet call, appended
+    to the returned list until monkeypatch.undo()."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    written = []
+    parquet = DataFrameWriter.parquet
+
+    def capturing(self, *args, **kwargs):
+        written.append(_plan(self._df))
+        return parquet(self, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", capturing)
+    return written
+
+
 def test_filters_push_into_parquet_scan(spark):
     """F1/F5-style predicates on raw scans must reach the reader
     (PushedFilters) — reading then filtering 100 TB is the failure mode."""
@@ -74,23 +102,24 @@ def test_merge_aggregate_has_partial_combine(spark):
     ), "partial agg must sit below the exchange"
 
 
-def test_commit_merge_single_exchange(spark):
+def test_commit_merge_single_exchange(spark, tmp_path, monkeypatch):
     """The commit MERGE must plan exactly ONE full-data exchange: the
     union repartitions by bucket and the (bucket, keys) aggregate reuses
     that partitioning (bucket is a function of the keys), so there is no
     second shuffle between the merge and the bucket-clustered write —
-    at 10^10 events the removed exchange was ~45% of shuffled bytes."""
+    at 10^10 events the removed exchange was ~45% of shuffled bytes.
+    The plan is the one a fresh-table commit hands to its parquet
+    write."""
     from bingo2sql_spark.operators import resolve as R
-    from bingo2sql_spark.operators.apply import _merge_batch, bucket_col
+    from bingo2sql_spark.operators.apply import IcebergLiteTable
     from bingo2sql_spark.sources.synth import generate_events
 
+    written = _write_plans(monkeypatch)
     ev = generate_events(spark, n_keys=200, versions_per_key=4)
-    rows = R.to_upsert_rows(R.with_key(ev)).withColumn(
-        "bucket", bucket_col(16)
-    ).withColumnRenamed("_seq", "_ingest_seq")
-    all_cols = ["repo", "path", "commit", "lang", "content", "branch"]
-    merged = _merge_batch(rows.limit(0), rows, all_cols, partial=False, n_out=8)
-    plan = _plan(merged)
+    t = IcebergLiteTable(str(tmp_path / "t"), n_buckets=16)
+    t.commit(R.to_upsert_rows(R.with_key(ev)), "load")
+    monkeypatch.undo()
+    (plan,) = written
     assert plan.count("Exchange hashpartitioning") == 1, plan
     # and that one exchange partitions by bucket, not by the merge keys
     frag = plan.split("Exchange hashpartitioning", 1)[1][:120]
@@ -507,30 +536,11 @@ def test_table_paths_plan_no_python_rdd(spark, tmp_path, monkeypatch):
     Union, no ExistingRDD scan), and a point lookup's bucket computation
     folds on the driver without a job. A CoW commit over stored rows
     plans exactly one bucket exchange under its max_by."""
-    from pyspark.sql.readwriter import DataFrameWriter
-
     from bingo2sql_spark.operators.apply import IcebergLiteTable
     from bingo2sql_spark.pipeline import replay
     from bingo2sql_spark.sources.synth import generate_events
 
-    sc = spark.sparkContext
-
-    def jobs(group, fn):
-        sc.setJobGroup(group, group)
-        try:
-            out = fn()
-        finally:
-            sc.setJobGroup("", "")
-        return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-    written = []
-    parquet = DataFrameWriter.parquet
-
-    def capturing(self, *args, **kwargs):
-        written.append(_plan(self._df))
-        return parquet(self, *args, **kwargs)
-
-    monkeypatch.setattr(DataFrameWriter, "parquet", capturing)
+    written = _write_plans(monkeypatch)
     ev = generate_events(spark, n_keys=120, versions_per_key=3, seed=11)
     cow = IcebergLiteTable(str(tmp_path / "cow"), n_buckets=8)
     replay(ev, cow, batch_id="fresh")
@@ -563,14 +573,92 @@ def test_table_paths_plan_no_python_rdd(spark, tmp_path, monkeypatch):
     for t in (cow, mor):
         assert "ExistingRDD" not in _plan(t.read(spark))
     keys = [(r["repo"], r["path"]) for r in mor.read(spark).limit(4).collect()]
-    lookup, n_build = jobs("plan-read-keys-build", lambda: mor.read_keys(spark, keys))
+    lookup, n_build = _jobs(spark, "plan-read-keys-build", lambda: mor.read_keys(spark, keys))
     assert n_build == 0, n_build
     assert "ExistingRDD" not in _plan(lookup)
-    rows, n_run = jobs("plan-read-keys-run", lookup.collect)
+    rows, n_run = _jobs(spark, "plan-read-keys-run", lookup.collect)
     assert {(r["repo"], r["path"]) for r in rows} == set(keys)
     assert n_run <= 3, n_run
 
     empty = mor._empty_state(spark, ["repo", "path", "content"])
     assert _optimized(empty).startswith("LocalRelation <empty>"), _optimized(empty)
-    got, n_empty = jobs("plan-empty-state", empty.collect)
+    got, n_empty = _jobs(spark, "plan-empty-state", empty.collect)
     assert got == [] and n_empty == 0, n_empty
+
+
+def test_commit_jobs_per_path(spark, tmp_path):
+    """Spark jobs per IcebergLiteTable.commit(), counted through a job
+    group set here, on each commit path: a fresh CoW commit (the merge
+    job, Observation counts), a CoW commit over stored rows (pruning
+    pre-pass + merge), a MOR delta append, a MOR delta whose depth fires
+    inline compaction, a flashback rebase onto an empty table (its
+    min-seq aggregate) and a DROP + rename commit. The counts are
+    pinned: a phase that starts a job of its own shows up here."""
+    from bingo2sql_spark.operators import flashback as FB
+    from bingo2sql_spark.operators import resolve as R
+    from bingo2sql_spark.operators.apply import IcebergLiteTable
+    from bingo2sql_spark.sources.synth import generate_events
+
+    jobs: dict[str, int] = {}
+
+    def commit(name, table, batch, batch_id, **kwargs):
+        m, jobs[name] = _jobs(
+            spark, f"commit-jobs-{name}", lambda: table.commit(batch, batch_id, **kwargs)
+        )
+        return m
+
+    def up(df):
+        return R.to_upsert_rows(R.with_key(df))
+
+    ev = generate_events(spark, n_keys=120, versions_per_key=3, seed=11)
+    cow = IcebergLiteTable(str(tmp_path / "cow"), n_buckets=8)
+    commit("cow_fresh", cow, up(ev.filter("seq < 200")), "c1")
+    commit("cow_stored", cow, up(ev.filter("seq >= 200")), "c2")
+    ddl = up(ev.filter("seq >= 300")).drop("branch").withColumnRenamed("lang", "language")
+    commit(
+        "drop_rename", cow, ddl, "c3",
+        drop_columns=["branch"], rename_columns={"lang": "language"},
+    )
+    mor = IcebergLiteTable(
+        str(tmp_path / "mor"), n_buckets=8, write_mode="mor", max_delta_depth=1
+    )
+    commit("mor_delta", mor, up(ev.filter("seq < 200")), "m1")
+    m = commit("mor_delta_compaction", mor, up(ev.filter("seq >= 200")), "m2")
+    fb = IcebergLiteTable(str(tmp_path / "fb"), n_buckets=8)
+    commit("flashback_empty", fb, up(FB.invert(ev)), "f1", rebase_past_head=True)
+
+    assert m["compaction_trigger"] == "delta_depth", m
+    cols = cow.latest_manifest()["columns"]
+    assert "language" in cols and "lang" not in cols and "branch" not in cols, cols
+    assert jobs == {
+        "cow_fresh": 2,
+        "cow_stored": 4,
+        "drop_rename": 4,
+        "mor_delta": 2,
+        "mor_delta_compaction": 5,
+        "flashback_empty": 4,
+    }, jobs
+
+
+def test_minimal_insert_runs_one_carry(spark, tmp_path):
+    """--minimal-insert run ids come from ONE carry over the per-block
+    rows (previous event and open run start together), broadcast once,
+    and the non-insert statements render straight from the events:
+    generate_sql(minimal_insert=True) on the test binlog runs at most 16
+    Spark jobs (the per-row forward stream runs 8)."""
+    from bingo2sql_spark.api import generate_sql
+
+    path, _ = _flashback_binlog(tmp_path)
+    events = _binlog_events(spark, path)
+    _, n_jobs = _jobs(
+        spark,
+        "minimal-insert-jobs",
+        lambda: generate_sql(events, str(tmp_path / "sql"), minimal_insert=True),
+    )
+    text = "".join(p.read_text() for p in sorted((tmp_path / "sql").glob("part-*")))
+    # the 60 inserts form one run: one multi-row statement
+    assert text.count("INSERT INTO `test`.`repo_files`") == 1
+    assert text.count("),(") == 59
+    assert text.count("UPDATE `test`.`repo_files`") == 30
+    assert text.count("DELETE FROM `test`.`repo_files`") == 30
+    assert n_jobs <= 16, n_jobs

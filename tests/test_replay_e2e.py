@@ -441,6 +441,28 @@ def test_mor_minimal_row_images(spark, tmp_path):
     assert mor.state_checksum(spark) == expected
 
 
+def test_cow_commit_over_minimal_mor_deltas(spark, tmp_path):
+    """A merge-on-read table holding MINIMAL-image deltas, reopened
+    copy-on-write, takes a FULL-image batch: the stored rows it merges
+    against carry per-column seq attributions (`_col_seqs`), so the
+    merge runs per column and the new base keeps them."""
+    from bingo2sql_spark.sources.synth import generate_events
+
+    ev = generate_events(spark, n_keys=100, versions_per_key=6, n_repos=10,
+                         seed=9, minimal_image=True)
+    pdf = ev.select("seq", "op", "before", "after", "changed_cols").toPandas()
+    expected = oracle.state_checksum(oracle.sequential_apply(pdf))
+    cut = int(pdf["seq"].max()) // 2
+    path = str(tmp_path / "t")
+    mor = IcebergLiteTable(path, n_buckets=8, write_mode="mor")
+    replay(ev.filter(f"seq <= {cut}"), mor, batch_id="b1", row_image="MINIMAL")
+    full = generate_events(spark, n_keys=100, versions_per_key=6, n_repos=10, seed=9)
+    cow = IcebergLiteTable(path, n_buckets=8)
+    replay(full.filter(f"seq > {cut}"), cow, batch_id="b2")
+    assert cow.latest_manifest()["partial_state"] is True
+    assert cow.state_checksum(spark) == expected
+
+
 def test_mor_inline_auto_compaction(spark, small_events, tmp_path):
     """max_delta_depth bounds read amplification: the commit that pushes
     any bucket past the depth triggers inline compaction — deltas fold
