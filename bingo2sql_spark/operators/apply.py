@@ -29,10 +29,10 @@ event can never resurrect a deleted key. This makes the sink a LWW
 register per key — commits CONVERGE under any micro-batch delivery
 order, duplicate delivery (batch_ids already committed are skipped), and
 replay from any checkpoint (north rule). Flashback batches participate
-correctly because pipeline.replay REBASES their seqs past the current
-log head (a rollback executed against MySQL is new binlog traffic with
-new positions — same model). Tombstones are physically dropped by
-`compact()` once no older replays are in flight.
+correctly because commit(rebase_past_head=True) REBASES their seqs past
+the current log head (a rollback executed against MySQL is new binlog
+traffic with new positions — same model). Tombstones are physically
+dropped by `compact()` once no older replays are in flight.
 
 Scale design (10^10 events, 100 TB table):
 - hash-bucketed by (repo, path) into `n_buckets`; a commit rewrites ONLY
@@ -44,14 +44,14 @@ Scale design (10^10 events, 100 TB table):
   batch winners — O(batch) per commit, stored data never read — and
   reconcile base ∪ deltas at read time; `compact()` folds deltas back.
   The right mode when micro-batches are small relative to bucket data.
-- the LWW window shuffles current∪batch by the same keys the batch was
-  already partitioned on; AQE coalesces the small side.
+- the merge is ONE bucket exchange of stored ∪ batch rows feeding a
+  per-(bucket, key) max_by aggregate (see _merge_and_write).
 - crash safety: the manifest rename is the commit point; data of a
   failed commit is never referenced (orphans, GC-able).
 
 Reference parity: replaces bingo2sql's single-writer ordered SQL file
 sink (ProcessChan/myWrite core/parser.go:844-857,672-727) with an
-ordered-by-sort, merge-into-table sink.
+LWW-by-seq, merge-into-table sink.
 """
 
 from __future__ import annotations
@@ -148,7 +148,7 @@ def _per_key_winners(
     last-present-writer. Stored/full rows act as full-image
     pseudo-events (`_changed_cols` NULL); an update contributes only
     its changed columns; insert images are complete, so pre-delete
-    values can never leak (see resolve.to_upsert_rows_partial).
+    values can never leak (see resolve.to_upsert_rows, minimal=True).
 
     emit_changed carries the merged presence metadata forward: NULL if
     any non-delete contributor was a full image, else the sorted union
@@ -1054,8 +1054,12 @@ class IcebergLiteTable:
                 else:
                     br["delta"] += st["rows"]
             else:
+                # the merge read the bucket's deltas (_read_raw) and the
+                # new base holds their resolved rows: drop the list, or
+                # every later read re-scans and re-merges them
                 buckets_map[bk] = new_version
                 bucket_rows[bk] = {"base": st["rows"], "delta": 0}
+                deltas.pop(bk, None)
             lineage[bk] = {"snapshot": new_version, **st}
         aliases = cols.aliases
         if (

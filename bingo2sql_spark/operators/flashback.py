@@ -22,31 +22,27 @@ from bingo2sql_spark import schema as S
 from bingo2sql_spark.functions.sqltext import str_lit
 
 
-def invert(events: DataFrame, rebase_offset: int | None = None) -> DataFrame:
+def invert(events: DataFrame) -> DataFrame:
     """Remap ops and swap row images; DDL is never emitted in flashback
     mode (core/parser.go:2327 gate).
 
-    seq mapping: seq' = rebase_offset - seq (or -seq when no offset), so
-    *ascending* seq' equals reverse binlog order — downstream LWW/apply
-    stages need no flashback-awareness.
-
-    rebase_offset models what actually happens when rollback SQL is
-    executed against the source: it becomes NEW log traffic at positions
-    past the current head. pipeline.replay passes
-    head_seq + max(batch seq) + 1 so the inverted events (a) stay
-    reverse-ordered among themselves and (b) supersede every event the
-    target has already absorbed under LWW-by-seq merge."""
+    seq mapping: seq' = -seq, so *ascending* seq' equals reverse binlog
+    order — downstream LWW/apply stages need no flashback-awareness.
+    Rollback SQL executed against the source becomes NEW log traffic
+    past the current head; IcebergLiteTable.commit(rebase_past_head=True)
+    models that by shifting the inverted seqs past the table's head, so
+    they stay reverse-ordered among themselves and supersede every event
+    the target has already absorbed under LWW-by-seq merge."""
     inv_op = (
         f"CASE WHEN op = {str_lit(S.OP_INSERT)} THEN {str_lit(S.OP_DELETE)} "
         f"WHEN op = {str_lit(S.OP_DELETE)} THEN {str_lit(S.OP_INSERT)} "
         f"ELSE {str_lit(S.OP_UPDATE)} END"
     )
-    new_seq = f"{rebase_offset} - seq" if rebase_offset is not None else "-seq"
     # withColumns evaluates every expression against the input row, so
     # the two images swap in one projection
     return events.filter(f"op != {str_lit(S.OP_DDL)}").withColumns({
         "before": F.expr("`after`"),
         "after": F.expr("`before`"),
         "op": F.expr(inv_op),
-        "seq": F.expr(new_seq),
+        "seq": F.expr("-seq"),
     })

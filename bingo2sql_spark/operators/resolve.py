@@ -1,27 +1,21 @@
-"""Per-key last-writer-wins resolution + skew-aware repartitioning.
+"""Per-key last-writer-wins resolution and the MERGE upsert projection.
 
 The reference gets total order for free (single-threaded apply through
 one channel, core/parser.go:844-857). Distributed, only per-key order is
 needed for final-state correctness — upserts commute across keys
 (SURVEY.md §7.4#2). A micro-batch may touch one (repo, path) many times;
-MERGE requires unique source keys, so we collapse each key to its last
-writer first (north rule: window-over-partitionBy(repo,path) ordered by
-(commit, event-seq)).
+the table commit's merge aggregate collapses each key to its last
+writer by source seq, so the batch path only projects upsert rows here.
 """
 
 from __future__ import annotations
+
+from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from bingo2sql_spark import schema as S
-
-#: Salt fan-out for hot keys. The per-key window itself needs all events
-#: of one (repo,path) co-located, which hashing the *composite* key
-#: already gives (hot repos split across their many paths — salting by
-#: repo alone would NOT split them; SURVEY.md §7.4#5). SALT is used when
-#: pre-shuffling huge batches before the window.
-DEFAULT_SALT = 16
 
 
 def with_key(events: DataFrame) -> DataFrame:
@@ -33,22 +27,7 @@ def with_key(events: DataFrame) -> DataFrame:
     return out
 
 
-def salted_repartition(events: DataFrame, n_partitions: int | None = None) -> DataFrame:
-    """Pre-shuffle by hash of the composite key. Hashing (repo, path)
-    spreads a hot repo across partitions while keeping each key's events
-    together — the window stage then needs no second full shuffle (Spark
-    reuses hash partitioning when the window keys are a superset).
-
-    At 10^10 events the win is that the ONLY wide exchange in the
-    pipeline is this one; everything downstream (row_number, dedup,
-    merge-join on the same keys) is partition-local or AQE-coalesced."""
-    cols = [F.col(k) for k in S.MERGE_KEYS]
-    if n_partitions:
-        return events.repartition(n_partitions, *cols)
-    return events.repartition(*cols)
-
-
-def lww_resolve(events: DataFrame, dedup_replay: bool = False) -> DataFrame:
+def lww_resolve(events: DataFrame) -> DataFrame:
     """Collapse each (repo, path) to its last writer.
 
     Ordering: global binlog order `seq` (file/pos flattened), which in
@@ -60,9 +39,7 @@ def lww_resolve(events: DataFrame, dedup_replay: bool = False) -> DataFrame:
     Exact duplicate deliveries (same seq re-delivered after a source
     retry) are already collapsed by the aggregation — the winner is one
     of the identical copies — so no separate dropDuplicates shuffle is
-    needed. Pass dedup_replay=True only when duplicates must also be
-    removed from NON-winning positions (e.g. before exact per-key event
-    counts).
+    needed.
 
     Implementation: groupBy(keys).agg(max_by(row, seq)) instead of a
     row_number window. Same winner, but the aggregate gets MAP-SIDE
@@ -71,8 +48,6 @@ def lww_resolve(events: DataFrame, dedup_replay: bool = False) -> DataFrame:
     100k+ events/s locally, and the difference between a sort-based and
     a combine-based exchange at 10^10 events."""
     ev = with_key(events)
-    if dedup_replay:
-        ev = ev.dropDuplicates(["seq"] if "gtid_uuid" not in ev.columns else ["gtid_uuid", "gno", "seq"])
     row_cols = [c for c in ev.columns if c not in S.MERGE_KEYS]
     winner = F.max_by(F.struct(*row_cols), F.col("seq")).alias("_w")
     return (
@@ -82,102 +57,110 @@ def lww_resolve(events: DataFrame, dedup_replay: bool = False) -> DataFrame:
     )
 
 
-def to_upsert_rows_partial(events: DataFrame, schema_ver: int = S.LATEST_SCHEMA_VER) -> DataFrame:
-    """MINIMAL row-image upsert projection (binlog_row_image=MINIMAL,
-    core/parser_test.go:727-755): update images carry only the merge
-    keys + changed columns; `changed_cols` lists them (NULL = full
-    image). Unchanged columns must NOT clobber stored values, so rows
-    keep `_changed_cols` and IcebergLiteTable.commit switches to its
-    columnar-LWW merge path.
-
-    Correctness note (why one pass suffices): INSERT images are always
-    complete, and a re-insert after DELETE therefore re-supplies every
-    column at a seq above the delete — so per-column last-present-writer
-    can never leak a pre-delete value into a live row."""
-    mask = F.when(F.col("op") == S.OP_UPDATE, F.col("changed_cols")).cast("array<string>")
-    return to_upsert_rows(events, schema_ver, extra=[mask.alias("_changed_cols")])
-
-
-def to_upsert_rows_evolved(
-    resolved: DataFrame,
-    columns: list[str],
-    valid_from: dict[str, int | None],
-    extra: list | None = None,
+def to_upsert_rows(
+    events: DataFrame,
+    columns: Sequence[str] = tuple(S.payload_columns()),
+    *,
     sources: dict[str, list[tuple[int | None, str]]] | None = None,
+    minimal: bool = False,
 ) -> DataFrame:
-    """to_upsert_rows with a DDL-derived column set (VERDICT r5 #4 —
-    ALTER TABLE in the event stream drives evolution): `columns` is the
-    table's column set AFTER applying the batch's DDL timeline, and
-    `valid_from[col]` is the seq of the ALTER that ADDed the column
-    (None = existed before this batch). A column's value is masked to
-    NULL for events BEFORE its ALTER — the column did not exist yet, so
-    wire bytes there are noise, and masking is what makes the replay
-    independent of whether upstream producers race the DDL. Columns the
-    envelope doesn't carry at all (ALTER ahead of any data) project as
-    typed NULLs — the NULL backfill the oracle observes.
+    """Project events (keys materialized by with_key) to MERGE source
+    rows: the merge keys, `columns`' values, the `_deleted` tombstone
+    flag and `_seq`/`_log_file`/`_log_pos` provenance. Keys may repeat;
+    the table commit's merge is the per-key LWW.
 
-    `sources` (CHANGE COLUMN renames, VERDICT r6 #2) generalizes
-    valid_from per column to a WIRE-NAME TIMELINE: ascending segments
-    [(from_seq | None, wire_name), ...] — an event at seq s reads the
-    column's value from the wire field of the segment covering s
-    (`CASE WHEN seq >= s_k THEN after.n_k ... ELSE after.n_0 / NULL`).
-    A column renamed mid-batch thus draws old-name bytes before the
-    ALTER and new-name bytes after it, with no extra pass. Entirely a
-    projection: no extra shuffle, evolution costs nothing at 100 TB."""
-    after_fields = set(resolved.schema["after"].dataType.fieldNames())
+    `sources` is a DDL timeline (pipeline.EvolutionPlan.sources): per
+    column its WIRE-NAME segments, ascending [(from_seq | None,
+    wire_name), ...]. An event at seq s reads the column from the wire
+    field of the segment covering s (`CASE WHEN seq >= s_k THEN
+    after.n_k ... ELSE after.n_0 / NULL`): a column ADDed at seq s is
+    NULL for earlier events even if wire bytes raced the ALTER, and a
+    CHANGE-renamed column draws old-name bytes before the ALTER and
+    new-name bytes after it. A column without a timeline reads its own
+    name for every event (the identity timeline); one the envelope does
+    not carry at all projects as a typed NULL (added-column NULL-fill).
+    Values land as text — evolved tables store uniform text, and a typed
+    wire field (e.g. a bigint ADDed column) must not mix physical
+    parquet types under one manifest column; over string payloads the
+    cast folds away. Entirely a projection: no extra pass.
+
+    minimal=True is the MINIMAL row-image shape (binlog_row_image=
+    MINIMAL, core/parser_test.go:727-755): rows also carry
+    `_changed_cols`, the update's presence list (NULL = full image), so
+    IcebergLiteTable.commit merges per column and unchanged columns do
+    not clobber stored values. INSERT images are complete, so a
+    re-insert after a DELETE re-supplies every column and per-column
+    last-present-writer cannot leak a pre-delete value. Under a
+    timeline the list follows the same renames and masks: an entry
+    equal to a column's wire name AT THE EVENT'S SEQ becomes the final
+    name (an entry outside its validity window stays untranslated and
+    inert), and an ADDed column's name is dropped from pre-ALTER
+    events, so a wire update racing the DDL can neither write the value
+    nor claim presence."""
+    sources = sources or {}
+    after_fields = set(events.schema["after"].dataType.fieldNames())
 
     def wire(name: str):
-        # cast: evolved tables store values as TEXT (the ddl layer's
-        # convention — check_type_change polices DECLARED types because
-        # storage is uniform text, so widening never rewrites). A typed
-        # wire field (e.g. a bigint ADDed column) must land as its
-        # literal string or later snapshots mix physical parquet types
-        # under one manifest column.
-        return (
-            F.col(f"after.{name}").cast("string")
-            if name in after_fields
-            else F.lit(None).cast("string")
-        )
+        if name in after_fields:
+            return F.col(f"after.{name}").cast("string")
+        return F.lit(None).cast("string")
 
     proj = [F.col(k) for k in S.MERGE_KEYS]
     for c in columns:
         if c in S.MERGE_KEYS:
             continue
-        segs = (sources or {}).get(c) or [(valid_from.get(c), c)]
-        first_seq, first_name = segs[0]
-        base = F.lit(None).cast("string") if first_seq is not None else wire(first_name)
-        expr = base
         # later segments override earlier ones: build the CASE from the
         # earliest boundary up, each `when` stacked on top
-        for lo, name in segs if first_seq is not None else segs[1:]:
-            if lo is None:
-                continue
-            expr = F.when(F.col("seq") >= F.lit(lo), wire(name)).otherwise(expr)
+        expr = F.lit(None).cast("string")
+        for lo, name in sources.get(c) or [(None, c)]:
+            expr = wire(name) if lo is None else F.when(
+                F.col("seq") >= F.lit(lo), wire(name)
+            ).otherwise(expr)
         proj.append(expr.alias(c))
     proj.append((F.col("op") == S.OP_DELETE).alias("_deleted"))
     proj.append(F.col("seq").alias("_seq"))
     proj.append(F.col("log_file").alias("_log_file"))
     proj.append(F.col("log_pos").alias("_log_pos"))
-    return resolved.select(*proj, *(extra or []))
+    if minimal:
+        proj.append(_presence(sources).alias("_changed_cols"))
+    return events.select(*proj)
 
 
-def to_upsert_rows(
-    resolved: DataFrame,
-    schema_ver: int = S.LATEST_SCHEMA_VER,
-    extra: list | None = None,
-) -> DataFrame:
-    """Project events/LWW winners to MERGE source rows with `_deleted`
-    tombstone flags. Schema evolution: payload columns of the requested
-    version; columns absent in older events surface as NULL
-    (added-column NULL-fill), dropped columns are projected away."""
-    cols = S.payload_columns(schema_ver)
-    proj = [F.col(k) for k in S.MERGE_KEYS]
-    for c in cols:
-        if c in S.MERGE_KEYS:
-            continue
-        proj.append(F.col(f"after.{c}").alias(c))
-    proj.append((F.col("op") == S.OP_DELETE).alias("_deleted"))
-    proj.append(F.col("seq").alias("_seq"))
-    proj.append(F.col("log_file").alias("_log_file"))
-    proj.append(F.col("log_pos").alias("_log_pos"))
-    return resolved.select(*proj, *(extra or []))
+def _presence(sources: dict[str, list[tuple[int | None, str]]]):
+    """The MINIMAL presence list under a DDL timeline (to_upsert_rows)."""
+    mask = F.when(F.col("op") == S.OP_UPDATE, F.col("changed_cols")).cast(
+        "array<string>"
+    )
+    # rename translation FIRST: each segment's window is [its seq, next
+    # segment's seq)
+    rename_rules = [
+        (c, lo, segs[i + 1][0] if i + 1 < len(segs) else None, name)
+        for c, segs in sources.items()
+        for i, (lo, name) in enumerate(segs)
+        if name != c
+    ]
+    if rename_rules:
+
+        def _tr(x):
+            expr = x
+            for c, lo, hi, name in rename_rules:
+                cond = x == F.lit(name)
+                if lo is not None:
+                    cond = cond & (F.col("seq") >= F.lit(lo))
+                if hi is not None:
+                    cond = cond & (F.col("seq") < F.lit(hi))
+                expr = F.when(cond, F.lit(c)).otherwise(expr)
+            return expr
+
+        mask = F.transform(mask, _tr)
+
+    def _drop_pre_alter(m, col, lo):
+        # factory, not default-arg capture: pyspark reads the lambda's
+        # full parameter count as the higher-order-function arity
+        return F.filter(m, lambda x: ~((x == F.lit(col)) & (F.col("seq") < F.lit(lo))))
+
+    for c, segs in sources.items():
+        lo = segs[0][0]
+        if lo is not None:
+            mask = _drop_pre_alter(mask, c, lo)
+    return mask

@@ -1,16 +1,16 @@
 """End-to-end batch replay: the new-engine lifecycle of SURVEY.md §3.4.
 
 read events (partition-pruned) -> [decode] -> filters (F1-F8, Catalyst)
--> flashback remap (optional) -> LWW window dedup per (repo, path)
--> salted repartition -> MERGE into the Iceberg-lite table
-   (+ commit manifest + lineage + metrics)
+-> DDL evolution plan (given a table_meta) -> flashback remap (optional)
+-> upsert projection -> MERGE into the Iceberg-lite table, whose merge
+   aggregate is the per-key LWW (+ commit manifest + lineage + metrics)
 
-The DDL-evolution planner (`plan_ddl_evolution`) and the upsert
-projection (`project_upserts`) are module-level so the CONTINUOUS
-streaming ingest applies exactly the same evolution semantics per
-micro-batch (streaming.pipeline.start_ingest, VERDICT r7 #2) as this
-batch replay does per call — the reference handles DDL inline in its
-live loop (core/parser.go:2314-2339), so must the tail.
+`apply_batch` is that whole step from events to commit. Batch `replay`
+runs it once per call and the CONTINUOUS streaming ingest
+(streaming.pipeline.start_ingest) once per micro-batch, so the tail
+applies exactly the same evolution semantics as a replay — the
+reference handles DDL inline in its live loop (core/parser.go:2314-2339),
+so must the tail.
 """
 
 from __future__ import annotations
@@ -51,7 +51,7 @@ class EvolutionPlan:
     sources: dict[str, list[tuple[int | None, str]]] = field(default_factory=dict)
     drop_columns: list[str] = field(default_factory=list)
     rename_columns: dict[str, str] = field(default_factory=dict)
-    evolved_cols: list[str] | None = None
+    evolved_cols: list[str] = field(default_factory=list)
     applied_ddl_seq: int | None = None
     #: MODIFY/CHANGE declared-type changes over STORED columns, as
     #: (stored-name-at-batch-start, new declared type) — input to the
@@ -159,74 +159,6 @@ def plan_ddl_evolution(
     )
 
 
-def project_upserts(
-    ev: DataFrame,
-    *,
-    row_image: str = "FULL",
-    schema_ver: int = S.LATEST_SCHEMA_VER,
-    plan: EvolutionPlan | None = None,
-) -> DataFrame:
-    """DML events (keys materialized, DDL rows already filtered out) ->
-    MERGE upsert rows, honoring an EvolutionPlan when given. Shared by
-    batch replay and the streaming ingest's foreachBatch."""
-    if plan is None or plan.evolved_cols is None:
-        if row_image == "MINIMAL":
-            return R.to_upsert_rows_partial(ev, schema_ver=schema_ver)
-        return R.to_upsert_rows(ev, schema_ver=schema_ver)
-    sources, evolved_cols = plan.sources, plan.evolved_cols
-    if row_image != "MINIMAL":
-        return R.to_upsert_rows_evolved(ev, evolved_cols, {}, sources=sources)
-    # MINIMAL + DDL evolution (VERDICT r6 #3): evolved column set +
-    # per-column presence. An ADDed column is masked for pre-ALTER
-    # events twice over — its VALUE projects NULL (to_upsert_rows_
-    # evolved) and its NAME is filtered out of `_changed_cols`, so a
-    # wire update racing the DDL can neither write the value nor
-    # claim presence; full images (NULL mask) stay full.
-    mask = F.when(F.col("op") == S.OP_UPDATE, F.col("changed_cols")).cast(
-        "array<string>"
-    )
-    # rename translation FIRST: a presence entry equal to a column's
-    # wire name AT THE EVENT'S SEQ becomes the final name (each
-    # segment's window is [its seq, next segment's seq)); an entry
-    # under a name outside its validity window stays untranslated
-    # and is INERT — the per-column merge only consults entries
-    # matching live table columns
-    rename_rules = [
-        (c, lo, segs[i + 1][0] if i + 1 < len(segs) else None, name)
-        for c, segs in sources.items()
-        for i, (lo, name) in enumerate(segs)
-        if name != c
-    ]
-    if rename_rules:
-
-        def _tr(x):
-            expr = x
-            for c, lo, hi, name in rename_rules:
-                cond = x == F.lit(name)
-                if lo is not None:
-                    cond = cond & (F.col("seq") >= F.lit(lo))
-                if hi is not None:
-                    cond = cond & (F.col("seq") < F.lit(hi))
-                expr = F.when(cond, F.lit(c)).otherwise(expr)
-            return expr
-
-        mask = F.transform(mask, _tr)
-
-    def _drop_pre_alter(m, col, lo):
-        # factory, not default-arg capture: pyspark reads the lambda's
-        # full parameter count as the higher-order-function arity
-        return F.filter(m, lambda x: ~((x == F.lit(col)) & (F.col("seq") < F.lit(lo))))
-
-    for c, segs in sources.items():
-        lo = segs[0][0]
-        if lo is not None:
-            mask = _drop_pre_alter(mask, c, lo)
-    return R.to_upsert_rows_evolved(
-        ev, evolved_cols, {}, sources=sources,
-        extra=[mask.alias("_changed_cols")],
-    )
-
-
 def collect_ddl_rows(ev: DataFrame) -> list:
     """The batch's op='ddl' Query events — metadata-scale (one row per
     schema change), so the collect is a few rows at any data scale."""
@@ -237,71 +169,38 @@ def collect_ddl_rows(ev: DataFrame) -> list:
     )
 
 
-def replay(
+def apply_batch(
     events: DataFrame,
     table: IcebergLiteTable,
     batch_id: str,
     *,
     flashback: bool = False,
-    schema_ver: int = S.LATEST_SCHEMA_VER,
-    repartition: int | None = None,
     row_image: str = "FULL",
-    table_meta: "TableMeta | None" = None,
-    evolve_from_ddl: bool = False,
+    table_meta: Any = None,
+    min_ddl_seq: int | None = None,
     validate_stored: bool = False,
     **filter_kwargs: Any,
-) -> dict[str, Any]:
-    """Replay a set of change events into the target table. Returns the
-    commit metrics. Filters are applied BEFORE any widening transform so
-    Catalyst pushes them into the scan.
+) -> tuple[dict[str, Any], EvolutionPlan | None]:
+    """One batch of change events -> one table commit; the step batch
+    replay and every streaming micro-batch share. Returns (the commit
+    metrics, the batch's EvolutionPlan or None without `table_meta`).
 
-    evolve_from_ddl=True (VERDICT r5 #4): ALTER TABLE statements
-    carried by the stream's own op='ddl' events drive the target
-    table's schema — an ADD COLUMN takes effect at the ALTER's seq
-    (events before it are masked to NULL even if wire bytes raced the
-    DDL; stored rows NULL-backfill on read), a DROP COLUMN leaves the
-    current schema at this commit (time travel still sees it), a
-    CHANGE old new TYPE renames (stored values carry to the new name
-    with NO bucket rewrite — manifest aliases; wire values switch
-    source field at the ALTER's seq), a MODIFY validates the declared
-    type change (loud on lossy narrowing — ddl.check_type_change).
-    `validate_stored=True` (VERDICT r7 #4) additionally SCANS the
-    stored values of each MODIFY/CHANGEd column and rejects the batch
-    when existing text does not parse under the new declared type —
-    MySQL's reject-on-nonconforming-ALTER (one pushed-down filter pass,
-    opt-in because it reads the table before committing).
-    Composes with row_image="MINIMAL" for the FULL statement surface
-    (VERDICT r6 #3). Only flashback+DDL stays excluded (reference
-    semantics, core/parser.go:2316). Needs `table_meta` (the table's
-    registry entry — e.g. from ddl.parse_schema_file — naming its
-    db/table and pre-batch columns)."""
-    if evolve_from_ddl:
-        # the DDL events ARE the evolution signal — keep them through
-        # the gates (they leave the DML path right below)
-        filter_kwargs.setdefault("include_ddl", True)
-    ev = FL.apply_filters(events, flashback=flashback, **filter_kwargs)
-    plan: EvolutionPlan | None = None
-    if evolve_from_ddl:
-        if table_meta is None:
-            raise ValueError("evolve_from_ddl=True requires table_meta")
-        if flashback:
-            raise NotImplementedError(
-                "flashback excludes DDL by definition (the reference skips "
-                "DDL in flashback mode); evolve at batch boundaries instead"
-            )
-        if "statement" not in ev.columns:
-            raise ValueError(
-                "evolve_from_ddl=True but the stream has no `statement` "
-                "column (op='ddl' Query events carry it)"
-            )
-        plan = plan_ddl_evolution(collect_ddl_rows(ev), table_meta)
-        if validate_stored and plan.type_checks and table.latest_manifest():
-            from bingo2sql_spark import ddl as DL
-
-            DL.validate_stored_values(
-                table.read(events.sparkSession), plan.type_checks, S.MERGE_KEYS
-            )
-    ev = ev.filter(F.col("op") != S.OP_DDL)
+    Filters run BEFORE any widening transform so Catalyst pushes them
+    into the scan. Given `table_meta`, the batch's own op='ddl' rows are
+    kept through the gates and planned into an EvolutionPlan against it
+    (`min_ddl_seq`: see plan_ddl_evolution); `validate_stored` then
+    scans the stored values of each MODIFY/CHANGEd column before
+    anything is written. DDL rows leave the DML path, flashback inverts
+    it (the commit rebases the inverted seqs past the table's head), and
+    the keyed events project to upsert rows of the plan's column set and
+    wire-name timeline — the table's merge aggregate IS the per-key LWW,
+    so there is no pre-resolve pass. The commit applies the plan's drops
+    and renames to the stored data."""
+    if flashback and table_meta is not None:
+        raise NotImplementedError(
+            "flashback excludes DDL by definition (the reference skips "
+            "DDL in flashback mode); evolve at batch boundaries instead"
+        )
     if flashback and row_image == "MINIMAL":
         # same constraint as MySQL flashback tooling: rollback needs the
         # FULL before image; a MINIMAL stream never logged the unchanged
@@ -311,25 +210,85 @@ def replay(
             "columns were never logged (set binlog_row_image=FULL upstream, "
             "as the reference requires for flashback)"
         )
+    if table_meta is not None:
+        # the DDL events ARE the evolution signal — keep them through
+        # the gates (they leave the DML path right below)
+        filter_kwargs.setdefault("include_ddl", True)
+    ev = FL.apply_filters(events, flashback=flashback, **filter_kwargs)
+    plan: EvolutionPlan | None = None
+    if table_meta is not None:
+        if "statement" not in ev.columns:
+            raise ValueError(
+                "table_meta given but the stream has no `statement` column "
+                "(op='ddl' Query events carry it)"
+            )
+        plan = plan_ddl_evolution(collect_ddl_rows(ev), table_meta, min_ddl_seq=min_ddl_seq)
+        if validate_stored and plan.type_checks and table.latest_manifest():
+            # reject the batch like MySQL rejects an ALTER over
+            # nonconforming rows, before anything commits
+            from bingo2sql_spark import ddl as DL
+
+            DL.validate_stored_values(
+                table.read(events.sparkSession), plan.type_checks, S.MERGE_KEYS
+            )
+    ev = ev.filter(F.col("op") != S.OP_DDL)
     if flashback:
-        # rollback becomes NEW log traffic past the head (see
-        # flashback.py). The rebase is DEFERRED into the commit
-        # (rebase_past_head): invert only reverses order (seq' = -seq)
-        # and commit shifts by head - min(seq') + 1 == head + max(seq)
-        # + 1, with min(seq') riding the commit's existing pruning
-        # pre-pass — no extra scan of the source per flashback batch
-        # (VERDICT r3 #4).
         ev = FB.invert(ev)
-    ev = R.with_key(ev)
-    if repartition:
-        ev = R.salted_repartition(ev, repartition)
-    # no pre-resolve pass: IcebergLiteTable.commit's merge groupBy IS the
-    # per-key LWW (one shuffle instead of two)
-    batch = project_upserts(ev, row_image=row_image, schema_ver=schema_ver, plan=plan)
-    return table.commit(
+    columns, sources = (plan.evolved_cols, plan.sources) if plan else (S.payload_columns(), None)
+    batch = R.to_upsert_rows(
+        R.with_key(ev), columns, sources=sources, minimal=row_image == "MINIMAL"
+    )
+    metrics = table.commit(
         batch,
         batch_id,
         rebase_past_head=flashback,
         drop_columns=(plan.drop_columns if plan else None) or None,
         rename_columns=(plan.rename_columns if plan else None) or None,
     )
+    return metrics, plan
+
+
+def replay(
+    events: DataFrame,
+    table: IcebergLiteTable,
+    batch_id: str,
+    *,
+    flashback: bool = False,
+    row_image: str = "FULL",
+    table_meta: "TableMeta | None" = None,
+    validate_stored: bool = False,
+    **filter_kwargs: Any,
+) -> dict[str, Any]:
+    """Replay a set of change events into the target table (apply_batch).
+    Returns the commit metrics.
+
+    Given `table_meta` (the table's registry entry — e.g. from
+    ddl.parse_schema_file — naming its db/table and pre-batch columns),
+    ALTER TABLE statements carried by the stream's own op='ddl' events
+    drive the target table's schema — an ADD COLUMN takes effect at the
+    ALTER's seq (events before it are masked to NULL even if wire bytes
+    raced the DDL; stored rows NULL-backfill on read), a DROP COLUMN
+    leaves the current schema at this commit (time travel still sees
+    it), a CHANGE old new TYPE renames (stored values carry to the new
+    name with NO bucket rewrite — manifest aliases; wire values switch
+    source field at the ALTER's seq), a MODIFY validates the declared
+    type change (loud on lossy narrowing — ddl.check_type_change).
+    `validate_stored=True` additionally SCANS the stored values of each
+    MODIFY/CHANGEd column and rejects the batch when existing text does
+    not parse under the new declared type — MySQL's
+    reject-on-nonconforming-ALTER (one pushed-down filter pass, opt-in
+    because it reads the table before committing). Composes with
+    row_image="MINIMAL" for the FULL statement surface.
+
+    flashback=True applies the rollback of the events: rollback becomes
+    NEW log traffic past the head (see flashback.py). Flashback excludes
+    DDL (reference semantics, core/parser.go:2316) and needs FULL row
+    images."""
+    return apply_batch(
+        events, table, batch_id,
+        flashback=flashback,
+        row_image=row_image,
+        table_meta=table_meta,
+        validate_stored=validate_stored,
+        **filter_kwargs,
+    )[0]

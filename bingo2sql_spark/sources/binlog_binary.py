@@ -876,7 +876,6 @@ def parse_binlog_bytes(
     data: bytes,
     *,
     log_file: str = "binlog",
-    file_ordinal: int | None = None,
     names_for: dict[str, list] | None = None,
     schema_ver: int = 2,
 ) -> Iterator[dict]:
@@ -885,9 +884,7 @@ def parse_binlog_bytes(
     the stream into events and feed BinlogEventParser."""
     if data[:4] != BINLOG_MAGIC:
         raise BinlogFormatError("bad binlog magic (not a binlog v4 file)")
-    p = BinlogEventParser(
-        log_file, file_ordinal, names_for, schema_ver
-    )
+    p = BinlogEventParser(log_file, names_for=names_for, schema_ver=schema_ver)
     pos = 4
     total = len(data)
     while pos + _HEADER_LEN <= total:
@@ -998,11 +995,11 @@ class BinlogWriter:
     the decoder supports; used by tests, the oracle round-trip query,
     and bench."""
 
-    def __init__(self, *, checksum: bool = True, server_version: str = "8.0.36"):
+    def __init__(self, *, checksum: bool = True):
         self.checksum = checksum
         self.buf = bytearray(BINLOG_MAGIC)
         self._table_ids: dict[str, int] = {}
-        self._emit_fde(server_version)
+        self._emit_fde("8.0.36")
 
     def _append(self, ts: int, etype: int, body: bytes) -> None:
         tail = 4 if (self.checksum and etype != FORMAT_DESCRIPTION_EVENT) else 0

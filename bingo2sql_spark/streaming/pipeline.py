@@ -32,8 +32,8 @@ from pyspark.sql.streaming import StreamingQuery
 
 from bingo2sql_spark import schema as S
 from bingo2sql_spark.operators import filters as FL
-from bingo2sql_spark.operators import resolve as R
 from bingo2sql_spark.operators.apply import IcebergLiteTable
+from bingo2sql_spark.pipeline import apply_batch
 
 
 def stream_events(
@@ -48,10 +48,10 @@ def stream_events(
     code over a Kafka/object-store landing zone. `with_statement` adds
     the op='ddl' Query events' `statement` column to the read schema
     (NULL on DML rows and on landings that never carried it) — required
-    by evolve_from_ddl. `schema` overrides the whole read schema — an
-    evolving deployment's landing carries wider payload structs than
-    the pinned registry version (e.g. both spellings of a renamed
-    column while producers race the DDL)."""
+    by table_meta-driven evolution. `schema` overrides the whole read
+    schema — an evolving deployment's landing carries wider payload
+    structs than the pinned registry version (e.g. both spellings of a
+    renamed column while producers race the DDL)."""
     from pyspark.sql import types as T
 
     if schema is None:
@@ -80,12 +80,10 @@ def start_ingest(
     stop_max_rows: int | None = None,
     stop_on_gtid_exhaustion: bool = False,
     stop_poll_secs: float = 0.5,
-    schema_ver: int = S.LATEST_SCHEMA_VER,
     row_image: str = "FULL",
     source_format: str = "envelope_parquet",
     on_commit: Any = None,
     table_meta: Any = None,
-    evolve_from_ddl: bool = False,
     validate_stored: bool = False,
     source_schema: Any = None,
     table_schemas: dict[str, list] | None = None,
@@ -135,15 +133,15 @@ def start_ingest(
     with the replicated corpus); exactly-once analysis in the hook-call
     comment below.
 
-    evolve_from_ddl=True (VERDICT r7 #2): ALTER TABLE statements
-    arriving MID-TAIL drive the target table's schema inside
-    foreachBatch — the same planner/projection the batch replay uses
-    (pipeline.plan_ddl_evolution / project_upserts: ADD at the ALTER's
-    seq, DROP, CHANGE renames via manifest aliases, MODIFY narrowing
-    checks, MINIMAL composition), applied per micro-batch against a
-    registry entry that EVOLVES across batches. The reference's live
-    loop does this inline (core/parser.go:2314-2339). Needs
-    `table_meta` (the entry's state at tail start). Restart safety: the
+    Each micro-batch goes through pipeline.apply_batch, the step batch
+    replay uses. Given `table_meta` (the registry entry's state at tail
+    start), ALTER TABLE statements arriving MID-TAIL drive the target
+    table's schema inside foreachBatch with replay's evolution semantics
+    (ADD at the ALTER's seq, DROP, CHANGE renames via manifest aliases,
+    MODIFY narrowing checks, MINIMAL composition), applied per
+    micro-batch against a registry entry that EVOLVES across batches.
+    The reference's live loop does this inline
+    (core/parser.go:2314-2339). Restart safety: the
     evolved meta + the highest applied DDL seq persist atomically to
     `<table>/_schema_meta.json` after each commit — a checkpoint
     restart resumes from the post-DDL schema, a re-delivered epoch's
@@ -152,22 +150,20 @@ def start_ingest(
     epochs reset), and a crash between commit and persist just
     re-derives the same plan from the re-delivered epoch. Envelope
     landings only: the raw wire shapes don't carry `statement`."""
-    if evolve_from_ddl:
-        if table_meta is None:
-            raise ValueError("evolve_from_ddl=True requires table_meta")
-        if source_format not in ("envelope_parquet", "binlog"):
-            raise NotImplementedError(
-                "evolve_from_ddl needs a landing that carries op='ddl' "
-                f"`statement` rows (envelope_parquet or binlog); "
-                f"{source_format!r} does not"
-            )
-        filter_kwargs.setdefault("include_ddl", True)
+    evolve = table_meta is not None
+    if evolve and source_format not in ("envelope_parquet", "binlog"):
+        raise NotImplementedError(
+            "table_meta needs a landing that carries op='ddl' "
+            f"`statement` rows (envelope_parquet or binlog); "
+            f"{source_format!r} does not"
+        )
     if source_format == "binlog":
         # S1 over rotating binlog FILES: tail a directory of real
         # binlog v4 bytes (file order = rotation order); each new file
         # decodes in one task. DDL statements ride the envelope, so
-        # evolve_from_ddl composes. `table_schemas` is the parser's
-        # column registry (names, ColumnMeta for UNSIGNED columns).
+        # table_meta-driven evolution composes. `table_schemas` is the
+        # parser's column registry (names, ColumnMeta for UNSIGNED
+        # columns).
         from bingo2sql_spark.sources.binlog_binary import (
             decode_binlog_df, payload_schema_from,
         )
@@ -179,18 +175,12 @@ def start_ingest(
         if max_files_per_trigger:
             reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
         raw = decode_binlog_df(reader.load(events_dir), table_schemas)
-        stream = decode_events(
-            raw, schema_ver=schema_ver,
-            payload=payload_schema_from(table_schemas),
-        )
+        stream = decode_events(raw, payload=payload_schema_from(table_schemas))
     elif source_format == "raw_jsonl":
         from bingo2sql_spark.sources.decode import decode_events
         from bingo2sql_spark.sources.layout import stream_raw_jsonl
 
-        stream = decode_events(
-            stream_raw_jsonl(spark, events_dir, max_files_per_trigger),
-            schema_ver=schema_ver,
-        )
+        stream = decode_events(stream_raw_jsonl(spark, events_dir, max_files_per_trigger))
     elif source_format == "raw_socket":
         # push-based network tail (events_dir = "host:port"); see
         # layout.stream_raw_socket for the fault-tolerance caveat
@@ -206,13 +196,11 @@ def start_ingest(
                 f"source_format='raw_socket' needs events_dir as 'host:port', "
                 f"got {events_dir!r}"
             )
-        stream = decode_events(
-            stream_raw_socket(spark, host, int(port)), schema_ver=schema_ver
-        )
+        stream = decode_events(stream_raw_socket(spark, host, int(port)))
     else:
         stream = stream_events(
             spark, events_dir, max_files_per_trigger,
-            with_statement=evolve_from_ddl, schema=source_schema,
+            with_statement=evolve, schema=source_schema,
         )
 
     # ---- stop-condition plumbing (pre-filter observation) -----------------
@@ -285,7 +273,7 @@ def start_ingest(
     # ---- DDL-evolution state (see docstring) -------------------------------
     evo_meta_path = os.path.join(table.path, "_schema_meta.json")
     evo_state: dict[str, Any] = {"meta": table_meta, "applied_seq": None}
-    if evolve_from_ddl and os.path.exists(evo_meta_path):
+    if evolve and os.path.exists(evo_meta_path):
         with open(evo_meta_path) as f:
             saved = json.load(f)
         from bingo2sql_spark.schema import TableMeta as _TM
@@ -328,45 +316,18 @@ def start_ingest(
             # narrow gate aggregate on the PRE-filter batch (header
             # columns only — the payload never leaves the scan)
             g = batch_df.agg(*gate_exprs).collect()[0]
-        batch_df = FL.apply_filters(batch_df, **filter_kwargs)
-        plan = None
-        if evolve_from_ddl:
-            # the batch's DDL timeline, resolved against the EVOLVING
-            # registry entry; the seq cursor skips rows an earlier
-            # attempt already applied (re-delivered epochs)
-            from bingo2sql_spark.pipeline import collect_ddl_rows, plan_ddl_evolution
-
-            plan = plan_ddl_evolution(
-                collect_ddl_rows(batch_df),
-                evo_state["meta"],
-                min_ddl_seq=evo_state["applied_seq"],
-            )
-            if validate_stored and plan.type_checks and table.latest_manifest():
-                # opt-in MODIFY/CHANGE conformance scan (VERDICT r7 #4):
-                # reject the batch like MySQL rejects an ALTER over
-                # nonconforming rows; the raise fails the query LOUDLY
-                # before the epoch commits, so a fixed registry/stream
-                # can resume from the same checkpoint
-                from bingo2sql_spark import ddl as DL
-
-                DL.validate_stored_values(
-                    table.read(batch_df.sparkSession),
-                    plan.type_checks,
-                    S.MERGE_KEYS,
-                )
-        batch_df = batch_df.filter(F.col("op") != S.OP_DDL)
-        # LWW happens inside the table's merge groupBy (apply.py)
-        keyed = R.with_key(batch_df)
-        from bingo2sql_spark.pipeline import project_upserts
-
-        upserts = project_upserts(
-            keyed, row_image=row_image, schema_ver=schema_ver, plan=plan
-        )
-        m = table.commit(
-            upserts,
-            batch_id=f"stream-{_query_scope()}-{epoch_id}",
-            drop_columns=(plan.drop_columns if plan else None) or None,
-            rename_columns=(plan.rename_columns if plan else None) or None,
+        # the batch's DDL timeline resolves against the EVOLVING registry
+        # entry; the seq cursor skips DDL rows an earlier attempt already
+        # applied (re-delivered epochs). A validate_stored rejection fails
+        # the query LOUDLY before the epoch commits, so a fixed registry
+        # or stream can resume from the same checkpoint.
+        m, plan = apply_batch(
+            batch_df, table, f"stream-{_query_scope()}-{epoch_id}",
+            row_image=row_image,
+            table_meta=evo_state["meta"],
+            min_ddl_seq=evo_state["applied_seq"],
+            validate_stored=validate_stored,
+            **filter_kwargs,
         )
         m["epoch_id"] = epoch_id
         if plan is not None:

@@ -1,5 +1,6 @@
-import sys, io, re
-sys.path.insert(0, "/root/repo")
+import sys, io, os, re
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 from bingo2sql_spark.session import get_spark
 from pyspark.sql import functions as F
 
@@ -26,7 +27,9 @@ import tempfile
 from bingo2sql_spark.sources.synth import generate_events, to_raw
 from bingo2sql_spark.sources.decode import decode_events
 from bingo2sql_spark.operators import resolve as R
-d = tempfile.mkdtemp(dir="/dev/shm")
+# sample inputs and the commit's table; removed when the script ends
+tmp = tempfile.TemporaryDirectory()
+d = tmp.name
 to_raw(generate_events(spark, n_keys=2000, versions_per_key=4)).write.mode("overwrite").parquet(d + "/raw")
 raw = spark.read.parquet(d + "/raw")
 from pyspark.sql.readwriter import DataFrameWriter
@@ -119,5 +122,6 @@ for title, head, details, note in sections:
     out.write(f"## {title}\n\n{note}\n\n```\n{head.strip()}\n```\n\n")
     if details.strip():
         out.write(f"Key scan/exchange details:\n\n```\n{details.strip()[:2500]}\n```\n\n")
-open("/root/repo/docs/PLANS.md", "w").write(out.getvalue())
+open(os.path.join(REPO, "docs", "PLANS.md"), "w").write(out.getvalue())
+tmp.cleanup()
 print("WROTE", len(out.getvalue()))

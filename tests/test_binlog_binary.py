@@ -369,7 +369,7 @@ def test_cli_binlog_input_format(spark, tmp_path):
 def test_streaming_binlog_tail_with_ddl(spark, tmp_path):
     """S1 over rotating binlog files: a streaming ingest tails a
     directory of real binlog v4 bytes, applies a mid-stream ALTER
-    carried as a Query event (evolve_from_ddl), and lands the same
+    carried as a Query event (table_meta-driven evolution), and lands the same
     final state as a batch replay of the same log — checkpoint resume
     included (second file arrives after the first drain)."""
     import os
@@ -399,7 +399,7 @@ def test_streaming_binlog_tail_with_ddl(spark, tmp_path):
     ckpt = str(tmp_path / "ckpt")
     q = start_ingest(spark, str(bdir), table, ckpt, source_format="binlog",
                      table_schemas=names, table_meta=meta_t,
-                     evolve_from_ddl=True, tables=["repo_files"])
+                     tables=["repo_files"])
     q.awaitTermination(180)
     assert table.read(spark).count() == 10
 
@@ -420,7 +420,7 @@ def test_streaming_binlog_tail_with_ddl(spark, tmp_path):
 
     q2 = start_ingest(spark, str(bdir), table, ckpt, source_format="binlog",
                       table_schemas=names2, table_meta=meta_t,
-                      evolve_from_ddl=True, tables=["repo_files"])
+                      tables=["repo_files"])
     q2.awaitTermination(180)
     got = {r["path"]: (r["commit"], r["content"], r["stars"])
            for r in table.read(spark).collect()}

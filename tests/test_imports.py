@@ -54,15 +54,20 @@ def _names(node: ast.AST) -> set[str]:
     return out
 
 
+def _repo_files() -> list[pathlib.Path]:
+    """Every `.py` file of the repository outside hidden directories."""
+    return [
+        p for p in REPO.rglob("*.py")
+        if not any(part.startswith(".") for part in p.relative_to(REPO).parts)
+    ]
+
+
 def unreferenced_defs() -> list[str]:
     """Top-level functions and classes of the engine package that no
     `.py` file in the repository (engine, tests, cdcbench, bench.py,
     __spark_entry__.py, ...) mentions outside the definition's own
     body. Dunder names are skipped."""
-    files = [
-        p for p in REPO.rglob("*.py")
-        if not any(part.startswith(".") for part in p.relative_to(REPO).parts)
-    ]
+    files = _repo_files()
     # per top-level statement: how many statements mention each name
     mentions: dict[str, int] = {}
     defs = []
@@ -87,3 +92,28 @@ def unreferenced_defs() -> list[str]:
 def test_no_unreferenced_definitions():
     dead = unreferenced_defs()
     assert not dead, "definitions nothing references:\n" + "\n".join(dead)
+
+
+def unpassed_keyword_only() -> list[str]:
+    """Keyword-only parameters with a default (declared after `*`) of the
+    engine package's functions that no call in any `.py` file of the
+    repository passes by name: a setting no caller sets is dead."""
+    passed = set()
+    for p in _repo_files():
+        for node in ast.walk(ast.parse(p.read_text())):
+            if isinstance(node, ast.Call):
+                passed.update(k.arg for k in node.keywords if k.arg)
+    found = []
+    for p in sorted(PACKAGE.rglob("*.py")):
+        for node in ast.walk(ast.parse(p.read_text())):
+            if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            for arg, default in zip(node.args.kwonlyargs, node.args.kw_defaults):
+                if default is not None and arg.arg not in passed:
+                    found.append(f"{p.relative_to(REPO)}:{node.lineno} {node.name}({arg.arg}=)")
+    return found
+
+
+def test_keyword_only_parameters_are_passed():
+    dead = unpassed_keyword_only()
+    assert not dead, "keyword-only parameters no caller passes:\n" + "\n".join(dead)

@@ -5,7 +5,9 @@ Python UDFs in the relational path."""
 
 from __future__ import annotations
 
+import gc
 import os
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -490,7 +492,19 @@ def test_generate_sql_decodes_each_binlog_file_once(spark, tmp_path):
     def persistent() -> set:
         return set(sc._jsc.getPersistentRDDs().keySet())
 
+    # RDDs earlier tests left persisted (dedup's localCheckpoint blocks)
+    # are unpersisted by Spark's ContextCleaner whenever the JVM collects
+    # them, which can fall inside a call below. Collect that garbage
+    # first, so `held` holds only RDDs that stay for the whole test.
+    gc.collect()
+    sc._jvm.System.gc()
     held = persistent()
+    for _ in range(20):
+        time.sleep(0.25)
+        now = persistent()
+        if now == held:
+            break
+        held = now
     path, start = _flashback_binlog(tmp_path)
     events = _binlog_events(spark, path)
     # a schema file of two tables renders one branch per table
@@ -637,6 +651,80 @@ def test_commit_jobs_per_path(spark, tmp_path):
         "mor_delta": 2,
         "mor_delta_compaction": 5,
         "flashback_empty": 4,
+    }, jobs
+
+
+def test_replay_jobs_per_path(spark, tmp_path):
+    """Spark jobs per pipeline.replay() call, counted through a job group
+    set here, on each entry path: a FULL load and a FULL batch over
+    stored rows, a MINIMAL load, a table_meta load and a table_meta batch
+    whose DDL timeline ADDs one column and CHANGEs (renames) another, and
+    a flashback onto the stored table. The counts are pinned: a step
+    between the events and the commit that starts a job of its own shows
+    up here."""
+    import datetime
+
+    from pyspark.sql import types as T
+
+    from bingo2sql_spark import ddl as DL
+    from bingo2sql_spark import schema as S
+    from bingo2sql_spark.operators.apply import IcebergLiteTable
+    from bingo2sql_spark.pipeline import replay
+    from bingo2sql_spark.sources.synth import generate_events
+
+    jobs: dict[str, int] = {}
+
+    def run(name, events, table, batch_id, **kwargs):
+        m, jobs[name] = _jobs(
+            spark, f"replay-jobs-{name}",
+            lambda: replay(events, table, batch_id, tables=["repo_files"], **kwargs),
+        )
+        assert not m["skipped"], m
+        return m
+
+    ev = generate_events(spark, n_keys=120, versions_per_key=3, seed=11)
+    full = IcebergLiteTable(str(tmp_path / "full"), n_buckets=8)
+    run("full_fresh", ev.filter("seq < 200"), full, "f1")
+    run("full_stored", ev.filter("seq >= 200"), full, "f2")
+    run("flashback_stored", ev.filter("seq >= 300"), full, "fb", flashback=True)
+    minimal = generate_events(spark, n_keys=120, versions_per_key=3, seed=11,
+                              minimal_image=True)
+    run("minimal_fresh", minimal, IcebergLiteTable(str(tmp_path / "min"), n_buckets=8),
+        "m1", row_image="MINIMAL")
+
+    # DML seqs doubled so the two ALTERs sit between DML events
+    dml = ev.withColumn("seq", F.col("seq") * 2).withColumn(
+        "statement", F.lit(None).cast("string")
+    )
+    schema = T.StructType(list(S.ENVELOPE.fields) + [T.StructField("statement", T.StringType())])
+    alters = spark.createDataFrame([
+        (seq, "bin.000001", seq, None, None, datetime.datetime(2024, 1, 1), 1, "test",
+         "repo_files", S.OP_DDL,
+         None, None, None, 2, stmt)
+        for seq, stmt in [
+            (501, "ALTER TABLE test.repo_files ADD COLUMN stars varchar(8)"),
+            (601, "ALTER TABLE test.repo_files CHANGE lang language varchar(64)"),
+        ]
+    ], schema)
+    meta = DL.parse_schema_text(
+        "CREATE TABLE test.repo_files (repo varchar(64), path varchar(255), "
+        "commit varchar(64), lang varchar(16), content text, branch varchar(64), "
+        "PRIMARY KEY (repo, path))"
+    )["test.repo_files"]
+    evolved = IcebergLiteTable(str(tmp_path / "evolved"), n_buckets=8)
+    run("table_meta_fresh", dml.filter("seq < 400"), evolved, "e1", table_meta=meta)
+    run("table_meta_ddl", dml.filter("seq >= 400").unionByName(alters), evolved, "e2",
+        table_meta=meta)
+
+    cols = evolved.latest_manifest()["columns"]
+    assert "stars" in cols and "language" in cols and "lang" not in cols, cols
+    assert jobs == {
+        "full_fresh": 2,
+        "full_stored": 4,
+        "flashback_stored": 4,
+        "minimal_fresh": 2,
+        "table_meta_fresh": 2,
+        "table_meta_ddl": 5,
     }, jobs
 
 

@@ -320,16 +320,17 @@ def test_schema_evolution_partial_bucket_rewrite(spark, tmp_path):
     reads declare the manifest's union schema explicitly."""
     from pyspark.sql import functions as F
 
+    from bingo2sql_spark import schema as S
     from bingo2sql_spark.operators import resolve as R
     from bingo2sql_spark.sources.synth import generate_events
 
     t = IcebergLiteTable(str(tmp_path / "mix"), n_buckets=8)
     ev1 = generate_events(spark, n_keys=200, versions_per_key=2, evolve_frac=2.0)
-    t.commit(R.to_upsert_rows(R.with_key(ev1), schema_ver=1), "b1")
+    t.commit(R.to_upsert_rows(R.with_key(ev1), S.payload_columns(1)), "b1")
     ev2 = generate_events(
         spark, n_keys=200, versions_per_key=3, evolve_frac=0.0
     ).filter("seq >= 400 and seq % 67 = 0")  # few keys -> few buckets
-    t.commit(R.to_upsert_rows(R.with_key(ev2), schema_ver=2), "b2")
+    t.commit(R.to_upsert_rows(R.with_key(ev2), S.payload_columns(2)), "b2")
     df = t.read(spark)
     assert "branch" in df.columns
     got = {
@@ -394,6 +395,32 @@ def test_mor_write_mode_end_to_end(spark, small_events, tmp_path):
 
     with _pytest.raises(NotImplementedError, match="MINIMAL"):
         replay(parts[0], cow, batch_id="fbm", flashback=True, row_image="MINIMAL")
+
+
+def test_cow_commit_drops_rewritten_buckets_deltas(spark, tmp_path):
+    """A copy-on-write commit onto a table that still lists MOR deltas
+    merges each touched bucket's base and deltas into a new base, so the
+    manifest must drop those buckets' delta lists: a later read scans
+    the new bases alone (4 files, not 4 bases + 4 stale deltas) and the
+    state equals a CoW-only table fed the same two batches."""
+    from bingo2sql_spark.operators import resolve as R
+    from bingo2sql_spark.sources.synth import generate_events
+
+    ev = generate_events(spark, n_keys=64, versions_per_key=2, seed=3)
+    first = R.to_upsert_rows(R.with_key(ev.filter("seq < 64")))
+    second = R.to_upsert_rows(R.with_key(ev.filter("seq >= 64")))
+    path = str(tmp_path / "t")
+    IcebergLiteTable(path, n_buckets=4, write_mode="mor").commit(first, "m1")
+    t = IcebergLiteTable(path, n_buckets=4)
+    m = t.commit(second, "c2")
+    assert m["buckets_rewritten"] == 4, m
+    man = t.latest_manifest()
+    assert not any(man["deltas"].get(bk) for bk in man["buckets"]), man["deltas"]
+    assert len(t.read(spark).inputFiles()) == 4
+    control = IcebergLiteTable(str(tmp_path / "control"), n_buckets=4)
+    control.commit(first, "m1")
+    control.commit(second, "c2")
+    assert t.state_checksum(spark) == control.state_checksum(spark)
 
 
 def test_mor_minimal_row_images(spark, tmp_path):
@@ -1040,7 +1067,7 @@ def test_minimal_out_of_order_cross_commit_column_race(spark, tmp_path):
         from bingo2sql_spark import schema as S
 
         env = spark.createDataFrame(data, S.ENVELOPE)
-        return R.to_upsert_rows_partial(R.with_key(env))
+        return R.to_upsert_rows(R.with_key(env), minimal=True)
 
     for mode in ("cow", "mor"):
         t = IcebergLiteTable(str(tmp_path / f"oo_{mode}"), n_buckets=4,
@@ -1193,7 +1220,7 @@ def test_ddl_driven_schema_evolution_end_to_end(spark, tmp_path):
     ], ddl_schema)
 
     t = IcebergLiteTable(str(tmp_path / "evo"), n_buckets=4)
-    m1 = replay(events1, t, batch_id="e1", table_meta=meta, evolve_from_ddl=True)
+    m1 = replay(events1, t, batch_id="e1", table_meta=meta)
     got = {r["path"]: (r["content"], r["branch"])
            for r in t.read(spark).select("path", "content", "branch").collect()}
     assert got == {
@@ -1210,7 +1237,7 @@ def test_ddl_driven_schema_evolution_end_to_end(spark, tmp_path):
             stmt="ALTER TABLE test.repo_files DROP COLUMN branch"),
         row(301, "update", "f2", "c6", "two-v2"),
     ], ddl_schema)
-    m2 = replay(events2, t, batch_id="e2", table_meta=evolved, evolve_from_ddl=True)
+    m2 = replay(events2, t, batch_id="e2", table_meta=evolved)
     cur = t.read(spark)
     assert "branch" not in cur.columns  # dropped from the current schema
     vals = {r["path"]: r["content"] for r in cur.collect()}
@@ -1219,8 +1246,7 @@ def test_ddl_driven_schema_evolution_end_to_end(spark, tmp_path):
     old = t.read(spark, version=m1["snapshot"])
     assert "branch" in old.columns
     # exactly-once unaffected
-    assert replay(events2, t, batch_id="e2", table_meta=evolved,
-                  evolve_from_ddl=True)["skipped"]
+    assert replay(events2, t, batch_id="e2", table_meta=evolved)["skipped"]
 
 
 def test_inline_compaction_races_concurrent_delta_commit(spark, small_events, events_pdf, tmp_path, monkeypatch):
@@ -1450,7 +1476,7 @@ def test_change_column_rename_end_to_end(spark, tmp_path):
         _evo_schema(),
     )
     t = IcebergLiteTable(str(tmp_path / "ren"), n_buckets=4)
-    m1 = replay(events1, t, batch_id="r1", table_meta=meta, evolve_from_ddl=True)
+    m1 = replay(events1, t, batch_id="r1", table_meta=meta)
 
     events2 = spark.createDataFrame([
         # pre-rename wire update: carries the OLD spelling
@@ -1461,7 +1487,7 @@ def test_change_column_rename_end_to_end(spark, tmp_path):
         # post-rename wire update: carries the NEW spelling only
         _evo_row(101, "update", "f1", commit="c51", language="post", content="v1b"),
     ], _evo_schema())
-    m2 = replay(events2, t, batch_id="r2", table_meta=meta, evolve_from_ddl=True)
+    m2 = replay(events2, t, batch_id="r2", table_meta=meta)
     assert m2["buckets_rewritten"] < t.n_buckets  # untouched buckets remain
 
     cur = t.read(spark)
@@ -1480,8 +1506,7 @@ def test_change_column_rename_end_to_end(spark, tmp_path):
         k: f"L{i}" for i, k in enumerate(keys)
     }
     # exactly-once unaffected
-    assert replay(events2, t, batch_id="r2", table_meta=meta,
-                  evolve_from_ddl=True)["skipped"]
+    assert replay(events2, t, batch_id="r2", table_meta=meta)["skipped"]
 
     # rename-aware registry agrees with the replay's end schema
     evolved = DL.apply_alter(
@@ -1505,7 +1530,7 @@ def test_change_column_rename_first_batch_fresh_table(spark, tmp_path):
         _evo_row(101, "insert", "f1", commit="c2", language="new-wire",
                  content="v1"),
     ], _evo_schema())
-    replay(events, t, batch_id="b1", table_meta=meta, evolve_from_ddl=True)
+    replay(events, t, batch_id="b1", table_meta=meta)
     cur = t.read(spark)
     assert "language" in cur.columns and "lang" not in cur.columns
     assert {r["path"]: r["language"] for r in cur.collect()} == {
@@ -1525,13 +1550,13 @@ def test_change_column_rename_mor_read_path(spark, tmp_path):
                   content=f"v{i}") for i in range(6)],
         _evo_schema(),
     )
-    replay(events1, t, batch_id="m1", table_meta=meta, evolve_from_ddl=True)
+    replay(events1, t, batch_id="m1", table_meta=meta)
     events2 = spark.createDataFrame([
         _evo_row(100, "ddl", None,
                  stmt="ALTER TABLE test.repo_files CHANGE lang language varchar(64)"),
         _evo_row(101, "update", "f0", commit="c9", language="post", content="v0b"),
     ], _evo_schema())
-    replay(events2, t, batch_id="m2", table_meta=meta, evolve_from_ddl=True)
+    replay(events2, t, batch_id="m2", table_meta=meta)
     got = {r["path"]: r["language"] for r in t.read(spark).collect()}
     assert got == {"f0": "post", **{f"f{i}": f"L{i}" for i in range(1, 6)}}
     # compaction folds everything under current names and clears aliases
@@ -1553,20 +1578,20 @@ def test_rename_loud_failures_and_resurrection_guard(spark, tmp_path):
                   content=f"v{i}") for i in range(4)],
         _evo_schema(),
     )
-    replay(events1, t, batch_id="b1", table_meta=meta, evolve_from_ddl=True)
+    replay(events1, t, batch_id="b1", table_meta=meta)
 
     lossy = spark.createDataFrame([
         _evo_row(10, "ddl", None,
                  stmt="ALTER TABLE test.repo_files MODIFY lang varchar(4)"),
     ], _evo_schema())
     with _p.raises(ValueError, match="lossy"):
-        replay(lossy, t, batch_id="b2", table_meta=meta, evolve_from_ddl=True)
+        replay(lossy, t, batch_id="b2", table_meta=meta)
 
     ren = spark.createDataFrame([
         _evo_row(20, "ddl", None,
                  stmt="ALTER TABLE test.repo_files CHANGE lang language varchar(64)"),
     ], _evo_schema())
-    replay(ren, t, batch_id="b3", table_meta=meta, evolve_from_ddl=True)
+    replay(ren, t, batch_id="b3", table_meta=meta)
 
     from bingo2sql_spark import ddl as DL
     evolved = DL.apply_alter(meta, DL.parse_alter_table(
@@ -1580,9 +1605,9 @@ def test_rename_loud_failures_and_resurrection_guard(spark, tmp_path):
                  language="L0", content="v0b"),
     ], _evo_schema())
     with _p.raises(ValueError, match="compact"):
-        replay(readd, t, batch_id="b4", table_meta=evolved, evolve_from_ddl=True)
+        replay(readd, t, batch_id="b4", table_meta=evolved)
     t.compact(spark)  # rewrites every bucket under current names
-    replay(readd, t, batch_id="b4", table_meta=evolved, evolve_from_ddl=True)
+    replay(readd, t, batch_id="b4", table_meta=evolved)
     row = {r["path"]: (r["language"], r["lang"]) for r in t.read(spark).collect()}
     assert row["f0"] == ("L0", "new-lang")   # carried + fresh column
     assert row["f1"] == ("L1", None)         # re-added column NULL elsewhere
@@ -1609,8 +1634,7 @@ def test_minimal_image_add_column_evolution(spark, tmp_path):
         _evo_row(102, "update", "f2", commit="c5", content="two-v2",
                  changed=["content", "commit"]),
     ], _evo_schema())
-    replay(events1, t, batch_id="p1", table_meta=meta, evolve_from_ddl=True,
-           row_image="MINIMAL")
+    replay(events1, t, batch_id="p1", table_meta=meta, row_image="MINIMAL")
     got = {r["path"]: (r["commit"], r["lang"], r["language"], r["content"])
            for r in t.read(spark).collect()}
     # per-column last-value-IGNORE-NULLS, `language` fed only at seq>=100
@@ -1633,8 +1657,7 @@ def test_minimal_image_rename_evolution(spark, tmp_path):
         _evo_row(2, "insert", "f2", commit="c2", lang="py", content="two"),
         _evo_row(3, "insert", "f3", commit="c3", lang="rs", content="three"),
     ], _evo_schema())
-    replay(events1, t, batch_id="q1", table_meta=meta, evolve_from_ddl=True,
-           row_image="MINIMAL")
+    replay(events1, t, batch_id="q1", table_meta=meta, row_image="MINIMAL")
     events2 = spark.createDataFrame([
         # pre-rename partial update: presence under the OLD name
         _evo_row(50, "update", "f1", commit="c4", lang="c",
@@ -1646,7 +1669,7 @@ def test_minimal_image_rename_evolution(spark, tmp_path):
                  changed=["language", "commit"]),
     ], _evo_schema())
     evolved = replay(events2, t, batch_id="q2", table_meta=meta,
-                     evolve_from_ddl=True, row_image="MINIMAL")
+                     row_image="MINIMAL")
     assert not evolved["skipped"]
     got = {r["path"]: (r["commit"], r["language"], r["content"])
            for r in t.read(spark).collect()}
@@ -1725,14 +1748,14 @@ def test_changes_between_spans_rename_commit(spark, tmp_path):
                   content=f"v{i}") for i in range(6)],
         _evo_schema(),
     )
-    replay(events1, t, batch_id="b1", table_meta=meta, evolve_from_ddl=True)
+    replay(events1, t, batch_id="b1", table_meta=meta)
     v1 = t.latest_manifest()["version"]
     events2 = spark.createDataFrame([
         _evo_row(100, "ddl", None,
                  stmt="ALTER TABLE test.repo_files CHANGE lang language varchar(64)"),
         _evo_row(101, "update", "f0", commit="c9", language="post", content="v0b"),
     ], _evo_schema())
-    replay(events2, t, batch_id="b2", table_meta=meta, evolve_from_ddl=True)
+    replay(events2, t, batch_id="b2", table_meta=meta)
     v2 = t.latest_manifest()["version"]
     ch = t.changes_between(spark, v1, v2).collect()
     assert {(r["repo"], r["path"], r["op"]) for r in ch} == {("r1", "f0", "update")}
@@ -1755,7 +1778,7 @@ def test_signature_refresh_spans_rename_commit(spark, tmp_path):
                   content=f"doc {i} alpha beta gamma") for i in range(6)],
         _evo_schema(),
     )
-    replay(events1, t, batch_id="b1", table_meta=meta, evolve_from_ddl=True)
+    replay(events1, t, batch_id="b1", table_meta=meta)
     store = SignatureStore(str(tmp_path / "sigren_store"), ["repo", "path"], k=4)
     assert store.refresh(spark, t)["mode"] == "bootstrap"
     events2 = spark.createDataFrame([
@@ -1764,7 +1787,7 @@ def test_signature_refresh_spans_rename_commit(spark, tmp_path):
         _evo_row(101, "update", "f0", commit="c9", language="post",
                  content="doc 0 REWRITTEN delta epsilon"),
     ], _evo_schema())
-    replay(events2, t, batch_id="b2", table_meta=meta, evolve_from_ddl=True)
+    replay(events2, t, batch_id="b2", table_meta=meta)
     assert store.refresh(spark, t)["mode"] == "incremental"
     fresh = SignatureStore(str(tmp_path / "sigren_full"), ["repo", "path"], k=4)
     fresh.refresh(spark, t)
@@ -1787,7 +1810,7 @@ def test_drop_then_change_onto_dropped_name_same_batch(spark, tmp_path):
                   content=f"v{i}") for i in range(6)],
         _evo_schema(),
     )
-    replay(events1, t, batch_id="b1", table_meta=meta, evolve_from_ddl=True)
+    replay(events1, t, batch_id="b1", table_meta=meta)
     v1 = t.latest_manifest()["version"]
     events2 = spark.createDataFrame([
         _evo_row(100, "ddl", None,
@@ -1795,7 +1818,7 @@ def test_drop_then_change_onto_dropped_name_same_batch(spark, tmp_path):
                       "CHANGE lang content text"),
         _evo_row(101, "update", "f0", commit="c9", lang="NEW", content="NEW"),
     ], _evo_schema())
-    replay(events2, t, batch_id="b2", table_meta=meta, evolve_from_ddl=True)
+    replay(events2, t, batch_id="b2", table_meta=meta)
     m = t.latest_manifest()
     assert "lang" not in m["columns"] and "content" in m["columns"]
     assert m["aliases"] == {}  # full rewrite, not an alias
@@ -1820,23 +1843,23 @@ def test_drop_then_readd_same_batch_loses_old_values(spark, tmp_path):
                   content=f"v{i}") for i in range(6)],
         _evo_schema(),
     )
-    replay(events1, t, batch_id="b1", table_meta=meta, evolve_from_ddl=True)
+    replay(events1, t, batch_id="b1", table_meta=meta)
     events2 = spark.createDataFrame([
         _evo_row(100, "ddl", None,
                  stmt="ALTER TABLE test.repo_files DROP COLUMN lang, "
                       "ADD COLUMN lang varchar(32)"),
         _evo_row(101, "update", "f0", commit="c9", lang="fresh", content="v0b"),
     ], _evo_schema())
-    replay(events2, t, batch_id="b2", table_meta=meta, evolve_from_ddl=True)
+    replay(events2, t, batch_id="b2", table_meta=meta)
     got = {r["path"]: r["lang"] for r in t.read(spark).collect()}
     # f0 re-written post-ALTER; every other key's old value is GONE
     assert got == {"f0": "fresh", **{f"f{i}": None for i in range(1, 6)}}
 
     tm = IcebergLiteTable(str(tmp_path / "dropreadd_mor"), n_buckets=4,
                           write_mode="mor")
-    replay(events1, tm, batch_id="b1", table_meta=meta, evolve_from_ddl=True)
+    replay(events1, tm, batch_id="b1", table_meta=meta)
     with pytest.raises(ValueError, match="compact"):
-        replay(events2, tm, batch_id="b2", table_meta=meta, evolve_from_ddl=True)
+        replay(events2, tm, batch_id="b2", table_meta=meta)
 
 
 def test_bucket_aligned_landing_replay(spark, tmp_path):
@@ -1932,14 +1955,13 @@ def test_modify_validate_stored_conformance(spark, tmp_path):
     good = spark.createDataFrame(
         [_conf_row(i + 1, "insert", f"f{i}", size=str(100 + i), content=f"v{i}")
          for i in range(4)], schema)
-    replay(good, t_ok, batch_id="b1", table_meta=meta, evolve_from_ddl=True)
+    replay(good, t_ok, batch_id="b1", table_meta=meta)
     alter = spark.createDataFrame(
         [_conf_row(10, "ddl", None,
                    stmt="ALTER TABLE test.repo_files MODIFY size bigint")],
         schema)
     before = sorted((r["path"], r["size"]) for r in t_ok.read(spark).collect())
-    replay(alter, t_ok, batch_id="b2", table_meta=meta, evolve_from_ddl=True,
-           validate_stored=True)
+    replay(alter, t_ok, batch_id="b2", table_meta=meta, validate_stored=True)
     after = sorted((r["path"], r["size"]) for r in t_ok.read(spark).collect())
     assert after == before  # rows unchanged by a metadata-only ALTER
 
@@ -1951,29 +1973,29 @@ def test_modify_validate_stored_conformance(spark, tmp_path):
          # out-of-range for int... but MODIFY targets bigint, so fine
          _conf_row(3, "insert", "f2", size="9999999999", content="v2")],
         schema)
-    replay(mixed, t_bad, batch_id="b1", table_meta=meta, evolve_from_ddl=True)
+    replay(mixed, t_bad, batch_id="b1", table_meta=meta)
     chk = t_bad.state_checksum(spark)
     with _p.raises(ValueError, match=r"nonconforming.*\n.*'size'.*f1") as ei:
         replay(alter, t_bad, batch_id="b2", table_meta=meta,
-               evolve_from_ddl=True, validate_stored=True)
+               validate_stored=True)
     assert "f1" in str(ei.value) and "f0" not in str(ei.value)
     assert t_bad.state_checksum(spark) == chk  # nothing committed
 
     # without the opt-in the declared-only behavior is unchanged
-    replay(alter, t_bad, batch_id="b2", table_meta=meta, evolve_from_ddl=True)
+    replay(alter, t_bad, batch_id="b2", table_meta=meta)
 
     # -- range conformance: a MODIFY to a SMALLER-capacity declared type is
     # already refused at the declared level; a same-rank retype that the
     # declared check allows still scans ranges (int -> int(11) is a noop,
     # so use varchar shrink-to-fit: stored lengths within the new cap pass)
     t_len = IcebergLiteTable(str(tmp_path / "len"), n_buckets=4)
-    replay(good, t_len, batch_id="b1", table_meta=meta, evolve_from_ddl=True)
+    replay(good, t_len, batch_id="b1", table_meta=meta)
     widen_then_fit = spark.createDataFrame(
         [_conf_row(20, "ddl", None,
                    stmt="ALTER TABLE test.repo_files MODIFY content mediumtext")],
         schema)
     replay(widen_then_fit, t_len, batch_id="b2", table_meta=meta,
-           evolve_from_ddl=True, validate_stored=True)
+           validate_stored=True)
 
 
 def test_alias_chain_folds_on_all_bucket_rewrite(spark, tmp_path):
@@ -1991,7 +2013,7 @@ def test_alias_chain_folds_on_all_bucket_rewrite(spark, tmp_path):
                   content=f"v{i}") for i, k in enumerate(keys)],
         _evo_schema(),
     )
-    m1 = replay(events1, t, batch_id="b1", table_meta=meta, evolve_from_ddl=True)
+    m1 = replay(events1, t, batch_id="b1", table_meta=meta)
 
     from bingo2sql_spark import ddl as DL
 
@@ -2010,8 +2032,7 @@ def test_alias_chain_folds_on_all_bucket_rewrite(spark, tmp_path):
             _evo_row(100 * (i + 1) + 1, "update", "f0", commit=f"r{i}",
                      language=None, lang=None, content=f"w{i}"),
         ], _evo_schema())
-        replay(ev, t, batch_id=f"ren{i}", table_meta=cur_meta,
-               evolve_from_ddl=True)
+        replay(ev, t, batch_id=f"ren{i}", table_meta=cur_meta)
         cur_meta = DL.apply_alter(
             cur_meta, DL.parse_alter_table(stmt, default_db="test")[2])
     man = t.latest_manifest()
@@ -2038,8 +2059,7 @@ def test_alias_chain_folds_on_all_bucket_rewrite(spark, tmp_path):
          for i, k in enumerate(sorted(reps.values()))],
         _evo_schema(),
     )
-    m2 = replay(events2, t, batch_id="full", table_meta=cur_meta,
-                evolve_from_ddl=True)
+    m2 = replay(events2, t, batch_id="full", table_meta=cur_meta)
     man2 = t.latest_manifest()
     assert m2["buckets_rewritten"] == len(man2["buckets"])
     assert man2["aliases"] == {}  # folded without compact()

@@ -598,7 +598,7 @@ def test_stream_ingest_evolves_from_ddl(spark, tmp_path):
     table = IcebergLiteTable(str(tmp_path / "target"), n_buckets=4)
     q = start_ingest(
         spark, land, table, ckpt, max_files_per_trigger=1,
-        evolve_from_ddl=True, table_meta=meta, source_schema=schema,
+        table_meta=meta, source_schema=schema,
     )
     q.awaitTermination(180)
 
@@ -614,7 +614,7 @@ def test_stream_ingest_evolves_from_ddl(spark, tmp_path):
     _land(phase_c, "c")
     q2 = start_ingest(
         spark, land, table, ckpt, max_files_per_trigger=1,
-        evolve_from_ddl=True, table_meta=meta, source_schema=schema,
+        table_meta=meta, source_schema=schema,
     )
     q2.awaitTermination(180)
 
@@ -632,7 +632,7 @@ def test_stream_ingest_evolves_from_ddl(spark, tmp_path):
     v = table.latest_manifest()["version"]
     q3 = start_ingest(
         spark, land, table, ckpt, max_files_per_trigger=1,
-        evolve_from_ddl=True, table_meta=meta, source_schema=schema,
+        table_meta=meta, source_schema=schema,
     )
     q3.awaitTermination(180)
     assert table.latest_manifest()["version"] == v
@@ -643,8 +643,7 @@ def test_stream_ingest_evolves_from_ddl(spark, tmp_path):
 
     all_events = spark.createDataFrame(phase_a + phase_b + phase_c, schema)
     control = IcebergLiteTable(str(tmp_path / "control"), n_buckets=4)
-    replay(all_events, control, batch_id="all", table_meta=_stream_evo_meta(),
-           evolve_from_ddl=True)
+    replay(all_events, control, batch_id="all", table_meta=_stream_evo_meta())
     ctl = {r["path"]: (r["language"], r["stars"], r["content"])
            for r in control.read(spark).collect()}
     assert ctl == got
