@@ -10,8 +10,8 @@ in miniature:
   the uuid makes each WRITER ATTEMPT's dir unique, so optimistic
   writers racing one version can never clobber or interleave files
   before the manifest CAS decides the winner (the manifest's
-  `snap_dirs` maps version -> winning dir; losers' dirs are orphans
-  expire_snapshots reclaims)
+  `snap_dirs` maps each version it references to the winning dir;
+  losers' dirs are orphans expire_snapshots reclaims)
 - a manifest (JSON, atomically renamed into place) maps every bucket to
   the snapshot that currently owns it, carries the committed-batch set
   (idempotence / exactly-once), per-bucket lineage (max binlog position
@@ -31,8 +31,8 @@ order, duplicate delivery (batch_ids already committed are skipped), and
 replay from any checkpoint (north rule). Flashback batches participate
 correctly because commit(rebase_past_head=True) REBASES their seqs past
 the current log head (a rollback executed against MySQL is new binlog
-traffic with new positions — same model). Tombstones are physically
-dropped by `compact()` once no older replays are in flight.
+traffic with new positions — same model). Only an explicit `compact()`
+drops tombstones, once no older replays are in flight.
 
 Scale design (10^10 events, 100 TB table):
 - hash-bucketed by (repo, path) into `n_buckets`; a commit rewrites ONLY
@@ -42,10 +42,12 @@ Scale design (10^10 events, 100 TB table):
 - `write_mode="mor"` switches commits to MERGE-ON-READ (Hudi /
   Iceberg-v2 delete-file shape): append one per-bucket delta file of
   batch winners — O(batch) per commit, stored data never read — and
-  reconcile base ∪ deltas at read time; `compact()` folds deltas back.
-  The right mode when micro-batches are small relative to bucket data.
-- the merge is ONE bucket exchange of stored ∪ batch rows feeding a
-  per-(bucket, key) max_by aggregate (see _merge_and_write).
+  reconcile base ∪ deltas at read time. A commit onto a delta list of
+  `max_delta_depth` FOLDS instead: its merge writes fresh bases from
+  base ∪ deltas ∪ batch, as `compact()` does. The right mode when
+  micro-batches are small relative to bucket data.
+- every write is ONE bucket exchange of unresolved stored ∪ batch rows
+  feeding a per-(bucket, key) max_by aggregate (see _lww_merge).
 - crash safety: the manifest rename is the commit point; data of a
   failed commit is never referenced (orphans, GC-able).
 
@@ -56,6 +58,7 @@ LWW-by-seq, merge-into-table sink.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import re
@@ -156,30 +159,23 @@ def _per_key_winners(
     stored as a MOR delta — the delta row is itself re-merged at read
     time and must still say which columns it actually carries.
 
-    PER-COLUMN SEQ ATTRIBUTION (the full fix for ADVICE r4): partial
-    output rows always carry `_col_seqs: map<col, winning seq>` — the
-    seq of the contributor that actually wrote each column — and
-    collapsed rows re-entering a later merge use the MAP, not the
-    row-level max, as each column's seq. That makes MINIMAL-image
-    state order-independent ACROSS commits too: an out-of-order ad-hoc
-    replay with an interleaving seq wins or loses each column against
-    the column's true writer, never against an unrelated newer
-    contributor's row seq. Raw event rows (no map) attribute every
-    present column to the event's own seq, which is exactly what the
-    event did.
+    PER-COLUMN SEQ ATTRIBUTION: partial output rows always carry
+    `_col_seqs: map<col, winning seq>` — the seq of the contributor
+    that actually wrote each column — and collapsed rows re-entering a
+    later merge use the MAP, not the row-level max, as each column's
+    seq. That makes MINIMAL-image state order-independent ACROSS
+    commits too: an out-of-order replay with an interleaving seq wins
+    or loses each column against the column's true writer. Raw event
+    rows (no map) attribute every present column to the event's seq.
 
-    SPARSE ENCODING (r6): the emitted map only materializes the
-    EXCEPTIONS — a column whose winning seq differs from the row-level
-    winner seq keeps its entry, and a never-written (NULL-since-birth)
-    column keeps a NULL-valued entry (it must lose to ANY real writer).
-    A column ABSENT from the map was written by the row winner at the
-    row's `_ingest_seq`. After single-writer or full-image commits —
-    the overwhelmingly common case — the map is empty, so the 10-20%
-    map-emission tax the dense encoding paid on every MINIMAL merge
-    (VERDICT r5) shrinks to a constant column. The read side decodes
-    BOTH encodings (dense maps written by earlier snapshots carry
-    redundant row-seq entries, which coalesce to the same answer), so
-    no stored table needs rewriting."""
+    SPARSE ENCODING: the emitted map only materializes the EXCEPTIONS
+    — a column whose winning seq differs from the row-level winner seq
+    keeps its entry, and a never-written (NULL-since-birth) column
+    keeps a NULL-valued entry (it must lose to ANY real writer). A
+    column ABSENT from the map was written by the row winner at the
+    row's `_ingest_seq`, so after single-writer or full-image commits
+    the map is empty. Dense maps from older snapshots decode to the
+    same answer, so no stored table needs rewriting."""
     data_cols = [c for c in all_cols if c not in S.MERGE_KEYS]
     if not partial:
         winner = F.max_by(
@@ -262,6 +258,38 @@ def _per_key_winners(
     )
 
 
+def _lww_merge(
+    inputs: list[DataFrame],
+    all_cols: list[str],
+    partial: bool,
+    n_buckets: int,
+    emit_changed: bool = False,
+) -> DataFrame:
+    """The one write-side MERGE plan of commit and compact(): unresolved
+    inputs (stored scan and/or batch rows, spanning `n_buckets`
+    buckets) unioned into ONE `repartition(n_out, bucket)` exchange
+    feeding _per_key_winners. Bucket is a function of the merge keys,
+    so hash(bucket) partitioning satisfies the aggregate's clustered
+    distribution (no second exchange) and the output stays clustered
+    for the pbucket-partitioned write: one writer per bucket."""
+    both = functools.reduce(
+        DataFrame.unionByName, [_conform(d, all_cols, partial) for d in inputs]
+    )
+    # bucket-pure partitions (n_out <= #buckets: one file per bucket),
+    # 4x the core count of them: with #cores partitions the bucket-count
+    # variance per partition makes the slowest task the stage time.
+    par = both.sparkSession.sparkContext.defaultParallelism
+    n_out = max(1, min(n_buckets, 4 * par))
+    return _per_key_winners(
+        both.repartition(n_out, "bucket"), all_cols, partial, emit_changed
+    )
+
+
+def _referenced(buckets: dict[str, int], deltas: dict[str, list[int]]) -> set[int]:
+    """The snapshot versions a manifest's buckets and deltas read."""
+    return set(buckets.values()).union(*deltas.values())
+
+
 def bucket_col(n_buckets: int):
     """Deterministic bucket of the composite merge key. Hashing the
     composite (repo, path) — not repo alone — is what defuses hot-repo
@@ -307,6 +335,7 @@ class _Scope(NamedTuple):
     partial: bool  #: per-column (MINIMAL-image) merge
     counts: dict[str, int] | None  #: exact rows/deletes from the pre-pass
     observation: Observation | None  #: ...or from the merge job
+    fold: bool  #: MOR at max_delta_depth: merge every delta into new bases
 
 
 class IcebergLiteTable:
@@ -321,8 +350,8 @@ class IcebergLiteTable:
       only the batch's per-key winners — commit cost is O(batch), never
       O(bucket data), which is what lets a micro-batch cadence survive
       a 100 TB table. Reads reconcile base ∪ deltas with the same LWW
-      max_by (read amplification is the trade); `compact()` folds
-      deltas back into a fresh base. Correctness (tombstones, LWW,
+      max_by (read amplification is the trade); a fold or `compact()`
+      merges deltas back into fresh bases. Correctness (tombstones, LWW,
       exactly-once, time-travel, changelog) is identical by
       construction — both modes converge to the same state_checksum.
     """
@@ -340,19 +369,18 @@ class IcebergLiteTable:
         self.path = path
         self.n_buckets = n_buckets
         self.write_mode = write_mode
-        #: MOR maintenance policy: when any bucket's delta list exceeds
-        #: this depth after a commit, compact() runs inline (the Hudi
-        #: "inline compaction" knob) — bounds read amplification without
-        #: an external maintenance job. None = manual compaction only.
+        #: MOR maintenance policy (the Hudi "inline compaction" knob): a
+        #: commit onto a table whose longest delta list already holds
+        #: this many deltas folds them in its own merge (see
+        #: _scope_batch) — bounds read amplification without an external
+        #: maintenance job. None = manual compaction only.
         self.max_delta_depth = max_delta_depth
-        #: MOR maintenance policy #2 (VERDICT r4 #5): compact when any
-        #: bucket's MEASURED read amplification — delta rows / base rows,
-        #: maintained from the commits' parquet footer stats, no data
-        #: read — exceeds this ratio. Depth alone misses the read-heavy
-        #: shape: a couple of LARGE deltas (replays, backfills) double
-        #: every read's row volume at depth 2, while a hundred tiny
-        #: deltas on a 10^8-row bucket are harmless at depth 100. Either
-        #: trigger fires independently; both keep tombstones.
+        #: MOR maintenance policy #2: compact() after a commit that
+        #: leaves any bucket's MEASURED read amplification — delta rows /
+        #: base rows from the commits' footer stats — above this ratio.
+        #: Depth alone misses a couple of LARGE deltas (replays,
+        #: backfills) doubling every read at depth 2. Either policy fires
+        #: independently; both keep tombstones.
         self.max_read_amplification = max_read_amplification
         os.makedirs(os.path.join(path, MANIFEST_DIR), exist_ok=True)
 
@@ -439,45 +467,39 @@ class IcebergLiteTable:
     def _empty_state(self, spark: SparkSession, columns: list[str]) -> DataFrame:
         """The empty table state, built in the JVM: the optimizer folds
         `LIMIT 0` to an empty LocalRelation and PropagateEmptyRelation
-        drops it from a merge union, so a merge against it plans the
-        batch alone and starts no tasks for this side."""
+        drops it from a merge union, so a fresh table's first commit
+        plans the batch alone and starts no tasks for this side."""
         cols = ", ".join(
             f"CAST(NULL AS {f.dataType.simpleString()}) AS {ident(f.name)}"
             for f in self._state_schema(columns).fields
         )
         return spark.sql(f"SELECT {cols} LIMIT 0")
 
-    def _read_raw(
+    def _scan(
         self,
         spark: SparkSession,
+        m: dict[str, Any] | None,
         buckets: list[int] | None = None,
-        version: int | None = None,
-    ) -> DataFrame:
-        """Stored rows incl. internal cols; `buckets` prunes the scan at
-        the manifest level; `version` time-travels to that snapshot's
-        manifest (data files are immutable, so any retained manifest is
-        readable — the Iceberg snapshot-isolation property).
-
-        MERGE-ON-READ reconciliation: when the manifest carries delta
-        files (write_mode='mor' commits), the base ∪ delta scan is
-        resolved to per-key LWW winners HERE, so every consumer —
-        read(), changelog, compact, state checksum — sees register
-        semantics regardless of write mode."""
-        m = self.manifest_at(version) if version is not None else self.latest_manifest()
-        if version is not None and m is None:
-            raise ValueError(f"snapshot {version} does not exist (see versions())")
+        time_travel: bool = False,
+    ) -> tuple[DataFrame, bool]:
+        """Stored rows of manifest `m` incl. internal cols, UNRESOLVED:
+        every base and delta file of the chosen buckets (`buckets`
+        prunes at the manifest level) in one parquet scan under current
+        column names, plus `_changed_cols` / `_col_seqs` when the table
+        carries MINIMAL-image metadata. Returns (rows, whether a delta
+        is scanned). _read_raw resolves them; commit and compact() feed
+        them straight into _lww_merge."""
         cols = (m or {}).get("columns", S.payload_columns())
         base = (m or {}).get("buckets", {})
         deltas = (m or {}).get("deltas", {})
         if not m or not (base or deltas):
-            return self._empty_state(spark, cols)
+            return self._empty_state(spark, cols), False
         all_bk = sorted(set(base) | set(deltas), key=int)
         if buckets is not None:
             want = {str(b) for b in buckets}
             all_bk = [b for b in all_bk if b in want]
-        # snapshot data dirs are per-writer-ATTEMPT unique (uuid suffix)
-        # so a CAS loser's files can never mix with the winner's; the
-        # manifest maps version -> dir (legacy name when absent)
+        # per-writer-ATTEMPT data dirs (see _write_snapshot); the manifest
+        # maps version -> dir (legacy name when absent)
         snap_dirs = m.get("snap_dirs", {})
 
         def _p(v: int, b: str) -> str:
@@ -491,16 +513,16 @@ class IcebergLiteTable:
             for v in deltas.get(b, []):
                 paths.append(_p(v, b))
                 has_deltas = True
-        if version is not None:
+        if time_travel:
             missing = [p for p in paths if not os.path.isdir(p)]
             if missing:
                 raise ValueError(
-                    f"snapshot {version} data expired (expire_snapshots removed "
+                    f"snapshot {m['version']} data expired (expire_snapshots removed "
                     f"{len(missing)} bucket dirs) — time-travel unavailable"
                 )
         paths = [p for p in paths if os.path.isdir(p)]
         if not paths:
-            return self._empty_state(spark, cols)
+            return self._empty_state(spark, cols), False
         # EXPLICIT union schema from the manifest: snapshots written before
         # a schema evolution lack the new columns, and an unconstrained
         # parquet read adopts one random file's footer — silently DROPPING
@@ -509,8 +531,8 @@ class IcebergLiteTable:
         # (no mergeSchema footer sweep needed — the manifest already knows
         # the union).
         partial_deltas = has_deltas and bool(m.get("partial_deltas"))
-        partial_state = bool(m.get("partial_state"))
-        partial_any = partial_deltas or partial_state
+        partial_any = partial_deltas or bool(m.get("partial_state"))
+        with_changed = has_deltas and partial_any
         # column-rename support (Iceberg name-mapping analog, no field
         # IDs needed because old and new names never coexist live): the
         # manifest's `aliases` maps each current column to the names it
@@ -528,9 +550,7 @@ class IcebergLiteTable:
         alias_olds = [o for olds in aliases.values() for o in olds]
         df = spark.read.schema(
             self._state_schema(
-                cols + alias_olds,
-                with_changed=has_deltas and partial_any,
-                with_col_seqs=partial_any,
+                cols + alias_olds, with_changed=with_changed, with_col_seqs=partial_any
             )
         ).parquet(*paths)
         if alias_olds:
@@ -540,24 +560,32 @@ class IcebergLiteTable:
             df = _translate_partial_meta(
                 df, {o: c for c, olds in aliases.items() for o in olds}
             )
-        if has_deltas and partial_any:
-            # MINIMAL-image path: per-COLUMN read-time merge — delta
-            # rows carry only their changed columns (`_changed_cols`)
-            # and/or per-column seq attributions (`_col_seqs`); rows
-            # from files lacking either NULL-fill = full image at the
-            # row seq
-            df = df.select(*cols, *INTERNAL_COLS, "_changed_cols", "_col_seqs")
-            df = _per_key_winners(df, cols, partial=True)
-        elif has_deltas:
-            df = df.select(*cols, *INTERNAL_COLS)
-            df = _per_key_winners(df, cols, partial=False)
-        elif partial_state:
-            # COW partial base: per-key resolved already; keep the
-            # attribution map so the next merge sees true column seqs
-            df = df.select(*cols, *INTERNAL_COLS, "_col_seqs")
-        else:
-            df = df.select(*cols, *INTERNAL_COLS)
-        return df
+        # rows from files lacking `_changed_cols` or `_col_seqs` NULL-fill
+        # = full image at the row seq
+        extras = (["_changed_cols"] if with_changed else []) + (
+            ["_col_seqs"] if partial_any else []
+        )
+        return df.select(*cols, *INTERNAL_COLS, *extras), has_deltas
+
+    def _read_raw(
+        self,
+        spark: SparkSession,
+        buckets: list[int] | None = None,
+        version: int | None = None,
+    ) -> DataFrame:
+        """Stored rows incl. internal cols, one row per key; `version`
+        time-travels to that snapshot's manifest (data files are
+        immutable, so any retained manifest is readable — the Iceberg
+        snapshot-isolation property). MERGE-ON-READ: a scan holding
+        deltas resolves to per-key LWW winners HERE, so every reader
+        sees register semantics regardless of write mode."""
+        m = self.manifest_at(version) if version is not None else self.latest_manifest()
+        if version is not None and m is None:
+            raise ValueError(f"snapshot {version} does not exist (see versions())")
+        df, has_deltas = self._scan(spark, m, buckets, time_travel=version is not None)
+        if not has_deltas:
+            return df
+        return _per_key_winners(df, m["columns"], partial="_col_seqs" in df.columns)
 
     def read(
         self,
@@ -714,9 +742,10 @@ class IcebergLiteTable:
 
         Five phases, one method each: _evolve_columns (the DDL plan, no
         job), _scope_batch (bucketing, pruning pre-pass or Observation,
-        flashback rebase), _merge_and_write (ONE merge job with ONE
-        full-data exchange), _next_manifest (lineage, metrics and the
-        manifest CAS — the commit point) and _inline_compaction (MOR).
+        flashback rebase, the MOR fold decision), _merge_and_write (ONE
+        merge job with ONE full-data exchange), _next_manifest (lineage,
+        metrics and the manifest CAS — the commit point) and
+        _inline_compaction (MOR read-amplification policy).
         """
         t0 = time.time()
         m = self.latest_manifest() or {"version": 0, "buckets": {}, "columns": []}
@@ -840,36 +869,34 @@ class IcebergLiteTable:
         rebase_past_head: bool,
     ) -> _Scope:
         """Phase 2 — bucket the batch rows and decide which buckets this
-        commit rewrites, with the batch's exact row/delete counts."""
+        commit rewrites, with the batch's exact row/delete counts, and
+        whether a MOR commit FOLDS: at max_delta_depth its merge writes
+        new bases from every base and delta with the batch, in place of
+        a delta that a separate compaction would read straight back."""
+        mor = self.write_mode == "mor"
+        depth = max((len(v) for v in m.get("deltas", {}).values()), default=0)
+        fold = mor and self.max_delta_depth is not None and depth >= self.max_delta_depth
         b = batch.withColumn("bucket", bucket_col(self.n_buckets)).withColumnRenamed(
             "_seq", "_ingest_seq"
         )
         # the merge runs per-column whenever ANY side carries partial
         # metadata: a MINIMAL batch (_changed_cols), a re-committed
-        # resolved state (rebucket: _col_seqs), or a table whose stored
-        # state already holds per-column attributions (partial_state, or
-        # MINIMAL deltas a copy-on-write merge reads resolved) — a
-        # FULL-image batch onto such a table is representable in the
-        # per-column merge (all columns present at the event seq), and
-        # collapsing row-level there would discard the attributions.
-        # mor+partial is supported: the delta stores per-key winners WITH
-        # their merged `_changed_cols` presence metadata, and _read_raw
-        # switches to the per-column read-time merge for every consumer
-        # (the manifest's partial_deltas flag gates it).
-        mor = self.write_mode == "mor"
+        # resolved state (rebucket: _col_seqs), or stored per-column
+        # attributions (partial_state, or MINIMAL deltas a CoW merge or
+        # fold reads) — collapsing row-level there would discard them.
+        # A MOR delta of a MINIMAL batch stores per-key winners WITH
+        # their merged `_changed_cols` (the partial_deltas flag).
         partial = (
             "_changed_cols" in batch.columns
             or "_col_seqs" in batch.columns
             or bool(m.get("partial_state"))
-            or (not mor and bool(m.get("partial_deltas")))
+            or ((not mor or fold) and bool(m.get("partial_deltas")))
         )
         counts: dict[str, int] | None = None
         observation = None
         min_seq: int | None = None
-        # MOR never reads the table on commit, so the pruning pre-pass
-        # (whose only job is picking which stored buckets to read) would
-        # be a pure extra pass over the batch — Observation counts ride
-        # the single delta-write job instead.
+        # MOR never prunes on commit (a delta reads no stored bucket, a
+        # fold reads them all): Observation counts ride the merge job.
         if m["buckets"] and not mor:
             # narrow pre-pass (no payload columns; from_json sources prune
             # to just the key fields): affected buckets + exact counts
@@ -898,7 +925,7 @@ class IcebergLiteTable:
                 # batch's — the pre-pass still supplied the counts
                 affected = sorted(set(affected) | {int(bk) for bk in m["buckets"]})
         else:
-            affected = list(range(self.n_buckets))  # empty table: nothing to prune
+            affected = list(range(self.n_buckets))  # nothing to prune
             observation = Observation(f"commit-{batch_id}")
             b = b.observe(
                 observation,
@@ -919,69 +946,45 @@ class IcebergLiteTable:
             # supersede everything already absorbed under LWW-by-seq.
             offset = self.head_seq() - min_seq + 1
             b = b.withColumn("_ingest_seq", F.col("_ingest_seq") + F.lit(offset))
-        return _Scope(b, affected, partial, counts, observation)
+        return _Scope(b, affected, partial, counts, observation, fold)
 
     def _merge_and_write(
         self, m: dict[str, Any], cols: _Columns, scope: _Scope
     ) -> tuple[str | None, dict[str, dict]]:
-        """Phase 3 — the MERGE: per-key LWW by source seq over stored ∪
-        batch rows (collapsing multiple events per key within the batch
-        too), written as the new snapshot. Tombstones stay as rows so
-        older replays cannot resurrect deleted keys.
-
-        ONE full-data exchange: the union is repartitioned by `bucket`
-        and the aggregate groups by (bucket, *keys) — since bucket is a
-        deterministic function of the merge keys, hash(bucket)
-        partitioning co-locates every key's rows and satisfies the
-        aggregate's clustered distribution, so Catalyst inserts NO
-        second exchange; the output stays clustered by bucket, which is
-        exactly what the dynamic pbucket-partitioned write wants (one
-        contiguous writer per bucket, no tasks x buckets file blow-up).
-        Per-bucket lineage comes from the written files' parquet column
-        statistics (_bucket_footer_stats), so the batch is scanned once.
+        """Phase 3 — the MERGE (_lww_merge, ONE full-data exchange):
+        per-key LWW by source seq over the unresolved stored scan of the
+        affected buckets (CoW; a fold's are all of them) ∪ batch rows,
+        written as the new snapshot. A MOR delta reads no stored data:
+        the batch self-merges alone, so a delta holds one row per key.
+        Tombstones stay as rows so older replays cannot resurrect
+        deleted keys. Lineage comes from the written files' footer
+        stats, so the batch is scanned once.
 
         Returns (snapshot dir name, per-bucket footer stats); (None, {})
         when no bucket is affected."""
         if not scope.affected:
             return None, {}
-        spark = scope.rows.sparkSession
-        mor = self.write_mode == "mor"
-        if mor:
-            # delta append: the batch self-merges (per-key winners
-            # WITHIN the batch — required so a delta holds one row per
-            # key); stored data is neither read nor rewritten. `current`
-            # is the empty state, an empty LocalRelation the optimizer
-            # drops from the merge union, so the merge plans the batch
-            # alone.
-            current = self._empty_state(spark, cols.all_cols)
-        else:
-            current = self._read_raw(spark, buckets=scope.affected)
+        delta = self.write_mode == "mor" and not scope.fold
+        inputs = [scope.rows]
+        if not delta:
+            current, _ = self._scan(scope.rows.sparkSession, m, scope.affected)
             if cols.dropped:
                 # vacate dropped names BEFORE renames claim them — the
-                # old manifest's read still carries them, and a rename
+                # old manifest's scan still carries them, and a rename
                 # onto one would otherwise duplicate the name
                 current = current.drop(*[c for c in cols.dropped if c in current.columns])
             if cols.renames:
-                # stored rows read under the pre-rename manifest: carry
+                # stored rows scanned under the pre-rename manifest: carry
                 # values (and per-column attributions) to the new names
                 # before the merge union
                 for old, new in cols.renames.items():
                     if old in current.columns:
                         current = current.withColumnRenamed(old, new)
                 current = _translate_partial_meta(current, cols.renames)
-        # bucket-pure partitions (n_out <= #affected keeps exactly one
-        # file per bucket), but 4x the core count of them: with only
-        # #cores partitions the per-partition bucket-count variance
-        # (~±sqrt(buckets/partition)) makes the slowest task the stage
-        # time; smaller tasks let dynamic scheduling balance it.
-        n_out = max(1, min(len(scope.affected), 4 * spark.sparkContext.defaultParallelism))
-        both = (
-            _conform(current, cols.all_cols, scope.partial)
-            .unionByName(_conform(scope.rows, cols.all_cols, scope.partial))
-            .repartition(n_out, "bucket")
-        )
-        merged = _per_key_winners(
-            both, cols.all_cols, scope.partial, emit_changed=mor and scope.partial
+            inputs.insert(0, current)
+        merged = _lww_merge(
+            inputs, cols.all_cols, scope.partial, len(scope.affected),
+            emit_changed=delta and scope.partial,
         )
         return self._write_snapshot(
             merged.withColumn("pbucket", F.col("bucket")), m["version"] + 1
@@ -1017,23 +1020,27 @@ class IcebergLiteTable:
         """Phase 4 — the next manifest from the written buckets' footer
         stats (no data read): bucket map or MOR delta lists, per-bucket
         row counts, lineage, alias folding and the commit metrics; then
-        the manifest CAS, the commit point. Returns (metrics, the
+        the manifest CAS, the commit point. A fold's manifest is a
+        compaction's: new bases only, no deltas. Returns (metrics, the
         measured read amplification)."""
         mor = self.write_mode == "mor"
+        delta = mor and not scope.fold
         new_version = m["version"] + 1
         counts = scope.counts
         if scope.observation is not None:
             got = scope.observation.get if written else {"rows": 0, "deletes": 0}
             counts = {"rows": int(got["rows"] or 0), "deletes": int(got["deletes"] or 0)}
-        buckets_map = dict(m["buckets"])
-        deltas = {bk: list(v) for bk, v in m.get("deltas", {}).items()}
+        # a fold rewrote every live bucket: no parent base or delta remains
+        prior = {} if scope.fold else m
+        buckets_map = dict(prior.get("buckets", {}))
+        deltas = {bk: list(v) for bk, v in prior.get("deltas", {}).items()}
         lineage = dict(m.get("lineage", {}))
         # per-bucket base/delta row counts (from footer stats — no data
         # read): the measured read-amplification signal the inline
         # compaction policy keys on
-        bucket_rows = {bk: dict(v) for bk, v in m.get("bucket_rows", {}).items()}
+        bucket_rows = {bk: dict(v) for bk, v in prior.get("bucket_rows", {}).items()}
         for bk, st in written.items():
-            if mor:
+            if delta:
                 had_prior_deltas = bool(m.get("deltas", {}).get(bk))
                 deltas.setdefault(bk, []).append(new_version)
                 br = bucket_rows.get(bk)
@@ -1044,18 +1051,15 @@ class IcebergLiteTable:
                     # ideal; every further delta is the overhead)
                     bucket_rows[bk] = {"base": st["rows"], "delta": 0}
                 elif br is None:
-                    # manifest predates bucket_rows (upgraded table):
-                    # prior delta volume is unknown, so seeding this
-                    # delta as the "base" would hide real amplification
-                    # from the policy forever. base=0 makes the ratio
-                    # read as over-threshold instead — one compaction
-                    # then establishes truthful bookkeeping.
+                    # manifest predates bucket_rows: prior delta volume
+                    # is unknown, so base=0 reads as over-threshold and
+                    # one compaction establishes truthful bookkeeping
                     bucket_rows[bk] = {"base": 0, "delta": st["rows"]}
                 else:
                     br["delta"] += st["rows"]
             else:
-                # the merge read the bucket's deltas (_read_raw) and the
-                # new base holds their resolved rows: drop the list, or
+                # the merge read the bucket's deltas (_scan) and the new
+                # base holds their resolved rows: drop the list, or
                 # every later read re-scans and re-merges them
                 buckets_map[bk] = new_version
                 bucket_rows[bk] = {"base": st["rows"], "delta": 0}
@@ -1064,20 +1068,15 @@ class IcebergLiteTable:
         aliases = cols.aliases
         if (
             aliases
-            and not mor
             and buckets_map
             and all(v == new_version for v in buckets_map.values())
             and not any(deltas.values())
         ):
-            # alias folding (VERDICT r7 #5): this commit happened to
-            # rewrite EVERY live bucket (e.g. rewrite_all, or a batch
-            # touching all keys), so every data file the new snapshot
-            # references is already written under current names — the
-            # coalesce chains the aliases would add are dead weight.
-            # Folding here bounds the per-rename growth of the read
-            # projection without waiting for a full compact(); time
-            # travel still serves old names from old snapshots' own
-            # manifests.
+            # alias folding: this commit rewrote EVERY live bucket
+            # (rewrite_all, a MOR fold, or a batch touching all keys), so
+            # every data file the new snapshot references is written
+            # under current names and the alias coalesce chains are dead
+            # weight; time travel serves old names from old manifests.
             aliases = {}
         amps = [br["delta"] / max(br["base"], 1) for br in bucket_rows.values() if br["delta"]]
         read_amp = max(amps, default=0.0)
@@ -1095,7 +1094,12 @@ class IcebergLiteTable:
         if mor:
             metrics["delta_depth"] = max((len(v) for v in deltas.values()), default=0)
             metrics["read_amplification"] = round(read_amp, 4)
+        if scope.fold:
+            metrics["compacted_to"] = new_version
+            metrics["compaction_trigger"] = "delta_depth"
         batches, watermarks = self._record_batch(m, batch_id)
+        dirs = {**m.get("snap_dirs", {}), str(new_version): snap_name}
+        live = _referenced(buckets_map, deltas)
         self._write_manifest(
             {
                 "version": new_version,
@@ -1108,22 +1112,20 @@ class IcebergLiteTable:
                 "aliases": aliases,
                 "lineage": lineage,
                 "bucket_rows": bucket_rows,
-                # version -> unique data dir (see _write_snapshot); the
-                # map carries every still-referenced snapshot's dir
-                "snap_dirs": {
-                    **m.get("snap_dirs", {}),
-                    **({str(new_version): snap_name} if written else {}),
-                },
+                # version -> unique data dir (see _write_snapshot) of just
+                # the snapshots this manifest references, so the map does
+                # not grow per commit (older manifests keep their own)
+                "snap_dirs": {v: d for v, d in dirs.items() if int(v) in live},
                 "metrics": metrics,
-                # sticky until a compaction folds the partial deltas:
-                # gates the per-column read-time merge in _read_raw
-                "partial_deltas": bool(m.get("partial_deltas"))
-                or (mor and scope.partial),
-                # sticky for the table's life: COW partial bases carry
-                # the `_col_seqs` attribution map, and every later merge
+                # sticky until a compaction or fold merges the partial
+                # deltas: gates the per-column read-time merge in _read_raw
+                "partial_deltas": not scope.fold
+                and (bool(m.get("partial_deltas")) or (delta and scope.partial)),
+                # sticky for the table's life: partial bases carry the
+                # `_col_seqs` attribution map, and every later merge
                 # must run per-column to honor it
                 "partial_state": bool(m.get("partial_state"))
-                or (not mor and scope.partial),
+                or (not delta and scope.partial),
             }
         )
         return metrics, read_amp
@@ -1131,43 +1133,33 @@ class IcebergLiteTable:
     def _inline_compaction(
         self, spark: SparkSession, metrics: dict[str, Any], read_amp: float
     ) -> dict[str, Any]:
-        """Phase 5 — MOR maintenance: compact() inline when a delta
-        list outgrew max_delta_depth or the measured read amplification
-        exceeds max_read_amplification. Runs after the commit point, so
-        the batch is durable either way; a crash here just leaves deltas
-        for the next compaction to fold. Tombstones MUST survive here:
-        compact()'s drop is only safe once no replay older than the
-        current head can still arrive, and the automatic path cannot
-        know that — an out-of-order ad-hoc replay carrying an older
-        upsert for a deleted key would otherwise resurrect it (ADVICE
-        r3). Tombstone GC stays an explicit user call."""
-        depth_hit = (
-            self.max_delta_depth is not None
-            and metrics.get("delta_depth", 0) > self.max_delta_depth
-        )
-        amp_hit = (
-            self.max_read_amplification is not None
-            and read_amp > self.max_read_amplification
-        )
-        if self.write_mode != "mor" or not (depth_hit or amp_hit):
+        """Phase 5 — MOR maintenance by measured cost: compact() inline
+        when the read amplification exceeds max_read_amplification. The
+        ratio needs this commit's delta footer rows, so this runs after
+        the commit point: the batch is durable either way, and a crash
+        here just leaves deltas for the next compaction. (A commit at
+        max_delta_depth folds in its own merge instead.) Tombstones MUST
+        survive: dropping them is only safe once no replay older than
+        the head can still arrive, which the automatic path cannot know
+        — an out-of-order replay of an older upsert would resurrect a
+        deleted key. Tombstone GC stays an explicit user call."""
+        if (
+            self.write_mode != "mor"
+            or self.max_read_amplification is None
+            or read_amp <= self.max_read_amplification
+        ):
             return metrics
         try:
             c = self.compact(spark, drop_tombstones=False)
         except ConcurrentCommitError:
             # a RIVAL writer landed a commit between this commit's
-            # manifest and the compaction's (VERDICT r5 #6): the
-            # compaction manifest lost the CAS. The batch commit is
-            # already durable and the rival's delta is intact in the
-            # winning manifest — folding it here would race; skip, the
-            # deltas (this table's AND the rival's) stay readable and the
-            # next commit's trigger re-fires on the still-elevated
-            # depth/amplification.
+            # manifest and the compaction's: the batch is durable and the
+            # rival's delta is intact in the winning manifest, so skip —
+            # the next commit's trigger re-fires on the amplification.
             metrics["compaction_skipped"] = "concurrent_writer"
         else:
             metrics["compacted_to"] = c.get("snapshot")
-            metrics["compaction_trigger"] = (
-                "read_amplification" if amp_hit and not depth_hit else "delta_depth"
-            )
+            metrics["compaction_trigger"] = "read_amplification"
             metrics["delta_depth"] = 0
             metrics["read_amplification"] = 0.0
         return metrics
@@ -1295,28 +1287,29 @@ class IcebergLiteTable:
         return {"snapshot": new_version, "restored": version}
 
     def compact(self, spark: SparkSession, drop_tombstones: bool = True) -> dict[str, Any]:
-        """Rewrite every bucket into one fresh snapshot: merges the
-        per-bucket file sets accumulated by incremental commits and
-        (optionally) physically drops tombstone rows — safe once no
-        replay older than the current head can still arrive (the Iceberg
+        """Rewrite every bucket into one fresh snapshot: the commit's
+        merge (_lww_merge, one bucket exchange) over the scan of every
+        base and delta, with no batch rows. Folds MOR deltas and
+        (optionally) drops tombstone rows, safe once no replay older
+        than the current head can still arrive (the Iceberg
         `expire_snapshots` + delete-file compaction analog)."""
         m = self.latest_manifest()
         if not m or not (m.get("buckets") or m.get("deltas")):
             return {"skipped": True, "reason": "empty table"}
-        df = self._read_raw(spark)  # MOR deltas are LWW-resolved in here
+        df, _ = self._scan(spark, m)
+        df = _lww_merge([df], m["columns"], "_col_seqs" in df.columns, self.n_buckets)
         if drop_tombstones:
             df = df.filter(~F.col("_deleted"))
         new_version = m["version"] + 1
-        n_out = max(1, min(self.n_buckets, 4 * df.sparkSession.sparkContext.defaultParallelism))
         snap_name, written = self._write_snapshot(
-            df.withColumn("pbucket", F.col("bucket")).repartition(n_out, "pbucket"),
-            new_version,
+            df.withColumn("pbucket", F.col("bucket")), new_version
         )
         self._write_manifest(
             {
                 **m,
                 "version": new_version,
-                "snap_dirs": {**m.get("snap_dirs", {}), str(new_version): snap_name},
+                # the only snapshot the new manifest references
+                "snap_dirs": {str(new_version): snap_name} if written else {},
                 # deltas fold into the new base (the MOR compaction contract)
                 "buckets": {b: new_version for b in written},
                 "deltas": {},
@@ -1425,9 +1418,7 @@ class IcebergLiteTable:
             return {"removed": 0}
 
         def _live_of(doc: dict[str, Any]) -> tuple[set[int], set[str]]:
-            vs = set(doc.get("buckets", {}).values())
-            for lst in doc.get("deltas", {}).values():
-                vs |= set(lst)
+            vs = _referenced(doc.get("buckets", {}), doc.get("deltas", {}))
             sd = doc.get("snap_dirs", {})
             names = {sd.get(str(v), f"snap-{v:012d}") for v in vs}
             return vs, names

@@ -51,6 +51,23 @@ add("CDC replay: decode -> upsert projection -> single-exchange MERGE", captured
     "plans NO second shuffle; rows reach the pbucket-partitioned write already "
     "clustered (one file per bucket).")
 
+# 1a. the MOR commit at max_delta_depth: one merge folds every delta
+mor = IcebergLiteTable(d + "/mor", n_buckets=64, write_mode="mor", max_delta_depth=1)
+mor.commit(batch.filter("_seq % 2 = 0"), "delta")
+captured.clear()
+DataFrameWriter.parquet = lambda self, *a, **k: (captured.append(self._df), parquet(self, *a, **k))[1]
+mor.commit(batch.filter("_seq % 2 = 1"), "fold")
+DataFrameWriter.parquet = parquet
+add("MOR compacting commit: stored base ∪ deltas ∪ batch -> one MERGE", captured[0],
+    "A merge-on-read commit onto a table whose longest delta list already holds "
+    "max_delta_depth entries folds instead of appending: the stored scan (every "
+    "base and delta file, unresolved, in one FileScan) and the batch union into "
+    "the same single bucket exchange and max_by aggregate as a copy-on-write "
+    "merge, and the output is written as fresh bases. compact() runs this plan "
+    "without the batch side. Before, the commit wrote a delta and compact() "
+    "read it straight back through its own aggregate exchange plus a second "
+    "repartition.")
+
 # 1b. typed-wire decode: pure projection + nested-schema pruning
 from bingo2sql_spark.sources.synth import to_raw_typed
 from bingo2sql_spark.sources.decode import decode_events_typed
@@ -108,16 +125,18 @@ add("curate_decontaminate (train/eval n-gram overlap)", qs["curate_decontaminate
     "corpus-sized wide exchange, which is what makes decontamination affordable "
     "against a 100 TB training corpus.")
 
+cores = spark.sparkContext.defaultParallelism
 out = io.StringIO()
 out.write("""# PLANS — physical-plan audit of the hot paths
 
-Generated from live `explain(formatted)` at sf0.01 (regenerate:
-`python docs/gen_plans.py`). For each plan: the operator tree, the
-load-bearing scan/exchange details, and why this is the plan we want
+Generated from live `explain(formatted)` at sf0.01 on local[%d]
+(regenerate: `SPARK_GRAFT_CPUS=%d python docs/gen_plans.py`; exchange
+partition counts follow the core count). For each plan: the operator
+tree, the load-bearing scan/exchange details, and why this is the plan we want
 at 100 TB. Plan-shape INVARIANTS are enforced by
 tests/test_plan_quality.py — this file is the human-readable audit.
 
-""")
+""" % (cores, cores))
 for title, head, details, note in sections:
     out.write(f"## {title}\n\n{note}\n\n```\n{head.strip()}\n```\n\n")
     if details.strip():

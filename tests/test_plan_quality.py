@@ -548,8 +548,9 @@ def test_table_paths_plan_no_python_rdd(spark, tmp_path, monkeypatch):
     plans as JVM LocalRelations, never as createDataFrame(list) Python
     RDDs: a merge against the empty state plans the batch alone (no
     Union, no ExistingRDD scan), and a point lookup's bucket computation
-    folds on the driver without a job. A CoW commit over stored rows
-    plans exactly one bucket exchange under its max_by."""
+    folds on the driver without a job. A CoW commit over stored rows,
+    a MOR commit that folds its deltas at max_delta_depth and compact()
+    each plan exactly one bucket exchange under their max_by."""
     from bingo2sql_spark.operators.apply import IcebergLiteTable
     from bingo2sql_spark.pipeline import replay
     from bingo2sql_spark.sources.synth import generate_events
@@ -564,11 +565,20 @@ def test_table_paths_plan_no_python_rdd(spark, tmp_path, monkeypatch):
     replay(ev.filter("seq < 200"), mor, batch_id="m1")
     m = replay(ev.filter("seq >= 200"), mor, batch_id="m2")
     replay(ev.filter("seq >= 300"), cow, batch_id="second")
+    fold = IcebergLiteTable(
+        str(tmp_path / "fold"), n_buckets=8, write_mode="mor", max_delta_depth=1
+    )
+    replay(ev.filter("seq < 200"), fold, batch_id="f1")
+    mf = replay(ev.filter("seq >= 200"), fold, batch_id="f2")
+    replay(ev.filter("seq >= 300"), fold, batch_id="f3")
+    fold.compact(spark)
     monkeypatch.undo()
     # fresh CoW commit, two MOR delta commits (the second over a stored
-    # delta), a CoW commit over stored rows, and no compaction rewrite
+    # delta), a CoW commit over stored rows, a MOR delta, its fold, a
+    # delta on the folded base and compact(); no post-commit compaction
     assert m["mode"] == "mor" and m["delta_depth"] == 2, m
-    assert len(written) == 4, len(written)
+    assert mf["compacted_to"] == mf["snapshot"] and mf["delta_depth"] == 0, mf
+    assert len(written) == 8, len(written)
     for plan in written:
         assert "ExistingRDD" not in plan, plan
     for plan in written[:3]:
@@ -576,13 +586,17 @@ def test_table_paths_plan_no_python_rdd(spark, tmp_path, monkeypatch):
     # the CoW second commit is the real stored-vs-batch MERGE: stored
     # scan and batch union straight into the ONE bucket exchange, and
     # nothing but the max_by aggregate sits between it and the write
-    merge = written[3]
-    assert merge.count("Exchange ") == 1, merge
-    above, below = merge.split("Exchange hashpartitioning(bucket", 1)
-    assert "max_by" in above, merge
-    assert "+- Union" in below and "FileScan parquet" in below, merge
-    for node in ("LeftSemi", "Window", "BroadcastExchange"):
-        assert node not in merge, merge
+    # the fold is that same plan over every base and delta; compact()
+    # is it without batch rows, so its one scan needs no Union
+    for merge, union in ((written[3], True), (written[5], True), (written[7], False)):
+        assert merge.count("Exchange ") == 1, merge
+        above, below = merge.split("Exchange hashpartitioning(bucket", 1)
+        assert "max_by" in above, merge
+        assert ("+- Union" in below) == union and "FileScan parquet" in below, merge
+        for node in ("LeftSemi", "Window", "BroadcastExchange"):
+            assert node not in merge, merge
+    for plan in (written[4], written[6]):
+        assert "Union" not in plan and "FileScan parquet" not in plan, plan
 
     for t in (cow, mor):
         assert "ExistingRDD" not in _plan(t.read(spark))
@@ -604,10 +618,11 @@ def test_commit_jobs_per_path(spark, tmp_path):
     """Spark jobs per IcebergLiteTable.commit(), counted through a job
     group set here, on each commit path: a fresh CoW commit (the merge
     job, Observation counts), a CoW commit over stored rows (pruning
-    pre-pass + merge), a MOR delta append, a MOR delta whose depth fires
-    inline compaction, a flashback rebase onto an empty table (its
-    min-seq aggregate) and a DROP + rename commit. The counts are
-    pinned: a phase that starts a job of its own shows up here."""
+    pre-pass + merge), a MOR delta append, a MOR commit at
+    max_delta_depth that folds the deltas in its own merge, compact(), a
+    flashback rebase onto an empty table (its min-seq aggregate) and a
+    DROP + rename commit. The counts are pinned: a phase that starts a
+    job of its own shows up here."""
     from bingo2sql_spark.operators import flashback as FB
     from bingo2sql_spark.operators import resolve as R
     from bingo2sql_spark.operators.apply import IcebergLiteTable
@@ -638,10 +653,12 @@ def test_commit_jobs_per_path(spark, tmp_path):
     )
     commit("mor_delta", mor, up(ev.filter("seq < 200")), "m1")
     m = commit("mor_delta_compaction", mor, up(ev.filter("seq >= 200")), "m2")
+    c, jobs["mor_compact"] = _jobs(spark, "commit-jobs-compact", lambda: mor.compact(spark))
     fb = IcebergLiteTable(str(tmp_path / "fb"), n_buckets=8)
     commit("flashback_empty", fb, up(FB.invert(ev)), "f1", rebase_past_head=True)
 
     assert m["compaction_trigger"] == "delta_depth", m
+    assert m["compacted_to"] == m["snapshot"] and not c["skipped"], (m, c)
     cols = cow.latest_manifest()["columns"]
     assert "language" in cols and "lang" not in cols and "branch" not in cols, cols
     assert jobs == {
@@ -649,7 +666,8 @@ def test_commit_jobs_per_path(spark, tmp_path):
         "cow_stored": 4,
         "drop_rename": 4,
         "mor_delta": 2,
-        "mor_delta_compaction": 5,
+        "mor_delta_compaction": 2,
+        "mor_compact": 2,
         "flashback_empty": 4,
     }, jobs
 

@@ -491,9 +491,10 @@ def test_cow_commit_over_minimal_mor_deltas(spark, tmp_path):
 
 
 def test_mor_inline_auto_compaction(spark, small_events, tmp_path):
-    """max_delta_depth bounds read amplification: the commit that pushes
-    any bucket past the depth triggers inline compaction — deltas fold
-    into a fresh base, state unchanged."""
+    """max_delta_depth bounds read amplification: a commit onto a table
+    whose deepest bucket already holds max_delta_depth deltas folds them
+    in its own merge — every delta and the batch land in fresh bases,
+    state unchanged."""
     t = IcebergLiteTable(
         str(tmp_path / "ac"), n_buckets=8, write_mode="mor", max_delta_depth=2
     )
@@ -501,8 +502,8 @@ def test_mor_inline_auto_compaction(spark, small_events, tmp_path):
     m0 = replay(parts[0], t, batch_id="a0")
     m1 = replay(parts[1], t, batch_id="a1")
     assert "compacted_to" not in m0 and "compacted_to" not in m1
-    m2 = replay(parts[2], t, batch_id="a2")  # depth 3 > 2 -> compacts
-    assert m2.get("compacted_to") and m2["delta_depth"] == 0
+    m2 = replay(parts[2], t, batch_id="a2")  # depth 2 at the bound -> folds
+    assert m2["compacted_to"] == m2["snapshot"] and m2["delta_depth"] == 0
     man = t.latest_manifest()
     assert man["deltas"] == {} and man["buckets"]
     # state equals an uncompacted cow replay of the same batches
@@ -921,7 +922,12 @@ def test_write_mode_row_image_matrix_converges(spark, tmp_path, seed, cut_mod):
     same randomized stream, split into interleaved batches, converges
     to ONE sequential-oracle state (LWW order-independence holds in
     every storage/image combination; MOR additionally through
-    compaction)."""
+    compaction, and at max_delta_depth=1 through folds over MINIMAL
+    deltas whose base keeps the `_col_seqs` attributions)."""
+    import os
+
+    from pyspark.sql import functions as F
+
     from bingo2sql_spark.sources.synth import generate_events
 
     full_ev = generate_events(spark, n_keys=120, versions_per_key=8, n_repos=12,
@@ -931,19 +937,32 @@ def test_write_mode_row_image_matrix_converges(spark, tmp_path, seed, cut_mod):
     pdf = min_ev.select("seq", "op", "before", "after", "changed_cols").toPandas()
     expected = oracle.state_checksum(oracle.sequential_apply(pdf))
     configs = [
-        ("cow", "FULL", full_ev), ("cow", "MINIMAL", min_ev),
-        ("mor", "FULL", full_ev), ("mor", "MINIMAL", min_ev),
+        ("cow", "FULL", full_ev, None), ("cow", "MINIMAL", min_ev, None),
+        ("mor", "FULL", full_ev, None), ("mor", "MINIMAL", min_ev, None),
+        ("mor", "MINIMAL", min_ev, 1),
     ]
-    for mode, image, ev in configs:
+    for mode, image, ev, depth in configs:
         t = IcebergLiteTable(
-            str(tmp_path / f"{mode}_{image}_{seed}"), n_buckets=8, write_mode=mode
+            str(tmp_path / f"{mode}_{image}_{depth}_{seed}"), n_buckets=8,
+            write_mode=mode, max_delta_depth=depth,
         )
         # interleaved (non-contiguous) batch split: stresses cross-batch
         # per-column merges and MOR delta stacking
         for i in range(cut_mod):
             replay(ev.filter(f"seq % {cut_mod} = {i}"), t, batch_id=f"p{i}",
                    row_image=image)
-        assert t.state_checksum(spark) == expected, (mode, image)
+        assert t.state_checksum(spark) == expected, (mode, image, depth)
+        if depth is not None:
+            # p1 (and p3) folded a MINIMAL delta; the folded base keeps
+            # the sparse per-column attribution maps
+            folded = t.manifest_at(2)
+            assert folded["metrics"]["compacted_to"] == 2, folded["metrics"]
+            assert t.manifest_at(1)["partial_deltas"] and not folded["partial_deltas"]
+            assert folded["partial_state"] and folded["deltas"] == {}
+            base = spark.read.parquet(
+                os.path.join(t.path, "data", folded["snap_dirs"]["2"])
+            )
+            assert base.filter(F.size("_col_seqs") > 0).count() > 0
         if mode == "mor":
             t.compact(spark, drop_tombstones=False)
             assert t.state_checksum(spark) == expected, (mode, image, "compacted")
@@ -1040,7 +1059,8 @@ def test_minimal_out_of_order_cross_commit_column_race(spark, tmp_path):
     carries seq1:[lang] and seq10:[content]; an ad-hoc replay then
     brings seq5:[lang] — lang's stored writer is seq1, so seq5 MUST
     win lang (the old collapse stamped lang with row-seq 10 and seq5
-    lost). Checked in both COW and MOR, plus through a compaction."""
+    lost). Checked in COW, MOR and MOR folding at max_delta_depth=1
+    (b2 folds b1's MINIMAL delta), plus through a compaction."""
     import pyspark.sql.functions as F
 
     from bingo2sql_spark.operators import resolve as R
@@ -1069,9 +1089,9 @@ def test_minimal_out_of_order_cross_commit_column_race(spark, tmp_path):
         env = spark.createDataFrame(data, S.ENVELOPE)
         return R.to_upsert_rows(R.with_key(env), minimal=True)
 
-    for mode in ("cow", "mor"):
-        t = IcebergLiteTable(str(tmp_path / f"oo_{mode}"), n_buckets=4,
-                             write_mode=mode)
+    for mode, depth in (("cow", None), ("mor", None), ("mor", 1)):
+        t = IcebergLiteTable(str(tmp_path / f"oo_{mode}_{depth}"), n_buckets=4,
+                             write_mode=mode, max_delta_depth=depth)
         t.commit(minimal_batch([
             (0, "insert", None,
              {"commit": "c0", "lang": "en", "content": "v0"}),
@@ -1079,9 +1099,10 @@ def test_minimal_out_of_order_cross_commit_column_race(spark, tmp_path):
             (10, "update", ["content"], {"content": "v10"}),
         ]), batch_id="b1")
         # ad-hoc out-of-order replay: seq 5 rewrites lang only
-        t.commit(minimal_batch([
+        m2 = t.commit(minimal_batch([
             (5, "update", ["lang"], {"lang": "de"}),
         ]), batch_id="b2")
+        assert ("compacted_to" in m2) == (depth is not None), (mode, m2)
         row = t.read(spark).collect()[0]
         assert row["lang"] == "de", (mode, row)          # 5 beats lang's writer 1
         assert row["content"] == "v10", (mode, row)       # 10 still owns content
@@ -1253,13 +1274,14 @@ def test_inline_compaction_races_concurrent_delta_commit(spark, small_events, ev
     """VERDICT r5 #6: an inline auto-compaction racing a concurrent MOR
     delta commit. Injected deterministically both ways:
 
-    (a) the RIVAL delta lands between a commit's manifest and its
-        inline compaction's manifest — the compaction loses the CAS and
-        is SKIPPED (the already-durable batch must not fail), the
-        rival's delta survives, and the next commit's trigger re-fires
-        and folds everything;
-    (b) the COMPACTION lands first and the rival loses — retry re-reads
-        the compacted manifest and re-merges.
+    (a) the RIVAL delta lands between a commit's manifest and the
+        read-amplification compaction's manifest — the compaction loses
+        the CAS and is SKIPPED (the already-durable batch must not
+        fail), the rival's delta survives, and the next commit's
+        trigger re-fires and folds everything;
+    (b) a depth FOLD (max_delta_depth=0: every commit folds) lands
+        first and the rival loses — retry re-reads the folded manifest
+        and re-merges.
 
     Both end states equal the sequential oracle and tombstones survive
     every fold (no delta loss, no resurrection window)."""
@@ -1273,7 +1295,10 @@ def test_inline_compaction_races_concurrent_delta_commit(spark, small_events, ev
 
     # ---- (a) rival delta lands between commit and inline compaction
     p = str(tmp_path / "race_a")
-    t = IcebergLiteTable(p, n_buckets=8, write_mode="mor", max_delta_depth=0)
+    t = IcebergLiteTable(p, n_buckets=8, write_mode="mor", max_read_amplification=0.01)
+    # the first delta plays the base role; b1's delta over it fires the
+    # amplification trigger
+    replay(small_events.filter(f"seq < {cut // 2}"), t, batch_id="b0")
     orig = A.IcebergLiteTable._write_manifest
     state = {"armed": True}
 
@@ -1285,7 +1310,7 @@ def test_inline_compaction_races_concurrent_delta_commit(spark, small_events, ev
         return orig(self, doc)
 
     monkeypatch.setattr(A.IcebergLiteTable, "_write_manifest", raced)
-    m1 = replay(small_events.filter(f"seq < {cut}"), t, batch_id="b1")
+    m1 = replay(small_events.filter(f"seq >= {cut // 2} and seq < {cut}"), t, batch_id="b1")
     monkeypatch.undo()
     # the commit itself succeeded; only the compaction stepped aside
     assert not m1["skipped"]
@@ -1298,15 +1323,15 @@ def test_inline_compaction_races_concurrent_delta_commit(spark, small_events, ev
     # the trigger re-fires on the next commit and the fold keeps
     # tombstones (no resurrection window)
     m2 = t.commit(rival_batch.limit(0), batch_id="nudge")
-    assert m2.get("compacted_to")
+    assert m2.get("compacted_to") and m2["compaction_trigger"] == "read_amplification"
     assert t.state_checksum(spark) == expected
     raw = t._read_raw(spark)
     assert raw.filter("_deleted").count() > 0  # tombstones survived the fold
 
-    # ---- (b) compaction wins, rival loses the CAS and retries
+    # ---- (b) a fold wins, rival loses the CAS and retries
     p2 = str(tmp_path / "race_b")
     t2 = IcebergLiteTable(p2, n_buckets=8, write_mode="mor", max_delta_depth=0)
-    replay(small_events.filter(f"seq < {cut}"), t2, batch_id="b1")  # compacts inline
+    replay(small_events.filter(f"seq < {cut}"), t2, batch_id="b1")  # folds
     state2 = {"armed": True}
 
     def raced2(self, doc):
@@ -1314,7 +1339,7 @@ def test_inline_compaction_races_concurrent_delta_commit(spark, small_events, ev
             state2["armed"] = False
             other = IcebergLiteTable(p2, n_buckets=8, write_mode="mor",
                                      max_delta_depth=0)
-            other.commit(rival_batch.limit(0), batch_id="compactor")  # fires inline compaction
+            other.commit(rival_batch.limit(0), batch_id="compactor")  # folds
         return orig(self, doc)
 
     monkeypatch.setattr(A.IcebergLiteTable, "_write_manifest", raced2)
@@ -1323,6 +1348,94 @@ def test_inline_compaction_races_concurrent_delta_commit(spark, small_events, ev
     assert not mr["skipped"] and not state2["armed"]
     assert t2.state_checksum(spark) == expected
     assert t2._read_raw(spark).filter("_deleted").count() > 0
+
+
+def test_depth_fold_races_rival_commit(spark, small_events, events_pdf, tmp_path, monkeypatch):
+    """A MOR commit at max_delta_depth folds the deltas in its own merge,
+    so the fold commits with ONE manifest CAS. A rival delta commit
+    landing between the fold's data write and that CAS makes the fold
+    raise ConcurrentCommitError with nothing of it referenced (the
+    rival's delta is the table), and commit_with_retry re-reads and
+    re-folds over the rival's delta: the state equals the sequential
+    oracle and tombstones survive the fold."""
+    from bingo2sql_spark.operators import apply as A
+    from bingo2sql_spark.operators import resolve as R
+
+    cut = int(events_pdf["seq"].max()) // 2
+
+    def up(cond):
+        return R.to_upsert_rows(R.with_key(small_events.filter(cond)))
+
+    p = str(tmp_path / "fold_race")
+    t = IcebergLiteTable(p, n_buckets=8, write_mode="mor", max_delta_depth=1)
+    replay(small_events.filter(f"seq < {cut // 2}"), t, batch_id="b0")  # at the bound
+    batch = up(f"seq >= {cut // 2} and seq < {cut}")
+    orig = A.IcebergLiteTable._write_manifest
+    rivals = []
+
+    def raced(self, doc):
+        if rivals and doc["metrics"].get("compacted_to"):
+            rival = IcebergLiteTable(p, n_buckets=8, write_mode="mor")
+            rival.commit(up(f"seq >= {cut}"), batch_id=rivals.pop())  # takes the version
+        return orig(self, doc)
+
+    monkeypatch.setattr(A.IcebergLiteTable, "_write_manifest", raced)
+    rivals.append("rival")
+    with pytest.raises(A.ConcurrentCommitError):
+        t.commit(batch, "b1")
+    m = t.latest_manifest()
+    assert m["metrics"]["batch_id"] == "rival" and any(m["deltas"].values()), m["metrics"]
+    lost = events_pdf[(events_pdf["seq"] < cut // 2) | (events_pdf["seq"] >= cut)]
+    assert t.state_checksum(spark) == oracle.state_checksum(oracle.sequential_apply(lost))
+    # the retry loses once more to a second rival, then folds both
+    rivals.append("rival2")
+    mr = t.commit_with_retry(batch, "b1")
+    monkeypatch.undo()
+    assert not rivals and mr["compacted_to"] == mr["snapshot"], mr
+    assert t.latest_manifest()["deltas"] == {}
+    assert t.state_checksum(spark) == oracle.state_checksum(oracle.sequential_apply(events_pdf))
+    assert t._read_raw(spark).filter("_deleted").count() > 0
+
+
+def test_snap_dirs_hold_only_referenced_snapshots(spark, small_events, tmp_path):
+    """The manifest's version -> data dir map holds exactly the
+    snapshots its bucket map and delta lists reference, so it does not
+    grow by one entry per commit. Older manifests keep their own maps:
+    time travel to an early version still reads, and expire_snapshots
+    removes exactly the dirs no retained manifest references."""
+    import os
+
+    from bingo2sql_spark.operators.apply import DATA_DIR
+
+    t = IcebergLiteTable(
+        str(tmp_path / "sd"), n_buckets=8, write_mode="mor", max_delta_depth=2
+    )
+    for i in range(10):
+        replay(small_events.filter(f"seq % 10 = {i}"), t, batch_id=f"s{i}")
+    assert any(t.manifest_at(v)["metrics"].get("compacted_to") for v in t.versions())
+
+    def referenced(doc):
+        return set(doc["buckets"].values()).union(*doc["deltas"].values())
+
+    m = t.latest_manifest()
+    assert {int(v) for v in m["snap_dirs"]} == referenced(m), sorted(m["snap_dirs"])
+    ref = IcebergLiteTable(str(tmp_path / "sd_ref"), n_buckets=8)
+    replay(small_events.filter("seq % 10 = 0"), ref, batch_id="r0")
+    cols = ["repo", "path", "content"]
+    assert sorted(t.read(spark, version=1).select(cols).collect()) == sorted(
+        ref.read(spark).select(cols).collect()
+    )
+    state = t.state_checksum(spark)
+    data = os.path.join(t.path, DATA_DIR)
+    before = set(os.listdir(data))
+    live = {
+        doc["snap_dirs"][str(v)]
+        for doc in map(t.manifest_at, t.versions()[-2:])
+        for v in referenced(doc)
+    }
+    out = t.expire_snapshots(keep_last=2)
+    assert set(os.listdir(data)) == live and out["removed"] == len(before - live)
+    assert t.state_checksum(spark) == state
 
 
 def test_dense_col_seqs_snapshot_decodes_like_sparse(spark, tmp_path):
