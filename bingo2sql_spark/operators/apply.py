@@ -42,10 +42,12 @@ Scale design (10^10 events, 100 TB table):
 - `write_mode="mor"` switches commits to MERGE-ON-READ (Hudi /
   Iceberg-v2 delete-file shape): append one per-bucket delta file of
   batch winners — O(batch) per commit, stored data never read — and
-  reconcile base ∪ deltas at read time. A commit onto a delta list of
-  `max_delta_depth` FOLDS instead: its merge writes fresh bases from
-  base ∪ deltas ∪ batch, as `compact()` does. The right mode when
-  micro-batches are small relative to bucket data.
+  reconcile base ∪ deltas at read time. A commit onto a table whose
+  longest delta list holds `max_delta_depth` deltas, or whose recorded
+  read amplification exceeds `max_read_amplification`, FOLDS instead:
+  its merge writes fresh bases from base ∪ deltas ∪ batch. `compact()`
+  is that fold without batch rows. The right mode when micro-batches
+  are small relative to bucket data.
 - every write is ONE bucket exchange of unresolved stored ∪ batch rows
   feeding a per-(bucket, key) max_by aggregate (see _lww_merge).
 - crash safety: the manifest rename is the commit point; data of a
@@ -290,6 +292,12 @@ def _referenced(buckets: dict[str, int], deltas: dict[str, list[int]]) -> set[in
     return set(buckets.values()).union(*deltas.values())
 
 
+def _read_amplification(bucket_rows: dict[str, dict[str, int]]) -> float:
+    """A manifest's measured read amplification: the worst bucket's
+    delta rows over its base rows (at least 1), from footer stats."""
+    return max((br["delta"] / max(br["base"], 1) for br in bucket_rows.values()), default=0.0)
+
+
 def bucket_col(n_buckets: int):
     """Deterministic bucket of the composite merge key. Hashing the
     composite (repo, path) — not repo alone — is what defuses hot-repo
@@ -335,7 +343,9 @@ class _Scope(NamedTuple):
     partial: bool  #: per-column (MINIMAL-image) merge
     counts: dict[str, int] | None  #: exact rows/deletes from the pre-pass
     observation: Observation | None  #: ...or from the merge job
-    fold: bool  #: MOR at max_delta_depth: merge every delta into new bases
+    #: why the merge folds every delta into new bases ("delta_depth",
+    #: "read_amplification", "manual" for compact()); None = no fold
+    fold: str | None
 
 
 class IcebergLiteTable:
@@ -375,12 +385,13 @@ class IcebergLiteTable:
         #: _scope_batch) — bounds read amplification without an external
         #: maintenance job. None = manual compaction only.
         self.max_delta_depth = max_delta_depth
-        #: MOR maintenance policy #2: compact() after a commit that
-        #: leaves any bucket's MEASURED read amplification — delta rows /
-        #: base rows from the commits' footer stats — above this ratio.
-        #: Depth alone misses a couple of LARGE deltas (replays,
-        #: backfills) doubling every read at depth 2. Either policy fires
-        #: independently; both keep tombstones.
+        #: MOR maintenance policy #2: a commit onto a table whose
+        #: MEASURED read amplification (_read_amplification over the
+        #: manifest's footer-stat row counts) exceeds this ratio folds
+        #: too. Depth alone misses a couple of LARGE deltas (replays,
+        #: backfills) doubling every read at depth 2. Either policy
+        #: fires on the commit after the one that crosses it; both keep
+        #: tombstones.
         self.max_read_amplification = max_read_amplification
         os.makedirs(os.path.join(path, MANIFEST_DIR), exist_ok=True)
 
@@ -498,13 +509,10 @@ class IcebergLiteTable:
         if buckets is not None:
             want = {str(b) for b in buckets}
             all_bk = [b for b in all_bk if b in want]
-        # per-writer-ATTEMPT data dirs (see _write_snapshot); the manifest
-        # maps version -> dir (legacy name when absent)
-        snap_dirs = m.get("snap_dirs", {})
-
+        # per-writer-ATTEMPT data dirs (see _write_snapshot): the manifest
+        # maps every version it references to its dir
         def _p(v: int, b: str) -> str:
-            name = snap_dirs.get(str(v), f"snap-{v:012d}")
-            return os.path.join(self.path, DATA_DIR, name, f"pbucket={b}")
+            return os.path.join(self.path, DATA_DIR, m["snap_dirs"][str(v)], f"pbucket={b}")
 
         paths, has_deltas = [], False
         for b in all_bk:
@@ -740,21 +748,27 @@ class IcebergLiteTable:
         is needed. Returns per-batch metrics (the reference's websocket
         progress push analog, core/socket.go:34-76).
 
-        Five phases, one method each: _evolve_columns (the DDL plan, no
+        Four phases, one method each: _evolve_columns (the DDL plan, no
         job), _scope_batch (bucketing, pruning pre-pass or Observation,
         flashback rebase, the MOR fold decision), _merge_and_write (ONE
-        merge job with ONE full-data exchange), _next_manifest (lineage,
-        metrics and the manifest CAS — the commit point) and
-        _inline_compaction (MOR read-amplification policy).
+        merge job with ONE full-data exchange) and _next_manifest
+        (lineage, metrics and the manifest CAS — the commit point).
         """
         t0 = time.time()
         m = self.latest_manifest() or {"version": 0, "buckets": {}, "columns": []}
         if self._already_committed(m, batch_id):
             return {"batch_id": batch_id, "skipped": True, "reason": "already committed"}
-        # bucket count is part of the table's physical identity: batch rows
-        # bucketed with a DIFFERENT n_buckets than the stored rows would
-        # land the same key in two (bucket, key) merge groups — silent
-        # per-key duplicates. Stored in the manifest; mismatches are loud.
+        self._check_n_buckets(m)
+        cols = self._evolve_columns(m, batch, drop_columns, rename_columns)
+        scope = self._scope_batch(m, batch, batch_id, cols.rewrite_all, rebase_past_head)
+        snap_name, written = self._merge_and_write(m, cols, scope)
+        return self._next_manifest(m, batch_id, cols, scope, snap_name, written, t0)
+
+    def _check_n_buckets(self, m: dict[str, Any]) -> None:
+        """Bucket count is part of the table's physical identity: rows
+        bucketed with a DIFFERENT n_buckets than the stored rows would
+        land the same key in two (bucket, key) merge groups — silent
+        per-key duplicates. Stored in the manifest; mismatches are loud."""
         stored_n = m.get("n_buckets")
         if stored_n is not None and stored_n != self.n_buckets:
             raise ValueError(
@@ -762,11 +776,6 @@ class IcebergLiteTable:
                 f"opened with n_buckets={self.n_buckets}; rebucketing requires a "
                 "full rewrite (read -> new table), not a commit"
             )
-        cols = self._evolve_columns(m, batch, drop_columns, rename_columns)
-        scope = self._scope_batch(m, batch, batch_id, cols.rewrite_all, rebase_past_head)
-        snap_name, written = self._merge_and_write(m, cols, scope)
-        metrics, read_amp = self._next_manifest(m, batch_id, cols, scope, snap_name, written, t0)
-        return self._inline_compaction(batch.sparkSession, metrics, read_amp)
 
     def _evolve_columns(
         self,
@@ -870,12 +879,20 @@ class IcebergLiteTable:
     ) -> _Scope:
         """Phase 2 — bucket the batch rows and decide which buckets this
         commit rewrites, with the batch's exact row/delete counts, and
-        whether a MOR commit FOLDS: at max_delta_depth its merge writes
-        new bases from every base and delta with the batch, in place of
-        a delta that a separate compaction would read straight back."""
+        whether a MOR commit FOLDS: at max_delta_depth, or above
+        max_read_amplification as the parent manifest records it, its
+        merge writes new bases from every base and delta with the batch,
+        in place of a delta that a separate compaction would read
+        straight back. Depth is named the trigger when both hold."""
         mor = self.write_mode == "mor"
         depth = max((len(v) for v in m.get("deltas", {}).values()), default=0)
-        fold = mor and self.max_delta_depth is not None and depth >= self.max_delta_depth
+        amp = _read_amplification(m.get("bucket_rows", {}))
+        triggers = {
+            "delta_depth": self.max_delta_depth is not None and depth >= self.max_delta_depth,
+            "read_amplification": self.max_read_amplification is not None
+            and amp > self.max_read_amplification,
+        }
+        fold = next((t for t, hit in triggers.items() if mor and hit), None)
         b = batch.withColumn("bucket", bucket_col(self.n_buckets)).withColumnRenamed(
             "_seq", "_ingest_seq"
         )
@@ -949,7 +966,11 @@ class IcebergLiteTable:
         return _Scope(b, affected, partial, counts, observation, fold)
 
     def _merge_and_write(
-        self, m: dict[str, Any], cols: _Columns, scope: _Scope
+        self,
+        m: dict[str, Any],
+        cols: _Columns,
+        scope: _Scope,
+        drop_tombstones: bool = False,
     ) -> tuple[str | None, dict[str, dict]]:
         """Phase 3 — the MERGE (_lww_merge, ONE full-data exchange):
         per-key LWW by source seq over the unresolved stored scan of the
@@ -957,8 +978,9 @@ class IcebergLiteTable:
         written as the new snapshot. A MOR delta reads no stored data:
         the batch self-merges alone, so a delta holds one row per key.
         Tombstones stay as rows so older replays cannot resurrect
-        deleted keys. Lineage comes from the written files' footer
-        stats, so the batch is scanned once.
+        deleted keys, unless compact() asks to drop them. Lineage comes
+        from the written files' footer stats, so the batch is scanned
+        once.
 
         Returns (snapshot dir name, per-bucket footer stats); (None, {})
         when no bucket is affected."""
@@ -986,6 +1008,8 @@ class IcebergLiteTable:
             inputs, cols.all_cols, scope.partial, len(scope.affected),
             emit_changed=delta and scope.partial,
         )
+        if drop_tombstones:
+            merged = merged.filter(~F.col("_deleted"))
         return self._write_snapshot(
             merged.withColumn("pbucket", F.col("bucket")), m["version"] + 1
         )
@@ -1010,19 +1034,20 @@ class IcebergLiteTable:
     def _next_manifest(
         self,
         m: dict[str, Any],
-        batch_id: str,
+        batch_id: str | None,
         cols: _Columns,
         scope: _Scope,
         snap_name: str | None,
         written: dict[str, dict[str, Any]],
         t0: float,
-    ) -> tuple[dict[str, Any], float]:
+    ) -> dict[str, Any]:
         """Phase 4 — the next manifest from the written buckets' footer
         stats (no data read): bucket map or MOR delta lists, per-bucket
-        row counts, lineage, alias folding and the commit metrics; then
-        the manifest CAS, the commit point. A fold's manifest is a
-        compaction's: new bases only, no deltas. Returns (metrics, the
-        measured read amplification)."""
+        row counts, lineage, alias folding and the metrics; then the
+        manifest CAS, the commit point. A fold's manifest is the one
+        compaction-shaped manifest: new bases only, no deltas. batch_id
+        None is compact(): its metrics say `"op": "compact"` and no
+        batch is recorded. Returns the metrics."""
         mor = self.write_mode == "mor"
         delta = mor and not scope.fold
         new_version = m["version"] + 1
@@ -1036,27 +1061,27 @@ class IcebergLiteTable:
         deltas = {bk: list(v) for bk, v in prior.get("deltas", {}).items()}
         lineage = dict(m.get("lineage", {}))
         # per-bucket base/delta row counts (from footer stats — no data
-        # read): the measured read-amplification signal the inline
-        # compaction policy keys on
+        # read): the measured read amplification max_read_amplification
+        # keys on
         bucket_rows = {bk: dict(v) for bk, v in prior.get("bucket_rows", {}).items()}
         for bk, st in written.items():
+            entry = {"snapshot": new_version, **st}
             if delta:
-                had_prior_deltas = bool(m.get("deltas", {}).get(bk))
                 deltas.setdefault(bk, []).append(new_version)
-                br = bucket_rows.get(bk)
-                if br is None and not had_prior_deltas:
-                    # pure-MOR tables never write a base until compaction:
+                if bk in bucket_rows:
+                    bucket_rows[bk]["delta"] += st["rows"]
+                else:
+                    # pure-MOR tables never write a base until a fold:
                     # the bucket's FIRST delta plays the base's role in
                     # the amplification ratio (reading one file is the
                     # ideal; every further delta is the overhead)
                     bucket_rows[bk] = {"base": st["rows"], "delta": 0}
-                elif br is None:
-                    # manifest predates bucket_rows: prior delta volume
-                    # is unknown, so base=0 reads as over-threshold and
-                    # one compaction establishes truthful bookkeeping
-                    bucket_rows[bk] = {"base": 0, "delta": st["rows"]}
-                else:
-                    br["delta"] += st["rows"]
+                # a delta holds only its batch: an out-of-order older
+                # batch must not lower the bucket's recorded head seq
+                entry = max(
+                    entry, lineage.get(bk, entry),
+                    key=lambda e: (e["max_seq"] is not None, e["max_seq"] or 0),
+                )
             else:
                 # the merge read the bucket's deltas (_scan) and the new
                 # base holds their resolved rows: drop the list, or
@@ -1064,39 +1089,33 @@ class IcebergLiteTable:
                 buckets_map[bk] = new_version
                 bucket_rows[bk] = {"base": st["rows"], "delta": 0}
                 deltas.pop(bk, None)
-            lineage[bk] = {"snapshot": new_version, **st}
+            lineage[bk] = entry
         aliases = cols.aliases
-        if (
-            aliases
-            and buckets_map
-            and all(v == new_version for v in buckets_map.values())
-            and not any(deltas.values())
-        ):
+        if all(v == new_version for v in buckets_map.values()) and not any(deltas.values()):
             # alias folding: this commit rewrote EVERY live bucket
-            # (rewrite_all, a MOR fold, or a batch touching all keys), so
+            # (rewrite_all, a fold, or a batch touching all keys), so
             # every data file the new snapshot references is written
             # under current names and the alias coalesce chains are dead
-            # weight; time travel serves old names from old manifests.
+            # weight (renamed-away names become re-addable); time travel
+            # serves old names from old manifests.
             aliases = {}
-        amps = [br["delta"] / max(br["base"], 1) for br in bucket_rows.values() if br["delta"]]
-        read_amp = max(amps, default=0.0)
-        metrics = {
-            "batch_id": batch_id,
-            "skipped": False,
-            "snapshot": new_version,
-            "mode": self.write_mode,
-            "buckets_rewritten": len(written),
-            "buckets_total": self.n_buckets,
-            "rows_in_batch": counts["rows"],
-            "deletes": counts["deletes"],
-            "commit_secs": round(time.time() - t0, 3),
-        }
+        metrics = {"op": "compact"} if batch_id is None else {"batch_id": batch_id}
+        metrics.update(
+            skipped=False,
+            snapshot=new_version,
+            mode=self.write_mode,
+            buckets_rewritten=len(written),
+            buckets_total=self.n_buckets,
+            rows_in_batch=counts["rows"],
+            deletes=counts["deletes"],
+            commit_secs=round(time.time() - t0, 3),
+        )
         if mor:
             metrics["delta_depth"] = max((len(v) for v in deltas.values()), default=0)
-            metrics["read_amplification"] = round(read_amp, 4)
+            metrics["read_amplification"] = round(_read_amplification(bucket_rows), 4)
         if scope.fold:
             metrics["compacted_to"] = new_version
-            metrics["compaction_trigger"] = "delta_depth"
+            metrics["compaction_trigger"] = scope.fold
         batches, watermarks = self._record_batch(m, batch_id)
         dirs = {**m.get("snap_dirs", {}), str(new_version): snap_name}
         live = _referenced(buckets_map, deltas)
@@ -1117,8 +1136,8 @@ class IcebergLiteTable:
                 # not grow per commit (older manifests keep their own)
                 "snap_dirs": {v: d for v, d in dirs.items() if int(v) in live},
                 "metrics": metrics,
-                # sticky until a compaction or fold merges the partial
-                # deltas: gates the per-column read-time merge in _read_raw
+                # sticky until a fold merges the partial deltas: gates the
+                # per-column read-time merge in _read_raw
                 "partial_deltas": not scope.fold
                 and (bool(m.get("partial_deltas")) or (delta and scope.partial)),
                 # sticky for the table's life: partial bases carry the
@@ -1128,40 +1147,6 @@ class IcebergLiteTable:
                 or (not delta and scope.partial),
             }
         )
-        return metrics, read_amp
-
-    def _inline_compaction(
-        self, spark: SparkSession, metrics: dict[str, Any], read_amp: float
-    ) -> dict[str, Any]:
-        """Phase 5 — MOR maintenance by measured cost: compact() inline
-        when the read amplification exceeds max_read_amplification. The
-        ratio needs this commit's delta footer rows, so this runs after
-        the commit point: the batch is durable either way, and a crash
-        here just leaves deltas for the next compaction. (A commit at
-        max_delta_depth folds in its own merge instead.) Tombstones MUST
-        survive: dropping them is only safe once no replay older than
-        the head can still arrive, which the automatic path cannot know
-        — an out-of-order replay of an older upsert would resurrect a
-        deleted key. Tombstone GC stays an explicit user call."""
-        if (
-            self.write_mode != "mor"
-            or self.max_read_amplification is None
-            or read_amp <= self.max_read_amplification
-        ):
-            return metrics
-        try:
-            c = self.compact(spark, drop_tombstones=False)
-        except ConcurrentCommitError:
-            # a RIVAL writer landed a commit between this commit's
-            # manifest and the compaction's: the batch is durable and the
-            # rival's delta is intact in the winning manifest, so skip —
-            # the next commit's trigger re-fires on the amplification.
-            metrics["compaction_skipped"] = "concurrent_writer"
-        else:
-            metrics["compacted_to"] = c.get("snapshot")
-            metrics["compaction_trigger"] = "read_amplification"
-            metrics["delta_depth"] = 0
-            metrics["read_amplification"] = 0.0
         return metrics
 
     def rebucket(
@@ -1252,15 +1237,17 @@ class IcebergLiteTable:
         prefix, n = parts
         return n <= m.get("batch_watermarks", {}).get(prefix, -1)
 
-    def _record_batch(self, m: dict[str, Any], batch_id: str) -> tuple[list, dict]:
+    def _record_batch(self, m: dict[str, Any], batch_id: str | None) -> tuple[list, dict]:
+        """The manifest's batch bookkeeping with `batch_id` added (None,
+        a compaction, adds nothing)."""
         batches = list(m.get("committed_batches", []))
         watermarks = dict(m.get("batch_watermarks", {}))
-        parts = self._split_batch_id(batch_id)
-        if parts is None:
-            batches.append(batch_id)
-        else:
+        parts = None if batch_id is None else self._split_batch_id(batch_id)
+        if parts is not None:
             prefix, n = parts
             watermarks[prefix] = max(n, watermarks.get(prefix, -1))
+        elif batch_id is not None:
+            batches.append(batch_id)
         return batches, watermarks
 
     def rollback_to(self, version: int) -> dict[str, Any]:
@@ -1288,57 +1275,29 @@ class IcebergLiteTable:
 
     def compact(self, spark: SparkSession, drop_tombstones: bool = True) -> dict[str, Any]:
         """Rewrite every bucket into one fresh snapshot: the commit's
-        merge (_lww_merge, one bucket exchange) over the scan of every
-        base and delta, with no batch rows. Folds MOR deltas and
-        (optionally) drops tombstone rows, safe once no replay older
-        than the current head can still arrive (the Iceberg
-        `expire_snapshots` + delete-file compaction analog)."""
+        fold (_merge_and_write, one bucket exchange over the scan of
+        every base and delta; _next_manifest's compaction-shaped
+        manifest) with the empty state as its batch side, which the
+        optimizer prunes. Folds MOR deltas and (optionally) drops
+        tombstone rows, safe once no replay older than the current head
+        can still arrive (the Iceberg `expire_snapshots` + delete-file
+        compaction analog)."""
+        t0 = time.time()
         m = self.latest_manifest()
         if not m or not (m.get("buckets") or m.get("deltas")):
             return {"skipped": True, "reason": "empty table"}
-        df, _ = self._scan(spark, m)
-        df = _lww_merge([df], m["columns"], "_col_seqs" in df.columns, self.n_buckets)
-        if drop_tombstones:
-            df = df.filter(~F.col("_deleted"))
-        new_version = m["version"] + 1
-        snap_name, written = self._write_snapshot(
-            df.withColumn("pbucket", F.col("bucket")), new_version
+        self._check_n_buckets(m)
+        cols = _Columns(m["columns"], dict(m.get("aliases") or {}), set(), {}, False)
+        scope = _Scope(
+            self._empty_state(spark, m["columns"]),
+            list(range(self.n_buckets)),
+            bool(m.get("partial_state") or m.get("partial_deltas")),
+            {"rows": 0, "deletes": 0},
+            None,
+            "manual",
         )
-        self._write_manifest(
-            {
-                **m,
-                "version": new_version,
-                # the only snapshot the new manifest references
-                "snap_dirs": {str(new_version): snap_name} if written else {},
-                # deltas fold into the new base (the MOR compaction contract)
-                "buckets": {b: new_version for b in written},
-                "deltas": {},
-                # every bucket was rewritten under the CURRENT column
-                # names, so pre-rename spellings no longer exist in any
-                # live data file — the alias map resets (and renamed-away
-                # names become re-addable)
-                "aliases": {},
-                # folded deltas are base rows now: read amplification
-                # resets to zero
-                "bucket_rows": {
-                    bk: {"base": st["rows"], "delta": 0} for bk, st in written.items()
-                },
-                "metrics": {
-                    "op": "compact",
-                    "snapshot": new_version,
-                    "buckets_rewritten": len(written),
-                    "dropped_tombstones": bool(drop_tombstones),
-                },
-                # folded rows are complete images again (presence-wise)
-                "partial_deltas": False,
-                # ...but their per-column seq ATTRIBUTION must survive
-                # the fold: the compacted base carries `_col_seqs`
-                # whenever the table ever went partial, and later
-                # out-of-order replays still race the true writers
-                "partial_state": bool(m.get("partial_state") or m.get("partial_deltas")),
-            }
-        )
-        return {"skipped": False, "snapshot": new_version}
+        snap_name, written = self._merge_and_write(m, cols, scope, drop_tombstones)
+        return self._next_manifest(m, None, cols, scope, snap_name, written, t0)
 
     def _bucket_footer_stats(self, snap_dir: str) -> dict[str, dict[str, Any]]:
         """Per-bucket lineage from parquet COLUMN STATISTICS (no data
@@ -1419,9 +1378,7 @@ class IcebergLiteTable:
 
         def _live_of(doc: dict[str, Any]) -> tuple[set[int], set[str]]:
             vs = _referenced(doc.get("buckets", {}), doc.get("deltas", {}))
-            sd = doc.get("snap_dirs", {})
-            names = {sd.get(str(v), f"snap-{v:012d}") for v in vs}
-            return vs, names
+            return vs, {doc["snap_dirs"][str(v)] for v in vs}
 
         live, live_names = _live_of(m)
         for v in self.versions()[-keep_last:]:

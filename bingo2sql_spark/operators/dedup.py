@@ -64,8 +64,9 @@ def _log_dropped(
     return counts
 
 
-#: every DataFrame _maybe_persist cached, so a long-lived driver can
-#: release the blocks without nuking the whole session cache
+#: every DataFrame _maybe_persist cached and every label table
+#: connected_components returned, so a long-lived driver can release
+#: the blocks without nuking the whole session cache
 _PERSISTED: list[DataFrame] = []
 
 
@@ -89,17 +90,29 @@ def _maybe_persist(df: DataFrame, persist: bool) -> DataFrame:
     return df
 
 
+def _free(df: DataFrame) -> None:
+    """Drop `df`'s blocks. A persist() goes through the cache manager; a
+    (local) checkpoint is a LogicalRDD over a persisted RDD the cache
+    manager does not know, so its blocks go through that RDD."""
+    df.unpersist()
+    plan = df._jdf.queryExecution().logical()
+    if plan.nodeName() == "LogicalRDD":
+        plan.rdd().unpersist(False)
+
+
 def release_persisted() -> int:
     """Unpersist every signature/posting table the dedup operators
-    cached this session; returns how many blocksets were released.
-    Call after the pair DataFrames have been consumed (written,
-    collected, or counted) — the blocks only speed up RE-use of the
-    same plan, they are never required for correctness."""
+    cached this session, and the checkpointed labels of every
+    connected_components result; returns how many blocksets were
+    released. Call after the returned DataFrames have been consumed
+    (written, collected, or counted). A cached table's blocks only
+    speed up RE-use of the same plan; a label table is a local
+    checkpoint with no lineage, so it cannot be read once released."""
     n = 0
     while _PERSISTED:
         df = _PERSISTED.pop()
         try:
-            df.unpersist()
+            _free(df)
             n += 1
         except Exception:  # session already stopped — nothing to free
             pass
@@ -291,6 +304,10 @@ def connected_components(
     runs: rounds then use RELIABLE checkpoints that survive executor
     loss (the driver sets spark.sparkContext.setCheckpointDir).
 
+    Each round's checkpoint is freed once the next round is
+    materialized, and the edge list once the labels converge; the
+    returned labels stay checkpointed until release_persisted().
+
     Returns (id, component) with component = min id. `vertices` adds
     isolated docs (their own component)."""
     if checkpoint_dir is not None:
@@ -350,6 +367,7 @@ def connected_components(
         return F.broadcast(df) if small else df
 
     for i in range(1, max_iter):
+        prev = labels
         if i - 1 >= jump_after:
             # pointer jumping: follow the label one hop (component is
             # itself a vertex id, so its own label exists) and take the
@@ -386,9 +404,14 @@ def connected_components(
         # checkpoint as an Observation; decimal(38,0) keeps it exact at
         # any scale (a long sum can overflow past ~10^9 int64 ids).
         labels, cur_sum = observed_ckpt(prop)
+        _free(prev)  # materialized: the new labels read none of its blocks
         if cur_sum == prev_sum:
+            _free(sym)
+            _PERSISTED.append(labels)
             return labels.select(F.col("id"), F.col("component"))
         prev_sum = cur_sum
+    _free(sym)
+    _free(labels)
     raise RuntimeError(
         f"connected_components did not converge in {max_iter} rounds "
         f"(graph diameter too large?) — raise max_iter; the labeling "

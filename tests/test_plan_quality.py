@@ -619,10 +619,11 @@ def test_commit_jobs_per_path(spark, tmp_path):
     group set here, on each commit path: a fresh CoW commit (the merge
     job, Observation counts), a CoW commit over stored rows (pruning
     pre-pass + merge), a MOR delta append, a MOR commit at
-    max_delta_depth that folds the deltas in its own merge, compact(), a
-    flashback rebase onto an empty table (its min-seq aggregate) and a
-    DROP + rename commit. The counts are pinned: a phase that starts a
-    job of its own shows up here."""
+    max_delta_depth that folds the deltas in its own merge, a MOR commit
+    whose parent manifest is above max_read_amplification (the same
+    fold), compact(), a flashback rebase onto an empty table (its
+    min-seq aggregate) and a DROP + rename commit. The counts are
+    pinned: a phase that starts a job of its own shows up here."""
     from bingo2sql_spark.operators import flashback as FB
     from bingo2sql_spark.operators import resolve as R
     from bingo2sql_spark.operators.apply import IcebergLiteTable
@@ -654,11 +655,20 @@ def test_commit_jobs_per_path(spark, tmp_path):
     commit("mor_delta", mor, up(ev.filter("seq < 200")), "m1")
     m = commit("mor_delta_compaction", mor, up(ev.filter("seq >= 200")), "m2")
     c, jobs["mor_compact"] = _jobs(spark, "commit-jobs-compact", lambda: mor.compact(spark))
+    amp = IcebergLiteTable(
+        str(tmp_path / "amp"), n_buckets=8, write_mode="mor", max_read_amplification=0.1
+    )
+    amp.commit(up(ev.filter("seq < 200")), "a1")
+    over = amp.commit(up(ev.filter("seq >= 200")), "a2")
+    a = commit("mor_read_amp_fold", amp, up(ev.filter("seq >= 300")), "a3")
     fb = IcebergLiteTable(str(tmp_path / "fb"), n_buckets=8)
     commit("flashback_empty", fb, up(FB.invert(ev)), "f1", rebase_past_head=True)
 
     assert m["compaction_trigger"] == "delta_depth", m
     assert m["compacted_to"] == m["snapshot"] and not c["skipped"], (m, c)
+    assert over["read_amplification"] > 0.1 and "compacted_to" not in over, over
+    assert a["compaction_trigger"] == "read_amplification", a
+    assert a["compacted_to"] == a["snapshot"] and a["read_amplification"] == 0, a
     cols = cow.latest_manifest()["columns"]
     assert "language" in cols and "lang" not in cols and "branch" not in cols, cols
     assert jobs == {
@@ -668,6 +678,7 @@ def test_commit_jobs_per_path(spark, tmp_path):
         "mor_delta": 2,
         "mor_delta_compaction": 2,
         "mor_compact": 2,
+        "mor_read_amp_fold": 2,
         "flashback_empty": 4,
     }, jobs
 

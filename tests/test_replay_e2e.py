@@ -518,30 +518,35 @@ def test_mor_inline_auto_compaction(spark, small_events, tmp_path):
 def test_mor_read_amplification_auto_compaction(spark, small_events, tmp_path):
     """VERDICT r4 #5: the inline policy keyed on MEASURED read cost.
     Two LARGE deltas (each roughly the base's size) push delta-rows /
-    base-rows past 1.0 at depth 2 — a read-heavy shape a depth-only
-    policy (max_delta_depth=10) would never compact. The trigger is
-    recorded, state matches an in-order cow replay, bookkeeping from
-    footer stats matches reality."""
+    base-rows past 1.3 at depth 3 — a read-heavy shape a depth-only
+    policy (max_delta_depth=10) would never compact. The fold lands on
+    the commit AFTER the one that crosses the threshold (the decision
+    reads the parent manifest's footer-stat row counts at commit
+    start, as the depth fold does), the trigger is recorded, and state
+    matches an in-order cow replay."""
     t = IcebergLiteTable(
         str(tmp_path / "ra"), n_buckets=8, write_mode="mor",
         max_delta_depth=10, max_read_amplification=1.3,
     )
+    cuts = ("seq < 800", "seq >= 800 and seq < 1200", "seq >= 1200")
     # first delta plays the base role; then two ~half-size replays stack
-    base = small_events.filter("seq < 800")
-    m0 = replay(base, t, batch_id="b0")
+    m0 = replay(small_events.filter(cuts[0]), t, batch_id="b0")
     assert "compacted_to" not in m0 and m0["read_amplification"] == 0
-    half = small_events.filter("seq >= 800 and seq < 1200")
-    m1 = replay(half, t, batch_id="b1")
-    m2 = replay(small_events.filter("seq >= 1200"), t, batch_id="b2")
-    fired = [m for m in (m1, m2) if m.get("compacted_to")]
-    assert fired and fired[-1]["compaction_trigger"] == "read_amplification"
-    assert all(m["delta_depth"] <= 2 for m in (m1, m2))  # depth never near 10
+    m1 = replay(small_events.filter(cuts[1]), t, batch_id="b1")
+    m2 = replay(small_events.filter(cuts[2]), t, batch_id="b2")
+    assert m1["read_amplification"] <= 1.3 < m2["read_amplification"], (m1, m2)
+    assert not any(m.get("compacted_to") for m in (m0, m1, m2))
+    assert m2["delta_depth"] == 3  # depth never near 10
+    # the next commit (an idempotent re-delivery under a new id) folds
+    m3 = replay(small_events.filter(cuts[2]), t, batch_id="b3")
+    assert m3["compacted_to"] == m3["snapshot"], m3
+    assert m3["compaction_trigger"] == "read_amplification"
+    assert m3["delta_depth"] == 0 and m3["read_amplification"] == 0
     man = t.latest_manifest()
-    # bucket_rows bookkeeping: a compaction folds deltas to zero
-    if m2.get("compacted_to"):
-        assert all(v["delta"] == 0 for v in man["bucket_rows"].values())
+    # bucket_rows bookkeeping: a fold resets every bucket's delta rows
+    assert man["deltas"] == {} and all(v["delta"] == 0 for v in man["bucket_rows"].values())
     ref = IcebergLiteTable(str(tmp_path / "ra_ref"), n_buckets=8)
-    for i, cut in enumerate(("seq < 800", "seq >= 800 and seq < 1200", "seq >= 1200")):
+    for i, cut in enumerate(cuts):
         replay(small_events.filter(cut), ref, batch_id=f"r{i}")
     assert t.state_checksum(spark) == ref.state_checksum(spark)
 
@@ -1271,14 +1276,13 @@ def test_ddl_driven_schema_evolution_end_to_end(spark, tmp_path):
 
 
 def test_inline_compaction_races_concurrent_delta_commit(spark, small_events, events_pdf, tmp_path, monkeypatch):
-    """VERDICT r5 #6: an inline auto-compaction racing a concurrent MOR
-    delta commit. Injected deterministically both ways:
+    """VERDICT r5 #6: an inline fold racing a concurrent MOR delta
+    commit. Injected deterministically both ways:
 
-    (a) the RIVAL delta lands between a commit's manifest and the
-        read-amplification compaction's manifest — the compaction loses
-        the CAS and is SKIPPED (the already-durable batch must not
-        fail), the rival's delta survives, and the next commit's
-        trigger re-fires and folds everything;
+    (a) a read-amplification FOLD loses its manifest CAS to a RIVAL
+        delta that lands between the fold's data write and its CAS —
+        the fold raises with nothing of it referenced, and
+        commit_with_retry re-reads and re-folds over the rival's delta;
     (b) a depth FOLD (max_delta_depth=0: every commit folds) lands
         first and the rival loses — retry re-reads the folded manifest
         and re-merges.
@@ -1293,37 +1297,38 @@ def test_inline_compaction_races_concurrent_delta_commit(spark, small_events, ev
     rival_batch = R.to_upsert_rows(R.with_key(small_events.filter(f"seq >= {cut}")))
     expected = oracle.state_checksum(oracle.sequential_apply(events_pdf))
 
-    # ---- (a) rival delta lands between commit and inline compaction
+    # ---- (a) rival delta lands between a read-amplification fold's
+    # data write and its manifest CAS
     p = str(tmp_path / "race_a")
     t = IcebergLiteTable(p, n_buckets=8, write_mode="mor", max_read_amplification=0.01)
-    # the first delta plays the base role; b1's delta over it fires the
-    # amplification trigger
-    replay(small_events.filter(f"seq < {cut // 2}"), t, batch_id="b0")
+    # the first delta plays the base role; b1's delta over it crosses
+    # the amplification threshold, so the next commit folds
+    third = cut // 3
+    replay(small_events.filter(f"seq < {third}"), t, batch_id="b0")
+    m1 = replay(small_events.filter(f"seq >= {third} and seq < {2 * third}"), t, batch_id="b1")
+    assert m1["read_amplification"] > 0.01 and "compacted_to" not in m1, m1
+    batch = R.to_upsert_rows(R.with_key(small_events.filter(f"seq >= {2 * third} and seq < {cut}")))
     orig = A.IcebergLiteTable._write_manifest
     state = {"armed": True}
 
     def raced(self, doc):
-        if state["armed"] and doc.get("metrics", {}).get("op") == "compact":
+        if state["armed"] and doc["metrics"].get("compaction_trigger") == "read_amplification":
             state["armed"] = False  # re-entrancy: the rival commit below
             rival = IcebergLiteTable(p, n_buckets=8, write_mode="mor")
             rival.commit(rival_batch, batch_id="rival")  # lands the version first
         return orig(self, doc)
 
     monkeypatch.setattr(A.IcebergLiteTable, "_write_manifest", raced)
-    m1 = replay(small_events.filter(f"seq >= {cut // 2} and seq < {cut}"), t, batch_id="b1")
+    with pytest.raises(A.ConcurrentCommitError):
+        t.commit(batch, "b2")
     monkeypatch.undo()
-    # the commit itself succeeded; only the compaction stepped aside
-    assert not m1["skipped"]
-    assert m1.get("compaction_skipped") == "concurrent_writer"
-    assert "compacted_to" not in m1
-    # the rival's delta is intact: full state == sequential oracle
-    assert t.state_checksum(spark) == expected
     m = t.latest_manifest()
-    assert any(m.get("deltas", {}).values())  # deltas (incl. rival's) live
-    # the trigger re-fires on the next commit and the fold keeps
-    # tombstones (no resurrection window)
-    m2 = t.commit(rival_batch.limit(0), batch_id="nudge")
-    assert m2.get("compacted_to") and m2["compaction_trigger"] == "read_amplification"
+    assert m["metrics"]["batch_id"] == "rival" and any(m["deltas"].values()), m["metrics"]
+    # the retry re-reads the rival's manifest and re-folds everything
+    mr = t.commit_with_retry(batch, "b2")
+    assert mr["compacted_to"] == mr["snapshot"], mr
+    assert mr["compaction_trigger"] == "read_amplification"
+    assert t.latest_manifest()["deltas"] == {}
     assert t.state_checksum(spark) == expected
     raw = t._read_raw(spark)
     assert raw.filter("_deleted").count() > 0  # tombstones survived the fold
@@ -1436,6 +1441,68 @@ def test_snap_dirs_hold_only_referenced_snapshots(spark, small_events, tmp_path)
     out = t.expire_snapshots(keep_last=2)
     assert set(os.listdir(data)) == live and out["removed"] == len(before - live)
     assert t.state_checksum(spark) == state
+
+
+def test_mor_lineage_keeps_head_across_out_of_order_delta(spark, tmp_path):
+    """A MOR delta holds only its own batch, so an out-of-order OLDER
+    batch's delta must not lower its buckets' recorded max seq:
+    head_seq() stays the stored maximum `_ingest_seq`, and a flashback
+    rebased past that head wins last-writer-wins against the newer
+    stored rows — the MOR state equals the CoW state."""
+    from pyspark.sql import functions as F
+
+    from bingo2sql_spark.sources.synth import generate_events
+
+    ev = generate_events(spark, n_keys=100, versions_per_key=6, seed=3).cache()
+    cut = int(ev.agg(F.max("seq")).collect()[0][0]) // 2
+    newer, older = ev.filter(f"seq > {cut}"), ev.filter(f"seq <= {cut}")
+    cow = IcebergLiteTable(str(tmp_path / "cow"), n_buckets=4)
+    mor = IcebergLiteTable(str(tmp_path / "mor"), n_buckets=4, write_mode="mor")
+    for t in (cow, mor):
+        replay(newer, t, batch_id="newer")
+        replay(older, t, batch_id="older")
+        stored = t._read_raw(spark).agg(F.max("_ingest_seq")).collect()[0][0]
+        assert t.head_seq() == stored, (t.write_mode, t.head_seq(), stored)
+        replay(newer, t, batch_id="fb", flashback=True)
+    assert mor.state_checksum(spark) == cow.state_checksum(spark)
+    ev.unpersist()
+
+
+def test_fold_and_compact_write_equal_manifests(spark, small_events, tmp_path):
+    """A commit that folds and compact() write the compaction-shaped
+    manifest through one code path: over the same stored state, an
+    empty-batch fold and compact(drop_tombstones=False) produce equal
+    bucket maps, delta lists, row counts, aliases, partial flags,
+    lineage and referenced data dirs (up to each attempt's unique dir
+    suffix), and equal state."""
+    from bingo2sql_spark.operators import resolve as R
+
+    parts = [small_events.filter(f"seq % 2 = {i}") for i in range(2)]
+    fold = IcebergLiteTable(
+        str(tmp_path / "fold"), n_buckets=8, write_mode="mor", max_delta_depth=2
+    )
+    comp = IcebergLiteTable(str(tmp_path / "comp"), n_buckets=8, write_mode="mor")
+    for t in (fold, comp):
+        for i, p in enumerate(parts):
+            replay(p, t, batch_id=f"p{i}")
+    empty = R.to_upsert_rows(R.with_key(small_events)).limit(0)
+    mf = fold.commit(empty, "nudge")
+    mc = comp.compact(spark, drop_tombstones=False)
+    assert mf["compaction_trigger"] == "delta_depth" and mf["snapshot"] == mc["snapshot"]
+    a, b = fold.latest_manifest(), comp.latest_manifest()
+    for key in ("buckets", "deltas", "bucket_rows", "aliases", "partial_deltas",
+                "partial_state", "lineage", "columns"):
+        assert a[key] == b[key], (key, a[key], b[key])
+
+    def dirs(m):
+        return {v: d.rsplit("-", 1)[0] for v, d in m["snap_dirs"].items()}
+
+    assert dirs(a) == dirs(b) and a["snap_dirs"] and a["deltas"] == {}
+    assert mc["op"] == "compact" and mc["compacted_to"] == mc["snapshot"], mc
+    # compact() records no batch; the fold records its own
+    assert b["committed_batches"] == ["p0", "p1"]
+    assert a["committed_batches"] == ["p0", "p1", "nudge"]
+    assert fold.state_checksum(spark) == comp.state_checksum(spark)
 
 
 def test_dense_col_seqs_snapshot_decodes_like_sparse(spark, tmp_path):

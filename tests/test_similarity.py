@@ -333,6 +333,46 @@ def test_connected_components_high_diameter_path(spark, tmp_path):
         DD.connected_components(pairs, max_iter=3)
 
 
+def test_connected_components_releases_checkpoint_blocks(spark):
+    """connected_components checkpoints its edge list and every round's
+    labels. Each round's blocks are freed once the next round is
+    materialized and the edge list's once the labels converge; the
+    returned labels are registered, so once the result is consumed
+    release_persisted() leaves no block of the call behind. The labels
+    equal a sequential min-label oracle."""
+    sc = spark.sparkContext
+
+    def persistent() -> set:
+        return set(sc._jsc.getPersistentRDDs().keySet())
+
+    # a 40-edge path (pointer-jump rounds), a 6-clique, one pair and
+    # isolated vertices
+    edges = [(i, i + 1) for i in range(40)] + [(200, 201)]
+    edges += [(a, b) for a in range(100, 106) for b in range(a + 1, 106)]
+    ids = sorted({v for e in edges for v in e} | {300, 301})
+    label = {v: v for v in ids}
+    changed = True
+    while changed:
+        changed = False
+        for a, b in edges:
+            lo = min(label[a], label[b])
+            if (label[a], label[b]) != (lo, lo):
+                label[a] = label[b] = lo
+                changed = True
+
+    held = persistent()
+    pairs = spark.createDataFrame(edges, "id_a long, id_b long")
+    docs = spark.createDataFrame([(v,) for v in ids], "doc_id long")
+    cc = DD.connected_components(pairs, vertices=docs)
+    got = sorted(map(tuple, cc.collect()))
+    assert got == sorted(label.items())
+    # every round's labels and the edge list are freed already; only
+    # the returned labels' checkpoint stays until released
+    assert len(persistent() - held) == 1, persistent() - held
+    DD.release_persisted()
+    assert persistent() - held == set(), persistent() - held
+
+
 def test_decontaminate_semantics(spark):
     """Exact eval twins are flagged with the full shingle overlap,
     clean docs are absent, partial overlap respects min_hits, and the
