@@ -24,6 +24,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from bingo2sql_spark.session import on_python_worker
+
 
 def pack_sequences(
     docs: DataFrame,
@@ -63,6 +65,7 @@ def pack_sequences(
             "group", F.pmod(F.xxhash64(F.lit(salt), F.col("doc_id")), F.lit(groups))
         )
 
+    @on_python_worker
     def pack(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(["n_tokens", "doc_id"], ascending=[False, True])
         bins: list[int] = []  # remaining capacity per open bin

@@ -91,23 +91,34 @@ def _maybe_persist(df: DataFrame, persist: bool) -> DataFrame:
 
 
 def _free(df: DataFrame) -> None:
-    """Drop `df`'s blocks. A persist() goes through the cache manager; a
-    (local) checkpoint is a LogicalRDD over a persisted RDD the cache
-    manager does not know, so its blocks go through that RDD."""
+    """Drop `df`'s blocks, and its files if it is a reliable checkpoint.
+    A persist() goes through the cache manager; a checkpoint is a
+    LogicalRDD over an RDD the cache manager does not know, so its
+    blocks go through that RDD. A reliable checkpoint's `rdd-<id>`
+    directory (under the checkpoint dir) is deleted through the Hadoop
+    FileSystem: nothing else ever removes it."""
     df.unpersist()
     plan = df._jdf.queryExecution().logical()
-    if plan.nodeName() == "LogicalRDD":
-        plan.rdd().unpersist(False)
+    if plan.nodeName() != "LogicalRDD":
+        return
+    rdd = plan.rdd()
+    rdd.unpersist(False)
+    ckpt = rdd.getCheckpointFile()
+    if ckpt.isDefined():
+        sc = df.sparkSession.sparkContext
+        path = sc._jvm.org.apache.hadoop.fs.Path(ckpt.get())
+        path.getFileSystem(sc._jsc.hadoopConfiguration()).delete(path, True)
 
 
 def release_persisted() -> int:
     """Unpersist every signature/posting table the dedup operators
     cached this session, and the checkpointed labels of every
-    connected_components result; returns how many blocksets were
-    released. Call after the returned DataFrames have been consumed
-    (written, collected, or counted). A cached table's blocks only
-    speed up RE-use of the same plan; a label table is a local
-    checkpoint with no lineage, so it cannot be read once released."""
+    connected_components result (blocks, and a reliable checkpoint's
+    files); returns how many blocksets were released. Call after the
+    returned DataFrames have been consumed (written, collected, or
+    counted). A cached table's blocks only speed up RE-use of the same
+    plan; a label table is a checkpoint with no lineage, so it cannot
+    be read once released."""
     n = 0
     while _PERSISTED:
         df = _PERSISTED.pop()
@@ -305,8 +316,9 @@ def connected_components(
     loss (the driver sets spark.sparkContext.setCheckpointDir).
 
     Each round's checkpoint is freed once the next round is
-    materialized, and the edge list once the labels converge; the
-    returned labels stay checkpointed until release_persisted().
+    materialized, and the edge list once the labels converge (a
+    reliable checkpoint's files too); the returned labels stay
+    checkpointed until release_persisted().
 
     Returns (id, component) with component = min id. `vertices` adds
     isolated docs (their own component)."""

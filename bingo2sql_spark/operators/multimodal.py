@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 from ..functions import media as M
+from ..session import on_python_worker
 
 MEDIA_SCHEMA = T.StructType(
     [
@@ -101,6 +102,7 @@ def synth_media(docs: DataFrame) -> DataFrame:
     stays n_chars * 10 — the shapes earlier rounds' tests pinned."""
     kinds = ("image", "audio", "video")
 
+    @on_python_worker
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             if len(pdf) == 0:
@@ -181,6 +183,7 @@ def resize_images(media: DataFrame, width: int = 224, height: int = 224) -> Data
     pinned), so one pipeline can run mixed media without a codec
     matrix check upfront."""
 
+    @on_python_worker
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             if len(pdf) == 0:
@@ -231,6 +234,7 @@ def sample_frames(media: DataFrame, every_ms: int = 1000, max_frames: int = 8) -
     exercisable on undecodable media. Cardinality comes from typed
     metadata (duration_ms / every_ms, capped)."""
 
+    @on_python_worker
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             if len(pdf) == 0:
@@ -355,6 +359,7 @@ def extract_features(media: DataFrame, batch_limit: int = 10_000) -> DataFrame:
             pass  # sniffed but malformed -> byte stats, never a crash
         return _byte_features(data)
 
+    @on_python_worker
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             if len(pdf) == 0:

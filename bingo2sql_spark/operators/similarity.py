@@ -20,6 +20,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from bingo2sql_spark.session import on_python_worker
+
 
 def _int_vec(col: F.Column) -> F.Column:
     """Component-wise round(x*1000): exact integer embedding proxy."""
@@ -69,6 +71,7 @@ def dot_int_arrow(a: F.Column, b: F.Column) -> F.Column:
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("long")
+    @on_python_worker
     def _dot(xs: pd.Series, ys: pd.Series) -> pd.Series:
         if len(xs) == 0:
             return pd.Series([], dtype="int64")
@@ -111,6 +114,7 @@ def brute_force_topk(
     qids = np.array([r[query_id_col] for r in qrows], dtype="int64")
     qmat = _round_half_away(np.array([r[vec_col] for r in qrows], dtype="float64") * 1000)
 
+    @on_python_worker
     def score(batches):
         for pdf in batches:
             if len(pdf) == 0:
@@ -222,6 +226,7 @@ def cosine_near_dup_pairs(
 
     thr = int(threshold_scaled)
 
+    @on_python_worker
     def score(pdf: pd.DataFrame) -> pd.DataFrame:
         n = len(pdf)
         if n < 2:
@@ -346,6 +351,7 @@ def with_srp_bucket_arrow(
         + [T.StructField("_bucket", T.StringType())]
     )
 
+    @on_python_worker
     def gen(batches):
         for pdf in batches:
             if len(pdf) == 0:
@@ -464,6 +470,7 @@ def lsh_topk(
     # top-k under the same total order (dot desc, id asc) must contain
     # every global top-k candidate from that bucket, so results are
     # identical.
+    @on_python_worker
     def score(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
         empty = pd.DataFrame(
             {query_id_col: [], "neighbor_id": [], "dot_scaled": []}
@@ -520,6 +527,7 @@ def _with_table_codes(
         + [T.StructField("_codes", T.ArrayType(T.StringType()))]
     )
 
+    @on_python_worker
     def gen(batches):
         for pdf in batches:
             if len(pdf) == 0:
@@ -580,6 +588,7 @@ def ivf_assign_cells(
         + [vectors.schema[vec_col], T.StructField("_cell", T.LongType())]
     )
 
+    @on_python_worker
     def gen(batches):
         for pdf in batches:
             if len(pdf) == 0:
@@ -778,6 +787,7 @@ def ivf_topk(
              T.StructField("_cell", T.LongType())]
         )
 
+        @on_python_worker
         def gen(batches):
             for pdf in batches:
                 if len(pdf) == 0:

@@ -916,6 +916,7 @@ def decode_binlog_df(
     from pyspark.sql.pandas.types import to_arrow_schema
 
     from bingo2sql_spark import schema as S
+    from bingo2sql_spark.session import on_python_worker
 
     out_schema = T.StructType(
         S.RAW_EVENT.fields + [T.StructField("statement", T.StringType(), True)]
@@ -923,6 +924,7 @@ def decode_binlog_df(
     arrow_schema = to_arrow_schema(out_schema)
     names_for = {k.lower(): v for k, v in (table_schemas or {}).items()}
 
+    @on_python_worker
     def gen(batches):
         import pyarrow as pa
 

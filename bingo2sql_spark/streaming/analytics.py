@@ -34,6 +34,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from bingo2sql_spark.session import on_python_worker
+
 
 def windowed_event_counts(
     stream: DataFrame,
@@ -159,6 +161,7 @@ def dedup_stream(
         ]
     )
 
+    @on_python_worker
     def fn(
         key: tuple,
         pdfs: Iterator[pd.DataFrame],
@@ -234,6 +237,7 @@ def sessionize_stream(
     gap_secs starts a new session) — the tests pin stream == batch,
     including out-of-order delivery."""
 
+    @on_python_worker
     def fn(
         key: tuple,
         pdfs: Iterator[pd.DataFrame],

@@ -117,3 +117,133 @@ def unpassed_keyword_only() -> list[str]:
 def test_keyword_only_parameters_are_passed():
     dead = unpassed_keyword_only()
     assert not dead, "keyword-only parameters no caller passes:\n" + "\n".join(dead)
+
+
+#: DataFrame methods that run their first argument on a Python worker
+PYTHON_UDF_METHODS = {"mapInArrow", "mapInPandas", "applyInPandas", "applyInPandasWithState"}
+WORKER_WRAPPER = "on_python_worker"
+
+
+def _callee_name(node: ast.AST) -> str | None:
+    """`f` for `f`, `f(...)`, `m.f` and `m.f(...)`."""
+    if isinstance(node, ast.Call):
+        node = node.func
+    if isinstance(node, ast.Name):
+        return node.id
+    if isinstance(node, ast.Attribute):
+        return node.attr
+    return None
+
+
+def _wrapped(fn: ast.FunctionDef, below: int = -1) -> bool:
+    """Whether `fn` carries the worker wrapper among its decorators after
+    index `below` (decorators apply bottom-up, so a wrapper listed
+    under `@pandas_udf` is applied first)."""
+    return any(_callee_name(d) == WORKER_WRAPPER for d in fn.decorator_list[below + 1:])
+
+
+def unwrapped_python_udfs() -> list[str]:
+    """Functions the engine package hands to Spark to run on a Python
+    worker — the first argument of `mapInArrow` / `mapInPandas` /
+    `applyInPandas` / `applyInPandasWithState`, and every function
+    decorated with (or passed to) `pandas_udf` — that are not wrapped by
+    `session.on_python_worker`. A passed name resolves to the nearest
+    definition of that name in an enclosing scope of the call; an
+    argument that is neither a name nor a wrapper call counts as
+    unwrapped."""
+    scopes = (ast.Module, ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda)
+    found = []
+    for p in sorted(PACKAGE.rglob("*.py")):
+        tree = ast.parse(p.read_text())
+        parent = {c: n for n in ast.walk(tree) for c in ast.iter_child_nodes(n)}
+        where = f"{p.relative_to(REPO)}"
+
+        def local_defs(scope: ast.AST) -> dict[str, ast.FunctionDef]:
+            out, todo = {}, list(ast.iter_child_nodes(scope))
+            while todo:
+                n = todo.pop()
+                if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                    out.setdefault(n.name, n)
+                elif not isinstance(n, scopes):
+                    todo.extend(ast.iter_child_nodes(n))
+            return out
+
+        def resolve(name: str, at: ast.AST):
+            n = at
+            while n in parent:
+                n = parent[n]
+                if isinstance(n, scopes) and name in local_defs(n):
+                    return local_defs(n)[name]
+            return None
+
+        for node in ast.walk(tree):
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                for i, d in enumerate(node.decorator_list):
+                    if _callee_name(d) == "pandas_udf" and not _wrapped(node, i):
+                        found.append(f"{where}:{node.lineno} @pandas_udf {node.name}")
+                continue
+            if not isinstance(node, ast.Call):
+                continue
+            name = _callee_name(node.func)
+            if isinstance(node.func, ast.Attribute) and name in PYTHON_UDF_METHODS:
+                args = node.args[:1] or [k.value for k in node.keywords if k.arg == "func"]
+            elif isinstance(node.func, ast.Name) and name == "pandas_udf":
+                args = [a for a in node.args[:1] if not isinstance(a, ast.Constant)]
+            else:
+                continue
+            for arg in args:
+                if isinstance(arg, ast.Call) and _callee_name(arg) == WORKER_WRAPPER:
+                    continue
+                target = resolve(arg.id, node) if isinstance(arg, ast.Name) else None
+                if target is None or not _wrapped(target):
+                    found.append(f"{where}:{node.lineno} {name}({ast.unparse(arg)})")
+    return found
+
+
+def test_python_udfs_run_through_worker_wrapper():
+    """Every Python UDF body of the engine drops the worker's zip
+    finders first (`session.on_python_worker`); one that does not makes
+    every later task of its worker re-read `pyspark.zip`."""
+    bare = unwrapped_python_udfs()
+    assert not bare, "Python UDFs not wrapped by on_python_worker:\n" + "\n".join(bare)
+
+
+def test_drop_zip_finders_keeps_the_archive_importable(tmp_path, monkeypatch):
+    """A call through `on_python_worker` leaves no `zipimporter` in
+    `sys.path_importer_cache`, and a module of the same archive that was
+    not imported yet still imports: its finder is rebuilt from
+    zipimport's directory cache. The wrapper keeps the signature PySpark
+    reads off grouped-map bodies."""
+    import importlib
+    import inspect
+    import sys
+    import zipfile
+    import zipimport
+
+    from bingo2sql_spark.session import on_python_worker
+
+    archive = tmp_path / "zipped_pkg.zip"
+    with zipfile.ZipFile(archive, "w") as z:
+        z.writestr("zipped_pkg/__init__.py", "")
+        z.writestr("zipped_pkg/first.py", "VALUE = 1\n")
+        z.writestr("zipped_pkg/second.py", "VALUE = 2\n")
+    monkeypatch.syspath_prepend(str(archive))
+
+    def zip_finders() -> list[str]:
+        cache = sys.path_importer_cache
+        return [k for k, v in cache.items() if isinstance(v, zipimport.zipimporter)]
+
+    @on_python_worker
+    def body(x: int) -> list[str]:
+        return zip_finders()
+
+    try:
+        assert importlib.import_module("zipped_pkg.first").VALUE == 1
+        assert any(k.startswith(str(archive)) for k in zip_finders())
+        assert body(0) == []
+        assert zip_finders() == []
+        assert importlib.import_module("zipped_pkg.second").VALUE == 2
+        assert inspect.getfullargspec(body).args == ["x"]
+    finally:
+        for mod in ("zipped_pkg", "zipped_pkg.first", "zipped_pkg.second"):
+            sys.modules.pop(mod, None)

@@ -177,6 +177,31 @@ def test_multimodal_plumbing(spark):
     assert first == {k: again[k] for k in first}
 
 
+def test_python_udf_tasks_start_without_zip_finders(spark):
+    """A body wrapped by `session.on_python_worker` runs, in every task,
+    on a worker whose import cache holds no zip finder: the next task's
+    `importlib.invalidate_caches()` has no archive to re-read."""
+    import pandas as pd
+
+    from bingo2sql_spark.session import on_python_worker
+
+    @on_python_worker
+    def zip_finders(batches):
+        import sys
+        import zipimport
+
+        n = sum(
+            isinstance(f, zipimport.zipimporter)
+            for f in sys.path_importer_cache.values()
+        )
+        for _ in batches:
+            pass
+        yield pd.DataFrame({"zip_finders": [n]})
+
+    got = spark.range(0, 400, 1, 4).mapInPandas(zip_finders, "zip_finders long")
+    assert [r.zip_finders for r in got.collect()] == [0, 0, 0, 0]
+
+
 def test_compact_drops_tombstones(spark, small_events, tmp_path):
     from bingo2sql_spark.operators.apply import IcebergLiteTable
     from bingo2sql_spark.pipeline import replay

@@ -311,7 +311,8 @@ def test_connected_components_high_diameter_path(spark, tmp_path):
     for plain min-label propagation (10^4 rounds) — must converge
     within ~log2(n)+slack rounds. Also exercises the RELIABLE
     checkpoint option (cluster fault-tolerance path) and the loud
-    non-convergence error."""
+    non-convergence error. The reliable variant leaves no checkpoint
+    file behind once its labels are released."""
     import pytest
     from pyspark.sql import functions as F
 
@@ -322,12 +323,17 @@ def test_connected_components_high_diameter_path(spark, tmp_path):
     cc = DD.connected_components(pairs, max_iter=18)
     assert cc.filter(F.col("component") != 0).count() == 0
     assert cc.count() == n
-    # reliable-checkpoint variant converges to the same labeling
+    # reliable-checkpoint variant converges to the same labeling; the
+    # files of every freed round and of the edge list are deleted, the
+    # returned labels' once released
+    ckpt = tmp_path / "cc_ckpt"
     cc2 = DD.connected_components(
-        pairs.filter("id_a < 63"), max_iter=10,
-        checkpoint_dir=str(tmp_path / "cc_ckpt"),
+        pairs.filter("id_a < 63"), max_iter=10, checkpoint_dir=str(ckpt),
     )
     assert cc2.filter(F.col("component") != 0).count() == 0
+    assert len(list(ckpt.rglob("rdd-*"))) == 1
+    DD.release_persisted()
+    assert list(ckpt.rglob("rdd-*")) == []
     # refusing to return an unstable labeling is loud
     with pytest.raises(RuntimeError, match="did not converge"):
         DD.connected_components(pairs, max_iter=3)
