@@ -49,7 +49,10 @@ Scale design (10^10 events, 100 TB table):
   is that fold without batch rows. The right mode when micro-batches
   are small relative to bucket data.
 - every write is ONE bucket exchange of unresolved stored ∪ batch rows
-  feeding a per-(bucket, key) max_by aggregate (see _lww_merge).
+  feeding a per-(bucket, key) max_by aggregate (see _lww_merge). The
+  exchange names no partition count: each bucket lands in exactly one
+  task, and AQE merges small partitions, so the write tasks are sized
+  by the bytes they write (a small MOR delta writes from one task).
 - crash safety: the manifest rename is the commit point; data of a
   failed commit is never referenced (orphans, GC-able).
 
@@ -264,27 +267,26 @@ def _lww_merge(
     inputs: list[DataFrame],
     all_cols: list[str],
     partial: bool,
-    n_buckets: int,
     emit_changed: bool = False,
 ) -> DataFrame:
     """The one write-side MERGE plan of commit and compact(): unresolved
-    inputs (stored scan and/or batch rows, spanning `n_buckets`
-    buckets) unioned into ONE `repartition(n_out, bucket)` exchange
-    feeding _per_key_winners. Bucket is a function of the merge keys,
-    so hash(bucket) partitioning satisfies the aggregate's clustered
-    distribution (no second exchange) and the output stays clustered
-    for the pbucket-partitioned write: one writer per bucket."""
+    inputs (stored scan and/or batch rows) unioned into ONE
+    `repartition(bucket)` exchange feeding _per_key_winners. Bucket is
+    a function of the merge keys, so hash(bucket) partitioning
+    satisfies the aggregate's clustered distribution (no second
+    exchange) and the output stays clustered for the pbucket-partitioned
+    write: each bucket in exactly one task, so one file per bucket.
+
+    No partition count is given: AQE merges small partitions, sizing
+    each write task by its shuffle bytes, so a small delta writes from
+    one task and a large merge still spreads over the cores. Every
+    file-writing task pays a fixed cost (its closure carries the
+    writer's Hadoop Configuration), which a fixed count pays per empty
+    or tiny partition."""
     both = functools.reduce(
         DataFrame.unionByName, [_conform(d, all_cols, partial) for d in inputs]
     )
-    # bucket-pure partitions (n_out <= #buckets: one file per bucket),
-    # 4x the core count of them: with #cores partitions the bucket-count
-    # variance per partition makes the slowest task the stage time.
-    par = both.sparkSession.sparkContext.defaultParallelism
-    n_out = max(1, min(n_buckets, 4 * par))
-    return _per_key_winners(
-        both.repartition(n_out, "bucket"), all_cols, partial, emit_changed
-    )
+    return _per_key_winners(both.repartition("bucket"), all_cols, partial, emit_changed)
 
 
 def _referenced(buckets: dict[str, int], deltas: dict[str, list[int]]) -> set[int]:
@@ -1005,8 +1007,7 @@ class IcebergLiteTable:
                 current = _translate_partial_meta(current, cols.renames)
             inputs.insert(0, current)
         merged = _lww_merge(
-            inputs, cols.all_cols, scope.partial, len(scope.affected),
-            emit_changed=delta and scope.partial,
+            inputs, cols.all_cols, scope.partial, emit_changed=delta and scope.partial
         )
         if drop_tombstones:
             merged = merged.filter(~F.col("_deleted"))
@@ -1064,6 +1065,8 @@ class IcebergLiteTable:
         # read): the measured read amplification max_read_amplification
         # keys on
         bucket_rows = {bk: dict(v) for bk, v in prior.get("bucket_rows", {}).items()}
+        # the file count is a commit metric, not lineage
+        files_written = sum(st.pop("files") for st in written.values())
         for bk, st in written.items():
             entry = {"snapshot": new_version, **st}
             if delta:
@@ -1105,6 +1108,7 @@ class IcebergLiteTable:
             snapshot=new_version,
             mode=self.write_mode,
             buckets_rewritten=len(written),
+            files_written=files_written,
             buckets_total=self.n_buckets,
             rows_in_batch=counts["rows"],
             deletes=counts["deletes"],
@@ -1310,7 +1314,11 @@ class IcebergLiteTable:
         has). Within one row group the pairing IS sound: binlog order is
         monotone in (log_file, log_pos) and seq is its flattening, so
         the group's max-seq event also holds the group's lexicographic
-        max (log_file, log_pos)."""
+        max (log_file, log_pos).
+
+        Each bucket's entry also counts the parquet `files` read (the
+        merge writes one per bucket; _next_manifest reports the sum as
+        the commit's `files_written`, not as lineage)."""
         from concurrent.futures import ThreadPoolExecutor
 
         import pyarrow.parquet as pq
@@ -1318,13 +1326,14 @@ class IcebergLiteTable:
         def one_bucket(d: str):
             bk = d.split("=", 1)[1]
             best = None  # (max_seq, log_file, log_pos) of the owning row group
-            rows = 0
+            rows = files = 0
             bdir = os.path.join(snap_dir, d)
             for fn in os.listdir(bdir):
                 if not fn.endswith(".parquet"):
                     continue
                 md = pq.ParquetFile(os.path.join(bdir, fn)).metadata
                 rows += md.num_rows
+                files += 1
                 idx = {md.schema.column(i).name: i for i in range(md.num_columns)}
                 for rg in range(md.num_row_groups):
                     g = md.row_group(rg)
@@ -1339,7 +1348,7 @@ class IcebergLiteTable:
                         continue
                     if best is None or seq > best[0]:
                         best = (seq, stat_max("_log_file"), stat_max("_log_pos"))
-            return bk, rows, best
+            return bk, rows, files, best
 
         dirs = sorted(d for d in os.listdir(snap_dir) if d.startswith("pbucket="))
         # footer reads are driver-serial commit cost: thread them (pyarrow
@@ -1348,7 +1357,7 @@ class IcebergLiteTable:
         out: dict[str, dict[str, Any]] = {}
         with ThreadPoolExecutor(max_workers=min(16, max(1, len(dirs)))) as ex:
             results = list(ex.map(one_bucket, dirs))
-        for bk, rows, best in results:
+        for bk, rows, files, best in results:
             if rows:
                 seq, lf, lp = best if best else (None, None, None)
                 out[bk] = {
@@ -1356,6 +1365,7 @@ class IcebergLiteTable:
                     "log_file": lf,
                     "log_pos": int(lp) if lp is not None else None,
                     "rows": rows,
+                    "files": files,
                 }
         return out
 

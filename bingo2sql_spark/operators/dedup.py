@@ -17,11 +17,13 @@ ints — same statistical behavior, trivially portable to any SQL oracle.
 
 from __future__ import annotations
 
+import contextlib
 import json
 import logging
 import os
 import uuid as _uuid
 
+from pyspark import SparkContext
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -68,6 +70,10 @@ def _log_dropped(
 #: connected_components returned, so a long-lived driver can release
 #: the blocks without nuking the whole session cache
 _PERSISTED: list[DataFrame] = []
+
+#: the `<checkpoint_dir>/<uuid>` directories connected_components had
+#: Spark create; release_persisted() removes each once it is empty
+_CHECKPOINT_DIRS: list[str] = []
 
 
 def _maybe_persist(df: DataFrame, persist: bool) -> DataFrame:
@@ -118,7 +124,8 @@ def release_persisted() -> int:
     returned DataFrames have been consumed (written, collected, or
     counted). A cached table's blocks only speed up RE-use of the same
     plan; a label table is a checkpoint with no lineage, so it cannot
-    be read once released."""
+    be read once released. Then removes each `<uuid>` checkpoint
+    directory connected_components created that is now empty."""
     n = 0
     while _PERSISTED:
         df = _PERSISTED.pop()
@@ -127,7 +134,33 @@ def release_persisted() -> int:
             n += 1
         except Exception:  # session already stopped — nothing to free
             pass
+    sc = SparkContext._active_spark_context
+    for d in list(_CHECKPOINT_DIRS) if sc is not None else []:
+        path = sc._jvm.org.apache.hadoop.fs.Path(d)
+        fs = path.getFileSystem(sc._jsc.hadoopConfiguration())
+        if fs.exists(path) and len(fs.listStatus(path)):
+            continue  # still holds a checkpoint: a later release removes it
+        fs.delete(path, False)
+        _CHECKPOINT_DIRS.remove(d)
     return n
+
+
+@contextlib.contextmanager
+def _checkpoint_dir(sc: SparkContext, directory: str):
+    """Reliable checkpoints under `directory` for the duration: Spark's
+    `setCheckpointDir` creates `<directory>/<uuid>` and points the
+    shared SparkContext at it; the previous setting (possibly none) is
+    restored on exit, so later checkpoints of the session do not land
+    in the caller's directory. The `<uuid>` dir is registered for
+    release_persisted() to remove once empty."""
+    jsc = sc._jsc.sc()
+    prev = jsc.checkpointDir()  # scala Option, restored as is
+    sc.setCheckpointDir(directory)
+    _CHECKPOINT_DIRS.append(sc.getCheckpointDir())
+    try:
+        yield
+    finally:
+        getattr(jsc, "checkpointDir_$eq")(prev)
 
 
 def _exploded_shingles(
@@ -313,7 +346,10 @@ def connected_components(
     local/ephemeral runs, but a lost executor kills a long multi-round
     job. Pass `checkpoint_dir` (HDFS/object-store path) for cluster
     runs: rounds then use RELIABLE checkpoints that survive executor
-    loss (the driver sets spark.sparkContext.setCheckpointDir).
+    loss (the SparkContext's checkpoint dir points at a fresh
+    `<checkpoint_dir>/<uuid>` for the call only; the previous setting
+    is restored on return, and release_persisted() removes the emptied
+    `<uuid>` dir).
 
     Each round's checkpoint is freed once the next round is
     materialized, and the edge list once the labels converge (a
@@ -323,112 +359,114 @@ def connected_components(
     Returns (id, component) with component = min id. `vertices` adds
     isolated docs (their own component)."""
     if checkpoint_dir is not None:
-        pairs.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)
+        scope = _checkpoint_dir(pairs.sparkSession.sparkContext, checkpoint_dir)
 
         def ckpt(df: DataFrame) -> DataFrame:
             return df.checkpoint(eager=True)
     else:
+        scope = contextlib.nullcontext()
 
         def ckpt(df: DataFrame) -> DataFrame:
             return df.localCheckpoint(eager=True)
 
-    sym = pairs.select(
-        F.col(id_a).alias("src"), F.col(id_b).alias("dst")
-    ).unionByName(pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst")))
-    # materialize the edge list ONCE: every round joins it, and the
-    # upstream pair pipeline (minhash/LSH) must not re-run per round
-    sym = ckpt(sym)
-    from pyspark.sql import Observation
+    with scope:
+        sym = pairs.select(
+            F.col(id_a).alias("src"), F.col(id_b).alias("dst")
+        ).unionByName(pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst")))
+        # materialize the edge list ONCE: every round joins it, and the
+        # upstream pair pipeline (minhash/LSH) must not re-run per round
+        sym = ckpt(sym)
+        from pyspark.sql import Observation
 
-    def observed_ckpt(df: DataFrame):
-        obs = Observation(f"cc-sum-{_uuid.uuid4().hex[:8]}")
-        out = ckpt(
-            df.observe(obs, F.sum(F.col("component").cast("decimal(38,0)")).alias("s"))
-        )
-        return out, obs.get["s"]
-
-    # Round 0 FUSED into label initialization: with component == id the
-    # first propagation join is the identity (label(src) IS src), so the
-    # vertex-set distinct and the first min-propagation collapse into
-    # ONE groupBy — (dst, src) edge rows unioned with (id, id) vertex
-    # rows, min per id. Saves a checkpoint and a full round vs the
-    # former distinct -> ckpt -> round-0 sequence, bit-identical labels.
-    ids = sym.select(F.col("src").alias("id"))
-    if vertices is not None:
-        ids = ids.unionByName(vertices.select(F.col(id_col).alias("id")))
-    labels, prev_sum = observed_ckpt(
-        sym.select(F.col("dst").alias("id"), F.col("src").alias("component"))
-        .unionByName(ids.withColumn("component", F.col("id")))
-        .groupBy("id")
-        .agg(F.min("component").alias("component"))
-    )
-    # Size-adaptive join strategy (guide §3.1): the vertex SET is fixed
-    # across rounds, so one count decides every round's plan. When the
-    # label table fits a broadcast (rows, not a size estimate — the
-    # checkpointed frame has no stats), each round's edge join, pointer
-    # jump and convergence check run WITHOUT shuffling the (much larger)
-    # edge list or the label table per round: the per-round wide work
-    # collapses to the single groupBy(id). Past the threshold the plan
-    # falls back to plain shuffle joins, unchanged from before.
-    n_vertices = labels.count()
-    small = n_vertices <= int(
-        os.environ.get("BINGO_CC_BROADCAST_MAX_VERTICES", "5000000")
-    )
-
-    def bcast(df: DataFrame) -> DataFrame:
-        return F.broadcast(df) if small else df
-
-    for i in range(1, max_iter):
-        prev = labels
-        if i - 1 >= jump_after:
-            # pointer jumping: follow the label one hop (component is
-            # itself a vertex id, so its own label exists) and take the
-            # min — label chains collapse by doubling, giving
-            # O(log diameter) rounds on high-diameter graphs. Applied
-            # to the MATERIALIZED previous round's labels and folded
-            # into this round's plan: the former self-join of the
-            # unmaterialized prop subtree re-ran the whole
-            # join+union+groupBy twice per jump round (measured 2x
-            # round cost at sf1.0).
-            parent = labels.select(
-                F.col("id").alias("component"), F.col("component").alias("_pcomp")
+        def observed_ckpt(df: DataFrame):
+            obs = Observation(f"cc-sum-{_uuid.uuid4().hex[:8]}")
+            out = ckpt(
+                df.observe(obs, F.sum(F.col("component").cast("decimal(38,0)")).alias("s"))
             )
-            labels = labels.join(bcast(parent), "component", "left").select(
-                "id",
-                F.least(
-                    F.col("component"), F.coalesce(F.col("_pcomp"), F.col("component"))
-                ).alias("component"),
-            )
-        prop = (
-            sym.join(bcast(labels), sym["src"] == labels["id"])
-            .select(F.col("dst").alias("id"), "component")
-            .unionByName(labels.select("id", "component"))
+            return out, obs.get["s"]
+
+        # Round 0 FUSED into label initialization: with component == id the
+        # first propagation join is the identity (label(src) IS src), so the
+        # vertex-set distinct and the first min-propagation collapse into
+        # ONE groupBy — (dst, src) edge rows unioned with (id, id) vertex
+        # rows, min per id. Saves a checkpoint and a full round vs the
+        # former distinct -> ckpt -> round-0 sequence, bit-identical labels.
+        ids = sym.select(F.col("src").alias("id"))
+        if vertices is not None:
+            ids = ids.unionByName(vertices.select(F.col(id_col).alias("id")))
+        labels, prev_sum = observed_ckpt(
+            sym.select(F.col("dst").alias("id"), F.col("src").alias("component"))
+            .unionByName(ids.withColumn("component", F.col("id")))
             .groupBy("id")
             .agg(F.min("component").alias("component"))
         )
-        # ONE materialization per round, NO compare join: labels are
-        # monotone non-increasing per id (the union includes each id's
-        # own current label; least() only lowers), so the label sum
-        # strictly decreases while ANY label changes and convergence is
-        # exactly "sum unchanged across rounds" (sandwich: prop_k <=
-        # jumped labels_{k-1} <= prop_{k-1} per id, so equal sums force
-        # prop_k == prop_{k-1} AND a no-op jump). The sum rides the
-        # checkpoint as an Observation; decimal(38,0) keeps it exact at
-        # any scale (a long sum can overflow past ~10^9 int64 ids).
-        labels, cur_sum = observed_ckpt(prop)
-        _free(prev)  # materialized: the new labels read none of its blocks
-        if cur_sum == prev_sum:
-            _free(sym)
-            _PERSISTED.append(labels)
-            return labels.select(F.col("id"), F.col("component"))
-        prev_sum = cur_sum
-    _free(sym)
-    _free(labels)
-    raise RuntimeError(
-        f"connected_components did not converge in {max_iter} rounds "
-        f"(graph diameter too large?) — raise max_iter; the labeling "
-        f"would be silently wrong if returned"
-    )
+        # Size-adaptive join strategy (guide §3.1): the vertex SET is fixed
+        # across rounds, so one count decides every round's plan. When the
+        # label table fits a broadcast (rows, not a size estimate — the
+        # checkpointed frame has no stats), each round's edge join, pointer
+        # jump and convergence check run WITHOUT shuffling the (much larger)
+        # edge list or the label table per round: the per-round wide work
+        # collapses to the single groupBy(id). Past the threshold the plan
+        # falls back to plain shuffle joins, unchanged from before.
+        n_vertices = labels.count()
+        small = n_vertices <= int(
+            os.environ.get("BINGO_CC_BROADCAST_MAX_VERTICES", "5000000")
+        )
+
+        def bcast(df: DataFrame) -> DataFrame:
+            return F.broadcast(df) if small else df
+
+        for i in range(1, max_iter):
+            prev = labels
+            if i - 1 >= jump_after:
+                # pointer jumping: follow the label one hop (component is
+                # itself a vertex id, so its own label exists) and take the
+                # min — label chains collapse by doubling, giving
+                # O(log diameter) rounds on high-diameter graphs. Applied
+                # to the MATERIALIZED previous round's labels and folded
+                # into this round's plan: the former self-join of the
+                # unmaterialized prop subtree re-ran the whole
+                # join+union+groupBy twice per jump round (measured 2x
+                # round cost at sf1.0).
+                parent = labels.select(
+                    F.col("id").alias("component"), F.col("component").alias("_pcomp")
+                )
+                labels = labels.join(bcast(parent), "component", "left").select(
+                    "id",
+                    F.least(
+                        F.col("component"), F.coalesce(F.col("_pcomp"), F.col("component"))
+                    ).alias("component"),
+                )
+            prop = (
+                sym.join(bcast(labels), sym["src"] == labels["id"])
+                .select(F.col("dst").alias("id"), "component")
+                .unionByName(labels.select("id", "component"))
+                .groupBy("id")
+                .agg(F.min("component").alias("component"))
+            )
+            # ONE materialization per round, NO compare join: labels are
+            # monotone non-increasing per id (the union includes each id's
+            # own current label; least() only lowers), so the label sum
+            # strictly decreases while ANY label changes and convergence is
+            # exactly "sum unchanged across rounds" (sandwich: prop_k <=
+            # jumped labels_{k-1} <= prop_{k-1} per id, so equal sums force
+            # prop_k == prop_{k-1} AND a no-op jump). The sum rides the
+            # checkpoint as an Observation; decimal(38,0) keeps it exact at
+            # any scale (a long sum can overflow past ~10^9 int64 ids).
+            labels, cur_sum = observed_ckpt(prop)
+            _free(prev)  # materialized: the new labels read none of its blocks
+            if cur_sum == prev_sum:
+                _free(sym)
+                _PERSISTED.append(labels)
+                return labels.select(F.col("id"), F.col("component"))
+            prev_sum = cur_sum
+        _free(sym)
+        _free(labels)
+        raise RuntimeError(
+            f"connected_components did not converge in {max_iter} rounds "
+            f"(graph diameter too large?) — raise max_iter; the labeling "
+            f"would be silently wrong if returned"
+        )
 
 
 def keeper_assignment(

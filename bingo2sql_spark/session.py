@@ -37,7 +37,10 @@ import zipimport
 from pyspark.sql import SparkSession
 
 # Shuffle partitions sized for local[32]; on a 1000-executor cluster this
-# is overridden to ~2-3x total cores (AQE coalesces the excess at runtime).
+# is overridden to ~2-3x total cores. It is the initial partition count
+# of every exchange that names none, the commit merge's bucket exchange
+# among them (operators/apply._lww_merge); AQE then coalesces the
+# partitions to about max(min(total bytes / cores, 64 MB), 1 MB) each.
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 

@@ -247,3 +247,56 @@ def test_drop_zip_finders_keeps_the_archive_importable(tmp_path, monkeypatch):
     finally:
         for mod in ("zipped_pkg", "zipped_pkg.first", "zipped_pkg.second"):
             sys.modules.pop(mod, None)
+
+
+#: DataFrame methods whose first argument may be a partition count
+REPARTITION_METHODS = {"repartition", "repartitionByRange"}
+#: calls that build a Column: a first argument made by one is a column
+COLUMN_BUILDERS = {"col", "column", "expr"}
+
+
+def _is_column_arg(arg: ast.AST) -> bool:
+    """Whether a repartition call's first positional argument reads as a
+    column: a string literal, `*cols`, `df.c` / `df["c"]`, or a
+    `col(...)` / `column(...)` / `expr(...)` call. Anything else — an
+    int, a name, arithmetic, another call — reads as a partition count."""
+    if isinstance(arg, ast.Constant):
+        return isinstance(arg.value, str)
+    if isinstance(arg, ast.Call):
+        return _callee_name(arg) in COLUMN_BUILDERS
+    return isinstance(arg, (ast.Starred, ast.Attribute, ast.Subscript))
+
+
+def counted_repartitions() -> list[str]:
+    """`repartition` / `repartitionByRange` calls in the engine package
+    given a partition count: `numPartitions=`, or a first positional
+    argument that is not a column (see _is_column_arg)."""
+    found = []
+    for p in sorted(PACKAGE.rglob("*.py")):
+        for node in ast.walk(ast.parse(p.read_text())):
+            if not (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in REPARTITION_METHODS
+            ):
+                continue
+            counted = any(k.arg == "numPartitions" for k in node.keywords) or (
+                bool(node.args) and not _is_column_arg(node.args[0])
+            )
+            if counted:
+                found.append(f"{p.relative_to(REPO)}:{node.lineno} {ast.unparse(node)}")
+    return found
+
+
+def test_repartitions_name_no_partition_count():
+    """No exchange of the engine fixes its partition count. AQE can
+    coalesce only a shuffle whose count it chose (spark.sql.shuffle
+    .partitions), so a fixed count keeps every empty or tiny partition
+    as a task, and each task pays a fixed setup cost (a file writer's
+    deserializes the Hadoop Configuration in its closure). Pass columns
+    only and let AQE size the tasks by their shuffle bytes."""
+    fixed = counted_repartitions()
+    assert not fixed, (
+        "repartition calls with a fixed partition count (AQE cannot coalesce "
+        "them; pass columns only):\n" + "\n".join(fixed)
+    )

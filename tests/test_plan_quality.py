@@ -683,6 +683,122 @@ def test_commit_jobs_per_path(spark, tmp_path):
     }, jobs
 
 
+def test_commit_writes_one_file_per_bucket(spark, tmp_path):
+    """Each bucket of a commit's merge is written by exactly one task, so
+    the commit metrics' `files_written` (counted from the footer-stats
+    listing) equals `buckets_rewritten` on every commit path
+    test_commit_jobs_per_path builds: a fresh CoW commit, a CoW commit
+    over stored rows, a DROP + rename commit, a MOR delta, a MOR commit
+    folding at max_delta_depth, compact(), a fold on read amplification
+    and a flashback rebase."""
+    from bingo2sql_spark.operators import flashback as FB
+    from bingo2sql_spark.operators import resolve as R
+    from bingo2sql_spark.operators.apply import IcebergLiteTable
+    from bingo2sql_spark.sources.synth import generate_events
+
+    def up(df):
+        return R.to_upsert_rows(R.with_key(df))
+
+    ev = generate_events(spark, n_keys=120, versions_per_key=3, seed=11)
+    cow = IcebergLiteTable(str(tmp_path / "cow"), n_buckets=8)
+    mor = IcebergLiteTable(
+        str(tmp_path / "mor"), n_buckets=8, write_mode="mor", max_delta_depth=1
+    )
+    amp = IcebergLiteTable(
+        str(tmp_path / "amp"), n_buckets=8, write_mode="mor", max_read_amplification=0.1
+    )
+    ddl = up(ev.filter("seq >= 300")).drop("branch").withColumnRenamed("lang", "language")
+    metrics = {
+        "cow_fresh": cow.commit(up(ev.filter("seq < 200")), "c1"),
+        "cow_stored": cow.commit(up(ev.filter("seq >= 200")), "c2"),
+        "drop_rename": cow.commit(
+            ddl, "c3", drop_columns=["branch"], rename_columns={"lang": "language"}
+        ),
+        "mor_delta": mor.commit(up(ev.filter("seq < 200")), "m1"),
+        "mor_delta_compaction": mor.commit(up(ev.filter("seq >= 200")), "m2"),
+        "mor_compact": mor.compact(spark),
+        "amp_delta": amp.commit(up(ev.filter("seq < 200")), "a1"),
+        "amp_over": amp.commit(up(ev.filter("seq >= 200")), "a2"),
+        "mor_read_amp_fold": amp.commit(up(ev.filter("seq >= 300")), "a3"),
+        "flashback_empty": IcebergLiteTable(str(tmp_path / "fb"), n_buckets=8).commit(
+            up(FB.invert(ev)), "f1", rebase_past_head=True
+        ),
+    }
+    assert metrics["mor_delta_compaction"]["compaction_trigger"] == "delta_depth"
+    assert metrics["mor_read_amp_fold"]["compaction_trigger"] == "read_amplification"
+    got = {k: (m["files_written"], m["buckets_rewritten"]) for k, m in metrics.items()}
+    assert all(f == b > 0 for f, b in got.values()), got
+
+
+def _write_stage(spark, group: str):
+    """The status tracker's record of the last stage that ran tasks in
+    `group`'s last job: a commit's merge write stage (its map stage runs
+    as an earlier job and shows as skipped in the write job)."""
+    st = spark.sparkContext.statusTracker()
+    job = st.getJobInfo(max(st.getJobIdsForGroup(group)))
+    ran = [st.getStageInfo(s) for s in job.stageIds]
+    return max((s for s in ran if s.numCompletedTasks), key=lambda s: s.stageId)
+
+
+def _writing_tasks(table, metrics) -> set[str]:
+    """The task partition ids (`part-<id>-...`) of the commit's files."""
+    snap = os.path.join(
+        table.path, "data", table.latest_manifest()["snap_dirs"][str(metrics["snapshot"])]
+    )
+    return {
+        f.split("-")[1]
+        for d in os.listdir(snap) if d.startswith("pbucket=")
+        for f in os.listdir(os.path.join(snap, d)) if f.endswith(".parquet")
+    }
+
+
+def test_small_commit_merge_writes_from_one_task(spark, tmp_path):
+    """The merge exchange names no partition count, so AQE coalesces a
+    small commit's shuffle into one write task: a fresh MOR commit and a
+    MOR delta over 16 buckets each write all their bucket files from a
+    single task (a fixed count paid the per-task writer setup once per
+    partition, empty ones included)."""
+    from bingo2sql_spark.operators import resolve as R
+    from bingo2sql_spark.operators.apply import IcebergLiteTable
+    from bingo2sql_spark.sources.synth import generate_events
+
+    ev = generate_events(spark, n_keys=200, versions_per_key=3)
+    t = IcebergLiteTable(str(tmp_path / "t"), n_buckets=16, write_mode="mor")
+    for i, cond in enumerate(["seq < 300", "seq >= 300"]):
+        batch = R.to_upsert_rows(R.with_key(ev.filter(cond)))
+        m, _ = _jobs(spark, f"small-merge-{i}", lambda: t.commit(batch, f"b{i}"))
+        assert m["buckets_rewritten"] == m["files_written"] == 16, m
+        assert _write_stage(spark, f"small-merge-{i}").numTasks == 1
+        assert len(_writing_tasks(t, m)) == 1
+
+
+def test_large_commit_merge_spreads_without_empty_tasks(spark, tmp_path):
+    """A commit whose merge shuffles more than `defaultParallelism` MB
+    is split by AQE into several write tasks (target size total/par),
+    and every one of them writes files: coalescing leaves no empty
+    partition, and each bucket stays whole in one task (one file per
+    bucket)."""
+    from bingo2sql_spark.operators import resolve as R
+    from bingo2sql_spark.operators.apply import IcebergLiteTable
+    from bingo2sql_spark.sources.synth import generate_events
+
+    sc = spark.sparkContext
+    ev = generate_events(spark, n_keys=2000, versions_per_key=2, seed=5, content_repeat=120)
+    t = IcebergLiteTable(str(tmp_path / "t"), n_buckets=16)
+    m, _ = _jobs(spark, "large-merge", lambda: t.commit(R.to_upsert_rows(R.with_key(ev)), "load"))
+    stage = _write_stage(spark, "large-merge")
+    store = sc._jsc.sc().statusStore()
+    data = store.stageData(
+        stage.stageId, False, getattr(store, "stageData$default$3")(),
+        False, getattr(store, "stageData$default$5")(),
+    )
+    shuffled = data.apply(data.size() - 1).shuffleReadBytes()
+    assert shuffled > sc.defaultParallelism * 2**20, shuffled
+    assert stage.numTasks > 1, stage
+    assert len(_writing_tasks(t, m)) == stage.numTasks, stage
+    assert m["buckets_rewritten"] == m["files_written"] == 16, m
+
+
 def test_replay_jobs_per_path(spark, tmp_path):
     """Spark jobs per pipeline.replay() call, counted through a job group
     set here, on each entry path: a FULL load and a FULL batch over

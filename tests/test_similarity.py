@@ -339,6 +339,35 @@ def test_connected_components_high_diameter_path(spark, tmp_path):
         DD.connected_components(pairs, max_iter=3)
 
 
+def test_connected_components_restores_checkpoint_dir(spark, tmp_path):
+    """connected_components(checkpoint_dir=...) points the shared
+    SparkContext at its own `<dir>/<uuid>` only for the call: the
+    session's checkpoint dir (unset, or a caller's) reads the same
+    before the call, after it and after release_persisted(), which also
+    removes the emptied `<uuid>` dir."""
+    from pyspark.sql import functions as F
+
+    sc = spark.sparkContext
+    pairs = spark.range(20).select(F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b"))
+    jsc = sc._jsc.sc()
+    prev = jsc.checkpointDir()
+    try:
+        for own in (None, tmp_path / "session_ckpt"):
+            if own is not None:
+                sc.setCheckpointDir(str(own))
+            before = sc.getCheckpointDir()
+            ckpt = tmp_path / f"cc_ckpt_{own is not None}"
+            cc = DD.connected_components(pairs, max_iter=10, checkpoint_dir=str(ckpt))
+            assert sc.getCheckpointDir() == before
+            assert cc.filter(F.col("component") != 0).count() == 0
+            assert len(list(ckpt.iterdir())) == 1  # the <uuid> dir, holding the labels
+            DD.release_persisted()
+            assert sc.getCheckpointDir() == before
+            assert list(ckpt.iterdir()) == []
+    finally:
+        getattr(jsc, "checkpointDir_$eq")(prev)
+
+
 def test_connected_components_releases_checkpoint_blocks(spark):
     """connected_components checkpoints its edge list and every round's
     labels. Each round's blocks are freed once the next round is
