@@ -50,9 +50,11 @@ Scale design (10^10 events, 100 TB table):
   are small relative to bucket data.
 - every write is ONE bucket exchange of unresolved stored ∪ batch rows
   feeding a per-(bucket, key) max_by aggregate (see _lww_merge). The
-  exchange names no partition count: each bucket lands in exactly one
-  task, and AQE merges small partitions, so the write tasks are sized
-  by the bytes they write (a small MOR delta writes from one task).
+  exchange names no partition count and deals the commit's buckets
+  round-robin over its initial partitions: each bucket lands in exactly
+  one task, and AQE merges small partitions, so the write tasks are
+  sized by the bytes they write (a small MOR delta writes from one
+  task; a large merge spreads evenly over the cores).
 - crash safety: the manifest rename is the commit point; data of a
   failed commit is never referenced (orphans, GC-able).
 
@@ -180,14 +182,19 @@ def _per_key_winners(
     column ABSENT from the map was written by the row winner at the
     row's `_ingest_seq`, so after single-writer or full-image commits
     the map is empty. Dense maps from older snapshots decode to the
-    same answer, so no stored table needs rewriting."""
+    same answer, so no stored table needs rewriting.
+
+    A `bucket_slot` column (_lww_merge's placement, a function of
+    bucket) joins the grouping keys, so the aggregate reuses the
+    exchange on it; the output drops it."""
     data_cols = [c for c in all_cols if c not in S.MERGE_KEYS]
+    slot = ["bucket_slot"] if "bucket_slot" in df.columns else []
     if not partial:
         winner = F.max_by(
             F.struct(*data_cols, *INTERNAL_NO_BUCKET), F.col("_ingest_seq")
         ).alias("_w")
         return (
-            df.groupBy("bucket", *S.MERGE_KEYS)
+            df.groupBy(*slot, "bucket", *S.MERGE_KEYS)
             .agg(winner)
             .select(*S.MERGE_KEYS, "_w.*", "bucket")
             .select(*all_cols, *INTERNAL_COLS)
@@ -249,7 +256,7 @@ def _per_key_winners(
     else:
         col_seqs = F.lit(None).cast("map<string,bigint>").alias("_col_seqs")
     return (
-        df.groupBy("bucket", *S.MERGE_KEYS)
+        df.groupBy(*slot, "bucket", *S.MERGE_KEYS)
         .agg(*aggs)
         .select(
             *S.MERGE_KEYS,
@@ -263,30 +270,76 @@ def _per_key_winners(
     )
 
 
+def _murmur3_int(k: int) -> int:
+    """Spark's hash() of an int column: Murmur3_x86_32.hashInt(k, 42),
+    the hash HashPartitioning takes pmod of."""
+
+    def rotl(x: int, r: int) -> int:
+        return ((x << r) | (x >> (32 - r))) & 0xFFFFFFFF
+
+    k1 = rotl((k & 0xFFFFFFFF) * 0xCC9E2D51 & 0xFFFFFFFF, 15) * 0x1B873593 & 0xFFFFFFFF
+    h = (rotl(42 ^ k1, 13) * 5 + 0xE6546B64) & 0xFFFFFFFF
+    h ^= 4  # the input's length in bytes
+    h = (h ^ (h >> 16)) * 0x85EBCA6B & 0xFFFFFFFF
+    h = (h ^ (h >> 13)) * 0xC2B2AE35 & 0xFFFFFFFF
+    h ^= h >> 16
+    return h - (1 << 32) if h >= 1 << 31 else h
+
+
+@functools.lru_cache(maxsize=None)
+def _slot_keys(n: int) -> tuple[int, ...]:
+    """For each partition j < n of a hash exchange over one int column,
+    the smallest non-negative int key HashPartitioning sends to j:
+    pmod(hash(k), n) == j."""
+    first: dict[int, int] = {}
+    k = 0
+    while len(first) < n:
+        first.setdefault(_murmur3_int(k) % n, k)
+        k += 1
+    return tuple(first[j] for j in range(n))
+
+
 def _lww_merge(
     inputs: list[DataFrame],
     all_cols: list[str],
     partial: bool,
+    affected: list[int],
     emit_changed: bool = False,
 ) -> DataFrame:
     """The one write-side MERGE plan of commit and compact(): unresolved
-    inputs (stored scan and/or batch rows) unioned into ONE
-    `repartition(bucket)` exchange feeding _per_key_winners. Bucket is
-    a function of the merge keys, so hash(bucket) partitioning
-    satisfies the aggregate's clustered distribution (no second
-    exchange) and the output stays clustered for the pbucket-partitioned
-    write: each bucket in exactly one task, so one file per bucket.
+    inputs (stored scan and/or batch rows, all in the `affected`
+    buckets) unioned into ONE `repartition(bucket_slot)` exchange
+    feeding _per_key_winners. `bucket_slot` is a function of bucket,
+    and bucket of the merge keys, so that partitioning satisfies the
+    aggregate's clustered distribution (no second exchange) and the
+    output stays clustered for the pbucket-partitioned write: each
+    bucket in exactly one task, so one file per bucket.
 
     No partition count is given: AQE merges small partitions, sizing
     each write task by its shuffle bytes, so a small delta writes from
-    one task and a large merge still spreads over the cores. Every
-    file-writing task pays a fixed cost (its closure carries the
-    writer's Hadoop Configuration), which a fixed count pays per empty
-    or tiny partition."""
+    one task. Every file-writing task pays a fixed cost (its closure
+    carries the writer's Hadoop Configuration), which a fixed count
+    pays per empty or tiny partition.
+
+    Placement: hashing bucket ids straight onto the exchange's n
+    initial partitions (`spark.sql.shuffle.partitions`) collides — 64
+    buckets over 4 partitions land 21/16/16/11 — and AQE cannot split
+    a partition, so a merge large enough to spread over the cores is
+    as slow as its fullest task. `bucket_slot` deals the affected
+    buckets round-robin instead: the i-th gets the key of partition
+    i mod n (_slot_keys), so partitions differ by at most one bucket
+    and AQE's neighbour merging packs them evenly."""
     both = functools.reduce(
         DataFrame.unionByName, [_conform(d, all_cols, partial) for d in inputs]
     )
-    return _per_key_winners(both.repartition("bucket"), all_cols, partial, emit_changed)
+    conf = both.sparkSession._jsparkSession.sessionState().conf()
+    keys = _slot_keys(conf.numShufflePartitions())  # the exchange's initial count
+    slot_of = [0] * (max(affected) + 1)
+    for i, b in enumerate(affected):
+        slot_of[b] = keys[i % len(keys)]
+    slot = F.element_at(F.array(*map(F.lit, slot_of)), F.col("bucket") + 1)
+    placed = both.withColumn("bucket_slot", slot).repartition("bucket_slot")
+    return _per_key_winners(placed, all_cols, partial, emit_changed)
 
 
 def _referenced(buckets: dict[str, int], deltas: dict[str, list[int]]) -> set[int]:
@@ -1007,7 +1060,8 @@ class IcebergLiteTable:
                 current = _translate_partial_meta(current, cols.renames)
             inputs.insert(0, current)
         merged = _lww_merge(
-            inputs, cols.all_cols, scope.partial, emit_changed=delta and scope.partial
+            inputs, cols.all_cols, scope.partial, scope.affected,
+            emit_changed=delta and scope.partial,
         )
         if drop_tombstones:
             merged = merged.filter(~F.col("_deleted"))

@@ -71,10 +71,6 @@ def _log_dropped(
 #: the blocks without nuking the whole session cache
 _PERSISTED: list[DataFrame] = []
 
-#: the `<checkpoint_dir>/<uuid>` directories connected_components had
-#: Spark create; release_persisted() removes each once it is empty
-_CHECKPOINT_DIRS: list[str] = []
-
 
 def _maybe_persist(df: DataFrame, persist: bool) -> DataFrame:
     """The pair generators' self-join/cap branches reference their
@@ -101,8 +97,9 @@ def _free(df: DataFrame) -> None:
     A persist() goes through the cache manager; a checkpoint is a
     LogicalRDD over an RDD the cache manager does not know, so its
     blocks go through that RDD. A reliable checkpoint's `rdd-<id>`
-    directory (under the checkpoint dir) is deleted through the Hadoop
-    FileSystem: nothing else ever removes it."""
+    directory is deleted through the Hadoop FileSystem (nothing else
+    ever removes it), and so is the `<uuid>` checkpoint dir holding it
+    once that is empty."""
     df.unpersist()
     plan = df._jdf.queryExecution().logical()
     if plan.nodeName() != "LogicalRDD":
@@ -113,7 +110,10 @@ def _free(df: DataFrame) -> None:
     if ckpt.isDefined():
         sc = df.sparkSession.sparkContext
         path = sc._jvm.org.apache.hadoop.fs.Path(ckpt.get())
-        path.getFileSystem(sc._jsc.hadoopConfiguration()).delete(path, True)
+        fs = path.getFileSystem(sc._jsc.hadoopConfiguration())
+        fs.delete(path, True)
+        if not len(fs.listStatus(path.getParent())):
+            fs.delete(path.getParent(), False)
 
 
 def release_persisted() -> int:
@@ -124,8 +124,7 @@ def release_persisted() -> int:
     returned DataFrames have been consumed (written, collected, or
     counted). A cached table's blocks only speed up RE-use of the same
     plan; a label table is a checkpoint with no lineage, so it cannot
-    be read once released. Then removes each `<uuid>` checkpoint
-    directory connected_components created that is now empty."""
+    be read once released."""
     n = 0
     while _PERSISTED:
         df = _PERSISTED.pop()
@@ -134,14 +133,6 @@ def release_persisted() -> int:
             n += 1
         except Exception:  # session already stopped — nothing to free
             pass
-    sc = SparkContext._active_spark_context
-    for d in list(_CHECKPOINT_DIRS) if sc is not None else []:
-        path = sc._jvm.org.apache.hadoop.fs.Path(d)
-        fs = path.getFileSystem(sc._jsc.hadoopConfiguration())
-        if fs.exists(path) and len(fs.listStatus(path)):
-            continue  # still holds a checkpoint: a later release removes it
-        fs.delete(path, False)
-        _CHECKPOINT_DIRS.remove(d)
     return n
 
 
@@ -151,12 +142,11 @@ def _checkpoint_dir(sc: SparkContext, directory: str):
     `setCheckpointDir` creates `<directory>/<uuid>` and points the
     shared SparkContext at it; the previous setting (possibly none) is
     restored on exit, so later checkpoints of the session do not land
-    in the caller's directory. The `<uuid>` dir is registered for
-    release_persisted() to remove once empty."""
+    in the caller's directory. _free removes the `<uuid>` dir with its
+    last checkpoint."""
     jsc = sc._jsc.sc()
     prev = jsc.checkpointDir()  # scala Option, restored as is
     sc.setCheckpointDir(directory)
-    _CHECKPOINT_DIRS.append(sc.getCheckpointDir())
     try:
         yield
     finally:

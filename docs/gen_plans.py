@@ -45,11 +45,13 @@ add("CDC replay: decode -> upsert projection -> single-exchange MERGE", captured
     "table the stored side of the merge union is an empty LocalRelation the "
     "optimizer drops, and the batch's row counts ride the job as an Observation "
     "(CollectMetrics). The union is "
-    "repartitioned by bucket (the ONLY full-data exchange) and the LWW aggregate "
-    "groups by (bucket, keys) — bucket is a function of the keys, so hash(bucket) "
-    "partitioning satisfies the aggregate's clustered distribution and Catalyst "
-    "plans NO second shuffle; rows reach the pbucket-partitioned write already "
-    "clustered (one file per bucket).")
+    "repartitioned by bucket_slot (the ONLY full-data exchange; no partition "
+    "count, so AQE coalesces it; the slot deals the buckets round-robin over "
+    "the initial partitions) and the LWW aggregate groups by (bucket_slot, "
+    "bucket, keys) — the slot is a function of the bucket and the bucket of the "
+    "keys, so that partitioning satisfies the aggregate's clustered distribution "
+    "and Catalyst plans NO second shuffle; rows reach the pbucket-partitioned "
+    "write already clustered (one file per bucket).")
 
 # 1a. the MOR commit at max_delta_depth: one merge folds every delta
 mor = IcebergLiteTable(d + "/mor", n_buckets=64, write_mode="mor", max_delta_depth=1)

@@ -249,8 +249,6 @@ def test_drop_zip_finders_keeps_the_archive_importable(tmp_path, monkeypatch):
             sys.modules.pop(mod, None)
 
 
-#: DataFrame methods whose first argument may be a partition count
-REPARTITION_METHODS = {"repartition", "repartitionByRange"}
 #: calls that build a Column: a first argument made by one is a column
 COLUMN_BUILDERS = {"col", "column", "expr"}
 
@@ -258,8 +256,7 @@ COLUMN_BUILDERS = {"col", "column", "expr"}
 def _is_column_arg(arg: ast.AST) -> bool:
     """Whether a repartition call's first positional argument reads as a
     column: a string literal, `*cols`, `df.c` / `df["c"]`, or a
-    `col(...)` / `column(...)` / `expr(...)` call. Anything else — an
-    int, a name, arithmetic, another call — reads as a partition count."""
+    `col(...)` / `column(...)` / `expr(...)` call."""
     if isinstance(arg, ast.Constant):
         return isinstance(arg.value, str)
     if isinstance(arg, ast.Call):
@@ -268,20 +265,23 @@ def _is_column_arg(arg: ast.AST) -> bool:
 
 
 def counted_repartitions() -> list[str]:
-    """`repartition` / `repartitionByRange` calls in the engine package
-    given a partition count: `numPartitions=`, or a first positional
-    argument that is not a column (see _is_column_arg)."""
+    """`repartition` calls in the engine package given a partition
+    count: `numPartitions=`, or a first positional argument that is not
+    a column (an int, arithmetic, or a name ahead of the columns). A
+    lone name passes: it may hold a column name."""
     found = []
     for p in sorted(PACKAGE.rglob("*.py")):
         for node in ast.walk(ast.parse(p.read_text())):
             if not (
                 isinstance(node, ast.Call)
                 and isinstance(node.func, ast.Attribute)
-                and node.func.attr in REPARTITION_METHODS
+                and node.func.attr == "repartition"
             ):
                 continue
+            first = node.args[0] if node.args else None
+            lone_name = isinstance(first, ast.Name) and len(node.args) == 1
             counted = any(k.arg == "numPartitions" for k in node.keywords) or (
-                bool(node.args) and not _is_column_arg(node.args[0])
+                first is not None and not _is_column_arg(first) and not lone_name
             )
             if counted:
                 found.append(f"{p.relative_to(REPO)}:{node.lineno} {ast.unparse(node)}")
@@ -298,5 +298,6 @@ def test_repartitions_name_no_partition_count():
     fixed = counted_repartitions()
     assert not fixed, (
         "repartition calls with a fixed partition count (AQE cannot coalesce "
-        "them; pass columns only):\n" + "\n".join(fixed)
+        "them; pass columns only, a column name held in a variable through "
+        "F.col when more columns follow):\n" + "\n".join(fixed)
     )

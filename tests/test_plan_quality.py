@@ -5,6 +5,7 @@ Python UDFs in the relational path."""
 
 from __future__ import annotations
 
+import collections
 import gc
 import os
 import time
@@ -740,16 +741,17 @@ def _write_stage(spark, group: str):
     return max((s for s in ran if s.numCompletedTasks), key=lambda s: s.stageId)
 
 
-def _writing_tasks(table, metrics) -> set[str]:
-    """The task partition ids (`part-<id>-...`) of the commit's files."""
+def _writing_tasks(table, metrics) -> collections.Counter:
+    """The commit's file count per writing task partition id (the
+    `<id>` of `part-<id>-...`)."""
     snap = os.path.join(
         table.path, "data", table.latest_manifest()["snap_dirs"][str(metrics["snapshot"])]
     )
-    return {
+    return collections.Counter(
         f.split("-")[1]
         for d in os.listdir(snap) if d.startswith("pbucket=")
         for f in os.listdir(os.path.join(snap, d)) if f.endswith(".parquet")
-    }
+    )
 
 
 def test_small_commit_merge_writes_from_one_task(spark, tmp_path):
@@ -797,6 +799,38 @@ def test_large_commit_merge_spreads_without_empty_tasks(spark, tmp_path):
     assert stage.numTasks > 1, stage
     assert len(_writing_tasks(t, m)) == stage.numTasks, stage
     assert m["buckets_rewritten"] == m["files_written"] == 16, m
+
+
+def test_large_commit_merge_places_buckets_evenly(spark, tmp_path):
+    """The merge deals a commit's buckets round-robin over the bucket
+    exchange's initial partitions: with AQE's coalescing off (one task
+    per initial partition), 16 buckets over 8 partitions write 2 bucket
+    files from each of the 8 tasks. Hashing the bucket ids themselves
+    leaves some partitions empty and stacks buckets on others, and AQE
+    cannot split a partition, so the fullest task sets the stage time."""
+    from bingo2sql_spark.operators import resolve as R
+    from bingo2sql_spark.operators.apply import IcebergLiteTable, _slot_keys
+    from bingo2sql_spark.sources.synth import generate_events
+
+    # each slot key lands in its partition under Spark's own hash
+    for n in (4, 8, 200):
+        (row,) = spark.range(1).select(
+            *[F.pmod(F.hash(F.lit(k)), F.lit(n)) for k in _slot_keys(n)]
+        ).collect()
+        assert list(row) == list(range(n)), (n, row)
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        n = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        ev = generate_events(spark, n_keys=400, versions_per_key=2, seed=9)
+        t = IcebergLiteTable(str(tmp_path / "t"), n_buckets=2 * n)
+        m = t.commit(R.to_upsert_rows(R.with_key(ev)), "load")
+    finally:
+        spark.conf.set(key, prev)
+    per_task = _writing_tasks(t, m)
+    assert m["files_written"] == m["buckets_rewritten"] == 2 * n, m
+    assert sorted(per_task.values()) == [2] * n, per_task
 
 
 def test_replay_jobs_per_path(spark, tmp_path):
