@@ -3,8 +3,9 @@ surface (cmd/root.go:96-190) mapped 1:1 onto `api.generate_sql`.
 
 The reference is driven as `bingo2sql --start-file=... -d db -t tbl
 --flashback -o out.sql`; here the source is a landed event directory
-(parquet envelopes, raw typed/JSON parquet, or raw JSON-lines) instead
-of a live MySQL connection, and the output is an ordered SQL text
+(parquet envelopes, raw typed/JSON parquet, raw JSON-lines or binlog v4
+files, read by sources.layout.read_landing) instead of a live MySQL
+connection, and the output is an ordered SQL text
 artifact directory. Every gate/render flag keeps the reference's name
 and default.
 """
@@ -13,6 +14,8 @@ from __future__ import annotations
 
 import argparse
 import sys
+
+from bingo2sql_spark.sources.layout import LANDING_FORMATS, read_landing
 
 
 def build_parser() -> argparse.ArgumentParser:
@@ -24,12 +27,12 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("-o", "--output", required=True, help="output directory for SQL parts")
     p.add_argument(
         "--input-format",
-        choices=("envelope_parquet", "raw_typed_parquet", "raw_json_parquet",
-                 "raw_jsonl", "binlog"),
-        default="envelope_parquet",
-        help="landing format: decoded envelopes, typed wire, JSON wire, "
-             "JSON-lines, or raw MySQL binlog v4 files (binary decode; "
-             "column names resolve via --table-schema)",
+        choices=LANDING_FORMATS,
+        default=LANDING_FORMATS[0],
+        help="landing format (sources.layout.read_landing): decoded "
+             "envelopes, typed wire, JSON wire, JSON-lines, or raw MySQL "
+             "binlog v4 files (binary decode; column names resolve via "
+             "--table-schema); the socket tail is a stream only",
     )
     # F1-F8 gates (reference flag names, cmd/root.go)
     p.add_argument("--start-time", default=None)
@@ -76,41 +79,6 @@ def build_parser() -> argparse.ArgumentParser:
     return p
 
 
-def _load_events(spark, args, table_schema=None):
-    from bingo2sql_spark.sources.decode import decode_events, decode_events_typed
-    from bingo2sql_spark.sources.layout import read_raw_jsonl
-
-    if args.input_format == "envelope_parquet":
-        return spark.read.parquet(args.input)
-    if args.input_format == "raw_typed_parquet":
-        return decode_events_typed(spark.read.parquet(args.input))
-    if args.input_format == "raw_json_parquet":
-        return decode_events(spark.read.parquet(args.input))
-    if args.input_format == "binlog":
-        # S2 — the reference's primary input: actual binlog v4 file
-        # bytes (core/parseFile.go:16-179). Column names and UNSIGNED
-        # flags come from the schema file, like the reference's local
-        # mode (-t schema.sql, core/parser.go:794-815); tables not in it
-        # decode positionally (@1..@N) and are normally excluded via
-        # -t/-d gates.
-        from bingo2sql_spark import ddl as DL
-        from bingo2sql_spark.sources.binlog_binary import (
-            binlog_raw_events, payload_schema_from,
-        )
-
-        names = None
-        if table_schema:
-            with open(table_schema) as f:
-                reg = DL.parse_schema_text(f.read())
-            names = {key: meta.columns for key, meta in reg.items()}
-        return decode_events(
-            binlog_raw_events(spark, args.input, names),
-            payload=payload_schema_from(names),
-        )
-    raw = read_raw_jsonl(spark, args.input)
-    return decode_events(raw.drop("_corrupt_record"))
-
-
 def build_stats_parser() -> argparse.ArgumentParser:
     """`python -m bingo2sql_spark stats` — the reference's third
     front-end (cmd/stats.go:30-54, ParserStats
@@ -121,11 +89,7 @@ def build_stats_parser() -> argparse.ArgumentParser:
         description="Per-table DML counts over a landed change-event log.",
     )
     p.add_argument("--input", required=True, help="event directory (see --input-format)")
-    p.add_argument(
-        "--input-format",
-        choices=("envelope_parquet", "raw_typed_parquet", "raw_json_parquet", "raw_jsonl"),
-        default="envelope_parquet",
-    )
+    p.add_argument("--input-format", choices=LANDING_FORMATS, default=LANDING_FORMATS[0])
     p.add_argument("--start-time", default=None)
     p.add_argument("--stop-time", default=None)
     p.add_argument("--start-file", default=None)
@@ -147,7 +111,7 @@ def stats_main(argv: list[str]) -> int:
     from bingo2sql_spark.session import get_spark
 
     spark = get_spark("bingo2sql-stats", master=args.master)
-    events = _load_events(spark, args)
+    events = read_landing(spark, args.input, args.input_format)
     events = FL.apply_filters(
         events,
         start_time=args.start_time,
@@ -201,6 +165,7 @@ def main(argv: list[str] | None = None) -> int:
         return stats_main(argv[1:])
     args = build_parser().parse_args(argv)
     from bingo2sql_spark.api import generate_sql
+    from bingo2sql_spark.ddl import parse_schema_file
     from bingo2sql_spark.session import get_spark
 
     # reference local-mode overload: a lone -t value that names a file is
@@ -227,7 +192,15 @@ def main(argv: list[str] | None = None) -> int:
         table_schema, tables = tables[0], None
 
     spark = get_spark("bingo2sql-cli", master=args.master)
-    events = _load_events(spark, args, table_schema)
+    # a binlog landing names its columns from the schema file, like the
+    # reference's local mode (core/parser.go:794-815); tables not in it
+    # decode positionally (@1..@N) and are normally gated out by -t/-d
+    events = read_landing(
+        spark, args.input, args.input_format,
+        table_schemas={
+            key: meta.columns for key, meta in parse_schema_file(table_schema).items()
+        } if table_schema else None,
+    )
     generate_sql(
         events,
         args.output,

@@ -193,9 +193,14 @@ def decorate(
     seq`, parallel across blocks) and each block's FIRST row is patched
     with a carry — the (gtid, sec) of the last row of the nearest
     preceding non-empty block, computed by one ordered window over the
-    per-block aggregate (N/block_size rows) and broadcast back.
-    Identical output to the global window, including across
+    per-block aggregate (one row per non-empty block) and broadcast
+    back. Identical output to the global window, including across
     block-spanning seq gaps.
+
+    The carry holds N/block_size rows only for dense seqs. A binlog seq
+    is `offset << 12 | row`, so a 65,536-seq block spans 16 bytes of
+    file offset: every rows event is its own block, and the carry holds
+    one row per rows event.
 
     The result keeps `_blk` and stays on that ONE range exchange, sorted
     by (_blk, seq) within each partition: ordering it by (_blk, seq) —
@@ -226,7 +231,7 @@ def decorate(
     w = "OVER (PARTITION BY _blk ORDER BY seq)"
     # carry: last (gtid, sec) of each non-empty block, shifted to the
     # NEXT non-empty block by one ordered window over the block rows
-    # (N/block_size of them, broadcast whole)
+    # (one per non-empty block, broadcast whole)
     carry = (
         out.groupBy("_blk")
         .agg(F.expr("max_by(struct(_g, _s), seq) AS _c"))
@@ -319,7 +324,6 @@ def write_sql_file(
     minimal_update: bool = True,
     minimal_insert: bool = False,
     no_primary_key: bool = False,
-    batch_rows: int = 100,
     compression: str | None = None,
     table_registry: dict | None = None,
 ) -> None:
@@ -361,7 +365,6 @@ def write_sql_file(
                 payload_cols,
                 minimal_update=minimal_update,
                 no_primary_key=no_primary_key,
-                batch_rows=batch_rows,
                 key_cols=key_cols,
             )
         # flashback inverts inserts into deletes, so there is nothing to
@@ -464,7 +467,8 @@ def with_insert_runs(events: DataFrame, block_size: int = 1 << 16) -> DataFrame:
     Scalable prefix computation (no global window): each row's previous
     event is a `lag` per seq-block (hash-partitioned on `_blk`), and the
     block boundaries are patched from ONE carry over the per-block
-    aggregate of those windowed rows (N/block_size rows, broadcast
+    aggregate of those windowed rows (one row per non-empty block —
+    for binlog seqs one per rows event, see decorate — broadcast
     once): `lag` of each block's last event is the previous event of
     the next block's first row, and a running max of the blocks' run
     starts is the run still open where each block begins. Non-insert

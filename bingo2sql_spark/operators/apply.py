@@ -1280,6 +1280,16 @@ class IcebergLiteTable:
     _WATERMARK_ID = re.compile(r"(stream-[0-9a-f]{12}-)(\d+)$")
 
     @classmethod
+    def stream_batch_id(cls, query_id: str, epoch: int) -> str:
+        """The batch id of micro-batch `epoch` of the streaming query
+        whose id is the UUID `query_id`: `stream-<its first 12 hex
+        digits>-<epoch>`, the one shape _WATERMARK_ID accepts."""
+        batch_id = f"stream-{query_id.replace('-', '')[:12]}-{epoch}"
+        if cls._WATERMARK_ID.fullmatch(batch_id) is None:
+            raise RuntimeError(f"unexpected streaming queryId shape: {query_id!r}")
+        return batch_id
+
+    @classmethod
     def _split_batch_id(cls, batch_id: str) -> tuple[str, int] | None:
         m = cls._WATERMARK_ID.fullmatch(batch_id)
         if m is None:

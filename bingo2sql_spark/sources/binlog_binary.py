@@ -907,11 +907,15 @@ def decode_binlog_df(
     schema_ver: int = 2,
 ):
     """(path, content) rows -> RAW_EVENT envelope (+ statement) via one
-    `mapInArrow` pass: each file's envelope rows leave the parser as one
-    Arrow record batch, built column-wise against the output schema.
+    `mapInArrow` pass: a file's envelope rows leave the parser in Arrow
+    record batches of at most `spark.sql.execution.arrow.maxRecordsPerBatch`
+    rows (read here, on the driver), built column-wise against the
+    output schema, so a worker never holds a whole file's row dicts.
     Works on both a batch `binaryFile` scan and a
     `readStream.format("binaryFile")` micro-batch (the streaming tail
     over a rotating binlog directory — S1's shape)."""
+    from itertools import islice
+
     from pyspark.sql import types as T
     from pyspark.sql.pandas.types import to_arrow_schema
 
@@ -923,6 +927,11 @@ def decode_binlog_df(
     )
     arrow_schema = to_arrow_schema(out_schema)
     names_for = {k.lower(): v for k, v in (table_schemas or {}).items()}
+    max_rows = int(
+        binary_df.sparkSession.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
+    )
+    # zero or negative: no limit, as for Spark's own Arrow batches
+    limit = max_rows if max_rows > 0 else None
 
     @on_python_worker
     def gen(batches):
@@ -932,16 +941,14 @@ def decode_binlog_df(
             paths = batch.column("path").to_pylist()
             contents = batch.column("content").to_pylist()
             for path, content in zip(paths, contents):
-                rows = list(
-                    parse_binlog_bytes(
-                        content,
-                        log_file=path.rsplit("/", 1)[-1],
-                        names_for=names_for,
-                        schema_ver=schema_ver,
-                    )
+                rows = parse_binlog_bytes(
+                    content,
+                    log_file=path.rsplit("/", 1)[-1],
+                    names_for=names_for,
+                    schema_ver=schema_ver,
                 )
-                if rows:
-                    yield pa.RecordBatch.from_pylist(rows, schema=arrow_schema)
+                while chunk := list(islice(rows, limit)):
+                    yield pa.RecordBatch.from_pylist(chunk, schema=arrow_schema)
 
     return binary_df.select("path", "content").mapInArrow(gen, schema=out_schema)
 

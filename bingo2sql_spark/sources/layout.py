@@ -10,14 +10,21 @@ partitioned by `log_file` (and day), so a (file,pos) or time-range
 filter prunes partitions at PLANNING time — out-of-range files are
 never listed, let alone read — and "master status" is simply the max
 landed partition.
+
+S1/S2 — `read_landing` is the one reader of a landing, in any of
+LANDING_FORMATS, batch or stream: the CLI (run and `stats`) and the
+streaming ingest choose the format there and nowhere else, like the
+reference picks its binlog source once in front of one core.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from bingo2sql_spark import schema as S
+from bingo2sql_spark.sources.decode import decode_events, decode_events_typed
 
 
 def land_events(events: DataFrame, path: str, by_day: bool = True) -> None:
@@ -85,68 +92,126 @@ def read_events(spark: SparkSession, path: str) -> DataFrame:
     return df
 
 
-def read_raw_jsonl(spark: SparkSession, path: str) -> DataFrame:
-    """S2 variant: raw wire events landed as JSON-lines (the common
-    Kafka-connect / tailer landing format) instead of parquet. The
-    explicit RAW_EVENT schema means NO inference pass over the data
-    (a second full scan at 100 TB) and malformed lines surface as a
-    _corrupt_record column instead of poisoning the decode."""
-    from bingo2sql_spark.schema import RAW_EVENT
+#: Every landing format `read_landing` reads; the first is the CLI's and
+#: start_ingest's default.
+LANDING_FORMATS = (
+    "envelope_parquet",   # decoded envelopes (schema.ENVELOPE)
+    "raw_typed_parquet",  # typed wire (schema.RAW_EVENT_TYPED)
+    "raw_json_parquet",   # JSON wire (schema.RAW_EVENT)
+    "raw_jsonl",          # JSON wire as JSON lines
+    "binlog",             # MySQL binlog v4 files
+    "raw_socket",         # JSON wire lines pushed over TCP: stream only
+)
 
-    from pyspark.sql import types as T
+#: RAW_EVENT plus the column a PERMISSIVE JSON parse puts a malformed
+#: line in
+_RAW_JSONL = T.StructType(
+    S.RAW_EVENT.fields + [T.StructField("_corrupt_record", T.StringType(), True)]
+)
+_JSONL_OPTIONS = {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": "_corrupt_record"}
 
-    schema = T.StructType(
-        RAW_EVENT.fields + [T.StructField("_corrupt_record", T.StringType(), True)]
-    )
-    return (
-        spark.read.schema(schema)
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", "_corrupt_record")
-        .json(path)
-    )
+#: the `binaryFile` source's fixed schema; a file stream needs it spelled out
+_BINARY_FILE = "path string, modificationTime timestamp, length long, content binary"
 
 
-def stream_raw_jsonl(
-    spark: SparkSession, path: str, max_files_per_trigger: int | None = None
+def read_landing(
+    spark: SparkSession,
+    path: str,
+    fmt: str,
+    *,
+    stream: bool = False,
+    max_files_per_trigger: int | None = None,
+    table_schemas: dict[str, list] | None = None,
+    schema: T.StructType | None = None,
 ) -> DataFrame:
-    """S1 variant over a raw JSON-lines landing zone: readStream with
-    the pinned RAW_EVENT schema; compose with sources.decode
-    (decode_events works on streaming DataFrames — pure projections)."""
-    from bingo2sql_spark.schema import RAW_EVENT
+    """S1/S2 — the one reader of a landed change-event log: decoded
+    envelope events from a landing in format `fmt` (LANDING_FORMATS),
+    through `spark.read` or, with `stream=True`, `spark.readStream`.
+    Only the reader object and the read schema differ between the two
+    directions; the decode that follows is the same projection, so
+    filters push below it either way.
 
-    reader = spark.readStream.schema(RAW_EVENT)
+    - Parquet landings: `schema` is the read schema. Left None, a batch
+      read infers it and a stream pins the format's wire schema.
+    - JSON lines (files, or `path="host:port"` for the socket push
+      tail): RAW_EVENT in both directions. A malformed line raises with
+      its text when the decode reaches it, instead of melting into an
+      all-NULL row that the op gates then drop.
+    - Binlog files: one `binaryFile` scan decoded by
+      binlog_binary.decode_binlog_df (each file in one task);
+      `table_schemas` names the columns (`{"db.table": columns}`, the
+      parser's registry), or they decode positionally as @1..@N.
+
+    The socket tail reads no files, so Spark has no batch reader for
+    it, and it is not fault-tolerant: a dropped connection loses the
+    lines in flight (no replay offset, unlike the binlog protocol's
+    GTID resume). Put a replayable log in front of it in production."""
+    if fmt not in LANDING_FORMATS:
+        raise ValueError(f"unknown landing format {fmt!r}; one of {LANDING_FORMATS}")
+    reader = spark.readStream if stream else spark.read
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.json(path)
+    if fmt == "raw_socket":
+        if not stream:
+            raise ValueError(
+                "landing format 'raw_socket' reads only as a stream: Spark has "
+                "no batch socket reader"
+            )
+        host, sep, port = path.rpartition(":")
+        if not sep or not host or not port.isdigit():
+            raise ValueError(f"landing format 'raw_socket' needs 'host:port', got {path!r}")
+        lines = reader.format("socket").option("host", host).option("port", int(port)).load()
+        raw = lines.select(F.from_json("value", _RAW_JSONL, _JSONL_OPTIONS).alias("_e"))
+        return _decode_json_lines(raw.select("_e.*"))
+    if fmt == "raw_jsonl":
+        return _decode_json_lines(_raw_jsonl(reader, path))
+    if fmt == "binlog":
+        from bingo2sql_spark.sources.binlog_binary import (
+            decode_binlog_df, payload_schema_from,
+        )
+
+        files = reader.format("binaryFile").schema(_BINARY_FILE).load(path)
+        return decode_events(
+            decode_binlog_df(files, table_schemas),
+            payload=payload_schema_from(table_schemas),
+        )
+    if schema is None and stream:
+        schema = S.RAW_EVENT if fmt == "raw_json_parquet" else S.ENVELOPE
+    if schema is not None:
+        reader = reader.schema(schema)
+    df = reader.parquet(path)
+    if fmt == "raw_typed_parquet":
+        return decode_events_typed(df)
+    if fmt == "raw_json_parquet":
+        return decode_events(df)
+    return df
 
 
-def stream_raw_socket(spark: SparkSession, host: str, port: int) -> DataFrame:
-    """S1 network-tail variant: a PUSH-based TCP stream of raw-wire
-    JSON-lines events — the closest public-Spark analog of a
-    replication-protocol client (the reference's BinlogSyncer,
-    core/parser.go:330-520, is a live TCP connection to the server, not
-    a file listing). Each line is one RAW_EVENT JSON object; decode is
-    the same `from_json` projection as the file paths, so filters still
-    push below it and the rest of the pipeline (decode -> filters ->
-    foreachBatch MERGE, exactly-once by batch id) is IDENTICAL to the
-    file-tail path.
+def _raw_jsonl(reader, path: str) -> DataFrame:
+    return reader.schema(_RAW_JSONL).options(**_JSONL_OPTIONS).json(path)
 
-    Honest caveat (also why this is not the default): Spark's socket
-    source is NOT fault-tolerant — a dropped connection loses in-flight
-    lines (no replay offset, unlike the binlog protocol's GTID resume).
-    Production deployments front the tail with a replayable log
-    (Kafka/Kinesis or the file landing zone); this source exists to
-    prove the push-protocol integration shape end-to-end."""
-    from bingo2sql_spark.schema import RAW_EVENT
 
-    lines = (
-        spark.readStream.format("socket")
-        .option("host", host)
-        .option("port", port)
-        .load()
-    )
-    parsed = lines.select(F.from_json(F.col("value"), RAW_EVENT).alias("_e"))
-    return parsed.select("_e.*")
+def _decode_json_lines(raw: DataFrame) -> DataFrame:
+    """decode_events over JSON-wire lines that raises on a malformed
+    one. The raise rides the `op` projection: every consumer gates on
+    op, and a gate pushed below the decode still evaluates it, so no
+    extra job runs and no gate can drop the line first."""
+    bad = F.col("_corrupt_record")
+    return decode_events(raw.withColumn(
+        "op",
+        F.when(
+            bad.isNotNull(), F.raise_error(F.concat(F.lit("malformed JSON line: "), bad))
+        ).otherwise(F.col("op")),
+    ))
+
+
+def read_raw_jsonl(spark: SparkSession, path: str) -> DataFrame:
+    """The raw (undecoded) JSON-lines landing — the common Kafka-connect
+    / tailer format — as read_landing reads it: the explicit RAW_EVENT
+    schema means NO inference pass over the data (a second full scan at
+    100 TB), and a malformed line surfaces in a `_corrupt_record`
+    column."""
+    return _raw_jsonl(spark.read, path)
 
 
 def head_position(spark: SparkSession, path: str) -> tuple[str, int]:

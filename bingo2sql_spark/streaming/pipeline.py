@@ -1,11 +1,11 @@
 """Structured Streaming ingest: binlog tail -> micro-batch MERGE.
 
 Reference parity: the continuous remote tail (`--stop-never`, BinlogSyncer
-loop core/parser.go:415-481) becomes `readStream` over the event log
-directory; per-event gates stay Column predicates on the stream; each
-micro-batch goes through the same LWW + MERGE as batch replay inside
-`foreachBatch` (the channel-to-single-writer funnel, core/parser.go:844-857,
-replaced by an idempotent table commit).
+loop core/parser.go:415-481) becomes a stream over the landed event log
+(sources.layout.read_landing, stream=True); per-event gates stay Column
+predicates on the stream; each micro-batch goes through the same LWW +
+MERGE as batch replay inside `foreachBatch` (the channel-to-single-writer
+funnel, core/parser.go:844-857, replaced by an idempotent table commit).
 
 Exactly-once: Spark's checkpoint gives at-least-once batch re-delivery
 with STABLE batch ids; IcebergLiteTable.commit skips batch ids it has
@@ -23,48 +23,18 @@ from __future__ import annotations
 
 import json
 import os
-import re
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
 from bingo2sql_spark import schema as S
 from bingo2sql_spark.operators import filters as FL
 from bingo2sql_spark.operators.apply import IcebergLiteTable
 from bingo2sql_spark.pipeline import apply_batch
-
-
-def stream_events(
-    spark: SparkSession,
-    events_dir: str,
-    max_files_per_trigger: int | None = None,
-    with_statement: bool = False,
-    schema: Any = None,
-) -> DataFrame:
-    """S1 — the remote-tail analog: a file-based event stream in strict
-    log order (file-order = event-order). On a cluster this is the same
-    code over a Kafka/object-store landing zone. `with_statement` adds
-    the op='ddl' Query events' `statement` column to the read schema
-    (NULL on DML rows and on landings that never carried it) — required
-    by table_meta-driven evolution. `schema` overrides the whole read
-    schema — an evolving deployment's landing carries wider payload
-    structs than the pinned registry version (e.g. both spellings of a
-    renamed column while producers race the DDL)."""
-    from pyspark.sql import types as T
-
-    if schema is None:
-        schema = S.ENVELOPE
-        if with_statement:
-            schema = T.StructType(
-                list(S.ENVELOPE.fields)
-                + [T.StructField("statement", T.StringType(), True)]
-            )
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.parquet(events_dir)
+from bingo2sql_spark.sources.layout import LANDING_FORMATS, read_landing
 
 
 def start_ingest(
@@ -81,10 +51,9 @@ def start_ingest(
     stop_on_gtid_exhaustion: bool = False,
     stop_poll_secs: float = 0.5,
     row_image: str = "FULL",
-    source_format: str = "envelope_parquet",
+    source_format: str = LANDING_FORMATS[0],
     on_commit: Any = None,
     table_meta: Any = None,
-    validate_stored: bool = False,
     source_schema: Any = None,
     table_schemas: dict[str, list] | None = None,
     **filter_kwargs: Any,
@@ -123,9 +92,13 @@ def start_ingest(
     table's metrics JSONL as {"stop_reason": ...}. Conditions are
     ignored under availableNow (the drain already stops by itself).
 
-    source_format="raw_jsonl" tails a raw-wire JSON-lines landing zone
-    instead (Kafka-connect style) and decodes IN the stream — decode is
-    a pure projection, so filters still push below it.
+    `source_format` (sources.layout.LANDING_FORMATS) names the landing
+    sources.layout.read_landing tails: raw wire landings decode IN the
+    stream, binlog files decode one per task with `table_schemas` as the
+    parser's column registry, and `source_schema` overrides a parquet
+    landing's read schema (an evolving deployment's landing carries
+    wider payload structs than the pinned registry version, e.g. both
+    spellings of a renamed column while producers race the DDL).
 
     `on_commit(table, metrics)` runs inside foreachBatch after each
     durable commit — the continuous-curation hook (e.g.
@@ -148,59 +121,26 @@ def start_ingest(
     DDL rows are skipped by the seq cursor (seqs are global log
     positions, so the cursor also survives a FRESH checkpoint whose
     epochs reset), and a crash between commit and persist just
-    re-derives the same plan from the re-delivered epoch. Envelope
-    landings only: the raw wire shapes don't carry `statement`."""
+    re-derives the same plan from the re-delivered epoch. The landing
+    must carry the op='ddl' Query events' `statement` column: parquet
+    envelopes (and the typed wire, which has their shape) are read with
+    it, NULL on DML rows, and binlog files carry it. The JSON wire
+    shapes do not, and start_ingest raises before the query starts."""
     evolve = table_meta is not None
-    if evolve and source_format not in ("envelope_parquet", "binlog"):
+    schema = source_schema
+    if schema is None and evolve:
+        schema = T.StructType(
+            list(S.ENVELOPE.fields) + [T.StructField("statement", T.StringType(), True)]
+        )
+    stream = read_landing(
+        spark, events_dir, source_format, stream=True,
+        max_files_per_trigger=max_files_per_trigger,
+        table_schemas=table_schemas, schema=schema,
+    )
+    if evolve and "statement" not in stream.columns:
         raise NotImplementedError(
-            "table_meta needs a landing that carries op='ddl' "
-            f"`statement` rows (envelope_parquet or binlog); "
-            f"{source_format!r} does not"
-        )
-    if source_format == "binlog":
-        # S1 over rotating binlog FILES: tail a directory of real
-        # binlog v4 bytes (file order = rotation order); each new file
-        # decodes in one task. DDL statements ride the envelope, so
-        # table_meta-driven evolution composes. `table_schemas` is the
-        # parser's column registry (names, ColumnMeta for UNSIGNED
-        # columns).
-        from bingo2sql_spark.sources.binlog_binary import (
-            decode_binlog_df, payload_schema_from,
-        )
-        from bingo2sql_spark.sources.decode import decode_events
-
-        reader = spark.readStream.format("binaryFile").schema(
-            "path string, modificationTime timestamp, length long, content binary"
-        )
-        if max_files_per_trigger:
-            reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-        raw = decode_binlog_df(reader.load(events_dir), table_schemas)
-        stream = decode_events(raw, payload=payload_schema_from(table_schemas))
-    elif source_format == "raw_jsonl":
-        from bingo2sql_spark.sources.decode import decode_events
-        from bingo2sql_spark.sources.layout import stream_raw_jsonl
-
-        stream = decode_events(stream_raw_jsonl(spark, events_dir, max_files_per_trigger))
-    elif source_format == "raw_socket":
-        # push-based network tail (events_dir = "host:port"); see
-        # layout.stream_raw_socket for the fault-tolerance caveat
-        from bingo2sql_spark.sources.decode import decode_events
-        from bingo2sql_spark.sources.layout import stream_raw_socket
-
-        # validate the host:port shape up front (ADVICE r4): rpartition
-        # on a colon-less string yields host='' and a bare int() error
-        # only after the other args were already accepted
-        host, sep, port = events_dir.rpartition(":")
-        if not sep or not host or not port.isdigit():
-            raise ValueError(
-                f"source_format='raw_socket' needs events_dir as 'host:port', "
-                f"got {events_dir!r}"
-            )
-        stream = decode_events(stream_raw_socket(spark, host, int(port)))
-    else:
-        stream = stream_events(
-            spark, events_dir, max_files_per_trigger,
-            with_statement=evolve, schema=source_schema,
+            "table_meta needs a landing that carries op='ddl' `statement` "
+            f"rows; {source_format!r} does not"
         )
 
     # ---- stop-condition plumbing (pre-filter observation) -----------------
@@ -226,19 +166,19 @@ def start_ingest(
     ]
     metrics_path = os.path.join(table.path, "_metrics.jsonl")
 
-    def _query_scope() -> str:
+    def _query_id() -> str:
         """The streaming queryId from the checkpoint's metadata file —
         stable across restarts from the SAME checkpoint, fresh for a new
         checkpoint dir or a second query. Scoping the batch id by it
-        keeps the exactly-once watermark per checkpoint lineage: without
-        it, a fresh-checkpoint restart (epochs reset to 0) or a second
-        ingest query would have every micro-batch skipped as 'already
-        committed' (silent data loss). Iceberg keys its epoch dedup by
-        queryId the same way."""
+        (IcebergLiteTable.stream_batch_id) keeps the exactly-once
+        watermark per checkpoint lineage: without it, a fresh-checkpoint
+        restart (epochs reset to 0) or a second ingest query would have
+        every micro-batch skipped as 'already committed' (silent data
+        loss). Iceberg keys its epoch dedup by queryId the same way."""
         meta_path = os.path.join(checkpoint_dir, "metadata")
         try:
             with open(meta_path) as f:
-                qid = json.load(f)["id"].replace("-", "")[:12]
+                return json.load(f)["id"]
         except Exception as e:
             # FAIL LOUDLY (ADVICE r3): a silent constant fallback would make
             # every broken-metadata query share one watermark key and
@@ -250,9 +190,6 @@ def start_ingest(
                 f"cannot read streaming queryId from {meta_path}; refusing to "
                 f"commit without a per-checkpoint watermark scope"
             ) from e
-        if not re.fullmatch(r"[0-9a-f]{12}", qid):
-            raise RuntimeError(f"unexpected queryId shape in {meta_path}: {qid!r}")
-        return qid
 
     import time as _time
 
@@ -267,7 +204,6 @@ def start_ingest(
         # produces a batch (empty landing dir) must still idle-stop —
         # size stop_idle_secs to cover first-batch warmup
         "rows": 0, "max_ts": None, "gno": {}, "last_data": _time.time(),
-        "batches": 0,
     }
 
     # ---- DDL-evolution state (see docstring) -------------------------------
@@ -318,15 +254,12 @@ def start_ingest(
             g = batch_df.agg(*gate_exprs).collect()[0]
         # the batch's DDL timeline resolves against the EVOLVING registry
         # entry; the seq cursor skips DDL rows an earlier attempt already
-        # applied (re-delivered epochs). A validate_stored rejection fails
-        # the query LOUDLY before the epoch commits, so a fixed registry
-        # or stream can resume from the same checkpoint.
+        # applied (re-delivered epochs)
         m, plan = apply_batch(
-            batch_df, table, f"stream-{_query_scope()}-{epoch_id}",
+            batch_df, table, table.stream_batch_id(_query_id(), epoch_id),
             row_image=row_image,
             table_meta=evo_state["meta"],
             min_ddl_seq=evo_state["applied_seq"],
-            validate_stored=validate_stored,
             **filter_kwargs,
         )
         m["epoch_id"] = epoch_id
@@ -359,7 +292,6 @@ def start_ingest(
             # visible, and the batch that crossed the boundary must be
             # durable first (otherwise the stop cancels the commit of
             # the very rows inside the boundary — data loss)
-            gate_state["batches"] += 1
             if g["n"]:
                 gate_state["last_data"] = _time.time()
                 if g["max_ts"] is not None:

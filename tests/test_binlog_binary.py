@@ -366,6 +366,26 @@ def test_cli_binlog_input_format(spark, tmp_path):
     assert body.index("alice") < body.index("carol")  # log order preserved
 
 
+def test_cli_stats_binlog_input_format(spark, tmp_path, capsys):
+    """`python -m bingo2sql_spark stats --input-format binlog` counts
+    the DML of raw binlog files per table, like the reference's stats
+    front-end reads binlogs (cmd/stats.go:30-54)."""
+    import os
+
+    from bingo2sql_spark.__main__ import main
+
+    bdir = tmp_path / "bl"
+    os.makedirs(bdir)
+    (bdir / "mysql-bin.000001").write_bytes(_basic_file())
+    rc = main(["stats", "--input", str(bdir), "--input-format", "binlog"])
+    assert rc == 0
+    lines = [ln.split() for ln in capsys.readouterr().out.splitlines() if ln.strip()]
+    assert lines[0][:6] == ["db", "table", "inserts", "updates", "deletes", "total"]
+    # 2 inserts, 1 update, 1 delete; the ALTER is not DML
+    assert lines[1][:6] == ["test", "acct", "2", "1", "1", "4"]
+    assert lines[-1][:5] == ["TOTAL", "2", "1", "1", "4"]
+
+
 def test_streaming_binlog_tail_with_ddl(spark, tmp_path):
     """S1 over rotating binlog files: a streaming ingest tails a
     directory of real binlog v4 bytes, applies a mid-stream ALTER
@@ -595,3 +615,39 @@ def test_spark_reader_equals_pure_parse(spark, tmp_path):
                 assert g[k].timestamp() == v.timestamp(), (k, g[k], v)
             else:
                 assert g[k] == v, (k, g[k], v)
+
+
+def test_spark_reader_bounds_arrow_batches(spark, tmp_path):
+    """A file with more envelope rows than
+    spark.sql.execution.arrow.maxRecordsPerBatch leaves the parser in
+    several bounded Arrow batches, and the reader still returns exactly
+    the envelopes parse_binlog_bytes yields, in order."""
+    from bingo2sql_spark.sources.binlog_binary import decode_binlog_df
+
+    types, meta = [B.T_LONG, B.T_VARCHAR], [0, 120]
+    w = B.BinlogWriter(checksum=True)
+    w.table_map("test", "acct", types, meta, ts=100)
+    for i in range(4):
+        w.rows("test", "acct", "insert", types, meta,
+               [[10 * i + k, f"n{k}"] for k in range(6)], ts=100 + i)
+    w.query("ALTER TABLE acct ADD COLUMN note varchar(10)", db="test", ts=105)
+    w.xid(1, ts=105)
+    path = tmp_path / "mysql-bin.000001"
+    path.write_bytes(w.bytes())
+    names = {"test.acct": ["id", "name"]}
+    want = list(B.parse_binlog_bytes(path.read_bytes(), log_file=path.name, names_for=names))
+    assert len(want) == 25
+
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    try:
+        got = decode_binlog_df(
+            spark.read.format("binaryFile").load(str(path)), names
+        ).collect()
+    finally:
+        spark.conf.set(key, old)
+    assert [r["seq"] for r in got] == [e["seq"] for e in want]
+    for g, e in zip(got, want):
+        assert g.asDict() | {"ts": e["ts"]} == e
+        assert g["ts"].timestamp() == e["ts"].timestamp()

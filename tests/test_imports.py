@@ -97,19 +97,30 @@ def test_no_unreferenced_definitions():
 def unpassed_keyword_only() -> list[str]:
     """Keyword-only parameters with a default (declared after `*`) of the
     engine package's functions that no call in any `.py` file of the
-    repository passes by name: a setting no caller sets is dead."""
+    repository passes by name to a callee of the function's name (a
+    call of a class counts for its `__init__`): a setting no caller sets
+    is dead. A keyword passed to another function of its own does not
+    keep it alive."""
     passed = set()
     for p in _repo_files():
         for node in ast.walk(ast.parse(p.read_text())):
             if isinstance(node, ast.Call):
-                passed.update(k.arg for k in node.keywords if k.arg)
+                callee = _callee_name(node)
+                passed.update((callee, k.arg) for k in node.keywords if k.arg)
     found = []
     for p in sorted(PACKAGE.rglob("*.py")):
-        for node in ast.walk(ast.parse(p.read_text())):
+        tree = ast.parse(p.read_text())
+        init_of = {
+            id(f): c.name
+            for c in ast.walk(tree) if isinstance(c, ast.ClassDef)
+            for f in c.body if isinstance(f, ast.FunctionDef) and f.name == "__init__"
+        }
+        for node in ast.walk(tree):
             if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
                 continue
+            callee = init_of.get(id(node), node.name)
             for arg, default in zip(node.args.kwonlyargs, node.args.kw_defaults):
-                if default is not None and arg.arg not in passed:
+                if default is not None and (callee, arg.arg) not in passed:
                     found.append(f"{p.relative_to(REPO)}:{node.lineno} {node.name}({arg.arg}=)")
     return found
 

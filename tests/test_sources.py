@@ -1,15 +1,18 @@
 """Raw-wire landing-format sources: JSON-lines batch + streaming reads
 compose with the decode stage and reach the same final state as the
-parquet path."""
+parquet path; read_landing reads every format the same way in batch
+and stream."""
 
 from __future__ import annotations
 
 import os
 
+import pytest
+
 from bingo2sql_spark.operators.apply import IcebergLiteTable
 from bingo2sql_spark.pipeline import replay
 from bingo2sql_spark.sources.decode import decode_events
-from bingo2sql_spark.sources.layout import read_raw_jsonl, stream_raw_jsonl
+from bingo2sql_spark.sources.layout import LANDING_FORMATS, read_landing, read_raw_jsonl
 from bingo2sql_spark.sources.synth import to_raw
 
 
@@ -53,7 +56,7 @@ def test_stream_raw_jsonl_decode_in_stream(spark, small_events, tmp_path):
 
     from bingo2sql_spark.operators import resolve as R
 
-    stream = decode_events(stream_raw_jsonl(spark, jl, max_files_per_trigger=8))
+    stream = read_landing(spark, jl, "raw_jsonl", stream=True, max_files_per_trigger=8)
 
     def apply_batch(batch_df, epoch_id):
         table.commit(
@@ -74,6 +77,93 @@ def test_stream_raw_jsonl_decode_in_stream(spark, small_events, tmp_path):
 
 def _df_equal(a, b) -> bool:
     return a.exceptAll(b).isEmpty() and b.exceptAll(a).isEmpty()
+
+
+def _land_broken_jsonl(small_events, path: str) -> None:
+    """Valid JSON-wire events plus one malformed line."""
+    _land_jsonl(small_events.filter("seq < 10"), path)
+    with open(os.path.join(path, "part-99999-bad.json"), "w") as f:
+        f.write('{"seq": 999, "op": "insert", "db": "test", BROKEN\n')
+
+
+def test_cli_raw_jsonl_malformed_line_raises(spark, small_events, tmp_path):
+    """A malformed JSON line fails the CLI run with the line's text
+    instead of decoding as an all-NULL row that the op gates drop."""
+    from bingo2sql_spark.__main__ import main
+
+    jl = str(tmp_path / "raw_bad")
+    _land_broken_jsonl(small_events, jl)
+    with pytest.raises(Exception, match="malformed JSON line"):
+        main(["--input", jl, "--input-format", "raw_jsonl", "-o", str(tmp_path / "out")])
+
+
+def test_stream_ingest_raw_jsonl_malformed_line_raises(spark, small_events, tmp_path):
+    """The streaming ingest of a JSON-lines landing with a malformed
+    line fails the query instead of committing the other rows."""
+    from bingo2sql_spark.streaming.pipeline import start_ingest
+
+    jl = str(tmp_path / "raw_bad")
+    _land_broken_jsonl(small_events, jl)
+    table = IcebergLiteTable(str(tmp_path / "t"), n_buckets=4)
+    q = start_ingest(spark, jl, table, str(tmp_path / "ckpt"), source_format="raw_jsonl")
+    with pytest.raises(Exception, match="malformed JSON line"):
+        q.awaitTermination(120)
+    assert q.exception() is not None
+    assert table.latest_manifest() is None
+
+
+def _drain(stream, name: str, checkpoint: str):
+    q = (
+        stream.writeStream.format("memory").queryName(name)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+    )
+    assert q.awaitTermination(120)
+    return stream.sparkSession.table(name)
+
+
+def test_read_landing_batch_equals_stream(spark, small_events, tmp_path):
+    """Differential: for every landing format both directions read, the
+    batch read equals a drained stream=True query of the same landing;
+    the socket tail has no batch reader and raises."""
+    from bingo2sql_spark.sources import binlog_binary as B
+    from bingo2sql_spark.sources.synth import to_raw_typed
+
+    ev = small_events.filter("seq < 300").repartition(3)
+    land = {f: str(tmp_path / f) for f in LANDING_FORMATS}
+    ev.write.parquet(land["envelope_parquet"])
+    to_raw_typed(ev).write.parquet(land["raw_typed_parquet"])
+    to_raw(ev).write.parquet(land["raw_json_parquet"])
+    to_raw(ev).write.json(land["raw_jsonl"])
+    types, meta = [B.T_LONG, B.T_VARCHAR], [0, 120]
+    os.makedirs(land["binlog"])
+    for i in range(2):
+        w = B.BinlogWriter(checksum=True)
+        w.table_map("test", "acct", types, meta, ts=100 + i)
+        w.rows("test", "acct", "insert", types, meta,
+               [[10 * i + k, f"n{k}"] for k in range(5)], ts=100 + i)
+        w.xid(i, ts=100 + i)
+        with open(os.path.join(land["binlog"], f"mysql-bin.00000{i + 1}"), "wb") as f:
+            f.write(w.bytes())
+    names = {"test.acct": ["id", "name"]}
+
+    with pytest.raises(ValueError, match="raw_socket"):
+        read_landing(spark, "127.0.0.1:1", "raw_socket")
+    with pytest.raises(ValueError, match="nope"):
+        read_landing(spark, land["raw_jsonl"], "nope")
+    for fmt in LANDING_FORMATS:
+        if fmt == "raw_socket":
+            continue
+        batch = read_landing(spark, land[fmt], fmt, table_schemas=names)
+        stream = read_landing(
+            spark, land[fmt], fmt, stream=True, max_files_per_trigger=1,
+            table_schemas=names,
+        )
+        got = _drain(stream, f"landing_{fmt}", str(tmp_path / f"ckpt_{fmt}"))
+        assert batch.columns == got.columns, fmt
+        assert batch.count() == got.count() > 0, fmt
+        assert _df_equal(batch, got), fmt
 
 
 def test_typed_wire_decode_equals_json_decode(spark, small_events):
