@@ -109,80 +109,63 @@ def _name_translate(expr, mapping: dict[str, str]):
 
 
 def _translate_partial_meta(df: DataFrame, mapping: dict[str, str]) -> DataFrame:
-    """After a column rename, per-column attribution metadata written
-    under the OLD name must read as the new one: `_col_seqs` map keys
-    and `_changed_cols` entries are rewritten in place (pure expression,
-    no shuffle)."""
-    if not mapping:
+    """After a column rename, `_col_seqs` keys written under the OLD
+    name must read as the new one: rewritten in place (pure
+    expression, no shuffle)."""
+    if not mapping or "_col_seqs" not in df.columns:
         return df
-    if "_col_seqs" in df.columns:
-        df = df.withColumn(
-            "_col_seqs",
-            F.transform_keys("_col_seqs", lambda k, _v: _name_translate(k, mapping)),
-        )
-    if "_changed_cols" in df.columns:
-        df = df.withColumn(
-            "_changed_cols",
-            F.transform("_changed_cols", lambda x: _name_translate(x, mapping)),
-        )
-    return df
+    return df.withColumn(
+        "_col_seqs",
+        F.transform_keys("_col_seqs", lambda k, _v: _name_translate(k, mapping)),
+    )
 
 
 def _conform(df: DataFrame, all_cols: list[str], partial: bool) -> DataFrame:
     """One merge input — stored rows or batch rows — in the merge's
     layout: `all_cols` in table order (a column the input lacks
     NULL-fills: schema evolution), the internal columns, and on the
-    per-column path the `_changed_cols` / `_col_seqs` extras (NULL
-    `_changed_cols` = full image, NULL `_col_seqs` = every column
-    attributed to the row seq)."""
+    per-column path `_col_seqs` (NULL = every column written at the
+    row seq)."""
 
     def col(c: str, dtype: str = "string"):
         return F.col(c) if c in df.columns else F.lit(None).cast(dtype).alias(c)
 
-    extras = [col("_changed_cols", "array<string>"), col("_col_seqs", "map<string,bigint>")]
-    return df.select(*map(col, all_cols), *INTERNAL_COLS, *(extras if partial else []))
+    extras = [col("_col_seqs", "map<string,bigint>")] if partial else []
+    return df.select(*map(col, all_cols), *INTERNAL_COLS, *extras)
 
 
-def _per_key_winners(
-    df: DataFrame,
-    all_cols: list[str],
-    partial: bool,
-    emit_changed: bool = False,
-) -> DataFrame:
+def _per_key_winners(df: DataFrame, all_cols: list[str], partial: bool) -> DataFrame:
     """Collapse rows to per-(bucket, key) LWW winners — shared by the
     commit MERGE and the MOR read-time reconciliation.
 
     partial=False: row-level max_by over _ingest_seq.
 
     partial=True — the MINIMAL row-image path: per-COLUMN
-    last-present-writer. Stored/full rows act as full-image
-    pseudo-events (`_changed_cols` NULL); an update contributes only
-    its changed columns; insert images are complete, so pre-delete
-    values can never leak (see resolve.to_upsert_rows, minimal=True).
+    last-present-writer over `_col_seqs: map<col, seq>`, the one
+    per-column encoding of batch rows, stored bases and MOR deltas
+    alike. A column is present in a row unless the row is deleted or
+    its map marks the column never-written; an update carries only its
+    changed columns (resolve.to_upsert_rows marks the rest), and insert
+    images are complete, so pre-delete values can never leak.
 
-    emit_changed carries the merged presence metadata forward: NULL if
-    any non-delete contributor was a full image, else the sorted union
-    of the contributors' changed sets. Required when the output is
-    stored as a MOR delta — the delta row is itself re-merged at read
-    time and must still say which columns it actually carries.
+    PER-COLUMN SEQ ATTRIBUTION: partial output rows always carry the
+    map — the seq of the contributor that actually wrote each column —
+    and collapsed rows re-entering a later merge use the MAP, not the
+    row-level max, as each column's seq. That makes MINIMAL-image state
+    order-independent ACROSS commits too: an out-of-order replay with
+    an interleaving seq wins or loses each column against the column's
+    true writer. A delta row stores the same map, so the read-time
+    merge knows which columns it carries.
 
-    PER-COLUMN SEQ ATTRIBUTION: partial output rows always carry
-    `_col_seqs: map<col, winning seq>` — the seq of the contributor
-    that actually wrote each column — and collapsed rows re-entering a
-    later merge use the MAP, not the row-level max, as each column's
-    seq. That makes MINIMAL-image state order-independent ACROSS
-    commits too: an out-of-order replay with an interleaving seq wins
-    or loses each column against the column's true writer. Raw event
-    rows (no map) attribute every present column to the event's seq.
-
-    SPARSE ENCODING: the emitted map only materializes the EXCEPTIONS
-    — a column whose winning seq differs from the row-level winner seq
-    keeps its entry, and a never-written (NULL-since-birth) column
-    keeps a NULL-valued entry (it must lose to ANY real writer). A
-    column ABSENT from the map was written by the row winner at the
-    row's `_ingest_seq`, so after single-writer or full-image commits
-    the map is empty. Dense maps from older snapshots decode to the
-    same answer, so no stored table needs rewriting.
+    SPARSE ENCODING: the map only materializes the EXCEPTIONS — a
+    column whose winning seq differs from the row-level winner seq
+    keeps its entry, and a never-written (NULL-since-birth or not
+    carried) column keeps a NULL-valued entry (it must lose to ANY real
+    writer). A column ABSENT from the map, or any column of a row whose
+    map is NULL (a full image, a file written before the table went
+    per-column), was written by the row at its `_ingest_seq`, so after
+    single-writer or full-image commits the map is empty. Dense maps
+    decode to the same answer.
 
     A `bucket_slot` column (_lww_merge's placement, a function of
     bucket) joins the grouping keys, so the aggregate reuses the
@@ -200,47 +183,22 @@ def _per_key_winners(
             .select(*all_cols, *INTERNAL_COLS)
         )
     seq = F.col("_ingest_seq")
-    has_map = "_col_seqs" in df.columns
+    seqs = F.col("_col_seqs")
     aggs = [F.max_by(F.struct(*INTERNAL_NO_BUCKET), seq).alias("_w")]
     for c in data_cols:
-        changed_ok = F.col("_changed_cols").isNull() | F.array_contains(
-            F.col("_changed_cols"), c
-        )
-        if has_map:
-            carries_map = F.col("_col_seqs").isNotNull()
-            entry = F.col("_col_seqs").getItem(c)
-            # sparse decode: a NULL-VALUED entry marks never-written; an
-            # absent key means the row winner wrote it (seq = row seq).
-            # Dense maps (row-seq entries materialized) decode identically.
-            never_written = F.map_contains_key(F.col("_col_seqs"), F.lit(c)) & entry.isNull()
-            present = ~F.col("_deleted") & F.when(
-                carries_map, ~never_written
-            ).otherwise(changed_ok)
-            seq_c = F.coalesce(entry, seq)
-        else:
-            present = ~F.col("_deleted") & changed_ok
-            seq_c = seq
+        entry = seqs.getItem(c)
+        # sparse decode: a NULL-VALUED entry marks never-written; an
+        # absent key (or a NULL map) means the row wrote it at its seq
+        listed = F.coalesce(F.map_contains_key(seqs, F.lit(c)), F.lit(False))
+        present = ~F.col("_deleted") & ~(listed & entry.isNull())
         aggs.append(
             F.max(
-                F.when(present, F.struct(seq_c.alias("s"), F.col(c).alias("v")))
+                F.when(
+                    present,
+                    F.struct(F.coalesce(entry, seq).alias("s"), F.col(c).alias("v")),
+                )
             ).alias(f"_pw_{c}")
         )
-    extra = ["_col_seqs"]
-    if emit_changed:
-        any_full = F.max(
-            F.when(~F.col("_deleted") & F.col("_changed_cols").isNull(), 1)
-        )
-        union_changed = F.array_sort(
-            F.array_distinct(
-                F.flatten(F.collect_list(F.when(~F.col("_deleted"), F.col("_changed_cols"))))
-            )
-        )
-        aggs.append(
-            F.when(any_full == 1, F.lit(None).cast("array<string>"))
-            .otherwise(union_changed)
-            .alias("_changed_cols")
-        )
-        extra = ["_changed_cols", "_col_seqs"]
     if data_cols:
         # sparse emission: keep only exception entries — NULL seq
         # (never-written marker) or a winner older than the row winner;
@@ -263,10 +221,9 @@ def _per_key_winners(
             *[F.col(f"_pw_{c}")["v"].alias(c) for c in data_cols],
             "_w.*",
             "bucket",
-            *(["_changed_cols"] if emit_changed else []),
             col_seqs,
         )
-        .select(*all_cols, *INTERNAL_COLS, *extra)
+        .select(*all_cols, *INTERNAL_COLS, "_col_seqs")
     )
 
 
@@ -300,11 +257,7 @@ def _slot_keys(n: int) -> tuple[int, ...]:
 
 
 def _lww_merge(
-    inputs: list[DataFrame],
-    all_cols: list[str],
-    partial: bool,
-    affected: list[int],
-    emit_changed: bool = False,
+    inputs: list[DataFrame], all_cols: list[str], partial: bool, affected: list[int]
 ) -> DataFrame:
     """The one write-side MERGE plan of commit and compact(): unresolved
     inputs (stored scan and/or batch rows, all in the `affected`
@@ -339,7 +292,7 @@ def _lww_merge(
         slot_of[b] = keys[i % len(keys)]
     slot = F.element_at(F.array(*map(F.lit, slot_of)), F.col("bucket") + 1)
     placed = both.withColumn("bucket_slot", slot).repartition("bucket_slot")
-    return _per_key_winners(placed, all_cols, partial, emit_changed)
+    return _per_key_winners(placed, all_cols, partial)
 
 
 def _referenced(buckets: dict[str, int], deltas: dict[str, list[int]]) -> set[int]:
@@ -499,11 +452,7 @@ class IcebergLiteTable:
     # -- read path -------------------------------------------------------------
 
     @staticmethod
-    def _state_schema(
-        columns: list[str],
-        with_changed: bool = False,
-        with_col_seqs: bool = False,
-    ) -> T.StructType:
+    def _state_schema(columns: list[str], with_col_seqs: bool = False) -> T.StructType:
         fields = [T.StructField(c, T.StringType(), True) for c in columns]
         fields += [
             T.StructField("_ingest_seq", T.LongType(), True),
@@ -512,13 +461,6 @@ class IcebergLiteTable:
             T.StructField("_log_pos", T.LongType(), True),
             T.StructField("bucket", T.IntegerType(), True),
         ]
-        if with_changed:
-            # MOR deltas from MINIMAL batches carry presence metadata;
-            # files without the column (bases, full-image deltas)
-            # NULL-fill = full image
-            fields.append(
-                T.StructField("_changed_cols", T.ArrayType(T.StringType()), True)
-            )
         if with_col_seqs:
             # per-column seq attribution (see _per_key_winners): files
             # written before the table went partial NULL-fill = every
@@ -551,10 +493,12 @@ class IcebergLiteTable:
         """Stored rows of manifest `m` incl. internal cols, UNRESOLVED:
         every base and delta file of the chosen buckets (`buckets`
         prunes at the manifest level) in one parquet scan under current
-        column names, plus `_changed_cols` / `_col_seqs` when the table
-        carries MINIMAL-image metadata. Returns (rows, whether a delta
-        is scanned). _read_raw resolves them; commit and compact() feed
-        them straight into _lww_merge."""
+        column names, plus `_col_seqs` when the manifest's sticky
+        `partial_state` says a per-column write ever reached the table
+        (NULL for rows of files without it: every column at the row
+        seq). Returns (rows, whether a delta is scanned). _read_raw
+        resolves them; commit and compact() feed them straight into
+        _lww_merge."""
         cols = (m or {}).get("columns", S.payload_columns())
         base = (m or {}).get("buckets", {})
         deltas = (m or {}).get("deltas", {})
@@ -593,9 +537,7 @@ class IcebergLiteTable:
         # declared schema the reader NULL-fills missing columns per file
         # (no mergeSchema footer sweep needed — the manifest already knows
         # the union).
-        partial_deltas = has_deltas and bool(m.get("partial_deltas"))
-        partial_any = partial_deltas or bool(m.get("partial_state"))
-        with_changed = has_deltas and partial_any
+        partial = bool(m.get("partial_state"))
         # column-rename support (Iceberg name-mapping analog, no field
         # IDs needed because old and new names never coexist live): the
         # manifest's `aliases` maps each current column to the names it
@@ -612,9 +554,7 @@ class IcebergLiteTable:
         }
         alias_olds = [o for olds in aliases.values() for o in olds]
         df = spark.read.schema(
-            self._state_schema(
-                cols + alias_olds, with_changed=with_changed, with_col_seqs=partial_any
-            )
+            self._state_schema(cols + alias_olds, with_col_seqs=partial)
         ).parquet(*paths)
         if alias_olds:
             for c, olds in aliases.items():
@@ -623,11 +563,7 @@ class IcebergLiteTable:
             df = _translate_partial_meta(
                 df, {o: c for c, olds in aliases.items() for o in olds}
             )
-        # rows from files lacking `_changed_cols` or `_col_seqs` NULL-fill
-        # = full image at the row seq
-        extras = (["_changed_cols"] if with_changed else []) + (
-            ["_col_seqs"] if partial_any else []
-        )
+        extras = ["_col_seqs"] if partial else []
         return df.select(*cols, *INTERNAL_COLS, *extras), has_deltas
 
     def _read_raw(
@@ -815,7 +751,7 @@ class IcebergLiteTable:
             return {"batch_id": batch_id, "skipped": True, "reason": "already committed"}
         self._check_n_buckets(m)
         cols = self._evolve_columns(m, batch, drop_columns, rename_columns)
-        scope = self._scope_batch(m, batch, batch_id, cols.rewrite_all, rebase_past_head)
+        scope = self._scope_batch(m, batch, batch_id, cols, rebase_past_head)
         snap_name, written = self._merge_and_write(m, cols, scope)
         return self._next_manifest(m, batch_id, cols, scope, snap_name, written, t0)
 
@@ -929,7 +865,7 @@ class IcebergLiteTable:
         m: dict[str, Any],
         batch: DataFrame,
         batch_id: str,
-        rewrite_all: bool,
+        cols: _Columns,
         rebase_past_head: bool,
     ) -> _Scope:
         """Phase 2 — bucket the batch rows and decide which buckets this
@@ -938,7 +874,13 @@ class IcebergLiteTable:
         max_read_amplification as the parent manifest records it, its
         merge writes new bases from every base and delta with the batch,
         in place of a delta that a separate compaction would read
-        straight back. Depth is named the trigger when both hold."""
+        straight back. Depth is named the trigger when both hold.
+
+        The merge runs per column when the batch carries `_col_seqs` (a
+        MINIMAL batch, or a re-committed resolved state) or the
+        manifest's `partial_state` says stored rows may; a stored column
+        the batch does not project is then marked never-written on its
+        MINIMAL updates, which do not carry it."""
         mor = self.write_mode == "mor"
         depth = max((len(v) for v in m.get("deltas", {}).values()), default=0)
         amp = _read_amplification(m.get("bucket_rows", {}))
@@ -951,19 +893,13 @@ class IcebergLiteTable:
         b = batch.withColumn("bucket", bucket_col(self.n_buckets)).withColumnRenamed(
             "_seq", "_ingest_seq"
         )
-        # the merge runs per-column whenever ANY side carries partial
-        # metadata: a MINIMAL batch (_changed_cols), a re-committed
-        # resolved state (rebucket: _col_seqs), or stored per-column
-        # attributions (partial_state, or MINIMAL deltas a CoW merge or
-        # fold reads) — collapsing row-level there would discard them.
-        # A MOR delta of a MINIMAL batch stores per-key winners WITH
-        # their merged `_changed_cols` (the partial_deltas flag).
-        partial = (
-            "_changed_cols" in batch.columns
-            or "_col_seqs" in batch.columns
-            or bool(m.get("partial_state"))
-            or ((not mor or fold) and bool(m.get("partial_deltas")))
-        )
+        partial = "_col_seqs" in batch.columns or bool(m.get("partial_state"))
+        unseen = [c for c in cols.all_cols if c not in b.columns]
+        if "_col_seqs" in b.columns and unseen:
+            marks = F.create_map(
+                *[x for c in unseen for x in (F.lit(c), F.lit(None).cast("bigint"))]
+            )
+            b = b.withColumn("_col_seqs", F.map_concat("_col_seqs", marks))
         counts: dict[str, int] | None = None
         observation = None
         min_seq: int | None = None
@@ -991,7 +927,7 @@ class IcebergLiteTable:
             }
             if stats:
                 min_seq = min(int(r["min_seq"]) for r in stats)
-            if rewrite_all:
+            if cols.rewrite_all:
                 # rename-onto-dropped-name (see _evolve_columns): every
                 # live bucket must land in this snapshot, not just the
                 # batch's — the pre-pass still supplied the counts
@@ -1059,10 +995,7 @@ class IcebergLiteTable:
                         current = current.withColumnRenamed(old, new)
                 current = _translate_partial_meta(current, cols.renames)
             inputs.insert(0, current)
-        merged = _lww_merge(
-            inputs, cols.all_cols, scope.partial, scope.affected,
-            emit_changed=delta and scope.partial,
-        )
+        merged = _lww_merge(inputs, cols.all_cols, scope.partial, scope.affected)
         if drop_tombstones:
             merged = merged.filter(~F.col("_deleted"))
         return self._write_snapshot(
@@ -1194,15 +1127,10 @@ class IcebergLiteTable:
                 # not grow per commit (older manifests keep their own)
                 "snap_dirs": {v: d for v, d in dirs.items() if int(v) in live},
                 "metrics": metrics,
-                # sticky until a fold merges the partial deltas: gates the
-                # per-column read-time merge in _read_raw
-                "partial_deltas": not scope.fold
-                and (bool(m.get("partial_deltas")) or (delta and scope.partial)),
-                # sticky for the table's life: partial bases carry the
-                # `_col_seqs` attribution map, and every later merge
-                # must run per-column to honor it
-                "partial_state": bool(m.get("partial_state"))
-                or (not delta and scope.partial),
+                # sticky for the table's life: per-column writes (bases
+                # and deltas) carry the `_col_seqs` attribution map, and
+                # every later scan reads it and every merge honors it
+                "partial_state": bool(m.get("partial_state")) or scope.partial,
             }
         )
         return metrics
@@ -1359,7 +1287,7 @@ class IcebergLiteTable:
         scope = _Scope(
             self._empty_state(spark, m["columns"]),
             list(range(self.n_buckets)),
-            bool(m.get("partial_state") or m.get("partial_deltas")),
+            bool(m.get("partial_state")),
             {"rows": 0, "deletes": 0},
             None,
             "manual",

@@ -31,6 +31,16 @@ from bingo2sql_spark.functions import text as TX
 
 logger = logging.getLogger("bingo2sql_spark.dedup")
 
+#: connected_components broadcasts its label table in every round's
+#: joins up to this many vertices; past it the rounds shuffle-join
+_CC_BROADCAST_MAX_VERTICES = 5_000_000
+
+#: connected_components' first pointer-jumping round: a jump costs an
+#: extra join and shuffle per round, and clique-like near-dup graphs
+#: converge in 2-3 rounds of plain min-label propagation, before any
+#: jump would fire; high-diameter graphs still get O(log diameter)
+_CC_JUMP_AFTER = 2
+
 
 def _log_dropped(
     counts: DataFrame, dropped: Column, what: str, log_dropped: bool
@@ -307,7 +317,6 @@ def connected_components(
     id_col: str = "doc_id",
     max_iter: int = 25,
     checkpoint_dir: str | None = None,
-    jump_after: int = 2,
 ) -> DataFrame:
     """Connected components over a near-dup pair graph: every vertex
     converges to the SMALLEST id in its component (the canonical
@@ -316,20 +325,16 @@ def connected_components(
     transitive, so pair lists alone over-delete or under-delete.
 
     Algorithm: min-label propagation PLUS pointer jumping — from round
-    `jump_after` on, each round takes (a) the min over neighbors'
+    _CC_JUMP_AFTER on, each round takes (a) the min over neighbors'
     labels, then (b) shortcuts through the current label (component :=
     min(component, label(component))), which halves label-chain length
     every round. Rounds needed = O(log diameter) instead of
     O(diameter): a 10^4-node PATH graph converges in ~16 rounds
     (test-pinned), and clique-like near-dup components still converge
-    in 2-3. The shortcut is deferred (`jump_after`, default 2) because
-    it costs an extra join+shuffle per round and real near-dup graphs
-    are clique-like — they converge before it would ever fire, so the
-    common case pays exactly the plain-propagation price while
-    high-diameter graphs still get the logarithmic bound. Convergence
-    is a counted aggregate, never a label collect. Raises RuntimeError
-    if max_iter rounds do not converge — a silently-unstable labeling
-    would mis-assign keepers.
+    in 2-3, so the common case pays exactly the plain-propagation
+    price. Convergence is a counted aggregate, never a label collect.
+    Raises RuntimeError if max_iter rounds do not converge — a
+    silently-unstable labeling would mis-assign keepers.
 
     Fault tolerance: by default each round truncates lineage with
     localCheckpoint, whose blocks live on executors — right for
@@ -398,17 +403,14 @@ def connected_components(
         # edge list or the label table per round: the per-round wide work
         # collapses to the single groupBy(id). Past the threshold the plan
         # falls back to plain shuffle joins, unchanged from before.
-        n_vertices = labels.count()
-        small = n_vertices <= int(
-            os.environ.get("BINGO_CC_BROADCAST_MAX_VERTICES", "5000000")
-        )
+        small = labels.count() <= _CC_BROADCAST_MAX_VERTICES
 
         def bcast(df: DataFrame) -> DataFrame:
             return F.broadcast(df) if small else df
 
         for i in range(1, max_iter):
             prev = labels
-            if i - 1 >= jump_after:
+            if i - 1 >= _CC_JUMP_AFTER:
                 # pointer jumping: follow the label one hop (component is
                 # itself a vertex id, so its own label exists) and take the
                 # min — label chains collapse by doubling, giving

@@ -85,18 +85,19 @@ def to_upsert_rows(
     cast folds away. Entirely a projection: no extra pass.
 
     minimal=True is the MINIMAL row-image shape (binlog_row_image=
-    MINIMAL, core/parser_test.go:727-755): rows also carry
-    `_changed_cols`, the update's presence list (NULL = full image), so
-    IcebergLiteTable.commit merges per column and unchanged columns do
-    not clobber stored values. INSERT images are complete, so a
-    re-insert after a DELETE re-supplies every column and per-column
-    last-present-writer cannot leak a pre-delete value. Under a
-    timeline the list follows the same renames and masks: an entry
-    equal to a column's wire name AT THE EVENT'S SEQ becomes the final
-    name (an entry outside its validity window stays untranslated and
-    inert), and an ADDed column's name is dropped from pre-ALTER
-    events, so a wire update racing the DDL can neither write the value
-    nor claim presence."""
+    MINIMAL, core/parser_test.go:727-755): rows also carry `_col_seqs`,
+    the merge's per-column attribution map, with a NULL-valued
+    (never-written) entry for each column an update does not carry and
+    a NULL map for full images, so IcebergLiteTable.commit merges per
+    column and unchanged columns do not clobber stored values. INSERT
+    images are complete, so a re-insert after a DELETE re-supplies
+    every column and per-column last-present-writer cannot leak a
+    pre-delete value. Under a timeline the carried set follows the same
+    renames and masks: a changed-list entry equal to a column's wire
+    name AT THE EVENT'S SEQ carries the final name (an entry outside
+    its validity window stays untranslated and inert), and an ADDed
+    column is not carried by pre-ALTER events, so a wire update racing
+    the DDL can neither write the value nor claim presence."""
     sources = sources or {}
     after_fields = set(events.schema["after"].dataType.fieldNames())
 
@@ -122,12 +123,17 @@ def to_upsert_rows(
     proj.append(F.col("log_file").alias("_log_file"))
     proj.append(F.col("log_pos").alias("_log_pos"))
     if minimal:
-        proj.append(_presence(sources).alias("_changed_cols"))
+        # the sparse never-written markers of apply._per_key_winners
+        data_cols = F.array(*[F.lit(c) for c in columns if c not in S.MERGE_KEYS])
+        uncarried = F.array_except(data_cols.cast("array<string>"), _presence(sources))
+        nulls = F.transform(uncarried, lambda _c: F.lit(None).cast("bigint"))
+        proj.append(F.map_from_arrays(uncarried, nulls).alias("_col_seqs"))
     return events.select(*proj)
 
 
 def _presence(sources: dict[str, list[tuple[int | None, str]]]):
-    """The MINIMAL presence list under a DDL timeline (to_upsert_rows)."""
+    """The columns a MINIMAL update carries under a DDL timeline, NULL
+    for full images (to_upsert_rows)."""
     mask = F.when(F.col("op") == S.OP_UPDATE, F.col("changed_cols")).cast(
         "array<string>"
     )

@@ -312,3 +312,41 @@ def test_repartitions_name_no_partition_count():
         "them; pass columns only, a column name held in a variable through "
         "F.col when more columns follow):\n" + "\n".join(fixed)
     )
+
+
+#: the one engine module that reads deployment settings from the environment
+SETTINGS_MODULE = PACKAGE / "session.py"
+
+
+def environment_reads() -> list[str]:
+    """`os.environ` / `os.getenv` uses (and `from os import` of either)
+    in the engine package outside the settings module."""
+    names = {"environ", "getenv"}
+    found = []
+    for p in sorted(PACKAGE.rglob("*.py")):
+        if p == SETTINGS_MODULE:
+            continue
+        for node in ast.walk(ast.parse(p.read_text())):
+            hit = (
+                isinstance(node, ast.Attribute)
+                and node.attr in names
+                and isinstance(node.value, ast.Name)
+                and node.value.id == "os"
+            ) or (
+                isinstance(node, ast.ImportFrom)
+                and node.module == "os"
+                and any(a.name in names for a in node.names)
+            )
+            if hit:
+                found.append(f"{p.relative_to(REPO)}:{node.lineno} {ast.unparse(node)}")
+    return found
+
+
+def test_environment_is_read_only_in_session():
+    """Deployment settings come from the environment in one place,
+    `session.py`. An environment read elsewhere is a setting no caller
+    passes and no test sets: make it a constant or an argument."""
+    reads = environment_reads()
+    assert not reads, (
+        "environment reads outside bingo2sql_spark/session.py:\n" + "\n".join(reads)
+    )

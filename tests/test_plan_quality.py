@@ -623,8 +623,10 @@ def test_commit_jobs_per_path(spark, tmp_path):
     max_delta_depth that folds the deltas in its own merge, a MOR commit
     whose parent manifest is above max_read_amplification (the same
     fold), compact(), a flashback rebase onto an empty table (its
-    min-seq aggregate) and a DROP + rename commit. The counts are
-    pinned: a phase that starts a job of its own shows up here."""
+    min-seq aggregate), a DROP + rename commit, and on MINIMAL row
+    images a MOR delta, a fold at max_delta_depth and a CoW commit over
+    stored rows (the per-column merge). The counts are pinned: a phase
+    that starts a job of its own shows up here."""
     from bingo2sql_spark.operators import flashback as FB
     from bingo2sql_spark.operators import resolve as R
     from bingo2sql_spark.operators.apply import IcebergLiteTable
@@ -664,8 +666,22 @@ def test_commit_jobs_per_path(spark, tmp_path):
     a = commit("mor_read_amp_fold", amp, up(ev.filter("seq >= 300")), "a3")
     fb = IcebergLiteTable(str(tmp_path / "fb"), n_buckets=8)
     commit("flashback_empty", fb, up(FB.invert(ev)), "f1", rebase_past_head=True)
+    mev = generate_events(spark, n_keys=120, versions_per_key=3, seed=11, minimal_image=True)
+
+    def up_min(df):
+        return R.to_upsert_rows(R.with_key(df), minimal=True)
+
+    mm = IcebergLiteTable(
+        str(tmp_path / "mm"), n_buckets=8, write_mode="mor", max_delta_depth=1
+    )
+    commit("mor_minimal_delta", mm, up_min(mev.filter("seq < 200")), "n1")
+    mf = commit("mor_minimal_fold", mm, up_min(mev.filter("seq >= 200")), "n2")
+    cm = IcebergLiteTable(str(tmp_path / "cm"), n_buckets=8)
+    cm.commit(up_min(mev.filter("seq < 200")), "k1")
+    commit("cow_minimal_stored", cm, up_min(mev.filter("seq >= 200")), "k2")
 
     assert m["compaction_trigger"] == "delta_depth", m
+    assert mf["compaction_trigger"] == "delta_depth", mf
     assert m["compacted_to"] == m["snapshot"] and not c["skipped"], (m, c)
     assert over["read_amplification"] > 0.1 and "compacted_to" not in over, over
     assert a["compaction_trigger"] == "read_amplification", a
@@ -681,6 +697,9 @@ def test_commit_jobs_per_path(spark, tmp_path):
         "mor_compact": 2,
         "mor_read_amp_fold": 2,
         "flashback_empty": 4,
+        "mor_minimal_delta": 2,
+        "mor_minimal_fold": 2,
+        "cow_minimal_stored": 4,
     }, jobs
 
 

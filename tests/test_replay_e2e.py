@@ -425,7 +425,7 @@ def test_cow_commit_drops_rewritten_buckets_deltas(spark, tmp_path):
 
 def test_mor_minimal_row_images(spark, tmp_path):
     """MOR + MINIMAL row images (VERDICT r3 #5): deltas store per-key
-    winners WITH their merged `_changed_cols`, and reads do the
+    winners WITH their `_col_seqs` attribution maps, and reads do the
     per-COLUMN last-present-writer merge. Checked against the
     sequential oracle AND the CoW MINIMAL path across batches, through
     compaction, and with mixed FULL/MINIMAL deltas on one table."""
@@ -438,7 +438,7 @@ def test_mor_minimal_row_images(spark, tmp_path):
     cut = int(pdf["seq"].max()) // 2
     mor = IcebergLiteTable(str(tmp_path / "mm"), n_buckets=8, write_mode="mor")
     replay(ev.filter(f"seq <= {cut}"), mor, batch_id="b1", row_image="MINIMAL")
-    assert mor.latest_manifest()["partial_deltas"] is True
+    assert mor.latest_manifest()["partial_state"] is True
     replay(ev.filter(f"seq > {cut}"), mor, batch_id="b2", row_image="MINIMAL")
     assert mor.state_checksum(spark) == expected
     # column-wise survival across delta layers (lang written before the
@@ -450,21 +450,21 @@ def test_mor_minimal_row_images(spark, tmp_path):
     mor_rows = {(r["repo"], r["path"]): r["lang"] for r in mor.read(spark).collect()}
     cow_rows = {(r["repo"], r["path"]): r["lang"] for r in cow.read(spark).collect()}
     assert mor_rows == cow_rows
-    # compaction folds partial deltas into complete base rows and clears
-    # the per-column read mode
+    # compaction folds partial deltas into new bases that keep their
+    # `_col_seqs` attributions, so the per-column read mode stays on
     mor.compact(spark, drop_tombstones=False)
     man = mor.latest_manifest()
-    assert man["deltas"] == {} and man["partial_deltas"] is False
+    assert man["deltas"] == {} and man["partial_state"] is True
     assert mor.state_checksum(spark) == expected
-    # a FULL-image delta layered on top of the compacted base still
-    # merges correctly when a later MINIMAL delta re-enables the
-    # per-column path (mixed delta kinds in one manifest)
+    # a FULL-image delta and a later MINIMAL delta layered on top of
+    # the compacted base still merge correctly (mixed delta kinds in
+    # one manifest)
     ev2 = generate_events(spark, n_keys=150, versions_per_key=8, n_repos=15,
                           seed=9)  # same stream, FULL images
     tail = ev2.filter(f"seq > {cut}")
     replay(tail, mor, batch_id="b3")  # FULL re-upsert, idempotent by LWW
     replay(ev.filter(f"seq > {cut}"), mor, batch_id="b4", row_image="MINIMAL")
-    assert mor.latest_manifest()["partial_deltas"] is True
+    assert mor.latest_manifest()["partial_state"] is True
     assert mor.state_checksum(spark) == expected
 
 
@@ -631,6 +631,95 @@ def test_read_keys_literal_quoting_and_typing(spark, small_events, tmp_path, wri
     got = sorted(tuple(r) for r in t.read_keys(spark, probe).collect())
     want = sorted(tuple(live[k]) for k in keys + [(repo_d, path_d)])
     assert got == want
+
+
+def test_read_keys_prunes_minimal_mor_deltas(spark, tmp_path):
+    """Bucket-pruned reads of a merge-on-read table holding MINIMAL-image
+    deltas over a FULL base: read_keys and read(buckets=...) equal the
+    full read filtered to the same keys or bucket, and the CoW table fed
+    the same batches. The deltas cover only buckets 0-3, so buckets 4-7
+    hold a base alone and are scanned under `partial_state` with no
+    delta to merge."""
+    from bingo2sql_spark.operators import resolve as R
+    from bingo2sql_spark.operators.apply import bucket_col
+    from bingo2sql_spark.sources.synth import generate_events
+
+    full_ev = generate_events(spark, n_keys=150, versions_per_key=8, n_repos=15, seed=9)
+    min_ev = generate_events(spark, n_keys=150, versions_per_key=8, n_repos=15,
+                             seed=9, minimal_image=True)
+    cut = 500
+    tail = (
+        R.with_key(min_ev.filter(f"seq > {cut}"))
+        .filter(bucket_col(8) < 4)
+        .drop("repo", "path")
+    )
+    mor = IcebergLiteTable(str(tmp_path / "mor"), n_buckets=8, write_mode="mor")
+    cow = IcebergLiteTable(str(tmp_path / "cow"), n_buckets=8)
+    for t in (mor, cow):
+        replay(full_ev.filter(f"seq <= {cut}"), t, batch_id="base")
+    mor.compact(spark, drop_tombstones=False)
+    for t in (mor, cow):
+        replay(tail, t, batch_id="tail", row_image="MINIMAL")
+    man = mor.latest_manifest()
+    assert man["partial_state"] is True
+    assert sorted(man["deltas"], key=int) == ["0", "1", "2", "3"], man["deltas"]
+    assert sorted(man["buckets"], key=int) == [str(b) for b in range(8)]
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    full = mor.read(spark)
+    assert rows(full) == rows(cow.read(spark))
+    for b in range(8):
+        want = rows(full.filter(f"bucket = {b}"))
+        assert want, b
+        assert rows(mor.read(spark, buckets=[b])) == want, b
+        assert rows(cow.read(spark, buckets=[b])) == want, b
+    live = sorted((r["repo"], r["path"], r["bucket"]) for r in full.collect())
+    keys = [next((k, p) for k, p, bk in live if bk == b) for b in (0, 3, 4, 7)]
+    want = rows(full.join(spark.createDataFrame(keys, ["repo", "path"]), ["repo", "path"]))
+    got = mor.read_keys(spark, keys)
+    assert rows(got.select(*full.columns)) == want and len(want) == 4
+    assert rows(cow.read_keys(spark, keys).select(*full.columns)) == want
+
+
+def test_minimal_update_keeps_stored_column_the_batch_lacks(spark, tmp_path):
+    """A MINIMAL batch projected without a column the table stores (an
+    earlier batch added it) does not carry that column on its updates:
+    the stored value survives, on CoW, MOR and a fold, while a full
+    image (an insert) NULL-fills it."""
+    from datetime import datetime
+
+    from pyspark.sql import functions as F
+
+    from bingo2sql_spark import schema as S
+    from bingo2sql_spark.operators import resolve as R
+
+    def env(rows):
+        data = [
+            (seq, "bin.1", seq, None, None, datetime(2024, 1, 1), 1, "test",
+             "repo_files", op, None,
+             {"repo": "r", "path": path, "commit": None, "lang": lang,
+              "content": None, "branch": None},
+             changed, 2)
+            for seq, op, path, lang, changed in rows
+        ]
+        return R.with_key(spark.createDataFrame(data, S.ENVELOPE))
+
+    first = R.to_upsert_rows(
+        env([(1, "insert", "a", "py", None), (2, "insert", "b", "py", None)])
+    ).withColumn("extra", F.lit("kept"))
+    second = R.to_upsert_rows(
+        env([(3, "update", "a", "go", ["lang"]), (4, "insert", "b", "go", None)]),
+        minimal=True,
+    )
+    for mode, depth in (("cow", None), ("mor", None), ("mor", 1)):
+        t = IcebergLiteTable(str(tmp_path / f"{mode}_{depth}"), n_buckets=4,
+                             write_mode=mode, max_delta_depth=depth)
+        t.commit(first, "b1")
+        t.commit(second, "b2")
+        got = {r["path"]: (r["lang"], r["extra"]) for r in t.read(spark).collect()}
+        assert got == {"a": ("go", "kept"), "b": ("go", None)}, (mode, depth, got)
 
 
 def test_flashback_replay_no_extra_scan(spark, small_events, tmp_path):
@@ -962,7 +1051,7 @@ def test_write_mode_row_image_matrix_converges(spark, tmp_path, seed, cut_mod):
             # the sparse per-column attribution maps
             folded = t.manifest_at(2)
             assert folded["metrics"]["compacted_to"] == 2, folded["metrics"]
-            assert t.manifest_at(1)["partial_deltas"] and not folded["partial_deltas"]
+            assert t.manifest_at(1)["partial_state"] and t.manifest_at(1)["deltas"]
             assert folded["partial_state"] and folded["deltas"] == {}
             base = spark.read.parquet(
                 os.path.join(t.path, "data", folded["snap_dirs"]["2"])
@@ -976,7 +1065,8 @@ def test_write_mode_row_image_matrix_converges(spark, tmp_path, seed, cut_mod):
 def test_mor_partial_delta_union_metadata_hand_values(spark, tmp_path):
     """Hand-computed per-column winners through MOR partial deltas: two
     partial updates of ONE key inside one batch merge into a single
-    delta row whose _changed_cols is the UNION of what they carried;
+    delta row whose `_col_seqs` marks only the columns neither carried
+    as never-written;
     an out-of-order OLDER full insert then fills only the columns no
     partial writer ever supplied. Exact values, not checksums."""
     from datetime import datetime
@@ -1007,12 +1097,16 @@ def test_mor_partial_delta_union_metadata_hand_values(spark, tmp_path):
     )
     t = IcebergLiteTable(str(tmp_path / "u"), n_buckets=4, write_mode="mor")
     replay(a, t, batch_id="A", row_image="MINIMAL")
-    # the single delta row carries the UNION of the partial writers
+    # the single delta row carries the UNION of the partial writers: the
+    # row winner (seq 11) wrote content, seq 10 wrote lang, nobody wrote
+    # commit or branch
     raw = spark.read.parquet(
         *[str(p) for p in (tmp_path / "u" / "data").glob("snap-*/pbucket=*")]
     )
     assert raw.count() == 1
-    assert sorted(raw.collect()[0]["_changed_cols"]) == ["content", "lang"]
+    delta_row = raw.collect()[0]
+    assert delta_row["_ingest_seq"] == 11
+    assert delta_row["_col_seqs"] == {"commit": None, "branch": None, "lang": 10}
     # older full insert commits AFTER: fills only never-written columns
     replay(b, t, batch_id="B", row_image="MINIMAL")
     row = t.read(spark).collect()
@@ -1472,7 +1566,7 @@ def test_fold_and_compact_write_equal_manifests(spark, small_events, tmp_path):
     """A commit that folds and compact() write the compaction-shaped
     manifest through one code path: over the same stored state, an
     empty-batch fold and compact(drop_tombstones=False) produce equal
-    bucket maps, delta lists, row counts, aliases, partial flags,
+    bucket maps, delta lists, row counts, aliases, the partial_state flag,
     lineage and referenced data dirs (up to each attempt's unique dir
     suffix), and equal state."""
     from bingo2sql_spark.operators import resolve as R
@@ -1490,8 +1584,8 @@ def test_fold_and_compact_write_equal_manifests(spark, small_events, tmp_path):
     mc = comp.compact(spark, drop_tombstones=False)
     assert mf["compaction_trigger"] == "delta_depth" and mf["snapshot"] == mc["snapshot"]
     a, b = fold.latest_manifest(), comp.latest_manifest()
-    for key in ("buckets", "deltas", "bucket_rows", "aliases", "partial_deltas",
-                "partial_state", "lineage", "columns"):
+    for key in ("buckets", "deltas", "bucket_rows", "aliases", "partial_state",
+                "lineage", "columns"):
         assert a[key] == b[key], (key, a[key], b[key])
 
     def dirs(m):

@@ -339,6 +339,34 @@ def test_connected_components_high_diameter_path(spark, tmp_path):
         DD.connected_components(pairs, max_iter=3)
 
 
+def test_connected_components_shuffle_join_rounds(spark, monkeypatch):
+    """Past _CC_BROADCAST_MAX_VERTICES the rounds shuffle-join the
+    label table instead of broadcasting it: the 63-edge path graph gets
+    the same labels on both plans."""
+    from pyspark.sql import functions as F
+
+    pairs = spark.range(63).select(
+        F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b")
+    )
+
+    hints = []
+    real_broadcast = F.broadcast
+    monkeypatch.setattr(F, "broadcast", lambda df: hints.append(1) or real_broadcast(df))
+
+    def labels():
+        hints.clear()
+        out = DD.connected_components(pairs, max_iter=10)
+        got = {r["id"]: r["component"] for r in out.collect()}
+        DD.release_persisted()
+        return got, len(hints)
+
+    broadcast, n_hinted = labels()
+    monkeypatch.setattr(DD, "_CC_BROADCAST_MAX_VERTICES", 0)
+    shuffled, n_unhinted = labels()
+    assert n_hinted > 0 and n_unhinted == 0, (n_hinted, n_unhinted)
+    assert shuffled == broadcast == {i: 0 for i in range(64)}
+
+
 def test_connected_components_restores_checkpoint_dir(spark, tmp_path):
     """connected_components(checkpoint_dir=...) points the shared
     SparkContext at its own `<dir>/<uuid>` only for the call: the

@@ -353,7 +353,7 @@ def test_stream_ingest_minimal_into_mor(spark, tmp_path):
     q = start_ingest(spark, land, table, str(tmp_path / "ckpt_min"),
                      max_files_per_trigger=2, row_image="MINIMAL")
     q.awaitTermination(120)
-    assert table.latest_manifest()["partial_deltas"] is True
+    assert table.latest_manifest()["partial_state"] is True
     pdf = ev.select("seq", "op", "before", "after", "changed_cols").toPandas()
     assert table.state_checksum(spark) == oracle.state_checksum(
         oracle.sequential_apply(pdf)
