@@ -391,14 +391,15 @@ def _q_changelog(spark, sf_dir):
 def _q_minimal_final_state(spark, sf_dir, write_mode="cow"):
     """MINIMAL row-image replay end-to-end (T3/T10 semantics gap closed
     per VERDICT r3 #3): materialize the table with the real
-    row_image="MINIMAL" path — to_upsert_rows_partial + the per-column
-    last-present-writer merge (apply._per_key_winners partial=True) —
-    in two commits so stored rows act as full-image pseudo-events under
-    the columnar merge. Oracle: per-column last_value(... IGNORE NULLS)
-    over the mirrored stream. The "mor" variant stores MINIMAL deltas
-    (merged _changed_cols metadata) and resolves them with the
-    per-column READ-time merge — same oracle by construction. Fixture
-    table shared per process (_replay_fixture)."""
+    row_image="MINIMAL" path — to_upsert_rows(minimal=True) + the
+    per-column last-present-writer merge (apply._per_key_winners
+    partial=True) — in two commits so stored rows act as full-image
+    pseudo-events under the columnar merge. Oracle: per-column
+    last_value(... IGNORE NULLS) over the mirrored stream. The "mor"
+    variant stores MINIMAL deltas (each row's `_col_seqs` map marks the
+    columns it never wrote) and resolves them with the per-column
+    READ-time merge — same oracle by construction. Fixture table shared
+    per process (_replay_fixture)."""
     t = _replay_fixture(
         spark, sf_dir, "minimal_mor" if write_mode == "mor" else "minimal_cow"
     )

@@ -73,12 +73,11 @@ import time
 import uuid as _uuid
 from typing import Any, NamedTuple
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from bingo2sql_spark import schema as S
-from bingo2sql_spark.functions.sqltext import ident, str_lit
+from bingo2sql_spark.functions.sqltext import Views, ident, sql, sql_over, str_lit
 
 MANIFEST_DIR = "_manifests"
 DATA_DIR = "data"
@@ -98,45 +97,68 @@ INTERNAL_COLS = ("_ingest_seq", "_deleted", "_log_file", "_log_pos", "bucket")
 INTERNAL_NO_BUCKET = tuple(c for c in INTERNAL_COLS if c != "bucket")
 
 
-def _name_translate(expr, mapping: dict[str, str]):
-    """when-chain over a string expression translating old column names
-    to new (rename support for per-column attribution metadata)."""
-    out = None
-    for old, new in mapping.items():
-        cond = expr == F.lit(old)
-        out = F.when(cond, F.lit(new)) if out is None else out.when(cond, F.lit(new))
-    return expr if out is None else out.otherwise(expr)
+#: internal columns read() hides (bucket stays visible)
+_HIDDEN = frozenset({"_ingest_seq", "_deleted", "_log_file", "_log_pos", "_col_seqs"})
 
 
-def _translate_partial_meta(df: DataFrame, mapping: dict[str, str]) -> DataFrame:
+def _as(expr: str, name: str) -> str:
+    """`expr AS name` as select-list text; the bare identifier when
+    `expr` already reads the column `name`."""
+    q = ident(name)
+    return q if expr == q else f"{expr} AS {q}"
+
+
+def _translate_keys(col_seqs: str, mapping: dict[str, str]) -> str:
     """After a column rename, `_col_seqs` keys written under the OLD
-    name must read as the new one: rewritten in place (pure
-    expression, no shuffle)."""
-    if not mapping or "_col_seqs" not in df.columns:
-        return df
-    return df.withColumn(
-        "_col_seqs",
-        F.transform_keys("_col_seqs", lambda k, _v: _name_translate(k, mapping)),
+    name must read as the new one: the map expression `col_seqs` with
+    its keys rewritten in place (pure expression, no shuffle)."""
+    if not mapping:
+        return col_seqs
+    cases = " ".join(
+        f"WHEN x = {str_lit(old)} THEN {str_lit(new)}" for old, new in mapping.items()
     )
+    return f"transform_keys({col_seqs}, (x, y) -> CASE {cases} ELSE x END)"
 
 
-def _conform(df: DataFrame, all_cols: list[str], partial: bool) -> DataFrame:
-    """One merge input — stored rows or batch rows — in the merge's
-    layout: `all_cols` in table order (a column the input lacks
-    NULL-fills: schema evolution), the internal columns, and on the
-    per-column path `_col_seqs` (NULL = every column written at the
-    row seq)."""
+def _state_fields(columns: list[str], with_col_seqs: bool = False) -> list[tuple[str, str]]:
+    """(name, SQL type) of every stored column: `columns` as text, the
+    internal columns, and on a per-column table the `_col_seqs`
+    attribution map (see _per_key_winners); files written before the
+    table went per-column NULL-fill it = every column at the row seq."""
+    fields = [(c, "string") for c in columns]
+    fields += [
+        ("_ingest_seq", "bigint"),
+        ("_deleted", "boolean"),
+        ("_log_file", "string"),
+        ("_log_pos", "bigint"),
+        ("bucket", "int"),
+    ]
+    if with_col_seqs:
+        fields.append(("_col_seqs", "map<string,bigint>"))
+    return fields
 
-    def col(c: str, dtype: str = "string"):
-        return F.col(c) if c in df.columns else F.lit(None).cast(dtype).alias(c)
+
+def _conform(rel: str, have: dict[str, str], all_cols: list[str], partial: bool) -> str:
+    """SQL text of one merge input — stored rows or batch rows, the
+    relation `rel` — in the merge's layout: `all_cols` in table order (a
+    column the input lacks NULL-fills: schema evolution), the internal
+    columns, and on the per-column path `_col_seqs` (NULL = every column
+    written at the row seq). `have` maps each column the input carries
+    to its expression over `rel`: its identifier, or a rename's source
+    column."""
+
+    def col(c: str, dtype: str = "string") -> str:
+        return _as(have[c], c) if c in have else f"CAST(NULL AS {dtype}) AS {ident(c)}"
 
     extras = [col("_col_seqs", "map<string,bigint>")] if partial else []
-    return df.select(*map(col, all_cols), *INTERNAL_COLS, *extras)
+    cols = [*map(col, all_cols), *(_as(have[c], c) for c in INTERNAL_COLS), *extras]
+    return f"SELECT {', '.join(cols)} FROM {rel}"
 
 
-def _per_key_winners(df: DataFrame, all_cols: list[str], partial: bool) -> DataFrame:
-    """Collapse rows to per-(bucket, key) LWW winners — shared by the
-    commit MERGE and the MOR read-time reconciliation.
+def _per_key_winners(rel: str, all_cols: list[str], partial: bool, slot: bool = False) -> str:
+    """SQL text collapsing the rows of relation `rel` to per-(bucket,
+    key) LWW winners — shared by the commit MERGE and the MOR read-time
+    reconciliation.
 
     partial=False: row-level max_by over _ingest_seq.
 
@@ -167,63 +189,49 @@ def _per_key_winners(df: DataFrame, all_cols: list[str], partial: bool) -> DataF
     single-writer or full-image commits the map is empty. Dense maps
     decode to the same answer.
 
-    A `bucket_slot` column (_lww_merge's placement, a function of
-    bucket) joins the grouping keys, so the aggregate reuses the
-    exchange on it; the output drops it."""
+    slot=True: `rel` carries _lww_merge's `bucket_slot` placement (a
+    function of bucket), which joins the grouping keys so the aggregate
+    reuses the exchange on it; the output drops it."""
     data_cols = [c for c in all_cols if c not in S.MERGE_KEYS]
-    slot = ["bucket_slot"] if "bucket_slot" in df.columns else []
+    group = ", ".join(map(ident, [*(["bucket_slot"] if slot else []), "bucket", *S.MERGE_KEYS]))
+    internal = ", ".join(f"_w.{ident(c)} AS {ident(c)}" for c in INTERNAL_NO_BUCKET)
     if not partial:
-        winner = F.max_by(
-            F.struct(*data_cols, *INTERNAL_NO_BUCKET), F.col("_ingest_seq")
-        ).alias("_w")
-        return (
-            df.groupBy(*slot, "bucket", *S.MERGE_KEYS)
-            .agg(winner)
-            .select(*S.MERGE_KEYS, "_w.*", "bucket")
-            .select(*all_cols, *INTERNAL_COLS)
-        )
-    seq = F.col("_ingest_seq")
-    seqs = F.col("_col_seqs")
-    aggs = [F.max_by(F.struct(*INTERNAL_NO_BUCKET), seq).alias("_w")]
-    for c in data_cols:
-        entry = seqs.getItem(c)
-        # sparse decode: a NULL-VALUED entry marks never-written; an
-        # absent key (or a NULL map) means the row wrote it at its seq
-        listed = F.coalesce(F.map_contains_key(seqs, F.lit(c)), F.lit(False))
-        present = ~F.col("_deleted") & ~(listed & entry.isNull())
-        aggs.append(
-            F.max(
-                F.when(
-                    present,
-                    F.struct(F.coalesce(entry, seq).alias("s"), F.col(c).alias("v")),
-                )
-            ).alias(f"_pw_{c}")
-        )
-    if data_cols:
-        # sparse emission: keep only exception entries — NULL seq
-        # (never-written marker) or a winner older than the row winner;
-        # everything else is implied by the row's _ingest_seq
-        row_seq = F.col("_w")["_ingest_seq"]
-        col_seqs = F.map_filter(
-            F.map_from_arrays(
-                F.array(*[F.lit(c) for c in data_cols]),
-                F.array(*[F.col(f"_pw_{c}")["s"] for c in data_cols]),
-            ),
-            lambda _k, v: v.isNull() | (v != row_seq),
-        ).alias("_col_seqs")
+        fields = ", ".join(map(ident, [*data_cols, *INTERNAL_NO_BUCKET]))
+        aggs = [f"max_by(struct({fields}), _ingest_seq) AS _w"]
+        out = [ident(c) if c in S.MERGE_KEYS else f"_w.{ident(c)} AS {ident(c)}" for c in all_cols]
+        extras = []
     else:
-        col_seqs = F.lit(None).cast("map<string,bigint>").alias("_col_seqs")
+        aggs = [f"max_by(struct({', '.join(map(ident, INTERNAL_NO_BUCKET))}), _ingest_seq) AS _w"]
+        for c in data_cols:
+            # sparse decode: a NULL-VALUED entry marks never-written; an
+            # absent key (or a NULL map) means the row wrote it at its seq
+            entry = f"_col_seqs[{str_lit(c)}]"
+            listed = f"coalesce(map_contains_key(_col_seqs, {str_lit(c)}), false)"
+            present = f"NOT _deleted AND NOT ({listed} AND {entry} IS NULL)"
+            aggs.append(
+                f"max(CASE WHEN {present} THEN struct(coalesce({entry}, _ingest_seq) AS s, "
+                f"{ident(c)} AS v) END) AS {ident('_pw_' + c)}"
+            )
+        out = [
+            ident(c) if c in S.MERGE_KEYS else f"{ident('_pw_' + c)}.v AS {ident(c)}"
+            for c in all_cols
+        ]
+        if data_cols:
+            # sparse emission: keep only exception entries — NULL seq
+            # (never-written marker) or a winner older than the row winner;
+            # everything else is implied by the row's _ingest_seq
+            names = ", ".join(map(str_lit, data_cols))
+            seqs = ", ".join(f"{ident('_pw_' + c)}.s" for c in data_cols)
+            col_seqs = (
+                f"map_filter(map_from_arrays(array({names}), array({seqs})), "
+                "(x, y) -> y IS NULL OR y != _w._ingest_seq)"
+            )
+        else:
+            col_seqs = "CAST(NULL AS map<string,bigint>)"
+        extras = [f"{col_seqs} AS _col_seqs"]
     return (
-        df.groupBy(*slot, "bucket", *S.MERGE_KEYS)
-        .agg(*aggs)
-        .select(
-            *S.MERGE_KEYS,
-            *[F.col(f"_pw_{c}")["v"].alias(c) for c in data_cols],
-            "_w.*",
-            "bucket",
-            col_seqs,
-        )
-        .select(*all_cols, *INTERNAL_COLS, "_col_seqs")
+        f"SELECT {', '.join(out)}, {internal}, bucket{''.join(', ' + e for e in extras)} "
+        f"FROM (SELECT {group}, {', '.join(aggs)} FROM {rel} GROUP BY {group})"
     )
 
 
@@ -257,11 +265,16 @@ def _slot_keys(n: int) -> tuple[int, ...]:
 
 
 def _lww_merge(
-    inputs: list[DataFrame], all_cols: list[str], partial: bool, affected: list[int]
-) -> DataFrame:
-    """The one write-side MERGE plan of commit and compact(): unresolved
-    inputs (stored scan and/or batch rows, all in the `affected`
-    buckets) unioned into ONE `repartition(bucket_slot)` exchange
+    spark: SparkSession,
+    inputs: list[tuple[str, dict[str, str]]],
+    all_cols: list[str],
+    partial: bool,
+    affected: list[int],
+) -> str:
+    """SQL text of the one write-side MERGE plan of commit and
+    compact(): unresolved inputs (stored scan and/or batch rows, all in
+    the `affected` buckets; each a relation and the columns it carries,
+    see _conform) unioned into ONE `DISTRIBUTE BY bucket_slot` exchange
     feeding _per_key_winners. `bucket_slot` is a function of bucket,
     and bucket of the merge keys, so that partitioning satisfies the
     aggregate's clustered distribution (no second exchange) and the
@@ -282,17 +295,15 @@ def _lww_merge(
     buckets round-robin instead: the i-th gets the key of partition
     i mod n (_slot_keys), so partitions differ by at most one bucket
     and AQE's neighbour merging packs them evenly."""
-    both = functools.reduce(
-        DataFrame.unionByName, [_conform(d, all_cols, partial) for d in inputs]
-    )
-    conf = both.sparkSession._jsparkSession.sessionState().conf()
+    both = " UNION ALL ".join(_conform(rel, have, all_cols, partial) for rel, have in inputs)
+    conf = spark._jsparkSession.sessionState().conf()
     keys = _slot_keys(conf.numShufflePartitions())  # the exchange's initial count
     slot_of = [0] * (max(affected) + 1)
     for i, b in enumerate(affected):
         slot_of[b] = keys[i % len(keys)]
-    slot = F.element_at(F.array(*map(F.lit, slot_of)), F.col("bucket") + 1)
-    placed = both.withColumn("bucket_slot", slot).repartition("bucket_slot")
-    return _per_key_winners(placed, all_cols, partial)
+    slot = f"element_at(array({', '.join(map(str, slot_of))}), bucket + 1)"
+    placed = f"(SELECT *, {slot} AS bucket_slot FROM ({both}) DISTRIBUTE BY bucket_slot)"
+    return _per_key_winners(placed, all_cols, partial, slot=True)
 
 
 def _referenced(buckets: dict[str, int], deltas: dict[str, list[int]]) -> set[int]:
@@ -306,11 +317,17 @@ def _read_amplification(bucket_rows: dict[str, dict[str, int]]) -> float:
     return max((br["delta"] / max(br["base"], 1) for br in bucket_rows.values()), default=0.0)
 
 
-def bucket_col(n_buckets: int):
-    """Deterministic bucket of the composite merge key. Hashing the
-    composite (repo, path) — not repo alone — is what defuses hot-repo
-    skew (SURVEY.md §7.4#5)."""
-    return F.pmod(F.xxhash64(*[F.col(k) for k in S.MERGE_KEYS]), F.lit(n_buckets)).cast("int")
+def _bucket_sql(n_buckets: int) -> str:
+    """Deterministic bucket of the composite merge key, as SQL text.
+    Hashing the composite (repo, path) — not repo alone — is what
+    defuses hot-repo skew (SURVEY.md §7.4#5)."""
+    keys = ", ".join(map(ident, S.MERGE_KEYS))
+    return f"CAST(pmod(xxhash64({keys}), {int(n_buckets)}) AS INT)"
+
+
+def bucket_col(n_buckets: int) -> Column:
+    """_bucket_sql as a Column, for callers outside this module."""
+    return F.expr(_bucket_sql(n_buckets))
 
 
 def _key_literal(v: Any) -> str:
@@ -347,6 +364,7 @@ class _Scope(NamedTuple):
     """Commit phase 2's output: the batch rows and what they touch."""
 
     rows: DataFrame  #: bucketed batch rows, `_seq` as `_ingest_seq` (rebased)
+    columns: list[str]  #: the columns of `rows`
     affected: list[int]  #: buckets the merge rewrites
     partial: bool  #: per-column (MINIMAL-image) merge
     counts: dict[str, int] | None  #: exact rows/deletes from the pre-pass
@@ -451,37 +469,13 @@ class IcebergLiteTable:
 
     # -- read path -------------------------------------------------------------
 
-    @staticmethod
-    def _state_schema(columns: list[str], with_col_seqs: bool = False) -> T.StructType:
-        fields = [T.StructField(c, T.StringType(), True) for c in columns]
-        fields += [
-            T.StructField("_ingest_seq", T.LongType(), True),
-            T.StructField("_deleted", T.BooleanType(), True),
-            T.StructField("_log_file", T.StringType(), True),
-            T.StructField("_log_pos", T.LongType(), True),
-            T.StructField("bucket", T.IntegerType(), True),
-        ]
-        if with_col_seqs:
-            # per-column seq attribution (see _per_key_winners): files
-            # written before the table went partial NULL-fill = every
-            # column attributed to the row seq
-            fields.append(
-                T.StructField(
-                    "_col_seqs", T.MapType(T.StringType(), T.LongType()), True
-                )
-            )
-        return T.StructType(fields)
-
     def _empty_state(self, spark: SparkSession, columns: list[str]) -> DataFrame:
         """The empty table state, built in the JVM: the optimizer folds
         `LIMIT 0` to an empty LocalRelation and PropagateEmptyRelation
         drops it from a merge union, so a fresh table's first commit
         plans the batch alone and starts no tasks for this side."""
-        cols = ", ".join(
-            f"CAST(NULL AS {f.dataType.simpleString()}) AS {ident(f.name)}"
-            for f in self._state_schema(columns).fields
-        )
-        return spark.sql(f"SELECT {cols} LIMIT 0")
+        cols = ", ".join(f"CAST(NULL AS {t}) AS {ident(c)}" for c, t in _state_fields(columns))
+        return sql(spark, f"SELECT {cols} LIMIT 0")
 
     def _scan(
         self,
@@ -489,21 +483,23 @@ class IcebergLiteTable:
         m: dict[str, Any] | None,
         buckets: list[int] | None = None,
         time_travel: bool = False,
-    ) -> tuple[DataFrame, bool]:
+    ) -> tuple[DataFrame, list[str], bool]:
         """Stored rows of manifest `m` incl. internal cols, UNRESOLVED:
         every base and delta file of the chosen buckets (`buckets`
         prunes at the manifest level) in one parquet scan under current
         column names, plus `_col_seqs` when the manifest's sticky
         `partial_state` says a per-column write ever reached the table
         (NULL for rows of files without it: every column at the row
-        seq). Returns (rows, whether a delta is scanned). _read_raw
-        resolves them; commit and compact() feed them straight into
-        _lww_merge."""
+        seq). Returns (rows, their columns — named by the manifest, so
+        no schema round trip — and whether a delta is scanned).
+        _resolved resolves them; commit and compact() feed them straight
+        into _lww_merge."""
         cols = (m or {}).get("columns", S.payload_columns())
         base = (m or {}).get("buckets", {})
         deltas = (m or {}).get("deltas", {})
+        empty = [c for c, _ in _state_fields(cols)]
         if not m or not (base or deltas):
-            return self._empty_state(spark, cols), False
+            return self._empty_state(spark, cols), empty, False
         all_bk = sorted(set(base) | set(deltas), key=int)
         if buckets is not None:
             want = {str(b) for b in buckets}
@@ -529,7 +525,7 @@ class IcebergLiteTable:
                 )
         paths = [p for p in paths if os.path.isdir(p)]
         if not paths:
-            return self._empty_state(spark, cols), False
+            return self._empty_state(spark, cols), empty, False
         # EXPLICIT union schema from the manifest: snapshots written before
         # a schema evolution lack the new columns, and an unconstrained
         # parquet read adopts one random file's footer — silently DROPPING
@@ -547,24 +543,47 @@ class IcebergLiteTable:
         # single non-NULL spelling coalesces into the current name — a
         # pure projection, so a 100 TB table renames a column without
         # rewriting a byte.
-        aliases = {
-            c: [o for o in olds]
-            for c, olds in (m.get("aliases") or {}).items()
-            if c in cols
-        }
+        aliases = {c: olds for c, olds in (m.get("aliases") or {}).items() if c in cols}
         alias_olds = [o for olds in aliases.values() for o in olds]
-        df = spark.read.schema(
-            self._state_schema(cols + alias_olds, with_col_seqs=partial)
-        ).parquet(*paths)
+        fields = _state_fields(cols + alias_olds, with_col_seqs=partial)
+        df = spark.read.schema(", ".join(f"{ident(c)} {t}" for c, t in fields)).parquet(*paths)
+        columns = [c for c, _ in _state_fields(cols, with_col_seqs=partial)]
         if alias_olds:
+            have = {c: ident(c) for c in columns}
             for c, olds in aliases.items():
-                df = df.withColumn(c, F.coalesce(F.col(c), *[F.col(o) for o in olds]))
-            df = df.drop(*alias_olds)
-            df = _translate_partial_meta(
-                df, {o: c for c, olds in aliases.items() for o in olds}
-            )
-        extras = ["_col_seqs"] if partial else []
-        return df.select(*cols, *INTERNAL_COLS, *extras), has_deltas
+                have[c] = f"coalesce({', '.join(map(ident, [c, *olds]))})"
+            if partial:
+                have["_col_seqs"] = _translate_keys(
+                    ident("_col_seqs"), {o: c for c, olds in aliases.items() for o in olds}
+                )
+            projection = ", ".join(_as(have[c], c) for c in columns)
+            df = sql_over(df, lambda rel: f"SELECT {projection} FROM {rel}")
+        return df, columns, has_deltas
+
+    def _manifest(self, version: int | None) -> dict[str, Any] | None:
+        """The latest manifest, or `version`'s (time travel)."""
+        m = self.manifest_at(version) if version is not None else self.latest_manifest()
+        if version is not None and m is None:
+            raise ValueError(f"snapshot {version} does not exist (see versions())")
+        return m
+
+    def _resolved(
+        self,
+        views: Views,
+        spark: SparkSession,
+        m: dict[str, Any] | None,
+        buckets: list[int] | None,
+        time_travel: bool,
+    ) -> tuple[str, list[str]]:
+        """Stored rows of manifest `m`, one row per key, as a relation in
+        `views`' SQL text, and its columns. MERGE-ON-READ: a scan holding
+        deltas resolves to per-key LWW winners HERE, so every reader
+        sees register semantics regardless of write mode."""
+        df, columns, has_deltas = self._scan(spark, m, buckets, time_travel)
+        rel = views.add(df)
+        if not has_deltas:
+            return rel, columns
+        return f"({_per_key_winners(rel, m['columns'], '_col_seqs' in columns)})", columns
 
     def _read_raw(
         self,
@@ -575,16 +594,28 @@ class IcebergLiteTable:
         """Stored rows incl. internal cols, one row per key; `version`
         time-travels to that snapshot's manifest (data files are
         immutable, so any retained manifest is readable — the Iceberg
-        snapshot-isolation property). MERGE-ON-READ: a scan holding
-        deltas resolves to per-key LWW winners HERE, so every reader
-        sees register semantics regardless of write mode."""
-        m = self.manifest_at(version) if version is not None else self.latest_manifest()
-        if version is not None and m is None:
-            raise ValueError(f"snapshot {version} does not exist (see versions())")
-        df, has_deltas = self._scan(spark, m, buckets, time_travel=version is not None)
-        if not has_deltas:
-            return df
-        return _per_key_winners(df, m["columns"], partial="_col_seqs" in df.columns)
+        snapshot-isolation property)."""
+        views = Views()
+        m = self._manifest(version)
+        rel, _ = self._resolved(views, spark, m, buckets, version is not None)
+        return views.sql(spark, f"SELECT * FROM {rel}")
+
+    def _read_live(
+        self,
+        spark: SparkSession,
+        buckets: list[int] | None = None,
+        version: int | None = None,
+        where: str | None = None,
+        select: str | None = None,
+    ) -> DataFrame:
+        """read(): `select` (default: the visible columns) over the live
+        rows, and only those matching the SQL predicate `where`."""
+        views = Views()
+        m = self._manifest(version)
+        rel, columns = self._resolved(views, spark, m, buckets, version is not None)
+        select = select or ", ".join(ident(c) for c in columns if c not in _HIDDEN)
+        cond = "NOT _deleted" + (f" AND {where}" if where else "")
+        return views.sql(spark, f"SELECT {select} FROM {rel} WHERE {cond}")
 
     def read(
         self,
@@ -594,11 +625,7 @@ class IcebergLiteTable:
     ) -> DataFrame:
         """Live table state (tombstones filtered, internal columns
         hidden except bucket); `version` time-travels to a snapshot."""
-        df = self._read_raw(spark, buckets, version=version)
-        hidden = {"_ingest_seq", "_deleted", "_log_file", "_log_pos", "_col_seqs"}
-        return df.filter(~F.col("_deleted")).select(
-            *[c for c in df.columns if c not in hidden]
-        )
+        return self._read_live(spark, buckets, version)
 
     def read_keys(
         self,
@@ -613,20 +640,23 @@ class IcebergLiteTable:
         Iceberg bucket-transform point-read story).
 
         The owning bucket is hash(composite key) — computed with the
-        same JVM xxhash64 expression the writer used (bucket_col), so
+        same JVM xxhash64 expression the writer used (_bucket_sql), so
         driver and executor hashing can never diverge. The key literals
-        enter the plan as a LocalRelation and the bucket projection over
-        it folds on the driver, so the lookup starts no job of its own.
-        The exact-key filter is a broadcast LEFT SEMI join (no shuffle
-        of the table side)."""
+        enter that projection as a LocalRelation, which folds on the
+        driver, so the lookup starts no job of its own. The exact-key
+        filter is one `(repo, path) IN (...)` predicate over the merge
+        keys, which Catalyst pushes below the MOR winner aggregate (and
+        turns into a hash-set lookup past ten keys), so a lookup
+        shuffles only the matching rows and joins nothing."""
         if not keys:
             return self.read(spark, buckets=[])
-        rows = ", ".join(f"({', '.join(_key_literal(v) for v in k)})" for k in keys)
-        names = ", ".join(ident(k) for k in S.MERGE_KEYS)
-        kdf = spark.sql(f"SELECT * FROM VALUES {rows} AS t({names})")
-        bks = sorted({r[0] for r in kdf.select(bucket_col(self.n_buckets)).collect()})
-        df = self.read(spark, buckets=bks, version=version)
-        return df.join(F.broadcast(kdf), on=list(S.MERGE_KEYS), how="left_semi")
+        tuples = ", ".join(f"({', '.join(_key_literal(v) for v in k)})" for k in keys)
+        names = ", ".join(map(ident, S.MERGE_KEYS))
+        owners = sql(
+            spark, f"SELECT {_bucket_sql(self.n_buckets)} FROM VALUES {tuples} AS t({names})"
+        )
+        bks = sorted({r[0] for r in owners.collect()})
+        return self._read_live(spark, bks, version, where=f"({names}) IN ({tuples})")
 
     def changes_between(
         self, spark: SparkSession, from_version: int, to_version: int
@@ -663,13 +693,10 @@ class IcebergLiteTable:
         bks = set(mf.get("buckets", {})) | set(mt.get("buckets", {}))
         bks |= set(mf.get("deltas", {})) | set(mt.get("deltas", {}))
         changed = sorted(int(b) for b in bks if _sig(mf, b) != _sig(mt, b))
-        old = self._read_raw(spark, buckets=changed, version=from_version).filter(
-            ~F.col("_deleted")
-        )
-        new = self._read_raw(spark, buckets=changed, version=to_version).filter(
-            ~F.col("_deleted")
-        )
-        payload = [c for c in new.columns if not c.startswith("_") and c != "bucket"]
+        views = Views()
+        old, old_cols = self._resolved(views, spark, mf, changed, True)
+        new, new_cols = self._resolved(views, spark, mt, changed, True)
+        payload = [c for c in new_cols if not c.startswith("_") and c != "bucket"]
         # schema drift across the gap (ADVICE r7): the old side was read
         # under ITS OWN manifest, so a column renamed inside the gap
         # still carries its old spelling there — translate it through the
@@ -677,38 +704,29 @@ class IcebergLiteTable:
         # wins; older ones were already coalesced by old's own read), and
         # NULL-fill columns ADDED inside the gap. Columns dropped inside
         # the gap simply leave the comparison (current-schema changelog,
-        # Iceberg semantics). Without this, old.select(struct(*data))
-        # raises AnalysisException on any rename-spanning diff.
+        # Iceberg semantics).
         to_aliases = mt.get("aliases") or {}
-        for c in payload:
-            if c in old.columns:
-                continue
-            carried = next(
-                (o for o in to_aliases.get(c, []) if o in old.columns), None
-            )
-            if carried is not None:
-                old = old.withColumnRenamed(carried, c)
-            else:
-                old = old.withColumn(c, F.lit(None).cast("string"))
-        keys = list(S.MERGE_KEYS)
-        data = [c for c in payload if c not in keys]
-        o = old.select(*keys, F.struct(*data).alias("_old"))
-        n = new.select(*keys, F.struct(*data).alias("_new"))
-        j = o.join(n, keys, "full_outer")
+
+        def carried(c: str) -> str:
+            if c in old_cols:
+                return ident(c)
+            name = next((o for o in to_aliases.get(c, []) if o in old_cols), None)
+            return _as(ident(name) if name else "CAST(NULL AS STRING)", c)
+
+        keys = ", ".join(map(ident, S.MERGE_KEYS))
+        data = [c for c in payload if c not in S.MERGE_KEYS]
+        live = "WHERE NOT _deleted"
+        o = f"SELECT {keys}, struct({', '.join(map(carried, data))}) AS _old FROM {old} {live}"
+        n = f"SELECT {keys}, struct({', '.join(map(ident, data))}) AS _new FROM {new} {live}"
         op = (
-            F.when(F.col("_old").isNull(), F.lit("insert"))
-            .when(F.col("_new").isNull(), F.lit("delete"))
-            .otherwise(F.lit("update"))
+            "CASE WHEN _old IS NULL THEN 'insert' WHEN _new IS NULL THEN 'delete' "
+            "ELSE 'update' END"
         )
-        return (
-            j.select(*keys, op.alias("op"), "_old", "_new")
-            .filter(
-                F.col("_old").isNull()
-                | F.col("_new").isNull()
-                | (F.col("_old") != F.col("_new"))
-            )
-            .withColumnRenamed("_old", "before")
-            .withColumnRenamed("_new", "after")
+        return views.sql(
+            spark,
+            f"SELECT {keys}, {op} AS op, _old AS before, _new AS after "
+            f"FROM ({o}) o FULL OUTER JOIN ({n}) n USING ({keys}) "
+            "WHERE _old IS NULL OR _new IS NULL OR _old != _new",
         )
 
     def head_seq(self) -> int:
@@ -890,16 +908,19 @@ class IcebergLiteTable:
             and amp > self.max_read_amplification,
         }
         fold = next((t for t, hit in triggers.items() if mor and hit), None)
-        b = batch.withColumn("bucket", bucket_col(self.n_buckets)).withColumnRenamed(
-            "_seq", "_ingest_seq"
-        )
+        # one projection: bucket the rows, `_seq` as `_ingest_seq`, and on
+        # a MINIMAL batch the never-written marks
+        select = {
+            "_ingest_seq" if c == "_seq" else c: ident(c) for c in batch.columns if c != "bucket"
+        }
+        select["bucket"] = _bucket_sql(self.n_buckets)
         partial = "_col_seqs" in batch.columns or bool(m.get("partial_state"))
-        unseen = [c for c in cols.all_cols if c not in b.columns]
-        if "_col_seqs" in b.columns and unseen:
-            marks = F.create_map(
-                *[x for c in unseen for x in (F.lit(c), F.lit(None).cast("bigint"))]
-            )
-            b = b.withColumn("_col_seqs", F.map_concat("_col_seqs", marks))
+        unseen = [c for c in cols.all_cols if c not in select]
+        if "_col_seqs" in select and unseen:
+            marks = ", ".join(f"{str_lit(c)}, CAST(NULL AS BIGINT)" for c in unseen)
+            select["_col_seqs"] = f"map_concat(_col_seqs, map({marks}))"
+        projection = ", ".join(_as(e, c) for c, e in select.items())
+        b = sql_over(batch, lambda rel: f"SELECT {projection} FROM {rel}")
         counts: dict[str, int] | None = None
         observation = None
         min_seq: int | None = None
@@ -910,16 +931,11 @@ class IcebergLiteTable:
             # to just the key fields): affected buckets + exact counts
             # (+ the batch's min seq, which the flashback rebase needs —
             # riding this job instead of a separate scan, VERDICT r3 #4)
-            stats = (
-                b.select("bucket", "_ingest_seq", "_deleted")
-                .groupBy("bucket")
-                .agg(
-                    F.sum(F.col("_deleted").cast("int")).alias("deletes"),
-                    F.count("*").alias("rows"),
-                    F.min("_ingest_seq").alias("min_seq"),
-                )
-                .collect()
-            )
+            stats = sql_over(
+                b,
+                lambda rel: "SELECT bucket, sum(CAST(_deleted AS INT)) AS deletes, "
+                f"count(*) AS `rows`, min(_ingest_seq) AS min_seq FROM {rel} GROUP BY bucket",
+            ).collect()
             affected = sorted(int(r["bucket"]) for r in stats)
             counts = {
                 "rows": int(sum(r["rows"] for r in stats)),
@@ -937,14 +953,14 @@ class IcebergLiteTable:
             observation = Observation(f"commit-{batch_id}")
             b = b.observe(
                 observation,
-                F.count(F.lit(1)).alias("rows"),
-                F.sum(F.col("_deleted").cast("int")).alias("deletes"),
+                F.expr("count(1) AS `rows`"),
+                F.expr("sum(CAST(_deleted AS INT)) AS deletes"),
             )
             if rebase_past_head:
                 # no pre-pass to ride (empty table / MOR delta append):
                 # one narrow single-column aggregate — same cost as the
                 # old pipeline-level pre-pass, only on these paths
-                row = b.agg(F.min("_ingest_seq")).collect()[0]
+                row = sql_over(b, lambda rel: f"SELECT min(_ingest_seq) FROM {rel}").collect()[0]
                 min_seq = None if row[0] is None else int(row[0])
         if rebase_past_head and min_seq is not None:
             # flashback batches arrive order-inverted (seq' = -seq); the
@@ -953,8 +969,8 @@ class IcebergLiteTable:
             # inverted events stay reverse-ordered among themselves and
             # supersede everything already absorbed under LWW-by-seq.
             offset = self.head_seq() - min_seq + 1
-            b = b.withColumn("_ingest_seq", F.col("_ingest_seq") + F.lit(offset))
-        return _Scope(b, affected, partial, counts, observation, fold)
+            b = b.withColumn("_ingest_seq", F.expr(f"_ingest_seq + {offset}"))
+        return _Scope(b, list(select), affected, partial, counts, observation, fold)
 
     def _merge_and_write(
         self,
@@ -978,28 +994,27 @@ class IcebergLiteTable:
         if not scope.affected:
             return None, {}
         delta = self.write_mode == "mor" and not scope.fold
-        inputs = [scope.rows]
+        spark = scope.rows.sparkSession
+        views = Views()
+        inputs = [(views.add(scope.rows), {c: ident(c) for c in scope.columns})]
         if not delta:
-            current, _ = self._scan(scope.rows.sparkSession, m, scope.affected)
-            if cols.dropped:
-                # vacate dropped names BEFORE renames claim them — the
-                # old manifest's scan still carries them, and a rename
-                # onto one would otherwise duplicate the name
-                current = current.drop(*[c for c in cols.dropped if c in current.columns])
-            if cols.renames:
-                # stored rows scanned under the pre-rename manifest: carry
-                # values (and per-column attributions) to the new names
-                # before the merge union
-                for old, new in cols.renames.items():
-                    if old in current.columns:
-                        current = current.withColumnRenamed(old, new)
-                current = _translate_partial_meta(current, cols.renames)
-            inputs.insert(0, current)
-        merged = _lww_merge(inputs, cols.all_cols, scope.partial, scope.affected)
-        if drop_tombstones:
-            merged = merged.filter(~F.col("_deleted"))
+            current, columns, _ = self._scan(spark, m, scope.affected)
+            # stored rows scanned under the pre-commit manifest: dropped
+            # names leave BEFORE renames claim them (a rename onto one
+            # would otherwise duplicate the name), and values (and
+            # per-column attributions) carry to the new names before
+            # the merge union
+            have = {
+                cols.renames.get(c, c): ident(c) for c in columns if c not in cols.dropped
+            }
+            if "_col_seqs" in have:
+                have["_col_seqs"] = _translate_keys(ident("_col_seqs"), cols.renames)
+            inputs.insert(0, (views.add(current), have))
+        merged = _lww_merge(spark, inputs, cols.all_cols, scope.partial, scope.affected)
+        live = " WHERE NOT _deleted" if drop_tombstones else ""
         return self._write_snapshot(
-            merged.withColumn("pbucket", F.col("bucket")), m["version"] + 1
+            views.sql(spark, f"SELECT *, bucket AS pbucket FROM ({merged}){live}"),
+            m["version"] + 1,
         )
 
     def _write_snapshot(self, df: DataFrame, version: int) -> tuple[str, dict[str, dict]]:
@@ -1147,10 +1162,12 @@ class IcebergLiteTable:
         Batch-id bookkeeping intentionally does NOT carry over (ids
         were scoped to the old table's history); the new table starts
         a fresh exactly-once ledger."""
-        raw = self._read_raw(spark)
-        batch = raw.select(
-            *[c for c in raw.columns if c not in ("bucket",)]
-        ).withColumnRenamed("_ingest_seq", "_seq")
+        views = Views()
+        rel, columns = self._resolved(views, spark, self.latest_manifest(), None, False)
+        raw = ", ".join(
+            _as(ident(c), "_seq" if c == "_ingest_seq" else c) for c in columns if c != "bucket"
+        )
+        batch = views.sql(spark, f"SELECT {raw} FROM {rel}")
         dst = IcebergLiteTable(new_path, n_buckets=n_buckets, write_mode=self.write_mode)
         dst.commit(batch, batch_id="rebucket-from-source")
         return dst
@@ -1286,6 +1303,7 @@ class IcebergLiteTable:
         cols = _Columns(m["columns"], dict(m.get("aliases") or {}), set(), {}, False)
         scope = _Scope(
             self._empty_state(spark, m["columns"]),
+            [c for c, _ in _state_fields(m["columns"])],
             list(range(self.n_buckets)),
             bool(m.get("partial_state")),
             {"rows": 0, "deletes": 0},
@@ -1401,9 +1419,8 @@ class IcebergLiteTable:
     def state_checksum(self, spark: SparkSession) -> list[tuple]:
         """Per-row sha256(content) keyed by (repo, path) — the BASELINE
         invariant — as a sorted list for test comparison."""
-        df = self.read(spark)
-        rows = (
-            df.select(*S.MERGE_KEYS, F.sha2(F.coalesce(F.col("content"), F.lit("")), 256).alias("h"))
-            .collect()
-        )
+        keys = ", ".join(map(ident, S.MERGE_KEYS))
+        rows = self._read_live(
+            spark, select=f"{keys}, sha2(coalesce(content, ''), 256) AS h"
+        ).collect()
         return sorted((r["repo"], r["path"], r["h"]) for r in rows)

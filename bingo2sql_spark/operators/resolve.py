@@ -13,18 +13,22 @@ from __future__ import annotations
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from bingo2sql_spark import schema as S
+from bingo2sql_spark.functions.sqltext import field, ident, sql_over, str_lit
+
+# Every plan here is SQL text handed to Spark in one statement (see
+# functions.sqltext): a Column tree costs a py4j round trip per node.
 
 
 def with_key(events: DataFrame) -> DataFrame:
     """Materialize merge-key columns from whichever image is present
-    (insert: after only; delete: before only)."""
-    out = events
-    for k in S.MERGE_KEYS:
-        out = out.withColumn(k, F.coalesce(F.col(f"after.{k}"), F.col(f"before.{k}")))
-    return out
+    (insert: after only; delete: before only), replacing columns of the
+    same name."""
+    keyed = {k: f"coalesce({field('after', k)}, {field('before', k)})" for k in S.MERGE_KEYS}
+    cols = [f"{keyed.pop(c)} AS {ident(c)}" if c in keyed else ident(c) for c in events.columns]
+    cols += [f"{e} AS {ident(k)}" for k, e in keyed.items()]
+    return sql_over(events, lambda rel: f"SELECT {', '.join(cols)} FROM {rel}")
 
 
 def lww_resolve(events: DataFrame) -> DataFrame:
@@ -49,11 +53,13 @@ def lww_resolve(events: DataFrame) -> DataFrame:
     a combine-based exchange at 10^10 events."""
     ev = with_key(events)
     row_cols = [c for c in ev.columns if c not in S.MERGE_KEYS]
-    winner = F.max_by(F.struct(*row_cols), F.col("seq")).alias("_w")
-    return (
-        ev.groupBy(*S.MERGE_KEYS)
-        .agg(winner)
-        .select(*S.MERGE_KEYS, "_w.*")
+    keys = ", ".join(map(ident, S.MERGE_KEYS))
+    out = ", ".join(f"_w.{ident(c)} AS {ident(c)}" for c in row_cols)
+    return sql_over(
+        ev,
+        lambda rel: f"SELECT {keys}, {out} FROM (SELECT {keys}, "
+        f"max_by(struct({', '.join(map(ident, row_cols))}), seq) AS _w "
+        f"FROM {rel} GROUP BY {keys})",
     )
 
 
@@ -101,42 +107,39 @@ def to_upsert_rows(
     sources = sources or {}
     after_fields = set(events.schema["after"].dataType.fieldNames())
 
-    def wire(name: str):
+    def wire(name: str) -> str:
         if name in after_fields:
-            return F.col(f"after.{name}").cast("string")
-        return F.lit(None).cast("string")
+            return f"CAST({field('after', name)} AS STRING)"
+        return "CAST(NULL AS STRING)"
 
-    proj = [F.col(k) for k in S.MERGE_KEYS]
+    proj = [ident(k) for k in S.MERGE_KEYS]
     for c in columns:
         if c in S.MERGE_KEYS:
             continue
         # later segments override earlier ones: build the CASE from the
-        # earliest boundary up, each `when` stacked on top
-        expr = F.lit(None).cast("string")
+        # earliest boundary up, each `WHEN` stacked on top
+        expr = "CAST(NULL AS STRING)"
         for lo, name in sources.get(c) or [(None, c)]:
-            expr = wire(name) if lo is None else F.when(
-                F.col("seq") >= F.lit(lo), wire(name)
-            ).otherwise(expr)
-        proj.append(expr.alias(c))
-    proj.append((F.col("op") == S.OP_DELETE).alias("_deleted"))
-    proj.append(F.col("seq").alias("_seq"))
-    proj.append(F.col("log_file").alias("_log_file"))
-    proj.append(F.col("log_pos").alias("_log_pos"))
+            expr = wire(name) if lo is None else (
+                f"CASE WHEN seq >= {int(lo)} THEN {wire(name)} ELSE {expr} END"
+            )
+        proj.append(f"{expr} AS {ident(c)}")
+    proj.append(f"op = {str_lit(S.OP_DELETE)} AS _deleted")
+    proj += ["seq AS _seq", "log_file AS _log_file", "log_pos AS _log_pos"]
     if minimal:
         # the sparse never-written markers of apply._per_key_winners
-        data_cols = F.array(*[F.lit(c) for c in columns if c not in S.MERGE_KEYS])
-        uncarried = F.array_except(data_cols.cast("array<string>"), _presence(sources))
-        nulls = F.transform(uncarried, lambda _c: F.lit(None).cast("bigint"))
-        proj.append(F.map_from_arrays(uncarried, nulls).alias("_col_seqs"))
-    return events.select(*proj)
+        data_cols = ", ".join(str_lit(c) for c in columns if c not in S.MERGE_KEYS)
+        carried = _presence(sources)
+        uncarried = f"array_except(CAST(array({data_cols}) AS ARRAY<STRING>), {carried})"
+        nulls = f"transform({uncarried}, x -> CAST(NULL AS BIGINT))"
+        proj.append(f"map_from_arrays({uncarried}, {nulls}) AS _col_seqs")
+    return sql_over(events, lambda rel: f"SELECT {', '.join(proj)} FROM {rel}")
 
 
-def _presence(sources: dict[str, list[tuple[int | None, str]]]):
+def _presence(sources: dict[str, list[tuple[int | None, str]]]) -> str:
     """The columns a MINIMAL update carries under a DDL timeline, NULL
-    for full images (to_upsert_rows)."""
-    mask = F.when(F.col("op") == S.OP_UPDATE, F.col("changed_cols")).cast(
-        "array<string>"
-    )
+    for full images (to_upsert_rows), as SQL text."""
+    mask = f"CAST(CASE WHEN op = {str_lit(S.OP_UPDATE)} THEN changed_cols END AS ARRAY<STRING>)"
     # rename translation FIRST: each segment's window is [its seq, next
     # segment's seq)
     rename_rules = [
@@ -146,27 +149,17 @@ def _presence(sources: dict[str, list[tuple[int | None, str]]]):
         if name != c
     ]
     if rename_rules:
-
-        def _tr(x):
-            expr = x
-            for c, lo, hi, name in rename_rules:
-                cond = x == F.lit(name)
-                if lo is not None:
-                    cond = cond & (F.col("seq") >= F.lit(lo))
-                if hi is not None:
-                    cond = cond & (F.col("seq") < F.lit(hi))
-                expr = F.when(cond, F.lit(c)).otherwise(expr)
-            return expr
-
-        mask = F.transform(mask, _tr)
-
-    def _drop_pre_alter(m, col, lo):
-        # factory, not default-arg capture: pyspark reads the lambda's
-        # full parameter count as the higher-order-function arity
-        return F.filter(m, lambda x: ~((x == F.lit(col)) & (F.col("seq") < F.lit(lo))))
-
+        expr = "x"
+        for c, lo, hi, name in rename_rules:
+            cond = f"x = {str_lit(name)}"
+            if lo is not None:
+                cond += f" AND seq >= {int(lo)}"
+            if hi is not None:
+                cond += f" AND seq < {int(hi)}"
+            expr = f"CASE WHEN {cond} THEN {str_lit(c)} ELSE {expr} END"
+        mask = f"transform({mask}, x -> {expr})"
     for c, segs in sources.items():
         lo = segs[0][0]
         if lo is not None:
-            mask = _drop_pre_alter(mask, c, lo)
+            mask = f"filter({mask}, x -> NOT (x = {str_lit(c)} AND seq < {int(lo)}))"
     return mask

@@ -19,9 +19,9 @@ from dataclasses import dataclass, field
 from typing import Any
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from bingo2sql_spark import schema as S
+from bingo2sql_spark.functions.sqltext import str_lit
 from bingo2sql_spark.operators import filters as FL
 from bingo2sql_spark.operators import flashback as FB
 from bingo2sql_spark.operators import resolve as R
@@ -163,7 +163,7 @@ def collect_ddl_rows(ev: DataFrame) -> list:
     """The batch's op='ddl' Query events — metadata-scale (one row per
     schema change), so the collect is a few rows at any data scale."""
     return (
-        ev.filter((F.col("op") == S.OP_DDL) & F.col("statement").isNotNull())
+        ev.filter(f"op = {str_lit(S.OP_DDL)} AND statement IS NOT NULL")
         .select("seq", "statement")
         .collect()
     )
@@ -231,7 +231,7 @@ def apply_batch(
             DL.validate_stored_values(
                 table.read(events.sparkSession), plan.type_checks, S.MERGE_KEYS
             )
-    ev = ev.filter(F.col("op") != S.OP_DDL)
+    ev = ev.filter(f"op != {str_lit(S.OP_DDL)}")
     if flashback:
         ev = FB.invert(ev)
     columns, sources = (plan.evolved_cols, plan.sources) if plan else (S.payload_columns(), None)

@@ -24,10 +24,9 @@ skip (checkCanParse core/parser.go:1242-1253).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from bingo2sql_spark import schema as S
-from bingo2sql_spark.functions.sqltext import ident, str_lit
+from bingo2sql_spark.functions.sqltext import field, ident, sql_over, str_lit
 
 _HEADER = [
     "seq", "log_file", "log_pos", "gtid_uuid", "gno", "ts",
@@ -104,8 +103,8 @@ def decode_events_typed(
     so a connector that keeps values typed all the way down makes this
     engine's decode stage free: `decode_events_typed` only aligns the
     wire structs to the requested registry version (missing field ->
-    typed NULL, extra field -> projected away) with Column expressions
-    that stay inside whole-stage codegen. decode_events (JSON) remains
+    typed NULL, extra field -> projected away) with expressions that
+    stay inside whole-stage codegen. decode_events (JSON) remains
     the fallback for text-landing connectors.
 
     Scale note: with `before_fields` narrowed to the merge keys, the
@@ -121,20 +120,19 @@ def decode_events_typed(
         want = set(before_fields)
         before_schema = T.StructType([f for f in payload.fields if f.name in want])
 
-    def align(colname: str, schema) -> F.Column:
+    def align(colname: str, schema) -> str:
         src = raw.schema[colname].dataType
         have = {f.name for f in src.fields}
         if [f.name for f in src.fields] == [f.name for f in schema.fields]:
-            return F.col(colname)  # exact wire/registry match: pass-through
-        inner = F.struct(
-            *[
-                (
-                    F.col(f"{colname}.{f.name}")
-                    if f.name in have
-                    else F.lit(None).cast(f.dataType)
-                ).alias(f.name)
-                for f in schema.fields
-            ]
+            return ident(colname)  # exact wire/registry match: pass-through
+        inner = ", ".join(
+            (
+                field(colname, f.name)
+                if f.name in have
+                else f"CAST(NULL AS {f.dataType.simpleString()})"
+            )
+            + f" AS {ident(f.name)}"
+            for f in schema.fields
         )
         # Rebuilding a struct from a NULL struct's fields yields a
         # struct of NULLs, not NULL — preserve image NULL-ness (insert
@@ -144,14 +142,17 @@ def decode_events_typed(
         # nested-schema pruning; probing the first merge key (non-null
         # in every present image by the wire contract — it is the row
         # identity) keeps the ReadSchema at exactly the projected fields.
-        probe = S.MERGE_KEYS[0]
-        return F.when(F.col(f"{colname}.{probe}").isNotNull(), inner)
+        probe = field(colname, S.MERGE_KEYS[0])
+        return f"CASE WHEN {probe} IS NOT NULL THEN struct({inner}) END"
 
-    return raw.select(
-        *_HEADER,
-        align("before", before_schema).alias("before"),
-        align("after", payload).alias("after"),
+    # one statement: the projection costs a few gateway calls, not a
+    # Column tree per field
+    cols = [
+        *map(ident, _HEADER),
+        align("before", before_schema) + " AS `before`",
+        align("after", payload) + " AS `after`",
         "changed_cols",
         "schema_ver",
         *(["statement"] if "statement" in raw.columns else []),
-    )
+    ]
+    return sql_over(raw, lambda rel: f"SELECT {', '.join(cols)} FROM {rel}")

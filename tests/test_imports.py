@@ -350,3 +350,58 @@ def test_environment_is_read_only_in_session():
     assert not reads, (
         "environment reads outside bingo2sql_spark/session.py:\n" + "\n".join(reads)
     )
+
+
+#: engine modules whose plans are SQL text (functions/sqltext.py): each
+#: `pyspark.sql.functions` call there is one or more py4j round trips
+SQL_TEXT_MODULES = ("operators/apply.py", "operators/resolve.py")
+
+#: the `pyspark.sql.functions` calls those modules may make, with why
+SQL_TEXT_ALLOWED = {
+    "expr": "parses one SQL text into a Column in one gateway call; the "
+    "commit's Observation metrics and bucket_col's public Column need one",
+}
+
+
+def column_builders() -> list[str]:
+    """`pyspark.sql.functions` uses in SQL_TEXT_MODULES other than those
+    SQL_TEXT_ALLOWED names: attributes of the module under any alias or
+    its dotted path, and names imported from it."""
+    found = []
+    for rel in SQL_TEXT_MODULES:
+        p = PACKAGE / rel
+        tree = ast.parse(p.read_text())
+        aliases = set()
+        for node in ast.walk(tree):
+            if isinstance(node, ast.ImportFrom) and node.module == "pyspark.sql":
+                aliases |= {a.asname or a.name for a in node.names if a.name == "functions"}
+            elif isinstance(node, ast.Import):
+                aliases |= {
+                    a.asname for a in node.names if a.name == "pyspark.sql.functions" and a.asname
+                }
+        for node in ast.walk(tree):
+            if isinstance(node, ast.ImportFrom) and node.module == "pyspark.sql.functions":
+                names = [a.name for a in node.names if a.name not in SQL_TEXT_ALLOWED]
+            elif isinstance(node, ast.Attribute) and node.attr not in SQL_TEXT_ALLOWED and (
+                (isinstance(node.value, ast.Name) and node.value.id in aliases)
+                or ast.unparse(node.value) == "pyspark.sql.functions"
+            ):
+                names = [node.attr]
+            else:
+                continue
+            found += [f"{p.relative_to(REPO)}:{node.lineno} {n}" for n in names]
+    return found
+
+
+def test_sql_text_modules_build_no_column_trees():
+    """The table's plans (operators/apply.py) and the batch projections
+    that feed its commits (operators/resolve.py) are SQL text handed to
+    Spark in a few gateway calls per step. A Column tree built through
+    pyspark.sql.functions (F.col, F.lit, F.struct, F.when, ...) costs a
+    round trip per node, plus one more per proxy finalization; such a
+    call needs an entry with its reason in SQL_TEXT_ALLOWED."""
+    built = column_builders()
+    assert not built, (
+        "pyspark.sql.functions calls in SQL-text modules (write the "
+        "expression as SQL text, see functions/sqltext.py):\n" + "\n".join(built)
+    )

@@ -578,18 +578,12 @@ def test_read_keys_point_lookup_prunes_buckets(spark, small_events, tmp_path):
     assert t.read_keys(spark, []).count() == 0
 
 
-@pytest.mark.parametrize("write_mode", ["cow", "mor"])
-def test_read_keys_literal_quoting_and_typing(spark, small_events, tmp_path, write_mode):
-    """read_keys builds its probe keys as SQL literals: paths holding a
-    quote, a backslash, a newline and non-ASCII text must round-trip; a
-    duplicated key returns its row once; an int component matches its
-    stored string form; a None component matches nothing. Checked
-    against read() filtered to the same keys, on a CoW table and on a
-    MOR table with stored deltas."""
+def _odd_path_events(small_events):
+    """small_events with every path src/<d>/f<k>.txt rewritten by k % 5:
+    a digit string, or the path with a quote, a backslash, a newline or
+    non-ASCII text appended."""
     from pyspark.sql import functions as F
 
-    # rewrite every path src/<d>/f<k>.txt by k % 5: a digit string,
-    # or the path with a quote, a backslash, a newline or non-ASCII
     k = F.regexp_extract(F.col("after.path"), r"f(\d+)\.txt", 1)
     kb = F.regexp_extract(F.col("before.path"), r"f(\d+)\.txt", 1)
 
@@ -602,11 +596,22 @@ def test_read_keys_literal_quoting_and_typing(spark, small_events, tmp_path, wri
             .otherwise(F.concat(path, F.lit("-ünï路径")))
         )
 
-    ev = small_events.withColumn(
+    return small_events.withColumn(
         "after", F.col("after").withField("path", odd(F.col("after.path"), k))
     ).withColumn(
         "before", F.col("before").withField("path", odd(F.col("before.path"), kb))
     )
+
+
+@pytest.mark.parametrize("write_mode", ["cow", "mor"])
+def test_read_keys_literal_quoting_and_typing(spark, small_events, tmp_path, write_mode):
+    """read_keys builds its probe keys as SQL literals: paths holding a
+    quote, a backslash, a newline and non-ASCII text must round-trip; a
+    duplicated key returns its row once; an int component matches its
+    stored string form; a None component matches nothing. Checked
+    against read() filtered to the same keys, on a CoW table and on a
+    MOR table with stored deltas."""
+    ev = _odd_path_events(small_events)
     t = IcebergLiteTable(
         str(tmp_path / write_mode), n_buckets=8, write_mode=write_mode,
         max_delta_depth=4,
@@ -631,6 +636,37 @@ def test_read_keys_literal_quoting_and_typing(spark, small_events, tmp_path, wri
     got = sorted(tuple(r) for r in t.read_keys(spark, probe).collect())
     want = sorted(tuple(live[k]) for k in keys + [(repo_d, path_d)])
     assert got == want
+
+
+@pytest.mark.parametrize("write_mode", ["cow", "mor"])
+def test_read_keys_one_path_for_many_keys(spark, small_events, tmp_path, write_mode):
+    """read_keys is one plan for any number of keys: 5,000 probe keys —
+    every live key (paths with a quote, a backslash, a newline and
+    non-ASCII text among them), int and None components, duplicates and
+    keys the table never held — return exactly the rows a Python filter
+    of read() keeps. The exact-key filter is one IN predicate over the
+    merge keys: the plan holds no join and no broadcast, on a CoW table
+    and on a MOR table with stored deltas."""
+    t = IcebergLiteTable(
+        str(tmp_path / write_mode), n_buckets=8, write_mode=write_mode,
+        max_delta_depth=4,
+    )
+    ev = _odd_path_events(small_events)
+    replay(ev.filter("seq < 800"), t, batch_id="b1")
+    replay(ev.filter("seq >= 800"), t, batch_id="b2")
+    live = {(r["repo"], r["path"]): tuple(r) for r in t.read(spark).collect()}
+    keys = sorted(live)
+    probe = keys + keys[:100]
+    probe += [(r, int(p)) for r, p in keys if p.isdigit() and str(int(p)) == p]
+    probe += [(None, p) for _, p in keys[:50]] + [(r, None) for r, _ in keys[:50]]
+    probe += [(f"repo-{i}", f"src/missing/f{i}.txt") for i in range(5000 - len(probe))]
+    assert len(probe) == 5000 and any("\n" in p for _, p in keys), len(probe)
+    lookup = t.read_keys(spark, probe)
+    plan = lookup._jdf.queryExecution().executedPlan().toString()
+    assert "Join" not in plan and "BroadcastExchange" not in plan, plan
+    wanted = {tuple(str(v) if isinstance(v, int) else v for v in k) for k in probe}
+    got = sorted(tuple(r) for r in lookup.collect())
+    assert got == sorted(row for k, row in live.items() if k in wanted)
 
 
 def test_read_keys_prunes_minimal_mor_deltas(spark, tmp_path):
