@@ -18,9 +18,12 @@ ints — same statistical behavior, trivially portable to any SQL oracle.
 from __future__ import annotations
 
 import contextlib
+import functools
 import json
 import logging
+import operator
 import os
+import time
 import uuid as _uuid
 
 from pyspark import SparkContext
@@ -42,25 +45,20 @@ _CC_BROADCAST_MAX_VERTICES = 5_000_000
 _CC_JUMP_AFTER = 2
 
 
-def _log_dropped(
-    counts: DataFrame, dropped: Column, what: str, log_dropped: bool
+def _log_cap(
+    df: DataFrame, keys: list[str], max_size: int, what: str, log_dropped: bool
 ) -> DataFrame:
-    """No-silent-caps rule: the degenerate-bucket caps below default ON,
-    so what they drop must be visible. Always logs that the cap is
-    active at plan-build time; with `log_dropped=True` additionally runs
-    the bucket-count aggregate NOW (one narrow map-side-combined job —
-    the shuffle carries one row per distinct bucket) and logs the exact
-    number of dropped groups (warning when nonzero).
-
-    Why not a free-riding Observation: pyspark's Observation/
-    CollectMetrics returns a schema-less row (NPE in
-    Observation.getOrEmpty, Spark 4.1) when the observed subtree is
-    DUPLICATED by the pair generators' self-joins — the capped stream
-    appears on both sides of the bucket join, so the metrics node
-    executes more than once per query and the captured row is unusable.
-    An explicit opt-in count job is the reliable mechanism."""
+    """The groups of `keys` holding more than `max_size` rows of `df`
+    (lazily), logged. No silent caps: every degenerate-group cap logs
+    that it is active at plan-build time; with `log_dropped=True` it
+    also counts those groups NOW (one map-side-combined job) and logs
+    that number (a warning when nonzero). Not an Observation: the pair
+    generators' self-joins duplicate the capped subtree, so a
+    CollectMetrics node runs more than once per query and returns a
+    schema-less row (NPE in Observation.getOrEmpty, Spark 4.1)."""
+    full = df.groupBy(*keys).count().filter(F.col("count") > max_size).select(*keys)
     if log_dropped:
-        n = counts.filter(dropped).count()
+        n = full.count()
         (logger.warning if n else logger.info)(
             "%s: cap dropped %d degenerate group(s); pass the cap argument "
             "explicitly (or None) to change this",
@@ -73,19 +71,63 @@ def _log_dropped(
             "it drops; cap argument None disables it)",
             what,
         )
-    return counts
+    return full
 
 
-#: every DataFrame _maybe_persist cached and every label table
+def _cap_groups(
+    df: DataFrame, keys: list[str], max_size: int | None, what: str, log_dropped: bool = False
+) -> DataFrame:
+    """`df` without the rows of its degenerate groups: every group of
+    `keys` holding more than `max_size` rows drops out (a group of B
+    rows yields B^2/2 candidate pairs); a false `max_size` disables it.
+    The cap of the generators whose pair expansion is far larger than
+    the capped rows (simhash bands, cosine SRP buckets).
+
+    Shape: a broadcast LEFT ANTI join against the over-full groups.
+    There are at most rows/max_size of them, so the build side is small
+    by construction, and the probe side keeps its partitioning: the
+    expansion keeps its parallelism whatever AQE does with the small
+    count exchange. (A window count hands the expansion the window
+    exchange's partitioning, which AQE coalesced to 1-2 partitions in
+    the simhash generator: 2.9 s -> 8.0 s at sf1.0.)"""
+    if not max_size:
+        return df
+    full = _log_cap(df, keys, max_size, what, log_dropped)
+    return df.join(F.broadcast(full), keys, "left_anti")
+
+
+def _cap_groups_in_window(
+    df: DataFrame, keys: list[str], max_size: int | None, what: str, log_dropped: bool = False
+) -> DataFrame:
+    """_cap_groups as a count window over the groups' exchange: the cap
+    of the generators that self-join on the same `keys` (minhash bands,
+    n-gram postings), whose join reuses that one exchange. The broadcast
+    anti join costs them a second shuffle of the rows, for its count
+    aggregate: their groups hold a handful of rows each, so the partial
+    count barely combines. Measured at sf0.1, local[4], median CPU with
+    the window against the anti join: dedup_connected_keepers 5.5 vs
+    7.2 s, dedup_minhash_lsh_pairs 3.7 vs 4.4 s, dedup_ngram_jaccard 2.5
+    vs 2.7 s."""
+    if not max_size:
+        return df
+    _log_cap(df, keys, max_size, what, log_dropped)
+    return (
+        df.withColumn("_n", F.count("*").over(Window.partitionBy(*keys)))
+        .filter(F.col("_n") <= max_size)
+        .drop("_n")
+    )
+
+
+#: every DataFrame _persisted cached and every label table
 #: connected_components returned, so a long-lived driver can release
 #: the blocks without nuking the whole session cache
 _PERSISTED: list[DataFrame] = []
 
 
-def _maybe_persist(df: DataFrame, persist: bool) -> DataFrame:
+def _persisted(df: DataFrame) -> DataFrame:
     """The pair generators' self-join/cap branches reference their
     per-doc signature/posting table 3-5x, and each reference would
-    re-run the shingle-explode + aggregate subtree — persist (default)
+    re-run the shingle-explode + aggregate subtree — persist
     materializes the SMALL table once.
 
     Leak control (ADVICE r5): persisted blocks are REGISTERED and a
@@ -93,13 +135,67 @@ def _maybe_persist(df: DataFrame, persist: bool) -> DataFrame:
     loops) releases them with `release_persisted()` once the returned
     pairs are consumed — unpersisting a consumed DataFrame is always
     safe (later actions just recompute). Callers that never release can
-    pass persist=False (recompute per branch, zero storage growth) or
     clear in bulk via spark.catalog.clearCache()."""
-    if not persist:
-        return df
     df = df.persist()
     _PERSISTED.append(df)
     return df
+
+
+def _evict(rows: DataFrame, changed: DataFrame, key_cols: list[str]) -> DataFrame:
+    """`rows` without every key that `changed` carries: a null-SAFE anti
+    join, so a changed or deleted null-keyed row still leaves (plain
+    column equality never matches NULLs)."""
+    keys = changed.select(*key_cols).distinct()
+    cond = functools.reduce(operator.and_, [rows[c].eqNullSafe(keys[c]) for c in key_cols])
+    return rows.join(keys, cond, "left_anti")
+
+
+def _band_rows(sig: DataFrame, id_cols: list[str], probes: list[Column]) -> DataFrame:
+    """(ids..., band, probe): one row per band of each signature, `band`
+    the index into `probes` — the rows the banded pair generators
+    self-join and SignatureStore.probes() persists."""
+    bands = [F.struct(F.lit(b).alias("band"), p.alias("probe")) for b, p in enumerate(probes)]
+    return sig.select(*id_cols, F.explode(F.array(*bands)).alias("_bd")).select(
+        *id_cols, "_bd.band", "_bd.probe"
+    )
+
+
+def _minhash_band_probes(k: int, bands: int) -> list[Column]:
+    """LSH band digests of the mh0..mh{k-1} columns: md5 over each band's
+    k/bands consecutive columns. A `bands` that does not divide `k`
+    would leave the last k % bands columns out of every band."""
+    if k % bands:
+        raise ValueError(f"bands={bands} must divide k={k}")
+    rpb = k // bands
+    return [
+        F.md5(F.concat_ws("|", *[F.col(f"mh{b * rpb + r}") for r in range(rpb)]))
+        for b in range(bands)
+    ]
+
+
+def _simhash_band_probes(n_bits: int, bands: int) -> list[Column]:
+    """Manku band substrings of the `simhash` bit string: `bands`
+    contiguous n_bits/bands-bit slices."""
+    if n_bits % bands:
+        raise ValueError(f"n_bits={n_bits} must divide evenly into bands={bands}")
+    w = n_bits // bands
+    return [F.substring("simhash", b * w + 1, w) for b in range(bands)]
+
+
+def _band_pairs(rows: DataFrame, id_col: str) -> DataFrame:
+    """Candidate pairs (id_a < id_b) of the docs sharing a (band, probe)
+    bucket of `_band_rows`; a pair sharing several bands is one row."""
+    a, b = rows.alias("a"), rows.alias("b")
+    return (
+        a.join(
+            b,
+            (F.col("a.band") == F.col("b.band"))
+            & (F.col("a.probe") == F.col("b.probe"))
+            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+        )
+        .select(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
+        .distinct()
+    )
 
 
 def _free(df: DataFrame) -> None:
@@ -173,7 +269,7 @@ def _exploded_shingles(
     shingle)."""
     words = docs.select(
         F.col(id_col),
-        F.posexplode(F.split(F.trim(F.col(text_col)), r"\s+")).alias("_pos", "_w"),
+        F.posexplode(TX.tokens(text_col)).alias("_pos", "_w"),
     )
     w = Window.partitionBy(id_col).orderBy("_pos")
     leads = [F.col("_w")] + [F.lead("_w", j).over(w) for j in range(1, shingle_n)]
@@ -237,76 +333,39 @@ def minhash_candidate_pairs(
     shingle_n: int = 3,
     max_bucket_size: int | None = 5000,
     log_dropped: bool = False,
-    persist: bool = True,
 ) -> DataFrame:
-    """LSH banding: signature split into `bands` bands of k/bands rows;
-    docs sharing any band digest become candidate pairs (id_a < id_b).
+    """LSH banding: signature split into `bands` bands of k/bands rows
+    (`bands` must divide `k`); docs sharing any band digest become
+    candidate pairs (id_a < id_b).
 
-    Scale shape: explode to (band_id, band_digest, doc) — the groupBy on
-    the digest is the only shuffle; a self-join *within* buckets yields
+    Scale shape: explode to (band, digest, doc) — the join on the
+    digest is the pair expansion; a self-join *within* buckets yields
     pairs. Hot buckets (boilerplate docs) are the skew risk — AQE skew
     join spreads them, and `max_bucket_size` drops degenerate buckets
-    outright (a bucket of B docs yields B^2/2 pairs; at web scale a
-    boilerplate band with 10^6 members is 5*10^11 pairs — dropping it
-    loses only pairs whose OTHER bands also degenerate, standard
-    near-dup practice). Capped pairs may still surface via the doc's
-    other bands.
+    outright (_cap_groups_in_window; a bucket of B docs yields B^2/2
+    pairs; at web scale a boilerplate band with 10^6 members is 5*10^11
+    pairs — dropping it loses only pairs whose OTHER bands also
+    degenerate, standard near-dup practice). Capped pairs may still
+    surface via the doc's other bands.
 
     The cap defaults ON (VERDICT r4 #3: a naive caller at corpus scale
     must not get the quadratic blow-up by default; 5000 docs/bucket
     bounds any one bucket at ~12.5M pairs). Dropped-bucket counts are
-    logged when the plan runs (no silent caps); pass None for the exact
-    uncapped pair set."""
-    rows_per_band = k // bands
+    logged (no silent caps); pass None for the exact uncapped pair set."""
+    probes = _minhash_band_probes(k, bands)
     # persist the per-doc signature table (one SMALL row per doc): the
     # self-join/cap branches reference it 3-4x, and without
     # materialization each reference RE-RUNS the shingle explode + k-way
     # aggregate — the expensive part of the whole operator
-    sig = _maybe_persist(minhash_signature(docs, text_col, id_col, k, shingle_n), persist)
-    band_cols = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.md5(F.concat_ws("|", *[F.col(f"mh{b * rows_per_band + r}") for r in range(rows_per_band)])).alias(
-                "digest"
-            ),
-        )
-        for b in range(bands)
-    ]
-    exploded = sig.select(F.col(id_col), F.explode(F.array(*band_cols)).alias("bd")).select(
-        F.col(id_col), F.col("bd.band").alias("band"), F.col("bd.digest").alias("digest")
+    sig = _persisted(minhash_signature(docs, text_col, id_col, k, shingle_n))
+    rows = _cap_groups_in_window(
+        _band_rows(sig, [id_col], probes),
+        ["band", "probe"],
+        max_bucket_size,
+        f"minhash_candidate_pairs(max_bucket_size={max_bucket_size})",
+        log_dropped,
     )
-    if max_bucket_size:
-        _log_dropped(
-            exploded.groupBy("band", "digest").count(),
-            F.col("count") > max_bucket_size,
-            f"minhash_candidate_pairs(max_bucket_size={max_bucket_size})",
-            log_dropped,
-        )
-        # cap via a window over the band exchange instead of a count
-        # groupBy + semi-join: ONE exchange on (band, digest), whose
-        # partitioning the candidate self-join then reuses (no further
-        # exchange before the pair distinct) — measured 1.3-2.1s ->
-        # 0.7-1.4s for the capped pair generation at sf1.0, identical
-        # pair set
-        wb = Window.partitionBy("band", "digest")
-        exploded = (
-            exploded.withColumn("_bc", F.count("*").over(wb))
-            .filter(F.col("_bc") <= max_bucket_size)
-            .drop("_bc")
-        )
-    a = exploded.alias("a")
-    b = exploded.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.digest") == F.col("b.digest"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
-        .distinct()
-    )
-    return pairs
+    return _band_pairs(rows, id_col)
 
 
 def connected_components(
@@ -333,6 +392,9 @@ def connected_components(
     (test-pinned), and clique-like near-dup components still converge
     in 2-3, so the common case pays exactly the plain-propagation
     price. Convergence is a counted aggregate, never a label collect.
+    The round count (the fused first round included) and each round's
+    seconds are logged at INFO on convergence, timed with the process
+    clock around the jobs each round already runs.
     Raises RuntimeError if max_iter rounds do not converge — a
     silently-unstable labeling would mis-assign keepers.
 
@@ -389,12 +451,14 @@ def connected_components(
         ids = sym.select(F.col("src").alias("id"))
         if vertices is not None:
             ids = ids.unionByName(vertices.select(F.col(id_col).alias("id")))
+        t0 = time.perf_counter()
         labels, prev_sum = observed_ckpt(
             sym.select(F.col("dst").alias("id"), F.col("src").alias("component"))
             .unionByName(ids.withColumn("component", F.col("id")))
             .groupBy("id")
             .agg(F.min("component").alias("component"))
         )
+        secs = [time.perf_counter() - t0]
         # Size-adaptive join strategy (guide §3.1): the vertex SET is fixed
         # across rounds, so one count decides every round's plan. When the
         # label table fits a broadcast (rows, not a size estimate — the
@@ -409,6 +473,7 @@ def connected_components(
             return F.broadcast(df) if small else df
 
         for i in range(1, max_iter):
+            t0 = time.perf_counter()
             prev = labels
             if i - 1 >= _CC_JUMP_AFTER:
                 # pointer jumping: follow the label one hop (component is
@@ -447,7 +512,13 @@ def connected_components(
             # any scale (a long sum can overflow past ~10^9 int64 ids).
             labels, cur_sum = observed_ckpt(prop)
             _free(prev)  # materialized: the new labels read none of its blocks
+            secs.append(time.perf_counter() - t0)
             if cur_sum == prev_sum:
+                logger.info(
+                    "connected_components: converged in %d rounds; seconds per round: %s",
+                    len(secs),
+                    " ".join(f"{x:.3f}" for x in secs),
+                )
                 _free(sym)
                 _PERSISTED.append(labels)
                 return labels.select(F.col("id"), F.col("component"))
@@ -597,15 +668,7 @@ def _update_keyed_signatures(
     manifest-pruned to changed buckets), and the kept-side anti-join
     shuffles on the merge keys both tables are already bucketed by. Per
     micro-batch cost is O(changed docs), never O(corpus)."""
-    changed_keys = changes.select(*key_cols).distinct()
-    left = sigs.select(*key_cols, *sig_cols)
-    # null-SAFE anti join: a deleted null-keyed signature must still be
-    # evicted (plain column equality never matches NULLs)
-    cond = None
-    for c in key_cols:
-        eq = left[c].eqNullSafe(changed_keys[c])
-        cond = eq if cond is None else (cond & eq)
-    kept = left.join(changed_keys, cond, "left_anti")
+    kept = _evict(sigs.select(*key_cols, *sig_cols), changes, key_cols)
     live = changes.filter(F.col("op") != "delete").select(
         *key_cols, F.col(f"after.{text_col}").alias("_t")
     )
@@ -690,7 +753,6 @@ def duplicate_span_stats(
     id_col: str = "doc_id",
     window: int = 32,
     stride: int = 16,
-    persist: bool = True,
 ) -> DataFrame:
     """Exact duplicate-SPAN detection — the C4/RefinedWeb-style signal
     for boilerplate shared across documents that whole-doc hashing
@@ -716,7 +778,7 @@ def duplicate_span_stats(
     with total tokens / stride."""
     if window <= 0 or stride <= 0:
         raise ValueError("window and stride must be positive")
-    t = F.split(F.trim(F.col(text_col)), r"\s+")
+    t = TX.tokens(text_col)
     n = F.size(t)
     n_spans = F.greatest(
         (F.floor((n - window) / stride) + 1).cast("int"), F.lit(1)
@@ -728,9 +790,7 @@ def duplicate_span_stats(
             lambda i: F.md5(F.concat_ws(" ", F.slice(t, i * stride + 1, window))),
         )
     )
-    per_doc = _maybe_persist(
-        docs.select(F.col(id_col), F.explode(spans).alias("_span")), persist
-    )
+    per_doc = _persisted(docs.select(F.col(id_col), F.explode(spans).alias("_span")))
     # (id, span) rows are distinct by construction (array_distinct per
     # doc), so count(*) == countDistinct(id) per span — the plain count
     # keeps full map-side combining
@@ -875,61 +935,25 @@ class SignatureStore:
 
     def _build_probes(self, sigs: DataFrame) -> DataFrame:
         """Family-specific banded probe projection of the signature
-        table — (key_cols..., band, probe):
+        table — (key_cols..., band, probe), through the band projection
+        the family's pair generator uses:
 
-        - minhash: LSH band digests (minhash_candidate_pairs' banding,
-          md5 over each band's rows_per_band signature columns)
-        - simhash: Manku band substrings (simhash_pairs_banded's 4x16
-          split at the defaults)
+        - minhash: LSH band digests (minhash_candidate_pairs' banding)
+        - simhash: Manku band substrings (simhash_pairs_banded's banding)
         - embedding: the SRP sign-bucket code per hyperplane table
-          (lsh_topk's multi-table probes; band = table index)
+          (lsh_topk's multi-table codes; band = table index), all tables
+          from one Arrow pass
         """
         if self.family == "minhash":
-            if self.k % self.bands:
-                raise ValueError(f"bands={self.bands} must divide k={self.k}")
-            rpb = self.k // self.bands
-            structs = [
-                F.struct(
-                    F.lit(b).alias("band"),
-                    F.md5(
-                        F.concat_ws(
-                            "|", *[F.col(f"mh{b * rpb + r}") for r in range(rpb)]
-                        )
-                    ).alias("probe"),
-                )
-                for b in range(self.bands)
-            ]
+            probes = _minhash_band_probes(self.k, self.bands)
         elif self.family == "simhash":
-            if self.n_bits % self.bands:
-                raise ValueError(
-                    f"bands={self.bands} must divide n_bits={self.n_bits}"
-                )
-            w = self.n_bits // self.bands
-            structs = [
-                F.struct(
-                    F.lit(b).alias("band"),
-                    F.substring("simhash", b * w + 1, w).alias("probe"),
-                )
-                for b in range(self.bands)
-            ]
+            probes = _simhash_band_probes(self.n_bits, self.bands)
         else:
-            from bingo2sql_spark.operators.similarity import with_srp_bucket_arrow
+            from bingo2sql_spark.operators.similarity import with_srp_codes
 
-            out = sigs
-            for t in range(self.bands):
-                out = with_srp_bucket_arrow(
-                    out, "embedding", self.n_planes, self.dim, plane_offset=t * self.n_planes
-                ).withColumnRenamed("_bucket", f"_b{t}")
-            structs = [
-                F.struct(F.lit(t).alias("band"), F.col(f"_b{t}").alias("probe"))
-                for t in range(self.bands)
-            ]
-            return out.select(
-                *self.key_cols, F.explode(F.array(*structs)).alias("_bd")
-            ).select(*self.key_cols, "_bd.band", "_bd.probe")
-        return sigs.select(
-            *self.key_cols, F.explode(F.array(*structs)).alias("_bd")
-        ).select(*self.key_cols, "_bd.band", "_bd.probe")
+            sigs = with_srp_codes(sigs, "embedding", self.n_planes, self.dim, self.bands)
+            probes = [F.col("_codes")[t] for t in range(self.bands)]
+        return _band_rows(sigs, self.key_cols, probes)
 
     def probes(self, spark) -> DataFrame:
         """The CURRENT version's banded probe table, persisted beside
@@ -1051,9 +1075,7 @@ def simhash_signatures(docs: DataFrame, text_col: str = "text", id_col: str = "d
     md5('<j//32>:' || token) beyond — md5 yields 32 hex chars, so
     64-bit signatures (the production width, see simhash_pairs_banded)
     need a second salted hash. Values for n_bits <= 32 are unchanged."""
-    words = docs.select(
-        F.col(id_col), F.explode(F.split(F.trim(F.col(text_col)), r"\s+")).alias("_w")
-    )
+    words = docs.select(F.col(id_col), F.explode(TX.tokens(text_col)).alias("_w"))
     n_hashes = (n_bits + 31) // 32
     for h in range(n_hashes):
         src = F.col("_w") if h == 0 else F.concat(F.lit(f"{h}:"), F.col("_w"))
@@ -1078,7 +1100,6 @@ def simhash_pairs_banded(
     max_hamming: int = 3,
     max_bucket_size: int | None = 5000,
     log_dropped: bool = False,
-    persist: bool = True,
 ) -> DataFrame:
     """Near-dup pairs by 64-bit SimHash with BANDED probe tables — the
     Manku/Jain/Sarma web-dedup layout (WWW'07) the production world runs
@@ -1098,63 +1119,30 @@ def simhash_pairs_banded(
     the true Hamming distance (n_bits positional compares, all codegen)
     filters to <= max_hamming. Wide exchanges: the band groupBy/join and
     the two signature joins — all hash joins on bounded keys, never
-    all-pairs. `max_bucket_size` drops degenerate buckets (logged, no
-    silent caps); completeness then holds for every pair with a
-    surviving shared band, as in the LSH cap.
+    all-pairs. `max_bucket_size` drops degenerate buckets (_cap_groups,
+    logged, no silent caps); completeness then holds for every pair with
+    a surviving shared band, as in the LSH cap.
 
     Returns (id_a, id_b, hamming) with id_a < id_b."""
-    if n_bits % bands != 0:
-        raise ValueError(f"n_bits={n_bits} must divide evenly into bands={bands}")
+    probes = _simhash_band_probes(n_bits, bands)
     if not 0 <= max_hamming < bands:
         raise ValueError(
             f"max_hamming={max_hamming} needs bands >= max_hamming+1 "
             f"(pigeonhole completeness), got bands={bands}"
         )
-    width = n_bits // bands
     # persist: the band explode, candidate self-join and the two
     # verification joins reference the signature table 4-5x — without
     # materialization each re-runs the token explode + n_bits-way
     # aggregate (measured 3-4x the whole operator's cost at 64 bits)
-    sig = _maybe_persist(
-        simhash_signatures(docs, text_col=text_col, id_col=id_col, n_bits=n_bits),
-        persist,
+    sig = _persisted(simhash_signatures(docs, text_col=text_col, id_col=id_col, n_bits=n_bits))
+    rows = _cap_groups(
+        _band_rows(sig, [id_col], probes),
+        ["band", "probe"],
+        max_bucket_size,
+        f"simhash_pairs_banded(max_bucket_size={max_bucket_size})",
+        log_dropped,
     )
-    band_cols = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.substring("simhash", b * width + 1, width).alias("bits"),
-        )
-        for b in range(bands)
-    ]
-    exploded = sig.select(
-        F.col(id_col), F.explode(F.array(*band_cols)).alias("bd")
-    ).select(F.col(id_col), F.col("bd.band").alias("band"), F.col("bd.bits").alias("bits"))
-    if max_bucket_size is not None:
-        counts = _log_dropped(
-            exploded.groupBy("band", "bits").count(),
-            F.col("count") > max_bucket_size,
-            f"simhash_pairs_banded(max_bucket_size={max_bucket_size})",
-            log_dropped,
-        )
-        # cap via count + semi-join, NOT the window-cap used by
-        # minhash_candidate_pairs: this operator's candidate expansion
-        # is orders of magnitude larger than its band table (9.6M pairs
-        # from 120k band rows at sf1.0), and AQE coalesces the small
-        # window exchange to 1-2 partitions — the expansion then
-        # inherits that starved parallelism (measured 2.9s -> 8.0s).
-        ok = counts.filter(F.col("count") <= max_bucket_size).select("band", "bits")
-        exploded = exploded.join(ok, ["band", "bits"], "left_semi")
-    a, b = exploded.alias("a"), exploded.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bits") == F.col("b.bits"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
-        .distinct()  # pairs sharing several bands collapse to one row
-    )
+    cand = _band_pairs(rows, id_col)
     # exact Hamming on PACKED 32-bit words: the bit string converts to
     # ceil(n_bits/32) longs ONCE per doc (conv is exact for '0'/'1'
     # strings <= 32 chars), and each candidate pair costs xor+bit_count
@@ -1195,7 +1183,6 @@ def ngram_jaccard_pairs(
     block_col: str | None = None,
     max_doc_freq: int | None = 1000,
     log_dropped: bool = False,
-    persist: bool = True,
 ) -> DataFrame:
     """Exact n-gram Jaccard via an INVERTED INDEX: explode distinct
     shingles, self-join on the shingle (within the optional block),
@@ -1208,32 +1195,19 @@ def ngram_jaccard_pairs(
     occur in more than that many docs — standard near-dup practice;
     changes jaccard for the dropped shingles only). The cap defaults ON
     (VERDICT r4 #3: a 10^6-doc boilerplate shingle is 5*10^11 join rows)
-    with dropped-shingle counts logged when the plan runs; pass None for
-    the exact uncapped jaccard."""
+    with dropped-shingle counts logged (_cap_groups_in_window); pass None
+    for the exact uncapped jaccard."""
     exploded = _exploded_shingles(docs, text_col, id_col, shingle_n)
     if block_col:
         exploded = exploded.join(docs.select(id_col, block_col), id_col)
     posts = exploded.select(
         F.col(id_col), *([F.col(block_col)] if block_col else []), F.col("shingle").alias("s")
     ).distinct()
-    posts = _maybe_persist(posts, persist)  # sizes, cap count, both join sides
+    posts = _persisted(posts)  # sizes, cap count, both join sides
     sizes = posts.groupBy(id_col).agg(F.count("*").alias("n"))
-    if max_doc_freq:
-        _log_dropped(
-            posts.groupBy("s").count(),
-            F.col("count") > max_doc_freq,
-            f"ngram_jaccard_pairs(max_doc_freq={max_doc_freq})",
-            log_dropped,
-        )
-        # window cap over the posting exchange (see
-        # minhash_candidate_pairs): the inverted-index self-join on the
-        # shingle reuses the window's partitioning
-        wp = Window.partitionBy("s")
-        posts = (
-            posts.withColumn("_pc", F.count("*").over(wp))
-            .filter(F.col("_pc") <= max_doc_freq)
-            .drop("_pc")
-        )
+    posts = _cap_groups_in_window(
+        posts, ["s"], max_doc_freq, f"ngram_jaccard_pairs(max_doc_freq={max_doc_freq})", log_dropped
+    )
     a, b = posts.alias("a"), posts.alias("b")
     cond = (F.col("a.s") == F.col("b.s")) & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
     if block_col:

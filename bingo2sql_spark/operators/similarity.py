@@ -20,6 +20,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from bingo2sql_spark.functions import text as TX
+from bingo2sql_spark.operators.dedup import _cap_groups, _evict, _persisted
 from bingo2sql_spark.session import on_python_worker
 
 
@@ -44,6 +46,12 @@ def _round_half_away(x):
     """Match Spark/DuckDB round(): half away from zero (np.rint is
     half-to-even and would flip exact .5 boundaries)."""
     return np.where(x >= 0, np.floor(x + 0.5), np.ceil(x - 0.5)).astype("int64")
+
+
+def _scaled(vectors) -> np.ndarray:
+    """round(x*1000) int64 matrix of a sequence of embedding vectors —
+    the exact integer proxy every scorer and coder computes on."""
+    return _round_half_away(np.array(list(vectors), dtype="float64") * 1000)
 
 
 def _exact_matmul(a, b):
@@ -75,11 +83,55 @@ def dot_int_arrow(a: F.Column, b: F.Column) -> F.Column:
     def _dot(xs: pd.Series, ys: pd.Series) -> pd.Series:
         if len(xs) == 0:
             return pd.Series([], dtype="int64")
-        va = _round_half_away(np.array(list(xs), dtype="float64") * 1000)
-        vb = _round_half_away(np.array(list(ys), dtype="float64") * 1000)
-        return pd.Series(np.einsum("ij,ij->i", va, vb), dtype="int64")
+        return pd.Series(np.einsum("ij,ij->i", _scaled(xs), _scaled(ys)), dtype="int64")
 
     return _dot(a, b)
+
+
+def _local_topk(ids, vmat, qids, qmat, k: int, query_id_col: str) -> pd.DataFrame:
+    """Each query's top-k among one block of corpus vectors (ids, int
+    matrix) under the global order — dot desc, then lower neighbor_id —
+    so the block's rows hold every global top-k candidate it owns and
+    _rank_topk finishes from them."""
+    dots = _exact_matmul(vmat, qmat.T)  # (n, q) exact int64
+    kk = min(k, len(ids))
+    order = np.lexsort((ids[None, :].repeat(len(qids), 0), -dots.T))
+    top = order[:, :kk]
+    return pd.DataFrame(
+        {
+            query_id_col: np.repeat(qids, kk),
+            "neighbor_id": ids[top].ravel(),
+            "dot_scaled": np.take_along_axis(dots.T, top, 1).ravel(),
+        }
+    )
+
+
+def _topk_schema(query_id_col: str) -> str:
+    return f"{query_id_col} long, neighbor_id long, dot_scaled long"
+
+
+def _rank_topk(scored: DataFrame, k: int, query_id_col: str) -> DataFrame:
+    """The global top-k per query of (query, neighbor_id, dot_scaled)
+    candidate rows, ranked 1..k by dot desc, then lower neighbor_id."""
+    w = Window.partitionBy(query_id_col).orderBy(
+        F.col("dot_scaled").desc(), F.col("neighbor_id").asc()
+    )
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select(query_id_col, "neighbor_id", "dot_scaled", "rank")
+    )
+
+
+def _hamming1(code: F.Column, n_planes: int) -> list[F.Column]:
+    """The n_planes '0'/'1' codes at Hamming distance 1 from `code`: the
+    buckets a near neighbor most likely straddled into (one-bit
+    multi-probe)."""
+    out = []
+    for j in range(n_planes):
+        flipped = F.when(F.substring(code, j + 1, 1) == "1", F.lit("0")).otherwise(F.lit("1"))
+        out.append(F.concat(F.substring(code, 1, j), flipped, F.substring(code, j + 2, n_planes)))
+    return out
 
 
 def brute_force_topk(
@@ -112,40 +164,20 @@ def brute_force_topk(
             "use lsh_topk for large query sets or raise max_driver_queries"
         )
     qids = np.array([r[query_id_col] for r in qrows], dtype="int64")
-    qmat = _round_half_away(np.array([r[vec_col] for r in qrows], dtype="float64") * 1000)
+    qmat = _scaled(r[vec_col] for r in qrows)
 
     @on_python_worker
     def score(batches):
         for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            vmat = _round_half_away(np.array(list(pdf[vec_col]), dtype="float64") * 1000)
-            dots = _exact_matmul(vmat, qmat.T)  # (n_batch, n_queries) exact int64
-            nb = len(pdf)
-            kk = min(k, nb)
-            ids = pdf[id_col].to_numpy()
-            # local top-k per query (ties -> lower neighbor_id)
-            order = np.lexsort((ids[None, :].repeat(len(qids), 0), -dots.T))
-            top = order[:, :kk]
-            yield pd.DataFrame(
-                {
-                    query_id_col: np.repeat(qids, kk),
-                    "neighbor_id": ids[top].ravel(),
-                    "dot_scaled": np.take_along_axis(dots.T, top, 1).ravel(),
-                }
-            )
+            if len(pdf):
+                yield _local_topk(
+                    pdf[id_col].to_numpy(), _scaled(pdf[vec_col]), qids, qmat, k, query_id_col
+                )
 
     scored = vectors.select(id_col, vec_col).mapInPandas(
-        score, schema=f"{query_id_col} long, neighbor_id long, dot_scaled long"
+        score, schema=_topk_schema(query_id_col)
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("dot_scaled").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, "neighbor_id", "dot_scaled", "rank")
-    )
+    return _rank_topk(scored, k, query_id_col)
 
 
 def cosine_near_dup_pairs(
@@ -171,7 +203,8 @@ def cosine_near_dup_pairs(
     per-pair interpreted expression ever runs, and only pairs >=
     threshold leave the executor. n_planes bounds expected bucket size
     (N / 2^n_planes); `max_bucket_size` drops degenerate buckets
-    outright (boilerplate/zero-ish embeddings that would go quadratic —
+    outright (dedup._cap_groups, logged like the other pair generators'
+    caps: boilerplate/zero-ish embeddings that would go quadratic —
     standard near-dup practice; dropped buckets lose their pairs, which
     is the documented trade). chunk_rows bounds the matmul working set
     to chunk_rows x bucket_size int64s regardless of bucket size.
@@ -184,45 +217,32 @@ def cosine_near_dup_pairs(
     fire once (both home), hamming-1 pairs fire in exactly one of their
     two home groups, probed-probed co-occurrences never fire. Cost:
     (n_planes+1)x rows into the groupBy — the standard probe trade."""
-    # int32 vector proxy from the bucket pass (see with_srp_bucket_arrow):
-    # the probe explode below fans every vector out (n_planes+1)-fold
-    # into the bucket shuffle, so carrying round(x*1000) as array<int>
-    # instead of array<double> quarters the exchange's payload bytes —
-    # the scorer consumes exactly these ints either way
-    vb = with_srp_bucket_arrow(
-        vectors, vec_col, n_planes, dim, emit_int_vec=True
-    ).select(id_col, F.col("_iv").alias(vec_col), "_bucket")
-    if max_bucket_size:
-        # persist the bucketed table: the cap-count branch and the main
-        # stream would otherwise each re-run the bucket mapInPandas
-        # (one full Arrow round-trip of every vector per reference)
-        from bingo2sql_spark.operators.dedup import _maybe_persist
-
-        vb = _maybe_persist(vb, True)
-        ok = (
-            vb.groupBy("_bucket")
-            .count()
-            .filter(F.col("count") <= max_bucket_size)
-            .select("_bucket")
-        )
-        vb = vb.join(F.broadcast(ok), "_bucket", "left_semi")
+    # int32 vector proxy from the coder (see with_srp_codes): the probe
+    # explode below fans every vector out (n_planes+1)-fold into the
+    # bucket shuffle, so carrying round(x*1000) as array<int> instead of
+    # array<double> quarters the exchange's payload bytes — the scorer
+    # consumes exactly these ints either way
+    vb = with_srp_codes(vectors, vec_col, n_planes, dim, emit_int_vec=True).select(
+        id_col, F.col("_iv").alias(vec_col), F.col("_codes")[0].alias("_bucket")
+    )
+    # persist the bucketed table when capped: the cap-count branch and
+    # the main stream would otherwise each re-run the coder (one full
+    # Arrow round-trip of every vector per reference)
+    vb = _cap_groups(
+        _persisted(vb) if max_bucket_size else vb,
+        ["_bucket"],
+        max_bucket_size,
+        f"cosine_near_dup_pairs(max_bucket_size={max_bucket_size})",
+    )
+    probes = [F.struct(F.col("_bucket").alias("_b"), F.lit(True).alias("_home"))]
     if probe_bits:
-        probes = [F.struct(F.col("_bucket").alias("_b"), F.lit(True).alias("_home"))]
-        for j in range(n_planes):
-            flipped = F.when(
-                F.substring("_bucket", j + 1, 1) == "1", F.lit("0")
-            ).otherwise(F.lit("1"))
-            code = F.concat(
-                F.substring("_bucket", 1, j), flipped, F.substring("_bucket", j + 2, n_planes)
-            )
-            probes.append(F.struct(code.alias("_b"), F.lit(False).alias("_home")))
-        vb = vb.select(
-            id_col, vec_col, F.explode(F.array(*probes)).alias("_p")
-        ).select(
-            id_col, vec_col, F.col("_p._b").alias("_bucket"), F.col("_p._home").alias("_home")
-        )
-    else:
-        vb = vb.withColumn("_home", F.lit(True))
+        probes += [
+            F.struct(c.alias("_b"), F.lit(False).alias("_home"))
+            for c in _hamming1(F.col("_bucket"), n_planes)
+        ]
+    vb = vb.select(id_col, vec_col, F.explode(F.array(*probes)).alias("_p")).select(
+        id_col, vec_col, F.col("_p._b").alias("_bucket"), F.col("_p._home").alias("_home")
+    )
 
     thr = int(threshold_scaled)
 
@@ -237,7 +257,7 @@ def cosine_near_dup_pairs(
         order = np.argsort(ids, kind="stable")
         ids = ids[order]
         home = pdf["_home"].to_numpy()[order]
-        # rows arrive with the int32 proxy from the bucket pass
+        # rows arrive with the int32 proxy from the coder
         iv = np.array(list(pdf[vec_col].iloc[order]), dtype="int64")
         out_a, out_b, out_d = [], [], []
         for i0 in range(0, n, chunk_rows):
@@ -282,9 +302,9 @@ def feature_hash_embedding(
     exploded tokens (same shape as simhash_signatures): bucket = the
     first 4 md5 hex chars mod dim, sign = parity of the 5th. Returns
     (id, embedding: array<double>), unit-L2 (zero vectors guarded)."""
-    words = docs.select(
-        F.col(id_col), F.explode(F.split(F.trim(F.col(text_col)), r"\s+")).alias("_w")
-    ).withColumn("_h", F.md5(F.col("_w")))
+    words = docs.select(F.col(id_col), F.explode(TX.tokens(text_col)).alias("_w")).withColumn(
+        "_h", F.md5(F.col("_w"))
+    )
     bucket = (F.conv(F.substring("_h", 1, 4), 16, 10).cast("long") % dim).cast("int")
     sign = (F.ascii(F.substring("_h", 5, 1)) % 2) * 2 - 1
     words = words.select(F.col(id_col), bucket.alias("_b"), sign.alias("_s"))
@@ -302,7 +322,7 @@ def feature_hash_embedding(
     )
 
 
-def _srp_weights(n_planes: int, dim: int, plane_offset: int = 0):
+def _srp_weights(n_planes: int, dim: int):
     import hashlib
 
     return np.array(
@@ -311,28 +331,28 @@ def _srp_weights(n_planes: int, dim: int, plane_offset: int = 0):
                 1 if int(hashlib.md5(f"{j}:{i}".encode()).hexdigest()[0], 16) % 2 else -1
                 for i in range(dim)
             ]
-            for j in range(plane_offset, plane_offset + n_planes)
+            for j in range(n_planes)
         ],
         dtype="int64",
     )
 
 
-def with_srp_bucket_arrow(
+def with_srp_codes(
     df: DataFrame,
     vec_col: str = "embedding",
     n_planes: int = 8,
     dim: int = 64,
-    plane_offset: int = 0,
+    n_tables: int = 1,
     emit_int_vec: bool = False,
 ) -> DataFrame:
-    """Sign-random-projection bucket code ('0'/'1' per hyperplane),
-    computed with one numpy matmul per Arrow batch (~10x faster on large
-    corpora than a Column-expression form, whose interpreted HOFs
-    evaluate per element). Hyperplane j's weight on dimension i is ±1
-    from the parity of a hex char of md5(j||':'||i) (_srp_weights) —
-    deterministic, no stored model.
-    `plane_offset` selects a disjoint hyperplane family (multi-table
-    LSH: table t uses planes [t*n_planes, (t+1)*n_planes)).
+    """Adds `_codes`: one sign-random-projection bucket code ('0'/'1'
+    per hyperplane) per LSH table, every table from ONE
+    (n, dim) x (dim, n_tables*n_planes) numpy matmul per Arrow batch
+    (~10x faster on large corpora than a Column-expression form, whose
+    interpreted HOFs evaluate per element). Table t uses hyperplanes
+    [t*n_planes, (t+1)*n_planes); hyperplane j's weight on dimension i
+    is ±1 from the parity of a hex char of md5(j||':'||i)
+    (_srp_weights) — deterministic, no stored model.
 
     `emit_int_vec=True` additionally REPLACES `vec_col` with `_iv`, the
     exact round(x*1000) integer proxy as array<int> — the value every
@@ -343,12 +363,12 @@ def with_srp_bucket_arrow(
     embedding."""
     from pyspark.sql import types as T
 
-    wt = _srp_weights(n_planes, dim, plane_offset).T  # (dim, n_planes)
+    wt = _srp_weights(n_tables * n_planes, dim).T  # (dim, L*P)
     base = [f for f in df.schema.fields if not (emit_int_vec and f.name == vec_col)]
     out_schema = T.StructType(
         base
         + ([T.StructField("_iv", T.ArrayType(T.IntegerType()))] if emit_int_vec else [])
-        + [T.StructField("_bucket", T.StringType())]
+        + [T.StructField("_codes", T.ArrayType(T.StringType()))]
     )
 
     @on_python_worker
@@ -356,9 +376,8 @@ def with_srp_bucket_arrow(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            iv = _round_half_away(np.array(list(pdf[vec_col]), dtype="float64") * 1000)
-            s = _exact_matmul(iv, wt)  # (n, n_planes)
-            bits = (s > 0).astype("uint8").astype(str)
+            iv = _scaled(pdf[vec_col])
+            bits = (_exact_matmul(iv, wt) > 0).astype("uint8").astype(str)  # (n, L*P)
             pdf = pdf.copy()
             if emit_int_vec:
                 if np.abs(iv).max(initial=0) >= (1 << 31):
@@ -368,7 +387,11 @@ def with_srp_bucket_arrow(
                     )
                 pdf["_iv"] = list(iv.astype("int32"))
                 pdf = pdf.drop(columns=[vec_col])
-            pdf["_bucket"] = pd.Series(["".join(r) for r in bits], index=pdf.index)
+            codes = ["".join(r) for r in bits]
+            pdf["_codes"] = pd.Series(
+                [[c[t * n_planes:(t + 1) * n_planes] for t in range(n_tables)] for c in codes],
+                index=pdf.index,
+            )
             yield pdf[[f.name for f in out_schema.fields]]
 
     return df.mapInPandas(gen, schema=out_schema)
@@ -399,150 +422,47 @@ def lsh_topk(
       (the standard L-table memory/recall trade); a pair colliding in
       several tables is deduped before scoring. Recall 1-(1-p)^L.
 
-    Scoring is dot_int_arrow — one einsum per Arrow batch. Bucket codes
-    come from with_srp_bucket_arrow. With
-    the defaults (probe_bits=0, n_tables=1) the result is the plain
-    single-bucket LSH and no dedup shuffle is added."""
+    Buckets are (table, code) pairs from with_srp_codes. One table
+    holds each corpus vector in one bucket, and a query's probes are
+    distinct codes, so no pair can repeat and no dedup shuffle is
+    added; only n_tables > 1 dedups.
 
-    def probe_exprs(code_col: F.Column) -> list[F.Column]:
-        out = [code_col]
-        if probe_bits:
-            for j in range(n_planes):
-                flipped = F.when(
-                    F.substring(code_col, j + 1, 1) == "1", F.lit("0")
-                ).otherwise(F.lit("1"))
-                out.append(
-                    F.concat(
-                        F.substring(code_col, 1, j),
-                        flipped,
-                        F.substring(code_col, j + 2, n_planes),
-                    )
-                )
-        return out
+    Scoring: per BUCKET, one BLAS matmul emits each probing query's
+    local top-k (_local_topk), so each corpus vector crosses Arrow once
+    per table and each query vector once per probe, and the global
+    window ranks <= (probes x tables x k) rows per query. Shipping every
+    candidate row to a per-row pandas-UDF dot instead cost 5.7 s on
+    1.26M candidate rows at sf1.0, all but ~1 s of it the per-row Python
+    boundary."""
+    vb = with_srp_codes(vectors.select(id_col, vec_col), vec_col, n_planes, dim, n_tables).select(
+        id_col, vec_col, F.posexplode("_codes").alias("_t", "_code")
+    )
+    qb = with_srp_codes(
+        queries.select(query_id_col, F.col(vec_col).alias("_qvec")), "_qvec", n_planes, dim, n_tables
+    ).select(query_id_col, "_qvec", F.posexplode("_codes").alias("_t", "_c"))
+    probes = [F.col("_c")] + (_hamming1(F.col("_c"), n_planes) if probe_bits else [])
+    qb = qb.select(query_id_col, "_qvec", "_t", F.explode(F.array(*probes)).alias("_code"))
 
-    q = queries.select(query_id_col, F.col(vec_col).alias("_qvec"))
-    if n_tables == 1:
-        vb = with_srp_bucket_arrow(vectors, vec_col, n_planes, dim).select(
-            F.col(id_col), F.col(vec_col), "_bucket"
-        )
-        qb = with_srp_bucket_arrow(q, "_qvec", n_planes, dim)
-        if probe_bits:
-            qb = qb.select(
-                query_id_col,
-                "_qvec",
-                F.explode(F.array(*probe_exprs(F.col("_bucket")))).alias("_bucket"),
-            )
-        bucket_key, dedup = "_bucket", False
-    else:
-        vb = _with_table_codes(
-            vectors.select(id_col, vec_col), vec_col, n_planes, dim, n_tables
-        ).select(
-            F.col(id_col),
-            F.col(vec_col),
-            F.posexplode("_codes").alias("_t", "_c"),
-        ).select(
-            id_col, vec_col, F.concat_ws("|", F.col("_t"), F.col("_c")).alias("_tbucket")
-        )
-        qb = _with_table_codes(q, "_qvec", n_planes, dim, n_tables).select(
-            query_id_col, "_qvec", F.posexplode("_codes").alias("_t", "_c")
-        ).select(
-            query_id_col,
-            "_qvec",
-            F.explode(F.array(*probe_exprs(F.col("_c")))).alias("_p"),
-            "_t",
-        ).select(
-            query_id_col, "_qvec", F.concat_ws("|", F.col("_t"), F.col("_p")).alias("_tbucket")
-        )
-        # a pair can collide in several tables (same dot each time):
-        # dedup the LOCAL top-k rows before the global ranking
-        bucket_key, dedup = "_tbucket", True
-
-    # Score per BUCKET with one BLAS matmul and emit only each bucket's
-    # local top-k per probing query (guide §8: decide on small rows,
-    # move heavy bytes once). The former shape joined every corpus row
-    # to every probing query and shipped BOTH 64-dim vectors per
-    # candidate row through Arrow to a per-row pandas-UDF dot plus a
-    # candidate-sized window sort — at sf1.0 that was 1.26M candidate
-    # rows and 5.7s, all but ~1s of it the per-candidate Python
-    # boundary. Here each corpus vector crosses Arrow ONCE (its own
-    # bucket group), each query vector once per probe, and the global
-    # window ranks <= (probes x k) rows per query. A bucket's local
-    # top-k under the same total order (dot desc, id asc) must contain
-    # every global top-k candidate from that bucket, so results are
-    # identical.
     @on_python_worker
     def score(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame(
-            {query_id_col: [], "neighbor_id": [], "dot_scaled": []}
-        ).astype({query_id_col: "int64", "neighbor_id": "int64", "dot_scaled": "int64"})
         if len(left) == 0 or len(right) == 0:
-            return empty
-        ids = left[id_col].to_numpy()
-        vmat = _round_half_away(np.array(list(left[vec_col]), dtype="float64") * 1000)
-        qids = right[query_id_col].to_numpy()
-        qmat = _round_half_away(np.array(list(right["_qvec"]), dtype="float64") * 1000)
-        dots = _exact_matmul(vmat, qmat.T)  # (n, q) exact int64
-        kk = min(k, len(ids))
-        # local top-k per query, ties -> lower neighbor_id (same total
-        # order the global window uses)
-        order = np.lexsort((ids[None, :].repeat(len(qids), 0), -dots.T))
-        top = order[:, :kk]
-        return pd.DataFrame(
-            {
-                query_id_col: np.repeat(qids, kk),
-                "neighbor_id": ids[top].ravel(),
-                "dot_scaled": np.take_along_axis(dots.T, top, 1).ravel(),
-            }
+            return pd.DataFrame(
+                {query_id_col: [], "neighbor_id": [], "dot_scaled": []}
+            ).astype({query_id_col: "int64", "neighbor_id": "int64", "dot_scaled": "int64"})
+        return _local_topk(
+            left[id_col].to_numpy(), _scaled(left[vec_col]),
+            right[query_id_col].to_numpy(), _scaled(right["_qvec"]), k, query_id_col,
         )
 
     local = (
-        vb.groupBy(bucket_key)
-        .cogroup(qb.groupBy(bucket_key))
-        .applyInPandas(
-            score, schema=f"{query_id_col} long, neighbor_id long, dot_scaled long"
-        )
+        vb.groupBy("_t", "_code")
+        .cogroup(qb.groupBy("_t", "_code"))
+        .applyInPandas(score, schema=_topk_schema(query_id_col))
     )
-    if dedup:
+    if n_tables > 1:
+        # a pair can collide in several tables (same dot each time)
         local = local.dropDuplicates([query_id_col, "neighbor_id"])
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("dot_scaled").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        local.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, "neighbor_id", "dot_scaled", "rank")
-    )
-
-
-def _with_table_codes(
-    df: DataFrame, vec_col: str, n_planes: int, dim: int, n_tables: int
-) -> DataFrame:
-    """Adds `_codes`: one SRP code per LSH table, all tables computed
-    with a single (n, dim) x (dim, L*P) matmul per Arrow batch."""
-    from pyspark.sql import types as T
-
-    wt = _srp_weights(n_tables * n_planes, dim).T  # (dim, L*P)
-    out_schema = T.StructType(
-        list(df.schema.fields)
-        + [T.StructField("_codes", T.ArrayType(T.StringType()))]
-    )
-
-    @on_python_worker
-    def gen(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            iv = _round_half_away(np.array(list(pdf[vec_col]), dtype="float64") * 1000)
-            bits = (_exact_matmul(iv, wt) > 0).astype("uint8").astype(str)  # (n, L*P)
-            joined = ["".join(r) for r in bits]
-            pdf = pdf.copy()
-            pdf["_codes"] = [
-                [s[t * n_planes:(t + 1) * n_planes] for t in range(n_tables)]
-                for s in joined
-            ]
-            yield pdf
-
-    return df.mapInPandas(gen, schema=out_schema)
+    return _rank_topk(local, k, query_id_col)
 
 
 def _centroid_matrix(
@@ -558,10 +478,39 @@ def _centroid_matrix(
         )
     crows.sort(key=lambda r: r[id_col])  # cid-ascending => stable tie-break
     cid = np.array([r[id_col] for r in crows], dtype="int64")
-    cmat = _round_half_away(
-        np.array([r[vec_col] for r in crows], dtype="float64") * 1000
-    ).T  # (dim, C)
+    cmat = _scaled(r[vec_col] for r in crows).T  # (dim, C)
     return cid, cmat
+
+
+def _with_cells(
+    df: DataFrame, keep: list[str], vec_col: str, cid, cmat, n_top: int = 1
+) -> DataFrame:
+    """(keep..., vec_col, _cell): each row once per one of its `n_top`
+    IVF cells — the largest integer dots against the centroid matrix
+    of _centroid_matrix, ties to the smallest centroid id (stable over
+    the cid-ascending columns), so any SQL engine reproduces the cell
+    map. One matmul per Arrow batch; nothing is shuffled here."""
+    from pyspark.sql import types as T
+
+    cols = keep + [vec_col]
+    out_schema = T.StructType(
+        [df.schema[c] for c in cols] + [T.StructField("_cell", T.LongType())]
+    )
+
+    @on_python_worker
+    def gen(batches):
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            dots = _exact_matmul(_scaled(pdf[vec_col]), cmat)  # (n, C) exact int64
+            if n_top == 1:
+                top = np.argmax(dots, axis=1)[:, None]
+            else:  # n_top past the centroid count probes every cell
+                top = np.argsort(-dots, axis=1, kind="stable")[:, :n_top]
+            rows = pdf[cols].iloc[np.repeat(np.arange(len(pdf)), top.shape[1])]
+            yield rows.assign(_cell=cid[top].reshape(-1))
+
+    return df.select(*cols).mapInPandas(gen, schema=out_schema)
 
 
 def ivf_assign_cells(
@@ -579,27 +528,9 @@ def ivf_assign_cells(
     instead of re-assigning 10^9 vectors per query batch
     (VERDICT r5 #5). One matmul + argmax per Arrow batch; the corpus is
     scanned once, never shuffled here."""
-    from pyspark.sql import types as T
-
     ids = [id_cols] if isinstance(id_cols, str) else list(id_cols)
     cid, cmat = _centroid_matrix(centroids, centroid_id_col, vec_col, max_centroids)
-    out_schema = T.StructType(
-        [vectors.schema[c] for c in ids]
-        + [vectors.schema[vec_col], T.StructField("_cell", T.LongType())]
-    )
-
-    @on_python_worker
-    def gen(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            v = _round_half_away(np.array(list(pdf[vec_col]), dtype="float64") * 1000)
-            cells = cid[np.argmax(_exact_matmul(v, cmat), axis=1)]
-            out = pdf[ids + [vec_col]].copy()
-            out["_cell"] = cells
-            yield out
-
-    return vectors.select(*ids, vec_col).mapInPandas(gen, schema=out_schema)
+    return _with_cells(vectors, ids, vec_col, cid, cmat)
 
 
 def update_ivf_assignments(
@@ -624,13 +555,7 @@ def update_ivf_assignments(
     differential the tests pin. Centroid drift is the retrain trigger's
     job (`ivf_needs_retrain`), not this function's."""
     ids = [id_cols] if isinstance(id_cols, str) else list(id_cols)
-    left = assignments.select(*ids, vec_col, "_cell")
-    keys = changed.select(*ids).distinct()
-    cond = None
-    for c in ids:
-        eq = left[c].eqNullSafe(keys[c])
-        cond = eq if cond is None else (cond & eq)
-    kept = left.join(keys, cond, "left_anti")
+    kept = _evict(assignments.select(*ids, vec_col, "_cell"), changed, ids)
     live = changed
     if deleted_col is not None:
         live = live.filter(~F.col(deleted_col))
@@ -774,49 +699,16 @@ def ivf_topk(
     over a cid-sorted matrix) so any SQL engine reproduces the exact
     cell map.
     """
-    from pyspark.sql import types as T
-
     cents = centroids if centroids is not None else vectors.filter(
         F.col(id_col) % centroid_mod == 0
     )
     cid, cmat = _centroid_matrix(cents, id_col, vec_col, max_centroids)
-
-    def with_cells(df: DataFrame, keep_id: str, n_top: int) -> DataFrame:
-        out_schema = T.StructType(
-            [df.schema[keep_id], df.schema[vec_col],
-             T.StructField("_cell", T.LongType())]
-        )
-
-        @on_python_worker
-        def gen(batches):
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                v = _round_half_away(np.array(list(pdf[vec_col]), dtype="float64") * 1000)
-                dots = _exact_matmul(v, cmat)  # (n, C) int64 — exact
-                if n_top == 1:
-                    cells = cid[np.argmax(dots, axis=1)].reshape(-1, 1)
-                else:
-                    order = np.argsort(-dots, axis=1, kind="stable")[:, :n_top]
-                    cells = cid[order]
-                n = len(pdf)
-                rep = pd.DataFrame(
-                    {
-                        keep_id: pdf[keep_id].values.repeat(n_top),
-                        vec_col: [v for v in pdf[vec_col] for _ in range(n_top)],
-                        "_cell": cells.reshape(-1),
-                    }
-                )
-                yield rep
-
-        return df.mapInPandas(gen, schema=out_schema)
-
     if corpus_cells is not None:
         corpus = corpus_cells.select(id_col, vec_col, "_cell")
     else:
-        corpus = with_cells(vectors.select(id_col, vec_col), id_col, 1)
-    probes = with_cells(
-        queries.select(query_id_col, vec_col), query_id_col, n_probe
+        corpus = _with_cells(vectors, [id_col], vec_col, cid, cmat)
+    probes = _with_cells(
+        queries, [query_id_col], vec_col, cid, cmat, n_probe
     ).withColumnRenamed(vec_col, "_qvec")
     cand = corpus.join(F.broadcast(probes), "_cell")
     scored = cand.select(
@@ -824,11 +716,4 @@ def ivf_topk(
         F.col(id_col).alias("neighbor_id"),
         dot_int_arrow(F.col(vec_col), F.col("_qvec")).alias("dot_scaled"),
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("dot_scaled").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, "neighbor_id", "dot_scaled", "rank")
-    )
+    return _rank_topk(scored, k, query_id_col)

@@ -103,15 +103,19 @@ add("dedup_simhash_pairs (64-bit banded probe tables)", qs["dedup_simhash_pairs"
     "Production-width SimHash: the persisted per-doc signature table feeds 4 "
     "band probes/doc (constant, vs n_bits flip probes); candidates come from "
     "band-bucket equi-joins (pigeonhole-complete for hamming <= bands-1) and "
-    "exact 64-position verification filters them — never all-pairs.")
+    "exact 64-position verification filters them — never all-pairs. Degenerate "
+    "band buckets drop through a broadcast LEFT ANTI join against the over-full "
+    "buckets' count, so the band rows keep their partitioning into the pair join.")
 add("dedup_embedding_cosine (SRP buckets + probes -> per-bucket matmul)", qs["dedup_embedding_cosine"](spark, sf),
-    "The ONLY exchange is hashpartitioning on the bucket code; pair scoring is one "
-    "chunked numpy matmul per bucket inside FlatMapGroupsInPandas — no per-pair "
-    "expression ever runs.")
+    "Besides the bucket cap's small count aggregate (broadcast back as a LEFT ANTI "
+    "join), the only exchange is hashpartitioning on the bucket code; pair scoring "
+    "is one chunked numpy matmul per bucket inside FlatMapGroupsInPandas — no "
+    "per-pair expression ever runs.")
 add("dedup_minhash_lsh_pairs (banded LSH)", qs["dedup_minhash_lsh_pairs"](spark, sf),
     "Signatures come from k min() aggregates in ONE codegen groupBy over exploded "
     "shingles; the band-digest equi-join is the only pair-producing shuffle (AQE "
-    "skew-join handles hot bands; max_bucket_size can drop degenerate ones).")
+    "skew-join handles hot bands). max_bucket_size drops degenerate bands with a "
+    "count window over the band exchange, which the pair join reuses.")
 add("cdc_output_decoration (blocked lag, no global window)", qs["cdc_output_decoration"](spark, sf),
     "The data-path window sits on rangepartitioning(_blk), the one exchange the SQL "
     "artifact's (_blk, seq) order reuses; the single-partition window only runs on "

@@ -275,32 +275,92 @@ def test_decorate_window_is_partitioned(spark, small_events):
 def test_degenerate_bucket_caps_default_on(spark):
     """VERDICT r4 #3: the dedup pair generators must carry their
     degenerate-bucket cap sub-plan BY DEFAULT — a naive caller at corpus
-    scale must not get the quadratic boilerplate blow-up. Two deliberate
-    cap shapes exist since r9: minhash/ngram cap with a bucket-count
-    WINDOW over the band exchange (the candidate join reuses its
-    partitioning — one exchange instead of groupBy + semi-join), while
-    the simhash generator keeps the count + semi/anti-join (its pair
-    expansion is orders of magnitude larger than the band table, and
-    AQE's coalescing of the small window exchange would starve it)."""
+    scale must not get the quadratic boilerplate blow-up. Two cap
+    shapes, one helper each, and no semi-join against the kept groups:
+    - minhash bands and n-gram postings (dedup._cap_groups_in_window): a
+      count WINDOW over the group exchange, which their self-join on the
+      same keys reuses;
+    - simhash bands and cosine SRP buckets (dedup._cap_groups): a
+      broadcast LEFT ANTI join against the over-full groups' count
+      aggregate, so the capped rows keep their partitioning and AQE
+      cannot starve the far larger pair expansion through the cap.
+    The cosine generator's cap is opt-in (`max_bucket_size` defaults to
+    None), so it is passed here."""
     from bingo2sql_spark.operators import dedup as DD
+    from bingo2sql_spark.operators import similarity as SIM
 
     docs = spark.createDataFrame(
         [(i, f"alpha beta gamma w{i} delta epsilon zeta eta") for i in range(30)],
         ["doc_id", "text"],
     )
-    for df in (
-        DD.minhash_candidate_pairs(docs),
-        DD.ngram_jaccard_pairs(docs, threshold=0.1),
+    vecs = spark.createDataFrame(
+        [(i, [float((i * 7 + d) % 5 - 2) for d in range(8)]) for i in range(30)],
+        "vec_id long, embedding array<double>",
+    )
+    for df, cap in (
+        (DD.minhash_candidate_pairs(docs), 5000),
+        (DD.ngram_jaccard_pairs(docs, threshold=0.1), 1000),
+    ):
+        # the shingle windows sit under the persisted table, outside
+        # the part of the plan above its first InMemoryRelation
+        plan = _optimized(df).split("InMemoryRelation")[0]
+        assert "count(1) windowspecdefinition" in plan, plan
+        assert f"(_n#" in plan and f" <= {cap})" in plan, plan
+        assert "LeftAnti" not in plan and "LeftSemi" not in plan, plan
+    for df, cap in (
+        (DD.simhash_pairs_banded(docs), 5000),
+        (SIM.cosine_near_dup_pairs(vecs, 900000, n_planes=2, dim=8, max_bucket_size=10), 10),
     ):
         plan = _optimized(df)
-        # window-count cap: count over the band partition + <= filter
-        assert "windowspecdefinition" in plan and "count(" in plan, plan
-        assert "<= " in plan, plan
-    plan = _optimized(DD.simhash_pairs_banded(docs))
-    # the cap materializes as a semi join (keep-list) or anti join
-    # (drop-list) against the bucket-count aggregate
-    assert "LeftSemi" in plan or "LeftAnti" in plan, plan
-    assert "count(" in plan, plan
+        # the banded generator self-joins the capped rows: one anti
+        # join per side
+        anti = [ln for ln in plan.splitlines() if "Join LeftAnti" in ln]
+        assert anti and all("rightHint=(strategy=broadcast)" in ln for ln in anti), plan
+        assert "count(1)" in plan and f" > {cap})" in plan, plan
+        assert "LeftSemi" not in plan, plan
+        assert "windowspecdefinition" not in plan.split("InMemoryRelation")[0], plan
+    DD.release_persisted()
+
+
+def test_embedding_probes_one_coder_pass(spark, tmp_path):
+    """SignatureStore's embedding probes code every LSH table from ONE
+    Arrow pass (one MapInPandas, not one per table), and each table's
+    probe is that table's SRP code: bit j of table t is the sign of the
+    integer dot with hyperplane t*n_planes+j, whose weight on dimension
+    i is ±1 from the parity of md5(f"{plane}:{i}")'s first hex char."""
+    import hashlib
+    import math
+    import random
+
+    from bingo2sql_spark.operators import dedup as DD
+
+    dim, n_planes, bands = 16, 8, 4
+    rnd = random.Random(7)
+    vecs = [[rnd.uniform(-1, 1) for _ in range(dim)] for _ in range(500)]
+    sigs = spark.createDataFrame(
+        [("r", f"p{i}", v) for i, v in enumerate(vecs)],
+        "repo string, path string, embedding array<double>",
+    )
+    store = DD.SignatureStore(
+        str(tmp_path / "emb"), ["repo", "path"], family="embedding",
+        dim=dim, bands=bands, n_planes=n_planes,
+    )
+    probes = store._build_probes(sigs)
+    assert _plan(probes).count("MapInPandas") == 1, _plan(probes)
+
+    def weight(plane, i):
+        return 1 if int(hashlib.md5(f"{plane}:{i}".encode()).hexdigest()[0], 16) % 2 else -1
+
+    def code(v, t):
+        iv = [math.floor(x * 1000 + 0.5) if x >= 0 else math.ceil(x * 1000 - 0.5) for x in v]
+        return "".join(
+            "1" if sum(weight(p, i) * iv[i] for i in range(dim)) > 0 else "0"
+            for p in range(t * n_planes, (t + 1) * n_planes)
+        )
+
+    want = {(f"p{i}", t, code(v, t)) for i, v in enumerate(vecs) for t in range(bands)}
+    got = {(r["path"], r["band"], r["probe"]) for r in probes.collect()}
+    assert got == want
 
 
 def test_cap_drop_is_logged(spark, caplog):

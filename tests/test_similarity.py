@@ -42,8 +42,8 @@ def test_cosine_near_dup_pairs_matches_join_formulation(spark, embeddings):
     )
     fast = SIM.cosine_near_dup_pairs(doubled, threshold_scaled=900000, n_planes=8)
     # slow reference: explicit join within buckets, HOF dot per pair
-    vb = SIM.with_srp_bucket_arrow(doubled, "embedding", 8, 64).select(
-        "vec_id", "embedding", "_bucket"
+    vb = SIM.with_srp_codes(doubled, "embedding", 8, 64).select(
+        "vec_id", "embedding", F.col("_codes")[0].alias("_bucket")
     )
     a, b = vb.alias("a"), vb.alias("b")
     slow = (
@@ -80,8 +80,8 @@ def test_cosine_near_dup_bucket_cap(spark, embeddings):
     )
     sizes = {
         r["_bucket"]: r["count"]
-        for r in SIM.with_srp_bucket_arrow(doubled, "embedding", 2, 64)
-        .groupBy("_bucket")
+        for r in SIM.with_srp_codes(doubled, "embedding", 2, 64)
+        .groupBy(F.col("_codes")[0].alias("_bucket"))
         .count()
         .collect()
     }
@@ -93,6 +93,22 @@ def test_cosine_near_dup_bucket_cap(spark, embeddings):
         assert got_capped == 0
     else:
         assert got_capped < got_full
+
+
+def test_cosine_near_dup_cap_is_logged(spark, embeddings, caplog):
+    """No silent caps: the cosine generator's bucket cap logs through the
+    same path as the other pair generators' caps."""
+    import logging
+
+    with caplog.at_level(logging.INFO, logger="bingo2sql_spark.dedup"):
+        SIM.cosine_near_dup_pairs(
+            embeddings, threshold_scaled=900000, n_planes=2, max_bucket_size=5
+        )
+    msgs = [r.getMessage() for r in caplog.records]
+    assert any(
+        m.startswith("cosine_near_dup_pairs(max_bucket_size=5): degenerate-group cap active")
+        for m in msgs
+    ), msgs
 
 
 def test_lsh_topk_neardup_recall_on_doubled_corpus(spark, embeddings):
@@ -168,6 +184,15 @@ def test_minhash_bucket_cap(spark):
     assert uncapped.filter("id_a < 100").count() == 20 * 19 // 2
     assert capped.filter("id_a < 100").count() == 0  # boilerplate dropped
     assert capped.filter("id_a = 100 and id_b = 101").count() == 1  # small group kept
+
+
+def test_minhash_bands_must_divide_k(spark):
+    """A band count that does not divide k would leave the last k % bands
+    signature columns out of every band: refused, as the simhash
+    generator and the signature store's probes refuse theirs."""
+    docs = spark.createDataFrame([(1, "a b c d")], ["doc_id", "text"])
+    with pytest.raises(ValueError, match="bands=3 must divide k=8"):
+        DD.minhash_candidate_pairs(docs, k=8, bands=3)
 
 
 def test_ngram_jaccard_nonempty_differential(spark):
@@ -260,7 +285,8 @@ def test_ivf_topk_recall_and_determinism(spark, embeddings):
     high even at n_probe=2 (cells are Voronoi around real corpus
     points, so a query's true nearest neighbor usually shares its
     cell), rises with n_probe, and the cell map is deterministic
-    (two runs produce identical results)."""
+    (two runs produce identical results). An n_probe past the centroid
+    count probes every cell."""
     queries = embeddings.filter(F.col("vec_id") % 10 == 0).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
@@ -288,6 +314,13 @@ def test_ivf_topk_recall_and_determinism(spark, embeddings):
     b = sorted(map(tuple, SIM.ivf_topk(embeddings, queries, k=5, n_probe=2,
                                        centroid_mod=11).collect()))
     assert a == b
+    # probing more cells than there are centroids probes every cell:
+    # the result is the exact top-k
+    small = embeddings.filter(F.col("vec_id") < 40)
+    assert small.filter(F.col("vec_id") % 11 == 0).count() < 8
+    every = sorted(map(tuple, SIM.ivf_topk(small, queries, k=3, n_probe=8,
+                                           centroid_mod=11).collect()))
+    assert every == sorted(map(tuple, SIM.brute_force_topk(small, queries, k=3).collect()))
 
 
 def test_connected_components_chain_and_isolated(spark):
@@ -305,14 +338,18 @@ def test_connected_components_chain_and_isolated(spark):
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 12: 10, 99: 99}
 
 
-def test_connected_components_high_diameter_path(spark, tmp_path):
+def test_connected_components_high_diameter_path(spark, tmp_path, caplog):
     """Round-complexity contract (VERDICT r3 #7): pointer jumping makes
     rounds O(log diameter), so a 10^4-node PATH graph — the worst case
     for plain min-label propagation (10^4 rounds) — must converge
     within ~log2(n)+slack rounds. Also exercises the RELIABLE
     checkpoint option (cluster fault-tolerance path) and the loud
     non-convergence error. The reliable variant leaves no checkpoint
-    file behind once its labels are released."""
+    file behind once its labels are released. Convergence logs the
+    round count and each round's seconds."""
+    import logging
+    import re
+
     import pytest
     from pyspark.sql import functions as F
 
@@ -320,7 +357,17 @@ def test_connected_components_high_diameter_path(spark, tmp_path):
     pairs = spark.range(n - 1).select(
         F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b")
     )
-    cc = DD.connected_components(pairs, max_iter=18)
+    with caplog.at_level(logging.INFO, logger="bingo2sql_spark.dedup"):
+        cc = DD.connected_components(pairs, max_iter=18)
+    # the round count and each round's seconds are logged on convergence
+    (m,) = [
+        re.match(r"connected_components: converged in (\d+) rounds; seconds per round: (.*)$", r.getMessage())
+        for r in caplog.records
+        if r.getMessage().startswith("connected_components:")
+    ]
+    assert m, [r.getMessage() for r in caplog.records]
+    rounds, secs = int(m.group(1)), [float(x) for x in m.group(2).split()]
+    assert 2 < rounds <= 18 and len(secs) == rounds and all(x > 0 for x in secs)
     assert cc.filter(F.col("component") != 0).count() == 0
     assert cc.count() == n
     # reliable-checkpoint variant converges to the same labeling; the
@@ -665,7 +712,7 @@ def test_release_persisted_frees_pair_generator_caches(spark):
     released = DD.release_persisted()
     assert released >= 2 and not DD._PERSISTED
     # correctness unaffected: the same call recomputes fine afterwards
-    assert DD.minhash_candidate_pairs(docs, k=4, bands=2, persist=False).count() >= 0
+    assert DD.minhash_candidate_pairs(docs, k=4, bands=2).count() >= 0
     DD.release_persisted()
 
 
